@@ -75,217 +75,6 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# Long-green TPC-H-style staples (driver-verified pass in BOTH r1 and r2)
-# rotated to the back of the iteration order: the driver's correctness
-# sweep samples the first 50 queries, and this puts every
-# previously-unsampled query (ANN family, normalize family,
-# span_validation, multimodal, conversation, jaccard/dup_components,
-# plus the round-3 additions: as-of join, interval join, rolling
-# windows, tf-idf, source mixing, near-dup recall ledger) inside the
-# checked window.  Membership and semantics are unchanged.
-_DEFERRED_STAPLES = [
-    # deferred final-session rotation (batch 8): both are r4
-    # driver-green (doc_relevance oracled, span_validation rows-only
-    # err-free) and their implementing module (normalize.py, rules.py
-    # relevance/validation paths) is byte-untouched in round 5; their
-    # slots pull the two session-born queries table_profile (one-scan
-    # column census) and versioned_table_history (the commit-protocol
-    # query VERDICT r4 asked to expose to the driver gate) back inside
-    # the 50-query window after ams_selfjoin_size + winnowing_census
-    # displaced them
-    "doc_relevance",
-    "span_validation",
-    # deferred final-session rotation (batch 10): r4 driver-green
-    # (rows-only err-free, CORRECTNESS_r04) and conversation.py is
-    # byte-untouched since r4 (git-log-verified); its slot pulls the
-    # final-session avro_roundtrip_census (the stdlib Avro OCF source's
-    # oracle-checked lossless roundtrip) inside the 50-query window so
-    # the newest source format gets driver-gate evidence in r5
-    "conversation_echo_stats",
-    # deferred final-session rotation (batch 9): r4 driver-green
-    # (A-ES weighted top-k, CORRECTNESS_r04) and curation.py is
-    # append-only since r4 with q_weighted_sample_topk byte-untouched
-    # (git-diff-verified); its slot goes to the session-born
-    # winnowing_pairs (fingerprint-bucket near-verbatim candidate join)
-    "weighted_sample_topk",
-    # deferred final-session rotation (batch 7): all six are r4
-    # driver-green (CORRECTNESS_r04) and their implementing functions
-    # are byte-untouched this session (the round-5 additions are
-    # appended to relational.py / temporal.py / dedup.py without
-    # modifying them); their slots go to the six session-born queries
-    # kmv_type_overlap (Theta-sketch set ops), event_transitions
-    # (Markov matrix), user_burstiness (inter-arrival census),
-    # source_overlap (cross-source contamination matrix),
-    # snm_candidates (sorted-neighborhood dedup), triangle_census
-    # (degree-ordered triangle count) so the final driver gate covers
-    # every new family
-    "heavy_keys_sketch",
-    "events_hourly_gapfilled",
-    "user_retention_cohorts",
-    "fulfillment_latency",
-    "fuzzy_dedup_apply",
-    "incremental_dedup",
-    # deferred final-session rotation (batch 5): both r3 AND r4
-    # driver-green and their implementing functions (key_skew_census,
-    # salted-join) are byte-untouched this session (part_skyline was
-    # appended to relational.py without modifying them); their slots go
-    # to the two session-born queries edit_distance_join (exact Ed-Join
-    # prefix-filtered levenshtein self-join) and part_skyline (grouped
-    # Pareto frontier, bucketed prefix-max sweep)
-    "key_skew_profile",
-    "salted_hot_key_join",
-    # deferred final-session rotation (batch 6): r3 AND r4 driver-green
-    # and clustering.py is byte-untouched in round 5 (the same basis as
-    # the 13-member ANN/embedding deferral below); its slot goes to the
-    # session-born cms_user_frequency (count-min sketch point-frequency
-    # census, fully hash-checked via engine-identical md5 cells)
-    "semantic_dedup",
-    # deferred final-round rotation: both r3 AND r4 driver-green and
-    # normalize.py is untouched in round 5; their window slots go to the
-    # two round-5-born queries (bloom_membership, label_centroid_sim) so
-    # that the final driver gate leaves ZERO never-driver-checked queries
-    "normalize_use_types",
-    "correct_countries",
-    # deferred final-session rotation: driver-green in ALL FOUR rounds
-    # (r1,r2,r3,r4 — the deepest evidence in the registry) and the
-    # minhash signature/band functions are byte-untouched in round 5;
-    # its slot goes to the round-5-born pagerank_suppliers so the final
-    # gate covers the new iterative-graph family
-    "dedup_minhash_lsh",
-    # deferred final-session rotation: r3 AND r4 driver-green,
-    # rules.py untouched in round 5; slot goes to the round-5-born
-    # gram_novelty (first-occurrence passage attribution census)
-    "fix_scientific_names",
-    # deferred final-session rotation: r3 AND r4 driver-green, the
-    # token estimator untouched in round 5; slot goes to the round-5-born
-    # doc_compress_ratio (zlib repetition signal, rows-only)
-    "doc_bpe_tokens",
-    # deferred final-session rotation: both r3 AND r4 driver-green with
-    # their implementing functions (normalize.py JSON path, layout.py
-    # bucketing) untouched in round 5; slots go to the round-5-born
-    # graph_distances (BFS layer census, all-integer oracle) and
-    # bpe_encode (tokenizer application, rows-only + pytest-exact)
-    "events_json_extract",
-    "bucketed_join_stats",
-    # deferred final-session rotation: THREE driver greens each
-    # (r1, r3, r4) and the banded-jaccard / CC functions are
-    # byte-untouched in round 5 (gram_novelty was appended to dedup.py
-    # without touching them); slots go to the round-5-born
-    # graph_communities (LPA census) and table_profile (one-pass
-    # column-statistics census)
-    "dedup_jaccard_candidates",
-    "dup_components",
-    # ROTATED BACK IN for round 5 (VERDICT r4 #5): the 12 queries whose
-    # only driver green was r2 — doc_token_stats, dedup_exact,
-    # stratified_sample, curation_pipeline, benchmark_contamination_ngram,
-    # dedup_simhash_hamming, sequence_packing, doc_repetition,
-    # user_sessions, signup_purchase_funnel, event_type_pivot,
-    # order_price_buckets — are back in the front window so every query
-    # has a green within the last 3 rounds.  Deferred in their place
-    # (all r4-green, implementing functions untouched this round): the
-    # 13-member ANN/embedding family below.
-    "doc_chunks",
-    "doc_extract_full",
-    "transcript_extraction",
-    # r2-green as rows-only; its round-3 bound-check oracle is builder-
-    # swept at sf0.01+sf0.1 and the same in-band-bound idiom IS driver-
-    # checked via heavy_keys_sketch + order_price_percentiles_approx
-    "approx_distinct_users",
-    # deferred final-session rotation: r3 AND r4 driver-green, layout.py
-    # untouched in round 5; its slot goes to dsir_importance (the last
-    # never-driver-checked query) so the final gate covers EVERY query
-    # born in round 5
-    "events_day_pruned",
-    # deferred final-session rotation (batch 2): each r3 AND r4
-    # driver-green with its implementing function byte-untouched by the
-    # round-5 additions (the new code is appended to the same modules
-    # without modifying these); their slots go to the round-5-born
-    # revenue_rollup (ROLLUP grouping-sets census), doc_bigram_lm
-    # (order-2 LM cross-entropy), and set_similarity_join (exact
-    # PPJoin-style prefix-filtered Jaccard join) so the final driver
-    # gate covers every new family
-    "order_price_percentiles_approx",
-    "token_pmi",
-    "source_mix_weights",
-    # deferred final-session rotation (batch 3): r3 AND r4 driver-green,
-    # functions byte-untouched; slots go to the round-5-born
-    # containment_census (asymmetric prefix-filtered containment join)
-    # and source_token_divergence (per-source JSD drift census)
-    "tfidf_top_terms",
-    "doc_gopher_rules",
-    # deferred final-session rotation (batch 4): r3 AND r4 driver-green,
-    # grams/explode functions byte-untouched; slot goes to the
-    # round-5-born per_source_cap (deterministic domain-cap reservoir)
-    "duplicate_passages",
-    # deferred round 5: every entry here was driver-green in r4
-    # (CORRECTNESS_r04) with multiple prior greens, and none of the
-    # implementing functions (similarity.py / clustering.py) change in
-    # round 5
-    "ann_brute_force",
-    "ann_batch_topk",
-    "ann_lsh",
-    "ann_lsh_multiprobe",
-    "ann_ivf",
-    "ann_lsh_recall",
-    "ann_ivf_recall",
-    "embedding_near_dups",
-    "embedding_near_dup_stats",
-    "embedding_pca",
-    "ann_pq_recall",
-    "kmeans_clusters",
-    "ann_ivf_kmeans",
-    # deferred round 4 to rotate the 7 late-round-3 queries (the only
-    # never-driver-checked set: lang_confusion, weighted_sample_topk,
-    # bpe_merges, lm_quality_buckets, events_hourly_gapfilled,
-    # user_retention_cohorts, fulfillment_latency) into the front-50
-    # window; each of these seven is r3-driver-green with the
-    # implementing function untouched since
-    "purchase_attribution",
-    "purchase_followups",
-    "user_rolling_value",
-    "event_streaks",
-    "snapshot_diff",
-    "referential_integrity",
-    "user_value_outliers",
-    # deferred late round 3 to make window room for ann_lsh_multiprobe +
-    # semantic_dedup (both never driver-verified); green in r1 AND r2,
-    # untouched since
-    "doc_quality",
-    "dedup_keep_first",
-    "doc_lang_detect",
-    "lineitem_pricing_summary",
-    "revenue_by_priority",
-    "doc_pii_scrub",
-    "benchmark_contamination",
-    "top_tokens",
-    "dedup_simhash",
-    "doc_clean_basic",
-    "doc_fingerprint",
-    "topk_urgent_orders",
-    "event_value_increases",
-    "first_event_per_user",
-    "active_nation_keys",
-    "order_price_percentiles",
-    "event_type_stats",
-    "region_nation_list",
-    "big_spenders",
-    "idle_rich_customers",
-    "shipping_priority",
-    "local_supplier_volume",
-    "top_supplier_per_nation",
-    "promo_revenue_share",
-    "customer_order_distribution",
-    "customers_without_orders",
-    "customer_only_nations",
-    "part_type_stats",
-    "order_price_deciles",
-    "recent_orders",
-    "customers_per_nation",
-    "american_suppliers",
-    "events_hourly",
-]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     q.update(relational.QUERIES)
@@ -304,10 +93,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q.update(profiling.QUERIES)
     q.update(layout.QUERIES)
     q.update(versioned.QUERIES)
-    q.update(avro.QUERIES)  # post-window addition (final session)
-    front = {k: v for k, v in q.items() if k not in _DEFERRED_STAPLES}
-    front.update({k: q[k] for k in _DEFERRED_STAPLES if k in q})
-    return front
+    q.update(avro.QUERIES)
+    return q
 
 
 def oracle_sql() -> dict[str, str]:

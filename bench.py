@@ -39,9 +39,6 @@ BENCH_TMP = os.environ.get("SPARK_GRAFT_BENCH_TMP", "/tmp/spark_graft_bench")
 SF_CONVS = {"sf0.001": 200, "sf0.01": 2000, "sf0.1": 22000}
 
 HEADLINE = [
-    "lineitem_pricing_summary",
-    "revenue_by_priority",
-    "topk_urgent_orders",
     "doc_lang_detect",
     "dedup_minhash_lsh",
     "dup_components",

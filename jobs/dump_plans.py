@@ -97,13 +97,6 @@ def main() -> None:
          "8-row cluster-size table rides a BroadcastExchange.  Pinned by\n"
          "`test_semantic_dedup_pair_join_cluster_local`.",
          qs["semantic_dedup"](spark, SF)),
-        ("salted_hot_key_join (explicit hot-key salting)",
-         "The sketch→salt pipeline's join: both sides exchange on\n"
-         "(key, __salt) — the hot key's fact rows scatter over n_salts\n"
-         "reducers while the dim side's Generate replicates only heavy\n"
-         "keys; ShuffledHashJoin (hinted) so no broadcast bypasses the\n"
-         "salt.  Pinned by `test_salted_join_shuffles_on_key_plus_salt`.",
-         qs["salted_hot_key_join"](spark, SF)),
         ("conversation_context_pack (per-group stateful fold)",
          "Greedy packing is one FlatMapGroupsInPandas over the conv_id\n"
          "Exchange — the running fill-reset can't be a Window, so the\n"
@@ -145,16 +138,6 @@ def main() -> None:
          "`tests/test_stringjoin.py`; plan pinned by\n"
          "`test_edit_distance_join_plan_shape`.",
          qs["edit_distance_join"](spark, SF)),
-        ("part_skyline (grouped Pareto frontier, bucketed sweep)",
-         "Skylines are mergeable, so the frontier needs no global sort:\n"
-         "groupBy(group, x)->max(y) collapses the input, x lands in width\n"
-         "buckets, the per-(group,bucket) maxima spine (metadata-sized)\n"
-         "carries cross-bucket dominance via a per-group prefix max and\n"
-         "BROADCASTS back, and each (group,bucket) partition sweeps only\n"
-         "its own rows.  Every windowspecdefinition in the plan leads with\n"
-         "the group column — pinned by\n"
-         "`test_part_skyline_plan_windows_are_bucket_partitioned`.",
-         qs["part_skyline"](spark, SF)),
         ("table_profile (one-pass column census)",
          "All per-column aggregates (null counts, exact distincts, ranges,\n"
          "mean lengths) plan as a SINGLE FileScan feeding one Expand (the\n"
@@ -176,12 +159,6 @@ def main() -> None:
          "Orientation bounds the join fan-out at O(√m) per key (measured:\n"
          "40,049-degree hub → out-degree 49, `jobs/probe_scale.py triangle`).",
          qs["triangle_census"](spark, SF)),
-        ("kmv_type_overlap (Theta-sketch set operations)",
-         "The only full-data exchange is the distinct(group, md5) — the\n"
-         "same shuffle ANY exact distinct pays; everything after runs on\n"
-         "k-row-per-group sketches, with the per-group size table\n"
-         "broadcast back onto the |groups|²-bounded pair frame.",
-         qs["kmv_type_overlap"](spark, SF)),
         ("winnowing_pairs (local fingerprints → bucket-capped pair join)",
          "The fingerprint stage is ONE narrow projection — no Exchange, no\n"
          "Generate: overlapping grams and strided hash windows each come\n"

@@ -2,9 +2,7 @@
 """100× scale probes for the round-3 operators — synthetic inputs ~100×
 the sf0.1 tier, measuring the property each op's SCALE.md row claims.
 
-    python jobs/probe_scale.py mg       # Misra-Gries vs exact groupBy
     python jobs/probe_scale.py pack     # greedy context pack (stateful fold)
-    python jobs/probe_scale.py salt     # salted vs plain join under a hot key
     python jobs/probe_scale.py bpe      # BPE merge rounds over a 1M-word vocab
     python jobs/probe_scale.py minhash  # band rows vs naive token shuffle, 1M docs
     python jobs/probe_scale.py cc       # star-CC per-round edge contraction, 9.1M edges
@@ -12,7 +10,6 @@ the sf0.1 tier, measuring the property each op's SCALE.md row claims.
     python jobs/probe_scale.py ssjoin   # prefix-filter candidate collapse, 1M docs
     python jobs/probe_scale.py triangle # degree-ordered wedge fan-out bound, 3M edges
     python jobs/probe_scale.py snm      # SNM (W-1)·n candidate bound, 4M docs
-    python jobs/probe_scale.py kmv      # KMV set-op accuracy at 20M keys/group
     python jobs/probe_scale.py phash    # perceptual-hash banded join, 1.1M hashes
     python jobs/probe_scale.py sessionizer  # streaming session-window state bound, 1M events
 
@@ -29,61 +26,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_ROWS = 10_000_000
-N_KEYS = 1_000_000  # exact path must shuffle this many distinct keys
-
-
-def probe_mg(spark):
-    """Sketch vs exact heavy-key detection on 10M rows / 1M keys with a
-    sentinel hot key carrying ~20% of rows.  The claim under test: the
-    sketch's shuffle is ≤ partitions×k rows while exact shuffles the
-    whole key space — and the hot key still surfaces."""
-    from pyspark.sql import functions as F
-
-    from text_extractor_for_bioeconomic_products_spark.operators.relational import (
-        MG_K,
-        misra_gries_partition_summaries,
-    )
-
-    keyed = (
-        spark.range(N_ROWS)
-        .select(
-            F.when(F.col("id") % 5 == 0, F.lit(0))
-            .otherwise(F.pmod(F.xxhash64("id"), F.lit(N_KEYS)))
-            .cast("bigint")
-            .alias("key")
-        )
-        .repartition(64)
-        .persist()
-    )
-    keyed.count()  # materialize input outside the timed region
-
-    t0 = time.monotonic()
-    merged = (
-        misra_gries_partition_summaries(keyed)
-        .groupBy("key")
-        .agg(F.sum("est").alias("est"))
-    )
-    sketch_rows = merged.count()
-    hot_est = merged.filter("key = 0").collect()
-    t_sketch = time.monotonic() - t0
-
-    t1 = time.monotonic()
-    exact = keyed.groupBy("key").agg(F.count("*").alias("n"))
-    exact_keys = exact.count()
-    t_exact = time.monotonic() - t1
-
-    hot = hot_est[0]["est"] if hot_est else 0
-    return {
-        "probe": "mg_vs_exact",
-        "n_rows": N_ROWS,
-        "n_keys_exact": exact_keys,
-        "sketch_merged_rows": sketch_rows,
-        "sketch_rows_bound": 64 * MG_K,
-        "hot_key_est": int(hot),
-        "hot_key_surfaced": bool(hot > 0),
-        "sketch_sec": round(t_sketch, 1),
-        "exact_sec": round(t_exact, 1),
-    }
 
 
 def probe_pack(spark):
@@ -120,66 +62,6 @@ def probe_pack(spark):
         "n_examples": n_examples,
         "sec": round(dt, 1),
         "rows_per_sec": round(N_ROWS / dt),
-    }
-
-
-def probe_salt(spark):
-    """Salted vs plain shuffle join on 10M fact rows with 20% of them on
-    one key and a 1M-key dim: the plain join lands the hot key's 2M rows
-    on ONE reducer (the straggler that defines wall time); salting
-    spreads them over n_salts."""
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    from text_extractor_for_bioeconomic_products_spark.operators.relational import (
-        salted_equi_join,
-    )
-
-    fact = (
-        spark.range(N_ROWS)
-        .select(
-            F.col("id").alias("event_id"),
-            F.when(F.col("id") % 5 == 0, F.lit(0))
-            .otherwise(F.pmod(F.xxhash64("id"), F.lit(N_KEYS)))
-            .cast("bigint")
-            .alias("key"),
-            (F.col("id") % 97).cast("double").alias("value"),
-        )
-        .repartition(64)
-        .persist()
-    )
-    fact.count()
-    dim = fact.select("key").distinct().withColumn(
-        "segment", F.col("key") % 7
-    ).persist()
-    dim.count()
-
-    def agg(joined):
-        return (
-            joined.groupBy("segment")
-            .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
-            .collect()
-        )
-
-    t0 = _t.monotonic()
-    plain = agg(fact.join(dim.hint("shuffle_hash"), "key"))
-    t_plain = _t.monotonic() - t0
-    t1 = _t.monotonic()
-    salted = agg(
-        salted_equi_join(fact, dim, "key", "event_id", heavy_keys=[0])
-    )
-    t_salted = _t.monotonic() - t1
-    same = sorted((r["segment"], r["n"]) for r in plain) == sorted(
-        (r["segment"], r["n"]) for r in salted
-    )
-    return {
-        "probe": "salted_join",
-        "n_rows": N_ROWS,
-        "hot_key_rows": N_ROWS // 5,
-        "plain_sec": round(t_plain, 1),
-        "salted_sec": round(t_salted, 1),
-        "results_identical": same,
     }
 
 
@@ -682,51 +564,6 @@ def probe_snm(spark):
     }
 
 
-def probe_kmv(spark):
-    """KMV at 20M distinct keys per group: the pair comparison runs on
-    k-row sketches (constant), and the union estimate lands within the
-    ~1/√(k−2) KMV error envelope of the 30M-key truth."""
-    from pyspark.sql import functions as F
-
-    from text_extractor_for_bioeconomic_products_spark.operators.relational import (
-        KMV_K,
-        kmv_set_estimates,
-        kmv_sketches,
-    )
-
-    n = 20_000_000
-    # group a: keys 0..20M; group b: keys 10M..30M → union 30M,
-    # intersection 10M, jaccard 1/3
-    keyed = spark.range(n).select(
-        F.lit("a").alias("g"), F.col("id").alias("k")
-    ).union(
-        spark.range(n).select(
-            F.lit("b").alias("g"), (F.col("id") + n // 2).alias("k")
-        )
-    )
-    t0 = time.monotonic()
-    sk = kmv_sketches(keyed, group="g", key="k")
-    sketch_rows = sk.count()
-    est = kmv_set_estimates(sk, group="g").collect()[0]
-    sec = round(time.monotonic() - t0, 1)
-    true_union = n + n // 2
-    return {
-        "probe": "kmv_set_ops",
-        "n_keys_per_group": n,
-        "sketch_rows_total": sketch_rows,
-        "sketch_rows_bound": 2 * KMV_K,
-        "union_est": est["union_est"],
-        "true_union": true_union,
-        "union_rel_err": round(abs(est["union_est"] - true_union) / true_union, 4),
-        "jaccard_est": est["jaccard_est"],
-        "true_jaccard": round(1 / 3, 4),
-        "inter_est": est["inter_est"],
-        "true_inter": n // 2,
-        "error_envelope_3sigma": round(3 / (KMV_K - 2) ** 0.5, 4),
-        "sec": sec,
-    }
-
-
 def probe_winnow(spark):
     """Winnowing pair join under 100%-boilerplate skew, 200k docs.
 
@@ -1094,13 +931,10 @@ PROBES = {
     "sessionizer": probe_sessionizer,
     "phash": probe_phash,
     "avro": probe_avro,
-    "mg": probe_mg,
     "winnow": probe_winnow,
     "triangle": probe_triangle,
     "snm": probe_snm,
-    "kmv": probe_kmv,
     "pack": probe_pack,
-    "salt": probe_salt,
     "bpe": probe_bpe,
     "minhash": probe_minhash,
     "cc": probe_cc,
@@ -1113,7 +947,7 @@ PROBES = {
 def main() -> None:
     from text_extractor_for_bioeconomic_products_spark.session import get_spark
 
-    which = sys.argv[1] if len(sys.argv) > 1 else "mg"
+    which = sys.argv[1] if len(sys.argv) > 1 else "pack"
     spark = get_spark(
         app_name=f"probe_{which}", master="local[32]", shuffle_partitions=64
     )

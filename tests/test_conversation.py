@@ -213,7 +213,9 @@ def test_streaming_sessionizer_matches_batch(spark, tmp_path):
     input deliberately split across micro-batches so sessions MERGE
     across batch boundaries and close both ways (in-batch gap and
     watermark timeout).  Watermark-pusher users drive the final
-    timeouts and are excluded from the comparison."""
+    timeouts and are excluded from the comparison.  User 4 is new and
+    sends only null-ts events: the stream skips them without opening
+    state (an empty open session must not reach ``state.update``)."""
     import datetime as dt
 
     from text_extractor_for_bioeconomic_products_spark.operators.relational import (
@@ -237,7 +239,9 @@ def test_streaming_sessionizer_matches_batch(spark, tmp_path):
     files = [
         [ev(1, 1, 0), ev(2, 1, 60), ev(3, 1, 120), ev(10, 2, 100),
          ev(20, 3, 900)],
-        [ev(4, 1, 5000), ev(5, 1, 5060), ev(11, 2, 2200), ev(21, 3, 2650)],
+        [ev(4, 1, 5000), ev(5, 1, 5060), ev(11, 2, 2200), ev(21, 3, 2650),
+         (30, None, 4, "click", 1.0, "{}"),
+         (31, None, 4, "click", 2.0, "{}")],
         [ev(6, 1, 20000), ev(22, 3, 4400)],
         [ev(900, 999, 21000 + 5 * 86400)],   # pusher: fires most timeouts
         [ev(901, 998, 21000 + 10 * 86400)],  # pusher 2: fires the rest
@@ -256,13 +260,14 @@ def test_streaming_sessionizer_matches_batch(spark, tmp_path):
         "user_id < 900"
     ).collect()
     assert len(got) == 6
+    assert 4 not in {r["user_id"] for r in got}
     assert {r["closed_by"] for r in got} == {"gap", "timeout"}
     stream_set = sorted(
         (r["user_id"], r["n_events"], r["session_value"], r["first_event_id"])
         for r in got
     )
     batch_events = spark.createDataFrame(
-        [e for chunk in files[:3] for e in chunk], schema
+        [e for chunk in files[:3] for e in chunk if e[1] is not None], schema
     )
     batch_set = sorted(
         (r["user_id"], r["n_events"], r["session_value"], r["first_event_id"])

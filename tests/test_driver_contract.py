@@ -530,15 +530,18 @@ def test_benford_matches_duckdb(spark, duck, sf01_dir):
 def test_benford_hand_fixture(spark):
     """Planted exact distribution: 30×'1xx', 20×'2x', 10×'9xxx' →
     shares 0.5/0.333333/0.166667; Benford expectation for digit 1 is
-    log10(2); amounts < 1 and NULL excluded; a 9.5 amount rounds to
-    DECIMAL(18,2) '9.50' → digit 9 (not banker's-rounded away)."""
+    log10(2); amounts < 1 and NULL excluded; 9.5 and 9.997 both take
+    digit 9 from the truncated integer part (a DECIMAL(18,2) quantize
+    would round 9.997 HALF_UP to '10.00', digit 1)."""
     import pandas as pd
 
     from text_extractor_for_bioeconomic_products_spark.operators.relational import (
         benford_digit_census,
     )
 
-    amounts = [150.0] * 30 + [25.0] * 20 + [9000.0] * 9 + [9.5] + [0.5, None]
+    amounts = (
+        [150.0] * 30 + [25.0] * 20 + [9000.0] * 8 + [9.5, 9.997] + [0.5, None]
+    )
     pdf = pd.DataFrame({"o_totalprice": amounts})
     got = {
         r["digit"]: r
@@ -547,7 +550,7 @@ def test_benford_hand_fixture(spark):
     assert set(got) == {1, 2, 9}
     assert got[1]["n_rows"] == 30 and got[1]["observed_share"] == 0.5
     assert got[2]["observed_share"] == 0.333333
-    assert got[9]["n_rows"] == 10  # 9 big + the 9.5 edge
+    assert got[9]["n_rows"] == 10  # 8 big + the 9.5 and 9.997 edges
     assert got[1]["benford_share"] == 0.30103  # log10(2) to 6dp
 
 
@@ -594,55 +597,6 @@ def test_revenue_gini_hand_fixture(spark):
     assert got["flat"]["gini"] == 0.0
     assert got["flat"]["total_value"] == 200.0
     assert got["concentrated"]["gini"] == 0.75
-
-
-def test_pareto_cut_matches_duckdb(spark, duck, sf01_dir):
-    """pareto_cut_census (exact-rational thresholds on exact running
-    sums) vs the DuckDB twin at sf0.01.  Outside queries() by the
-    frozen-window policy."""
-    from text_extractor_for_bioeconomic_products_spark.operators.relational import (
-        ORACLE_PARETO_REVENUE,
-        q_pareto_revenue,
-    )
-
-    sdf = q_pareto_revenue(spark, sf01_dir)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    cur = duck.execute(ORACLE_PARETO_REVENUE)
-    duck_cols = [d[0] for d in cur.description]
-    duck_rows = cur.fetchall()
-    assert sorted(spark_cols) == sorted(duck_cols)
-    assert len(spark_rows) == len(duck_rows) > 0
-    ns, nd = _normalize(spark_rows, spark_cols), _normalize(duck_rows, duck_cols)
-    assert ns == nd
-
-
-def test_pareto_cut_hand_fixture(spark):
-    """Pinned geometry: values [60, 20, 10, 10] → the top row alone is
-    exactly 60% ≥ half (k50=1), the top two are exactly 80% (k80=2 —
-    the ≥ boundary row INCLUDED, exact-rational compare, no float ulp);
-    a flat group needs half its rows for half the mass."""
-    import pandas as pd
-
-    from text_extractor_for_bioeconomic_products_spark.operators.relational import (
-        pareto_cut_census,
-    )
-
-    pdf = pd.DataFrame({
-        "o_orderkey": range(8),
-        "o_orderpriority": ["skewed"] * 4 + ["flat"] * 4,
-        "o_totalprice": [60.0, 20.0, 10.0, 10.0] + [25.0] * 4,
-    })
-    got = {
-        r["o_orderpriority"]: r
-        for r in pareto_cut_census(spark.createDataFrame(pdf)).collect()
-    }
-    sk = got["skewed"]
-    assert (sk["rows_for_half"], sk["rows_for_80pct"]) == (1, 2)
-    assert sk["row_share_for_half"] == 0.25
-    fl = got["flat"]
-    assert (fl["rows_for_half"], fl["rows_for_80pct"]) == (2, 4)
-    assert fl["row_share_for_half"] == 0.5
 
 
 def test_seasonality_matches_duckdb(spark, duck, sf01_dir):

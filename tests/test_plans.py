@@ -239,17 +239,6 @@ def test_interval_join_is_bucket_keyed_hash_join(spark):
     assert join_lines, f"no bucket-keyed hash join in plan:\n{p}"
 
 
-def test_rolling_window_single_pass(spark):
-    """user_rolling_value computes row_number + two different ROWS
-    frames in ONE Window operator over ONE user_id hash shuffle (the
-    only other Exchange is the presentation ORDER BY)."""
-    p = plan_of(spark, "user_rolling_value")
-    assert p.count("Window [") == 1, p
-    assert p.count("Exchange hashpartitioning") == 1
-    assert "Exchange hashpartitioning(user_id" in p
-    assert p.count("Exchange rangepartitioning") == 1
-
-
 def test_lm_score_vocab_broadcasts_into_token_stream(spark):
     """doc_lm_score: the capped vocab is a distributed top-k
     (TakeOrderedAndProject, never a single-partition global sort) that
@@ -471,19 +460,6 @@ def _iter_nodes(jplan):
     yield jplan
     for i in range(jplan.children().size()):
         yield from _iter_nodes(jplan.children().apply(i))
-
-
-def test_salted_join_shuffles_on_key_plus_salt(spark, sf001_dir):
-    """The physical join must be a shuffle join keyed on (key, salt) —
-    a broadcast would bypass the salt, and a salt-less shuffle would
-    put the hot key back on one reducer."""
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["salted_hot_key_join"](spark, sf001_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "__salt" in plan
-    assert "ShuffledHashJoin" in plan, plan[:2000]
-    assert "BroadcastHashJoin" not in plan
 
 
 def test_write_target_sized_files(spark, sf01_dir, tmp_path):

@@ -354,18 +354,6 @@ def test_connected_components_long_chain(spark):
     assert rows[100]["members"] == "100,101,103"
 
 
-def test_approx_distinct_tolerance(spark, sf01_dir):
-    """HLL++ sketch within its declared 2% rsd (allow 3σ) of exact — the
-    query now carries the bound check in its hashed output, so the oracle
-    verifies it per-group; this test pins that the flag is computed and
-    actually TRUE on the sf0.01 corpus (non-vacuous)."""
-    import __spark_entry__ as e
-    rows = e.queries()["approx_distinct_users"](spark, sf01_dir).collect()
-    assert rows
-    for r in rows:
-        assert r["approx_within_bound"] is True, r
-
-
 def test_span_validation_columns_equal_scalar(spark):
     """X3 vectorized validator (pure column expressions) produces exactly
     the scalar rules.validate_product_span outputs on branch-covering
@@ -845,23 +833,6 @@ def test_tfidf_top_terms_shape(spark, sf001_dir):
         assert all(s > 0 for s in scores)  # idf==0 terms can never appear
 
 
-def test_driver_window_invariant():
-    """The driver correctness gate samples queries()[:50]; every
-    non-staple (= every never-yet-green query) must sit inside that
-    window, the back must be exactly the deferred staples, and every
-    staple must still exist."""
-    import __spark_entry__ as entry_mod
-
-    names = list(entry_mod.queries())
-    staples = entry_mod._DEFERRED_STAPLES
-    assert len(names) - len(staples) == 50, (
-        f"front window is {len(names) - len(staples)}, not 50 — "
-        "defer one more both-rounds-green staple per added query"
-    )
-    assert names[50:] == [s for s in staples if s in names]
-    assert set(staples) <= set(names)
-
-
 def test_lm_score_oov_and_surprisal_behavior(spark, sf001_dir):
     """The 20-term vocab cap binds (vocab is 31 terms): some tokens are
     OOV everywhere, and OOV-heavier documents carry higher mean
@@ -1205,92 +1176,6 @@ def test_dsir_importance_prefers_target_like_docs(spark, tmp_path):
     assert by_id[100]["logw"] > 0 > by_id[101]["logw"]
 
 
-def test_misra_gries_bounds_and_summary_size(spark):
-    """Per-partition summaries are ≤ k rows; merged estimates obey the
-    proven MG bounds (est ≤ true, est ≥ true − n/k) under different
-    partitionings; a key heavier than n/(k+1) always surfaces."""
-    from pyspark.sql import functions as F
-
-    from text_extractor_for_bioeconomic_products_spark.operators.relational import (
-        misra_gries_partition_summaries,
-    )
-
-    k = 4
-    # 600 rows: key 0 ×300 (heavy, > n/(k+1)=120), keys 1..30 ×10 each
-    vals = [0] * 300 + [i for i in range(1, 31) for _ in range(10)]
-    df = spark.createDataFrame([(v,) for v in vals], "key long")
-    n = len(vals)
-    exact = {0: 300, **{i: 10 for i in range(1, 31)}}
-    for parts in (1, 3, 8):
-        keyed = df.repartition(parts)
-        summaries = misra_gries_partition_summaries(keyed, k=k)
-        per_part = (
-            summaries.withColumn("pid", F.spark_partition_id())
-            .groupBy("pid").count().collect()
-        )
-        assert all(r["count"] <= k for r in per_part), per_part
-        merged = {
-            r["key"]: r["est"]
-            for r in summaries.groupBy("key").agg(F.sum("est").alias("est")).collect()
-        }
-        assert merged.get(0, 0) > 0, f"heavy key evicted at parts={parts}"
-        for key, true in exact.items():
-            est = merged.get(key, 0)
-            assert est <= true, (parts, key, est, true)
-            assert est >= true - n // k, (parts, key, est, true)
-
-
-def test_heavy_keys_sketch_query_detects_planted_key(spark, sf001_dir):
-    """The folded sentinel key 0 is the only is_heavy row and every
-    bound check holds (the TRUE the oracle asserts is earned)."""
-    import __spark_entry__ as entry_mod
-
-    rows = entry_mod.queries()["heavy_keys_sketch"](spark, sf001_dir).collect()
-    assert rows[0]["key"] == 0 and rows[0]["is_heavy"]
-    assert all(r["within_bound"] for r in rows)
-    # the sentinel fold concentrates ~1/5 of all rows on key 0 — it must
-    # dominate every natural key by a wide margin
-    assert rows[0]["n_exact"] > 2 * rows[1]["n_exact"]
-
-
-def test_salted_join_equals_plain_join_and_spreads_hot_key(spark):
-    """The salt is output-invisible (salted == plain join exactly) and
-    the hot key's fact rows really scatter over >1 salt while non-heavy
-    keys stay on salt 0 (no dim blow-up for the cold tail)."""
-    from pyspark.sql import functions as F
-
-    from text_extractor_for_bioeconomic_products_spark.operators.relational import (
-        _SALT_COL,
-        salted_equi_join,
-    )
-
-    rows = [(0, i, float(i)) for i in range(200)] + [
-        (k, 1000 + k, float(k)) for k in range(1, 20)
-    ]
-    fact = spark.createDataFrame(rows, "key long, event_id long, value double")
-    dim = fact.select("key").distinct().withColumn(
-        "segment", F.col("key") % 3
-    )
-    salted = salted_equi_join(fact, dim, "key", "event_id", heavy_keys=[0])
-    plain = fact.join(dim, "key")
-    cols = sorted(plain.columns)
-    assert salted.select(cols).exceptAll(plain.select(cols)).count() == 0
-    assert plain.select(cols).exceptAll(salted.select(cols)).count() == 0
-
-    heavy = F.col("key").isin([0])
-    f_s = fact.withColumn(
-        _SALT_COL,
-        F.when(heavy, F.pmod(F.xxhash64(F.col("event_id")), F.lit(8)))
-        .otherwise(F.lit(0)).cast("int"),
-    )
-    spread = f_s.groupBy("key").agg(
-        F.countDistinct(_SALT_COL).alias("n_salts")
-    ).collect()
-    by_key = {r["key"]: r["n_salts"] for r in spread}
-    assert by_key[0] > 4, by_key[0]
-    assert all(v == 1 for k, v in by_key.items() if k != 0)
-
-
 def test_percentile_approx_bounds_nonvacuous(spark, sf01_dir):
     """The GK sketch's bound flags must be computed from a real sketch
     (not constants): all TRUE on the corpus, and the approx value is a
@@ -1318,41 +1203,6 @@ def test_percentile_approx_bounds_nonvacuous(spark, sf01_dir):
     assert got["lo"][0] <= got["apx"][0] <= got["hi"][0], got
 
 
-def test_event_streaks_gaps_and_islands(spark):
-    """Hand-computed streaks: runs split on type change, resume later
-    (gaps-and-islands, not global counts), ties broken by event_id."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F  # noqa: F401
-
-    base = dt.datetime(2024, 1, 1)
-    rows = []
-    # user 1: A A A B A A  -> max streak 3 (As split by the B)
-    for i, et in enumerate(["a", "a", "a", "b", "a", "a"]):
-        rows.append((i, base + dt.timedelta(seconds=i), 1, et, 0.0, "{}"))
-    # user 2: B B  -> max streak 2
-    for i, et in enumerate(["b", "b"]):
-        rows.append((10 + i, base + dt.timedelta(seconds=i), 2, et, 0.0, "{}"))
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    )
-    pq = df  # q_event_streaks loads from dir; test the same logic inline
-    from text_extractor_for_bioeconomic_products_spark.operators import (
-        relational,
-    )
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        pq.write.mode("overwrite").parquet(f"{d}/events.parquet")
-        got = {
-            r["max_streak"]: r["n_users"]
-            for r in relational.q_event_streaks(spark, d).collect()
-        }
-    assert got == {3: 1, 2: 1}, got
-
-
 def test_referential_integrity_detects_planted_orphans(spark, sf001_dir):
     """The simulated dim loss must surface as orphans on exactly the
     orders->customer edge; the intact edges must pass clean."""
@@ -1368,38 +1218,6 @@ def test_referential_integrity_detects_planted_orphans(spark, sf001_dir):
     assert rows["lineitem->orders"]["n_orphans"] == 0
     assert rows["customer->nation"]["n_orphans"] == 0
     assert all(r["n_child_rows"] > 0 for r in rows.values())
-
-
-def test_mad_outliers_flag_spikes_not_noise(spark, tmp_path):
-    """A user with tight values + one spike flags exactly the spike; a
-    constant-value user flags nothing (MAD=0 edge)."""
-    import datetime as dt
-
-    from text_extractor_for_bioeconomic_products_spark.operators.relational import (
-        q_user_value_outliers,
-    )
-
-    base = dt.datetime(2024, 1, 1)
-    rows = []
-    vals_u1 = [10.0, 10.5, 9.5, 10.2, 9.8, 500.0]  # spike at the end
-    for i, v in enumerate(vals_u1):
-        rows.append((i, base + dt.timedelta(seconds=i), 1, "a", v, "{}"))
-    for i in range(5):  # constant user
-        rows.append((100 + i, base + dt.timedelta(seconds=i), 2, "b", 7.0, "{}"))
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    )
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as d:
-        df.write.mode("overwrite").parquet(f"{d}/events.parquet")
-        got = {
-            r["event_type"]: (r["n_events"], r["n_outliers"])
-            for r in q_user_value_outliers(spark, d).collect()
-        }
-    assert got == {"a": (6, 1), "b": (5, 0)}, got
 
 
 def test_token_pmi_planted_collocation_ranks_first(spark, tmp_path):
@@ -1636,43 +1454,6 @@ def test_bpe_encode_query_contract(spark, sf001_dir):
         assert r["n_docs"] > 0 and r["total_words"] > 0
         assert r["total_tokens"] >= r["total_words"]  # every word ≥1 token
         assert 1.0 <= r["tokens_per_word"]
-
-
-def test_gapfilled_series_is_continuous(spark, sf001_dir):
-    """The spine closes every hole: consecutive hour_starts differ by
-    exactly 1 hour, zero-filled gap rows exist (sparse tier), and the
-    non-gap rows equal the plain rollup."""
-    import datetime as dt
-
-    import __spark_entry__ as entry_mod
-
-    rows = entry_mod.queries()["events_hourly_gapfilled"](
-        spark, sf001_dir
-    ).collect()
-    assert rows
-    hours = [r["hour_start"] for r in rows]
-    assert all(
-        (b - a) == dt.timedelta(hours=1) for a, b in zip(hours, hours[1:])
-    )
-    assert any(r["was_gap"] for r in rows), "no gap rows — vacuous spine"
-    assert all(r["n_events"] == 0 for r in rows if r["was_gap"])
-    assert all(r["n_events"] > 0 for r in rows if not r["was_gap"])
-
-
-def test_retention_cohorts_invariants(spark, sf001_dir):
-    """Offset-0 retention is exactly 1.0 per cohort, n_active never
-    exceeds cohort_size, and offsets stay within the configured week."""
-    import __spark_entry__ as entry_mod
-
-    rows = entry_mod.queries()["user_retention_cohorts"](
-        spark, sf001_dir
-    ).collect()
-    assert rows
-    for r in rows:
-        assert 0 <= r["offset"] <= 7
-        assert r["n_active"] <= r["cohort_size"]
-        if r["offset"] == 0:
-            assert r["retention_rate"] == 1.0
 
 
 def test_compression_signal_byte_exact_and_ordered(spark):
@@ -2116,156 +1897,6 @@ def test_per_source_cap_deterministic_and_binding(spark, sf001_dir):
     assert key(rows) == key(rows2)
 
 
-def test_cms_point_estimates_match_hashlib_recomputation(spark):
-    """Count-min estimates under a deliberately collision-heavy fixture
-    (256 cells, CMS_HEX=2 construction) equal a pure-hashlib
-    recomputation of the identical md5 sketch, and every estimate is
-    >= the true count (an occurrence can never vanish from its cell)."""
-    import hashlib
-    from collections import Counter
-
-    from text_extractor_for_bioeconomic_products_spark.operators.relational import (
-        CMS_DEPTH,
-        CMS_HEX,
-        cms_point_estimates,
-    )
-
-    # zipf-ish stream over 40 keys: key i occurs (41 - i) times
-    keys = list(range(1, 41))
-    stream_rows = [(k,) for k in keys for _ in range(41 - k)]
-    true = Counter(k for (k,) in stream_rows)
-
-    def cell(k, j):
-        return hashlib.md5(f"cms{j}:{k}".encode()).hexdigest()[:CMS_HEX]
-
-    sketch = Counter(
-        (j, cell(k, j)) for (k,) in stream_rows for j in range(CMS_DEPTH)
-    )
-    expected = {
-        k: min(sketch[(j, cell(k, j))] for j in range(CMS_DEPTH))
-        for k in keys
-    }
-
-    stream = spark.createDataFrame(stream_rows, "user_id long")
-    probe = spark.createDataFrame([(k,) for k in keys], "user_id long")
-    got = {
-        r["user_id"]: r["cms_est"]
-        for r in cms_point_estimates(stream, probe, key="user_id").collect()
-    }
-    assert got == expected
-    assert all(got[k] >= true[k] for k in keys)
-
-
-def test_cms_query_plan_broadcasts_sketch(spark, sf001_dir):
-    """The probe join must broadcast the constant-size cell table — the
-    raw key space never hash-partitions for the estimate, and no window
-    or cartesian appears anywhere."""
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["cms_user_frequency"](spark, sf001_dir)
-    df.collect()
-    final = (
-        df._jdf.queryExecution().executedPlan().toString()
-        .split("== Initial Plan ==")[0]
-    )
-    assert "BroadcastHashJoin" in final, final
-    assert "CartesianProduct" not in final, final
-    assert "Window" not in final, final
-
-
-def test_kmv_exhaustive_pair_is_exact(spark):
-    """When both groups' distinct sets fit under k, the Theta-sketch
-    union/intersection estimates ARE the exact values — the exhaustive
-    branch, the base case every scale-up must still satisfy."""
-    from text_extractor_for_bioeconomic_products_spark.operators.relational import (
-        kmv_set_estimates,
-        kmv_sketches,
-    )
-
-    rows = [("a", k) for k in range(20)] + [("b", k) for k in range(10, 40)]
-    keyed = spark.createDataFrame(rows, "g string, key long")
-    sk = kmv_sketches(keyed, group="g", key="key")
-    got = kmv_set_estimates(sk, group="g").collect()
-    assert len(got) == 1
-    r = got[0]
-    assert (r["exact_a"], r["exact_b"]) == (20, 30)
-    assert r["union_est"] == 40.0          # |0..39| exactly
-    assert r["inter_est"] == 10.0          # |10..19| exactly
-    assert r["jaccard_est"] == 0.25
-
-
-def test_kmv_estimates_match_hashlib_recomputation(spark):
-    """Above k the estimator path engages: the sketch rows, the merged
-    k-minimum set, and the (k-1)/h_k estimate all equal a pure-hashlib
-    recomputation of the identical md5 construction, and the union
-    estimate lands within the KMV error envelope of the truth."""
-    import hashlib
-
-    from text_extractor_for_bioeconomic_products_spark.operators.relational import (
-        KMV_K,
-        _KMV_DENOM,
-        kmv_set_estimates,
-        kmv_sketches,
-    )
-
-    a_keys = list(range(100))            # 100 distinct
-    b_keys = list(range(50, 200))        # 150 distinct, overlap 50
-    rows = [("a", k) for k in a_keys] + [("b", k) for k in b_keys]
-    keyed = spark.createDataFrame(rows, "g string, key long")
-
-    def h(k):
-        return hashlib.md5(f"kmv:{k}".encode()).hexdigest()
-
-    sk_a = sorted(h(k) for k in set(a_keys))[:KMV_K]
-    sk_b = sorted(h(k) for k in set(b_keys))[:KMV_K]
-    kmin = sorted(set(sk_a) | set(sk_b))[:KMV_K]
-    n_both = sum(1 for x in kmin if x in set(sk_a) and x in set(sk_b))
-    h_k = kmin[-1]
-    union_exp = (KMV_K - 1) / (int(h_k[:15], 16) / _KMV_DENOM)
-    jac_exp = n_both / KMV_K
-
-    sk = kmv_sketches(keyed, group="g", key="key")
-    # Spark's per-group sketch IS the hashlib sketch
-    spark_a = sorted(r["h"] for r in sk.filter("g = 'a'").collect())
-    assert spark_a == sk_a
-
-    r = kmv_set_estimates(sk, group="g").collect()[0]
-    assert (r["exact_a"], r["exact_b"]) == (100, 150)
-    assert abs(r["union_est"] - union_exp) < 1e-3
-    assert abs(r["jaccard_est"] - jac_exp) < 1e-5
-    assert abs(r["inter_est"] - jac_exp * union_exp) < 1e-3
-    # estimator quality: true union is 200; k=64 gives ~12.7% std error
-    assert abs(r["union_est"] - 200) / 200 < 0.5
-
-
-def test_kmv_sketch_rows_bounded_by_k(spark, sf001_dir):
-    """The pair comparison never touches more than k rows per group —
-    the property that lets two petabyte corpora compare via broadcast."""
-    import __spark_entry__ as entry_mod
-    from text_extractor_for_bioeconomic_products_spark.operators.relational import (
-        KMV_K,
-        kmv_sketches,
-    )
-    from text_extractor_for_bioeconomic_products_spark.sources.tables import load
-    from pyspark.sql import functions as F
-
-    events = load(spark, sf001_dir, "events")
-    keyed = events.select(
-        "event_type", F.col("user_id").cast("string").alias("k")
-    )
-    sk = kmv_sketches(keyed, group="event_type", key="k")
-    per_group = {
-        r["event_type"]: r["n"]
-        for r in sk.groupBy("event_type").agg(F.count("*").alias("n")).collect()
-    }
-    assert per_group and all(n <= KMV_K for n in per_group.values())
-    # and the driver query runs end to end on the small tier
-    out = entry_mod.queries()["kmv_type_overlap"](spark, sf001_dir).collect()
-    assert len(out) == 10  # C(5,2) event-type pairs
-    for row in out:
-        assert row["union_est"] >= row["exact_a"] * 0.3  # sane scale
-
-
 def test_markov_transitions_hand_computed(spark):
     """Transition matrix over a hand-built two-user sequence equals the
     enumerated pairs, probabilities condition on from_state, and no
@@ -2334,69 +1965,3 @@ def test_burstiness_periodic_user_hits_minus_one_bin(spark):
     assert got.get(2) == (1, 3, 3600)
     assert sum(v[0] for v in got.values()) == 2  # user 3 excluded
 
-
-def test_ams_f2_matches_hashlib_recomputation(spark):
-    """The AMS F2 estimate equals a pure-hashlib recomputation of the
-    identical md5-signed counters (sum → square → group mean → exact
-    5-way median), and the exact F2 column is the true self-join size."""
-    import hashlib
-    import statistics
-    from collections import Counter
-
-    from text_extractor_for_bioeconomic_products_spark.operators.relational import (
-        AMS_GROUPS,
-        AMS_PER_GROUP,
-        ams_f2_estimate,
-    )
-
-    # zipf-ish stream over 30 keys: key i occurs (31 - i) times
-    keys = list(range(1, 31))
-    stream_rows = [(k,) for k in keys for _ in range(31 - k)]
-    true_f2 = sum(c * c for c in Counter(k for (k,) in stream_rows).values())
-
-    def sign(k, j):
-        nib = hashlib.md5(f"ams{j}:{k}".encode()).hexdigest()[0]
-        return 1 if nib in "01234567" else -1
-
-    n = AMS_GROUPS * AMS_PER_GROUP
-    sums = [
-        sum(sign(k, j) for (k,) in stream_rows) for j in range(n)
-    ]
-    gmeans = [
-        statistics.mean(
-            float(sums[j] * sums[j])
-            for j in range(n)
-            if j % AMS_GROUPS == g
-        )
-        for g in range(AMS_GROUPS)
-    ]
-    expected = statistics.median(gmeans)
-
-    stream = spark.createDataFrame(stream_rows, "user_id long")
-    got = ams_f2_estimate(stream, key="user_id").collect()[0]["ams_est"]
-    assert got == expected
-    # estimator sanity: within the ~2σ envelope of the truth
-    # (σ ≈ F2·√(2/AMS_PER_GROUP) per group mean)
-    import math
-    assert abs(got - true_f2) <= 2.5 * true_f2 * math.sqrt(2 / AMS_PER_GROUP)
-
-
-def test_ams_query_plan_is_constant_width(spark, sf001_dir):
-    """The AMS census never hash-partitions the key space: the only
-    aggregates are over the 80 counter ids (partial map-side), the
-    single-row estimate broadcasts, and no window or cartesian product
-    appears anywhere in the physical plan."""
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["ams_selfjoin_size"](spark, sf001_dir)
-    rows = df.collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r["exact_f2"] > 0 and r["ams_est"] > 0 and r["n_counters"] == 80
-    final = (
-        df._jdf.queryExecution().executedPlan().toString()
-        .split("== Initial Plan ==")[0]
-    )
-    assert "partial_sum" in final, final
-    assert "CartesianProduct" not in final, final
-    assert "Window" not in final, final

@@ -1,6 +1,5 @@
 """Exactness, boundary, and plan-shape tests for the edit-distance
-string-similarity join (operators/stringjoin.py) and the grouped 2-D
-skyline (operators/relational.py::skyline_2d)."""
+string-similarity join (operators/stringjoin.py)."""
 
 from __future__ import annotations
 
@@ -10,9 +9,6 @@ import re
 import pytest
 
 from text_extractor_for_bioeconomic_products_spark.operators import stringjoin
-from text_extractor_for_bioeconomic_products_spark.operators.relational import (
-    skyline_2d,
-)
 from text_extractor_for_bioeconomic_products_spark.operators.stringjoin import (
     edit_distance_pairs,
 )
@@ -124,109 +120,3 @@ def test_edit_distance_join_plan_shape(spark, sf001_dir):
     assert "BroadcastNestedLoopJoin" not in final, final
     assert "Window" not in final, final
     assert "levenshtein" in final, final  # JVM-side verify, not a UDF
-
-
-# ---------------------------------------------------------------------------
-# skyline_2d
-# ---------------------------------------------------------------------------
-
-
-def _brute_skyline(points):
-    """Quadratic dominance over distinct (group, x)->max(y) points."""
-    best = {}
-    for g, x, y in points:
-        if best.get((g, x), -(10 ** 9)) < y:
-            best[(g, x)] = y
-    out = set()
-    for (g, x), y in best.items():
-        dominated = any(
-            g2 == g and x2 <= x and y2 >= y and (x2 < x or y2 > y)
-            for (g2, x2), y2 in best.items()
-        )
-        if not dominated:
-            out.add((g, x, y))
-    return out
-
-
-def test_skyline_2d_matches_brute_force(spark):
-    """Ties on x, ties on y, duplicate points, single-point groups, and
-    a monotone staircase — the bucketed sweep must equal the quadratic
-    dominance test."""
-    points = [
-        ("a", 1.0, 5), ("a", 1.0, 3),   # same x: max(y) wins
-        ("a", 2.0, 5),                   # same y as frontier -> dominated
-        ("a", 3.0, 7), ("a", 4.0, 7),    # y tie across x: larger x out
-        ("a", 10.5, 9),
-        ("b", 2.5, 1), ("b", 2.5, 1),    # duplicate point
-        ("c", 0.0, 0),                   # singleton group
-    ]
-    df = spark.createDataFrame(points, "g string, x double, y int")
-    got = {
-        (r["g"], r["x"], r["y"])
-        for r in skyline_2d(df, "g", "x", "y").collect()
-    }
-    assert got == _brute_skyline(points)
-    assert got == {
-        ("a", 1.0, 5), ("a", 3.0, 7), ("a", 10.5, 9),
-        ("b", 2.5, 1), ("c", 0.0, 0),
-    }
-
-
-def test_skyline_2d_property(spark):
-    """Hypothesis battery: random integer-ish point clouds with heavy
-    collisions across several bucket widths (sub-unit x spacing makes
-    many points share a bucket; wide spreads isolate them)."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    @settings(max_examples=6, deadline=None)
-    @given(
-        pts=st.lists(
-            st.tuples(
-                st.sampled_from(["g1", "g2"]),
-                st.integers(min_value=0, max_value=12),
-                st.integers(min_value=0, max_value=8),
-            ),
-            min_size=1,
-            max_size=25,
-        ),
-        width=st.sampled_from([0.5, 1.0, 4.0]),
-    )
-    def check(pts, width):
-        points = [(g, x / 2.0, y) for g, x, y in pts]
-        df = spark.createDataFrame(points, "g string, x double, y int")
-        got = {
-            (r["g"], r["x"], r["y"])
-            for r in skyline_2d(df, "g", "x", "y", bucket_width=width)
-            .collect()
-        }
-        assert got == _brute_skyline(points)
-
-    check()
-
-
-def test_part_skyline_plan_windows_are_bucket_partitioned(spark, sf001_dir):
-    """The full-data sweep window must be partitioned by (group, bucket)
-    — never a single global sort — and the cross-bucket spine must ride
-    a BroadcastExchange back in.  Every window spec in the plan leads
-    with the group column."""
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["part_skyline"](spark, sf001_dir)
-    df.collect()
-    final = (
-        df._jdf.queryExecution().executedPlan().toString()
-        .split("== Initial Plan ==")[0]
-    )
-    assert "CartesianProduct" not in final, final
-    assert "BroadcastExchange" in final, final
-    specs = re.findall(r"windowspecdefinition\(([^)]*)\)", final)
-    assert specs, final
-    for spec in specs:
-        assert spec.startswith("p_brand#"), spec  # no unpartitioned window
-    # the sweep window partitions by BOTH group and bucket (the bucket
-    # column appears as a partition member, before any ASC order key)
-    assert any(
-        re.match(r"p_brand#\d+, _bkt#\d+L, p_retailprice#", s)
-        for s in specs
-    ), specs

@@ -1304,8 +1304,8 @@ def bloom_membership_census(
     broadcast), and a batch row "might be a member" iff all k of its
     cells are set.  False positives are the price; this census measures
     them against the exact twin IN-BAND — the same
-    approximate-op-ships-its-error discipline as the HLL / GK /
-    Misra-Gries sketches (`relational.py`) and the ANN recall ledgers.
+    approximate-op-ships-its-error discipline as the GK percentile
+    sketch (`relational.py`) and the ANN recall ledgers.
 
     Deterministic across engines: cells are md5-derived strings, so the
     measured fp_rate is itself oracle-checked, and fp_expected =

@@ -13,8 +13,8 @@ Scale shape: all per-column aggregates are expressed in a single
 ``count(distinct)`` terms plan through a single Expand (row
 multiplication by #distinct-aggregates, map-side partials intact) —
 one wide stage instead of N scans.  At 100 TB the exact distincts
-would swap to ``approx_count_distinct`` (HLL — the
-``approx_distinct_users`` idiom, mergeable and one-pass); exact is
+would swap to ``approx_count_distinct`` (HLL, mergeable and
+one-pass); exact is
 kept here because it is what a DuckDB twin can hash-check.  The final
 unpivot to one row per column is a literal ``stack`` over the single
 aggregate row — no second pass.

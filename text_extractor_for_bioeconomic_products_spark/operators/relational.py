@@ -1,14 +1,19 @@
-"""Relational operator surface (SURVEY §2.2-2.7) over the testdata tables.
+"""Relational queries and censuses over the testdata tables.
 
-Each ``q_*`` takes (spark, sf_dir) → DataFrame and has a matching ANSI-SQL
-oracle in ORACLE_SQL (runnable by DuckDB on the same parquet views).
-Column aliases match exactly between both sides (driver hashes by sorted
-column name).  Floats are rounded to 4 decimals on both sides.
+The ``q_*`` entries of ``QUERIES`` are TPC-H-style driver queries over
+the orders/lineitem/customer/supplier/part tables (plus the documents
+snapshot diff); each has a matching ANSI-SQL oracle in ORACLE_SQL
+(runnable by DuckDB on the same parquet views).  ``sessionize`` is the
+batch reference for the streaming sessionizer
+(``streaming/pipeline.py::run_streaming_sessionizer``); the trend,
+Benford, Gini and seasonality censuses feed ``jobs/run_datacard.py``
+and carry ``ORACLE_*`` twins.  Column aliases match exactly between
+both sides (driver hashes by sorted column name).  Floats are rounded
+to 4 decimals on both sides.
 
 Plan notes per query document the physical strategy we expect at scale
 (broadcast vs shuffle, pushdown, TakeOrderedAndProject).
 """
-
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -197,78 +202,6 @@ def q_region_nation_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- W2: stable ordering window (the core ordering contract) ---------------
-
-def q_first_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        events.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_id", "event_type")
-        .orderBy("user_id")
-    )
-
-
-# --- W2: lag() cross-row feature -------------------------------------------
-
-def q_event_value_increases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        events.withColumn("prev_value", F.lag("value").over(w))
-        .filter(F.col("value") > F.col("prev_value"))
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n_increases"))
-        .orderBy("event_type")
-    )
-
-
-# --- A2/A3: per-type stats with distinct count ------------------------------
-
-def q_user_rolling_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling-frame window aggregates: per user ordered by (ts,
-    event_id), the 3-row moving value sum and the running cumulative
-    sum.  ROWS frames over one user_id-partitioned shuffle — both
-    frames share the same Window spec, so Spark computes them in a
-    single Window operator pass.  Values are rounded to 4 decimals and
-    summed as DECIMAL(18,4) so the running sums are exact (no
-    float-summation-order divergence between engines)."""
-    events = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # decimal(18,10) BEFORE the round — the repo's cross-engine idiom
-    # (rounding the raw double can flip the 4th decimal vs the oracle's
-    # decimal-chain on boundary values)
-    dec = F.round(F.col("value").cast("decimal(18,10)"), 4).cast("decimal(18,4)")
-    return (
-        events.select(
-            "user_id",
-            "event_id",
-            "ts",
-            F.row_number().over(w).cast("long").alias("seq"),
-            F.sum(dec).over(w.rowsBetween(-2, 0)).cast("double").alias("moving_value_3"),
-            F.sum(dec)
-            .over(w.rowsBetween(Window.unboundedPreceding, 0))
-            .cast("double")
-            .alias("cum_value"),
-        )
-        .orderBy("user_id", "seq")
-    )
-
-
-def q_event_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load(spark, sf_dir, "events")
-    return (
-        events.groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.countDistinct("user_id").alias("n_users"),
-            F.round(F.avg(F.col("value").cast("decimal(18,6)")), 4).cast("double").alias("avg_value"),
-        )
-        .orderBy("event_type")
-    )
-
-
 # --- Anti join: customers with no orders ------------------------------------
 
 def q_customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -359,28 +292,6 @@ def q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize(load(spark, sf_dir, "events"))
 
 
-# --- Tumbling-window time aggregation (batch twin of the streaming agg) ----
-
-def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events per hour bucket per type — F.window tumbling aggregation;
-    the batch twin of streaming_conversation_counts' windowed agg."""
-    events = load(spark, sf_dir, "events")
-    return (
-        events.groupBy(
-            F.window("ts", "1 hour").alias("w"), F.col("event_type")
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 4).cast("double").alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("hour_start"),
-            "event_type", "n_events", "total_value",
-        )
-        .orderBy("hour_start", "event_type")
-    )
-
-
 # --- NTILE decile bucketing (rank-family window) ----------------------------
 
 def q_order_price_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -396,24 +307,6 @@ def q_order_price_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("o_totalprice"), 4).alias("max_price"),
         )
         .orderBy("decile")
-    )
-
-
-# --- Pivot-style conditional aggregation (A6 histogram shape) ---------------
-
-def q_event_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Counts per event_type as columns per user bucket — conditional-agg
-    pivot (DB statistics shape, database.py:503-515), expressed so both
-    engines compute the identical formula."""
-    events = load(spark, sf_dir, "events")
-    bucket = F.pmod(F.col("user_id"), F.lit(10)).alias("user_bucket")
-    types = ["click", "purchase", "view", "signup", "error"]
-    aggs = [
-        F.sum(F.when(F.col("event_type") == t, 1).otherwise(0)).alias(f"n_{t}")
-        for t in types
-    ]
-    return (
-        events.groupBy(bucket).agg(*aggs).orderBy("user_bucket")
     )
 
 
@@ -602,35 +495,6 @@ def q_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Funnel: signup → later purchase conversion ------------------------------
-
-def q_signup_purchase_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classic product-analytics funnel: users who signed up, and of
-    those, users whose first purchase came at-or-after their first
-    signup.  Two per-user min-aggregates (one shuffle each on user_id,
-    AQE-coalesced) joined and reduced to a single census row."""
-    events = load(spark, sf_dir, "events")
-    first = (
-        events.filter(F.col("event_type").isin("signup", "purchase"))
-        .groupBy("user_id")
-        .agg(
-            F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias("first_signup"),
-            F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias("first_purchase"),
-        )
-    )
-    return first.agg(
-        F.sum(F.when(F.col("first_signup").isNotNull(), 1).otherwise(0)).alias("n_signed_up"),
-        F.sum(
-            F.when(
-                F.col("first_signup").isNotNull()
-                & F.col("first_purchase").isNotNull()
-                & (F.col("first_purchase") >= F.col("first_signup")),
-                1,
-            ).otherwise(0)
-        ).alias("n_converted"),
-    )
-
-
 # --- Referential-integrity audit (ingest validation) -----------------------
 #
 # The data-quality gate a pipeline runs before trusting a new snapshot:
@@ -710,93 +574,6 @@ def q_fulfillment_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Cohort retention ---------------------------------------------------------
-#
-# The classic retention triangle: users grouped by first-seen day
-# (cohort), activity counted at each day offset from that cohort day.
-# Two shuffles — min(day) per user (the cohort assignment), then the
-# (cohort_day, offset) rollup whose cardinality is days² regardless of
-# corpus size.  retention_rate divides by the cohort's size at offset 0.
-_COHORT_MAX_OFFSET = 7  # first week — keeps the census dense and small
-
-
-def q_user_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load(spark, sf_dir, "events")
-    daily = events.select(
-        "user_id", F.to_date("ts").alias("day")
-    ).distinct()
-    cohorts = daily.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
-    activity = (
-        daily.join(cohorts, "user_id")
-        .select(
-            "cohort_day",
-            F.datediff("day", "cohort_day").alias("offset"),
-            "user_id",
-        )
-        .filter(F.col("offset") <= _COHORT_MAX_OFFSET)
-        .groupBy("cohort_day", "offset")
-        .agg(F.countDistinct("user_id").alias("n_active"))
-    )
-    base = activity.filter(F.col("offset") == 0).select(
-        "cohort_day", F.col("n_active").alias("cohort_size")
-    )
-    return (
-        activity.join(base, "cohort_day")
-        .select(
-            "cohort_day",
-            "offset",
-            "n_active",
-            "cohort_size",
-            F.round(
-                (F.col("n_active") / F.col("cohort_size")).cast(
-                    "decimal(18,10)"
-                ),
-                4,
-            ).cast("double").alias("retention_rate"),
-        )
-        .orderBy("cohort_day", "offset")
-    )
-
-
-# --- Calendar-spine gap filling ----------------------------------------------
-#
-# Time-series rollups silently DROP empty buckets (groupBy emits no row
-# for an hour with no events), which corrupts downstream rate math and
-# charting.  The fix is a generated calendar spine cross-joined with the
-# dimension values, left-joined to the real rollup, zero-filled.  Spine
-# size is hours×|dims| — generated, never scanned — so at 100 TB the
-# spine stays a broadcast-sized frame while the rollup side is the same
-# one partial-agg shuffle as the unfilled query.
-_GAPFILL_TYPE = "purchase"  # the sparsest event type drives non-vacuity
-
-
-def q_events_hourly_gapfilled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load(spark, sf_dir, "events")
-    hourly = (
-        events.filter(F.col("event_type") == _GAPFILL_TYPE)
-        .groupBy(F.date_trunc("hour", "ts").alias("hour_start"))
-        .agg(F.count("*").alias("n_events"))
-    )
-    bounds = events.agg(
-        F.date_trunc("hour", F.min("ts")).alias("lo"),
-        F.date_trunc("hour", F.max("ts")).alias("hi"),
-    )
-    spine = bounds.select(
-        F.explode(
-            F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))
-        ).alias("hour_start")
-    )
-    return (
-        spine.join(hourly, "hour_start", "left")
-        .select(
-            "hour_start",
-            F.coalesce(F.col("n_events"), F.lit(0)).alias("n_events"),
-            (F.col("n_events").isNull()).alias("was_gap"),
-        )
-        .orderBy("hour_start")
-    )
-
-
 # --- Snapshot diff (CDC census) ---------------------------------------------
 #
 # The incremental-ingest question: between yesterday's snapshot and
@@ -855,91 +632,13 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Robust outlier detection (median/MAD) ---------------------------------
-#
-# Quality gating on a metric column without assuming normality: a value
-# is anomalous when its absolute deviation from the per-user median
-# exceeds 3 robust standard deviations (MAD × 1.4826).  Median and MAD
-# are per-user aggregates — everything stays keyed on user_id (two
-# group-aggs + two joins on the same key, so AQE coalesces the
-# partitioning), and the census output is event_type-sized.  The
-# boundary comparison routes through DECIMAL(18,10)→round(6) so float
-# ulps at the threshold can't flip a flag between engines.
-_MAD_SIGMA = 1.4826
-_MAD_CUTOFF = 3.0
-
-
-def q_user_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load(spark, sf_dir, "events")
-    med = events.groupBy("user_id").agg(
-        F.percentile("value", 0.5).alias("med")
-    )
-    dev = events.join(med, "user_id").withColumn(
-        "adev", F.abs(F.col("value") - F.col("med"))
-    )
-    mad = dev.groupBy("user_id").agg(F.percentile("adev", 0.5).alias("mad"))
-    margin = F.round(
-        (
-            F.col("adev") - F.lit(_MAD_CUTOFF * _MAD_SIGMA) * F.col("mad")
-        ).cast("decimal(18,10)"),
-        6,
-    )
-    flagged = dev.join(mad, "user_id").withColumn(
-        "is_outlier", F.when(margin > 0, 1).otherwise(0)
-    )
-    return (
-        flagged.groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("is_outlier").alias("n_outliers"),
-        )
-        .orderBy("event_type")
-    )
-
-
-# --- Gaps-and-islands (consecutive-run analysis) ---------------------------
-
-def q_event_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Longest consecutive same-event-type run per user → corpus census
-    of max streak lengths.  The gaps-and-islands pattern: a change flag
-    via lag(), a running sum numbering each island, then two cheap
-    aggregates.  Both window passes share ONE partitioning (user_id) so
-    the whole pattern costs a single row-volume shuffle; the island
-    aggregates are user-cardinality-sized.  (Behavioral analog: max
-    consecutive same-role turns in a transcript — loop detection.)"""
-    events = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("event_type").over(w)
-    chg = F.when(prev.isNull() | (prev != F.col("event_type")), 1).otherwise(0)
-    run = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    islands = events.select(
-        "user_id",
-        "event_type",
-        F.sum(chg).over(run).alias("island"),
-    )
-    runs = islands.groupBy("user_id", "island").agg(
-        F.count("*").alias("run_len")
-    )
-    per_user = runs.groupBy("user_id").agg(
-        F.max("run_len").alias("max_streak")
-    )
-    return (
-        per_user.groupBy("max_streak")
-        .agg(F.count("*").alias("n_users"))
-        .orderBy("max_streak")
-    )
-
-
 # --- Approximate percentiles (GK sketch) with in-band rank-error check.
 # order_price_percentiles below is the exact path: a full sort-based
 # aggregate.  At 100 TB the exact quantile needs the whole column through
 # one aggregation; percentile_approx's Greenwald-Khanna sketch is
 # mergeable with rank error ≤ n/accuracy, so each partition ships a
-# bounded summary.  Oracle-ability follows the HLL/MG idiom: the sketch
-# value itself is engine-specific, so the output carries the EXACT
-# percentiles plus per-quantile bound flags computed Spark-side — the
+# bounded summary.  The sketch value itself is engine-specific, so the
+# output carries the EXACT percentiles plus per-quantile bound flags computed Spark-side — the
 # approx value must land between the exact interpolated quantiles at
 # q ± 2/accuracy (2× the proven rank slack absorbs interpolation
 # off-by-ones).  The oracle asserts TRUE; sketch drift breaks the hash.
@@ -998,923 +697,7 @@ def q_order_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shuffle-key skew diagnostic: the per-key row-count distribution
-    for events.user_id — the number you measure BEFORE choosing salting
-    granularity or AQE skew thresholds for a new join/agg key at 100 TB
-    (measure, don't guess; SCALE.md's mega-conversation defences were
-    sized from exactly this census on conv_id).
-
-    Shape: one map-side-partial groupBy on the key, then exact
-    percentiles over the |keys|-row count table — tiny relative to the
-    corpus, so the sort-based percentile is fine (swap in
-    approx_percentile when |keys| itself is huge)."""
-    events = load(spark, sf_dir, "events")
-    per_key = events.groupBy("user_id").agg(F.count("*").alias("n"))
-
-    def p(q, name):
-        return F.round(
-            F.percentile("n", q).cast("decimal(18,10)"), 4
-        ).cast("double").alias(name)
-
-    return per_key.agg(
-        F.count("*").alias("n_keys"),
-        F.sum("n").alias("total_rows"),
-        F.max("n").alias("max_per_key"),
-        F.round(
-            (F.sum("n") / F.count("*")).cast("decimal(18,10)"), 4
-        ).cast("double").alias("avg_per_key"),
-        p(0.5, "p50_per_key"),
-        p(0.99, "p99_per_key"),
-        F.round(
-            (F.max("n") * F.count("*") / F.sum("n")).cast("decimal(18,10)"), 4
-        ).cast("double").alias("skew_ratio"),
-    )
-
-
-# --- Misra-Gries heavy-key sketch.  key_skew_profile above answers "how
-# skewed is this key" with an exact per-key groupBy — at 100 TB that is
-# itself a full shuffle of the key space, which is what you were trying
-# to avoid sizing blind.  The MG sketch finds every key heavier than
-# n/k with k counters PER PARTITION and NO shuffle of the data: each
-# task streams its rows once, emits at most k (key, est) summary rows,
-# and the summaries merge by summation (the sketch is mergeable, the
-# whole point).  Guarantee (Misra & Gries 1982): per partition
-# true_p − n_p/(k+1) ≤ est_p ≤ true_p, so summed over partitions
-# true − n/(k+1) ≤ Σest ≤ true — every key with true > n/(k+1)
-# surfaces, and the estimate's error is bounded by n/k.
-#
-# The synthetic events corpus is deliberately uniform (~67 rows/key),
-# so the query folds every user_id ≡ 0 (mod 5) into a sentinel key 0
-# first — the classic "default/anonymous id" hot-key shape (~20% of all
-# rows on one key), deterministic and reproducible in the oracle.
-#
-# Oracle-ability follows the HLL idiom: the raw MG estimate depends on
-# partition layout (DuckDB cannot reproduce it), so the output carries
-# the exact count plus within_bound computed Spark-side from the real
-# sketch; the oracle asserts TRUE.  A sketch that drifts past its
-# proven bound breaks the value hash.
-MG_K = 16
-_MG_SENTINEL_MOD = 5
-
-_MG_SCHEMA = "key bigint, est bigint"
-
-
-def misra_gries_partition_summaries(keys: DataFrame, k: int = MG_K) -> DataFrame:
-    """Per-partition Misra-Gries summaries over a single `key` column:
-    at most k (key, est) rows per partition, merged downstream by
-    groupBy(key).sum(est).  mapInPandas keeps ONE counter dict across
-    all Arrow batches of a partition (the stream is the partition)."""
-
-    def per_partition(batches):
-        # Vectorized MG via the mergeable-summaries construction
-        # (Agarwal/Cormode et al., PODS'12): each Arrow batch's EXACT
-        # value_counts (a zero-error summary, vectorized in C) merges
-        # into the running sketch by counter addition; when the merged
-        # summary exceeds k entries, subtract the (k+1)-th largest
-        # count from every counter and drop non-positives.  est ≤ true
-        # (we only ever subtract) and total subtraction ≤ n/(k+1) — the
-        # classic MG guarantee — without a per-row Python loop.
-        counters: dict[int, int] = {}
-        for pdf in batches:
-            for key, c in pdf["key"].value_counts().items():
-                key = int(key)
-                counters[key] = counters.get(key, 0) + int(c)
-            if len(counters) > k:
-                kth = sorted(counters.values(), reverse=True)[k]
-                counters = {
-                    key: c - kth for key, c in counters.items() if c > kth
-                }
-        if counters:
-            import pandas as pd
-
-            yield pd.DataFrame(
-                {"key": list(counters), "est": list(counters.values())}
-            )
-
-    return keys.mapInPandas(per_partition, schema=_MG_SCHEMA)
-
-
-def q_heavy_keys_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heavy-key detection with bounded memory and bounded shuffle: the
-    pre-join census you run at 100 TB to pick salting keys, where the
-    exact key_skew_profile groupBy is too expensive.  Shuffle volume is
-    ≤ partitions×k summary rows instead of |keys|.  Output: top keys by
-    exact count with the sketch's error bound checked in-band."""
-    events = load(spark, sf_dir, "events")
-    key = F.when(
-        F.col("user_id") % _MG_SENTINEL_MOD == 0, F.lit(0)
-    ).otherwise(F.col("user_id")).cast("bigint")
-    keyed = events.select(key.alias("key"))
-
-    merged = (
-        misra_gries_partition_summaries(keyed)
-        .groupBy("key")
-        .agg(F.sum("est").alias("est"))
-    )
-    exact = keyed.groupBy("key").agg(F.count("*").alias("n_exact"))
-    # stream length n as a broadcast 1-row aggregate (no eager action);
-    # `div` is Spark's INTEGER floor division on longs — exact at any n,
-    # unlike double division + cast, whose truncated double can differ
-    # from DuckDB's exact `//` once n exceeds 2^53 and flip the
-    # boundary comparisons below (r3 ADVICE)
-    total = keyed.agg(F.count("*").alias("_total"))
-    slack = F.expr(f"_total div {MG_K}")
-    heavy_thr = F.expr(f"_total div {MG_K + 1}")
-    est0 = F.coalesce(F.col("est"), F.lit(0))
-    return (
-        exact.join(merged, "key", "left")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "key",
-            "n_exact",
-            (F.col("n_exact") > heavy_thr).alias("is_heavy"),
-            ((est0 <= F.col("n_exact")) & (est0 >= F.col("n_exact") - slack))
-            .alias("within_bound"),
-        )
-        .orderBy(F.desc("n_exact"), F.asc("key"))
-        .limit(10)
-    )
-
-
-# --- Explicit hot-key salting.  AQE's skew-join split handles skew it
-# can SEE (post-shuffle partition sizes); explicit salting is the tool
-# when you know the hot keys up front — which is precisely what
-# heavy_keys_sketch above produces.  The two compose: sketch → heavy-key
-# list → salted join.
-_SALT_COL = "__salt"
-
-
-def salted_equi_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    salt_src: str,
-    heavy_keys: list,
-    n_salts: int = 8,
-) -> DataFrame:
-    """Equi-join where ``heavy_keys`` on the fact side are scattered over
-    ``n_salts`` sub-keys and the dim side replicates those keys once per
-    salt — the hot key's rows land on n_salts reducers instead of one.
-    Non-heavy keys keep salt 0 (no dim blow-up).  ``salt_src`` must be a
-    deterministic per-row column (an id), so the salt — and therefore
-    the physical plan's row placement — is reproducible run-to-run.
-
-    Use when the dim side is too big to broadcast (per-entity profiles
-    at 10^9 keys) and the fact side has known mega-keys: the sentinel /
-    anonymous-id shape where one key carries percent-scale row mass."""
-    heavy = F.col(key).isin(heavy_keys)
-    f = fact.withColumn(
-        _SALT_COL,
-        F.when(heavy, F.pmod(F.xxhash64(F.col(salt_src)), F.lit(n_salts)))
-        .otherwise(F.lit(0))
-        .cast("int"),
-    )
-    d = dim.withColumn(
-        _SALT_COL,
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.when(heavy, F.lit(n_salts - 1)).otherwise(F.lit(0)),
-            )
-        ),
-    )
-    # shuffle_hash: the whole point is exercising the shuffle path — a
-    # broadcast of the (small at test scale) dim would bypass the salt
-    return f.join(d.hint("shuffle_hash"), [key, _SALT_COL]).drop(_SALT_COL)
-
-
-_SEG_MOD = 7
-
-
-def q_salted_hot_key_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The sketch→salt pipeline end-to-end: events with the sentinel
-    hot key (same fold as heavy_keys_sketch, ~20% of rows on key 0)
-    joined to a per-key dim under explicit salting, aggregated per
-    segment.  The salt is internal — output must equal the plain join,
-    which is exactly what the oracle (an unsalted SQL join) asserts."""
-    events = load(spark, sf_dir, "events")
-    key = F.when(
-        F.col("user_id") % _MG_SENTINEL_MOD == 0, F.lit(0)
-    ).otherwise(F.col("user_id")).cast("bigint")
-    fact = events.select(
-        key.alias("key"), "event_id", "event_type", "value"
-    )
-    dim = (
-        fact.select("key")
-        .distinct()
-        .withColumn("segment", F.col("key") % _SEG_MOD)
-    )
-    joined = salted_equi_join(
-        fact, dim, key="key", salt_src="event_id", heavy_keys=[0]
-    )
-    return (
-        joined.groupBy("segment")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.countDistinct("key").alias("n_keys"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 4)
-            .cast("double")
-            .alias("total_value"),
-        )
-        .orderBy("segment")
-    )
-
-
-# --- Approximate distinct (HLL++).  The raw sketch value is
-# engine-specific (DuckDB cannot reproduce Spark's HLL++ estimate), so the
-# hashed output carries the exact count plus a BOUND CHECK computed Spark-
-# side: |approx - exact| / exact <= 3×rsd.  The oracle asserts the bound
-# holds (TRUE literal) — if Spark's estimate ever drifts past the bound the
-# hash mismatches, so the driver genuinely verifies HLL accuracy, not just
-# the exact twin.  Deterministic: HLL++ is a pure function of the input
-# multiset, and the sf-pinned corpus is fixed.  Tightness is pinned by
-# tests/test_search.py::test_approx_distinct_tolerance.
-APPROX_DISTINCT_RSD = 0.02
-APPROX_DISTINCT_BOUND = 3 * APPROX_DISTINCT_RSD
-
-
-def q_approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_count_distinct per event type (rsd 2%) + exact twin in one
-    pass — at 100 TB the sketch is mergeable/constant-memory where exact
-    countDistinct needs a full shuffle of the key space."""
-    events = load(spark, sf_dir, "events")
-    return (
-        events.groupBy("event_type")
-        .agg(
-            F.approx_count_distinct(
-                "user_id", rsd=APPROX_DISTINCT_RSD
-            ).alias("approx_users"),
-            F.countDistinct("user_id").alias("exact_users"),
-        )
-        .select(
-            "event_type",
-            "exact_users",
-            (
-                F.abs(F.col("approx_users") - F.col("exact_users"))
-                <= APPROX_DISTINCT_BOUND * F.col("exact_users")
-            ).alias("approx_within_bound"),
-        )
-        .orderBy("event_type")
-    )
-
-
-CMS_DEPTH = 3
-CMS_HEX = 2  # w = 16^2 = 256 cells per row — forces real collisions
-CMS_TOPK = 10
-
-
-def _cms_cell(key_col, depth: int):
-    """Deterministic CMS cell key: first CMS_HEX chars of
-    md5('cms<depth>:' || key) — the same string in Spark and DuckDB, so
-    the whole sketch is byte-identical across engines (the
-    `bloom_membership` idiom applied to counting)."""
-    return F.substring(
-        F.md5(F.concat(F.lit(f"cms{depth}:"), key_col.cast("string"))),
-        1,
-        CMS_HEX,
-    )
-
-
-def cms_point_estimates(
-    stream: DataFrame, probe: DataFrame, key: str,
-    depth: int = CMS_DEPTH,
-) -> DataFrame:
-    """Count-min sketch point-frequency estimates (Cormode &
-    Muthukrishnan 2005): the ``stream``'s per-key counts compressed to a
-    d × w cell table, probed for the keys in ``probe``.  Completes the
-    mergeable-summary family — Misra-Gries answers "which keys are
-    heavy", HLL "how many distinct", GK "what quantile"; CMS answers
-    "how often did THIS key occur" without ever shuffling the key space.
-
-    Scale shape: each stream row expands to d (depth, cell) pairs that
-    partial-aggregate map-side into at most d·w cells — the exchange
-    carries the SKETCH (d·16^CMS_HEX rows, constant in the stream size),
-    never the keys; the probe join broadcasts that constant-size cell
-    table.  Estimates are deterministic given the md5 cell function:
-    always >= the true count (every occurrence lands in the cell), over
-    by the colliding keys' mass, min across the d independent rows.
-    Returns probe columns + ``cms_est`` (long).
-    """
-    cells = stream.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("depth"),
-                        _cms_cell(F.col(key), j).alias("cell"),
-                    )
-                    for j in range(depth)
-                ]
-            )
-        ).alias("o")
-    ).select("o.depth", "o.cell")
-    sketch = cells.groupBy("depth", "cell").agg(F.count("*").alias("c"))
-    probes = probe.select(
-        "*",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("depth"),
-                        _cms_cell(F.col(key), j).alias("cell"),
-                    )
-                    for j in range(depth)
-                ]
-            )
-        ).alias("o"),
-    ).select("*", "o.depth", "o.cell").drop("o")
-    return (
-        probes.join(F.broadcast(sketch), ["depth", "cell"])
-        .groupBy(*probe.columns)
-        .agg(F.min("c").alias("cms_est"))
-    )
-
-
-def q_cms_user_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CMS frequency estimates for the exact top-CMS_TOPK event users,
-    with the exact count and the (deterministic) overcount beside each
-    estimate — the sketch-ships-its-error discipline, hash-checked
-    because the md5 cell construction is engine-identical.  CMS_HEX=2
-    deliberately undersizes w (256 cells vs ~1.5k keys at sf0.1) so the
-    census exercises real collisions and the min-across-depths path;
-    production sizes w = ⌈e/ε⌉ for an εN overcount bound."""
-    events = load(spark, sf_dir, "events")
-    exact = events.groupBy("user_id").agg(F.count("*").alias("exact_n"))
-    probe = exact.orderBy(F.desc("exact_n"), "user_id").limit(CMS_TOPK)
-    est = cms_point_estimates(
-        events.select("user_id"), probe, key="user_id"
-    )
-    return est.select(
-        "user_id",
-        F.col("exact_n").cast("long").alias("exact_n"),
-        F.col("cms_est").cast("long").alias("cms_est"),
-        (F.col("cms_est") - F.col("exact_n")).cast("long").alias("overcount"),
-    ).orderBy(F.desc("exact_n"), "user_id")
-
-
-def skyline_2d(
-    df: DataFrame,
-    group: str,
-    x: str,
-    y: str,
-    bucket_width: float = 1.0,
-) -> DataFrame:
-    """Grouped 2-D skyline (Pareto frontier): per ``group``, the rows
-    not dominated under (minimize ``x``, maximize ``y``) — a dominates b
-    iff a.x <= b.x, a.y >= b.y and the points differ.  The preference-
-    query operator class (Börzsönyi et al., ICDE 2001) the reference's
-    best-of-three parse selection (src/core/pdf_processor.py:84's
-    max-by-score over candidate parses) is the k=1 special case of.
-
-    Scale shape — NO global sort or single-partition window anywhere:
-
-    1. ``groupBy(group, x) → max(y)``: map-side partial agg collapses
-       the input to one row per distinct (group, x) — at 10^12 rows the
-       only full-data pass.
-    2. Distinct x values land in width-``bucket_width`` buckets; the
-       per-(group, bucket) maxima form a metadata-sized spine (|groups|
-       × |range/width| rows) whose running prefix-max per group is the
-       cross-bucket dominance summary — the same tiny-spine discipline
-       as the gap-filled calendar in `q_events_hourly_gapfilled`.
-    3. The spine broadcasts back; each (group, bucket) partition sweeps
-       its own rows ordered by x against max(bucket-local running max,
-       spine prefix).  Survivors are exactly the frontier: the skyline
-       is mergeable (skyline(A ∪ B) ⊆ skyline(A) ∪ skyline(B)), so
-       bucket-local sweeps + the prefix summary lose nothing.
-
-    Returns (group, x, y) frontier rows.
-    """
-    g = df.groupBy(group, x).agg(F.max(y).alias("_best"))
-    b = g.withColumn("_bkt", F.floor(F.col(x) / F.lit(bucket_width)))
-    spine_w = (
-        Window.partitionBy(group)
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    spine = (
-        b.groupBy(group, "_bkt")
-        .agg(F.max("_best").alias("_bmax"))
-        .select(group, "_bkt", F.max("_bmax").over(spine_w).alias("_prefix"))
-    )
-    in_w = (
-        Window.partitionBy(group, "_bkt")
-        .orderBy(x)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    swept = b.join(F.broadcast(spine), [group, "_bkt"]).withColumn(
-        "_prev", F.greatest(F.max("_best").over(in_w), F.col("_prefix"))
-    )
-    return swept.filter(
-        F.col("_prev").isNull() | (F.col("_best") > F.col("_prev"))
-    ).select(group, x, F.col("_best").alias(y))
-
-
-def q_part_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-brand price/size Pareto frontier over part: the parts no
-    same-brand part beats on BOTH cheapness and size, with the count of
-    parts sitting exactly on each frontier point.  The oracle derives
-    the identical frontier from an independent quadratic NOT-EXISTS
-    dominance test, so a green row proves the bucketed sweep."""
-    part = load(spark, sf_dir, "part")
-    sky = skyline_2d(
-        part.select("p_brand", "p_retailprice", "p_size"),
-        group="p_brand",
-        x="p_retailprice",
-        y="p_size",
-    )
-    on_frontier = part.join(
-        F.broadcast(sky), ["p_brand", "p_retailprice", "p_size"]
-    )
-    return (
-        on_frontier.groupBy("p_brand", "p_retailprice", "p_size")
-        .agg(F.count("*").alias("n_parts"))
-        .select(
-            F.col("p_brand").alias("brand"),
-            F.col("p_retailprice").alias("price"),
-            F.col("p_size").alias("size"),
-            F.col("n_parts").cast("long").alias("n_parts"),
-        )
-        .orderBy("brand", "price")
-    )
-
-
-KMV_K = 64
-# 16^15 = 2^60: the first 15 hex chars of an md5 parse into a bigint and
-# normalize to [0,1) by an EXACT power-of-two double, so the fraction is
-# bit-identical in every IEEE engine
-_KMV_DENOM = float(16 ** 15)
-
-
-def _kmv_frac(h):
-    """Uniform (0,1) fraction of an md5-hex string: first 15 nibbles as
-    an integer over 2^60.  Engine-identical (DuckDB: CAST('0x'||… )."""
-    return (
-        F.conv(F.substring(h, 1, 15), 16, 10).cast("bigint") / F.lit(_KMV_DENOM)
-    )
-
-
-def kmv_sketches(keyed: DataFrame, group: str, key: str,
-                 k: int = KMV_K) -> DataFrame:
-    """KMV (k-minimum-values) distinct sketch per group (Bar-Yossef et
-    al. 2002 / the Theta-sketch base): the k smallest md5 hashes of the
-    group's distinct keys.  Returns (group, rank, h, n_distinct) sketch
-    rows — ≤ k per group plus the exact distinct count as the in-band
-    ledger (the same approximate-op-ships-its-error discipline as the
-    HLL / GK / Misra-Gries / CMS family members; this member adds what
-    none of them can do: SET OPERATIONS on the summaries —
-    union/intersection estimates between groups, `kmv_set_estimates`).
-
-    Scale shape: the only full-data pass is the distinct(group, h) —
-    the identical one shuffle any exact distinct-count pays.  The k-min
-    selection is a per-group window over DISTINCT hashes; k-min is a
-    mergeable aggregate (min-of-mins), so a 10^12-row deployment runs
-    the same selection as partial per-partition k-mins that reduce
-    map-side, exactly like the Misra-Gries partials in
-    `q_heavy_keys_sketch` — the exchange then carries ≤ k·|groups|
-    sketch rows, never the key space.
-    """
-    hashed = keyed.select(
-        F.col(group).alias("g"),
-        F.md5(F.concat(F.lit("kmv:"), F.col(key).cast("string"))).alias("h"),
-    ).distinct()
-    counts = hashed.groupBy("g").agg(F.count("*").alias("n_distinct"))
-    w = Window.partitionBy("g").orderBy("h")
-    return (
-        hashed.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .join(F.broadcast(counts), "g")
-        .select(F.col("g").alias(group), "rank", "h", "n_distinct")
-    )
-
-
-def kmv_set_estimates(sketches: DataFrame, group: str,
-                      k: int = KMV_K) -> DataFrame:
-    """Theta-sketch set operations over per-group KMV sketches: for
-    every unordered group pair, the distinct-union / distinct-
-    intersection / Jaccard ESTIMATES computed purely from the two k-row
-    summaries (Dasgupta et al. 2016's union-then-filter rule: merge the
-    two hash sets, keep the k smallest = the union's KMV; the fraction
-    of those present in both sides estimates Jaccard; union_est =
-    (k-1)/h_(k) unless the merged set is exhaustive, in which case it
-    is exact).  Never touches the raw data — the pair join runs on
-    ≤ k·|groups| sketch rows, which is why two 10-PB corpora can be
-    compared for overlap with a broadcast.
-
-    Deterministic across engines: hashes are md5 strings, the
-    normalizing denominator is the exact power of two 2^60, and the
-    division expression tree is written identically in the SQL twin —
-    so the estimates themselves hash-check, not just bound-check.
-    """
-    # pair table: every unordered group pair — a |groups|² METADATA
-    # cross join (groups are categories, not data; the broadcast makes
-    # the cartesian explicit and driver-bounded, same discipline as the
-    # single-row crossJoin aggregates elsewhere in this module)
-    groups_df = sketches.select(F.col(group).alias("ga")).distinct()
-    pairs = groups_df.crossJoin(
-        F.broadcast(groups_df.select(F.col("ga").alias("gb")))
-    ).filter(F.col("ga") < F.col("gb"))
-    side_a = pairs.join(
-        sketches.select(F.col(group).alias("ga"), "h"), "ga"
-    ).select("ga", "gb", "h", F.lit(1).alias("in_a"), F.lit(0).alias("in_b"))
-    side_b = pairs.join(
-        sketches.select(F.col(group).alias("gb"), "h"), "gb"
-    ).select("ga", "gb", "h", F.lit(0).alias("in_a"), F.lit(1).alias("in_b"))
-    union_rows = (
-        side_a.unionByName(side_b)
-        .groupBy("ga", "gb", "h")
-        .agg(F.max("in_a").alias("in_a"), F.max("in_b").alias("in_b"))
-    )
-    w = Window.partitionBy("ga", "gb").orderBy("h")
-    kmin = union_rows.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-    sizes = sketches.groupBy(group).agg(
-        F.max("n_distinct").alias("n_distinct"),
-        F.count("*").alias("sk_rows"),
-    )
-    agg = (
-        kmin.groupBy("ga", "gb")
-        .agg(
-            F.count("*").alias("n_k"),
-            F.sum(F.col("in_a") * F.col("in_b")).alias("n_both"),
-            F.max("h").alias("h_k"),
-        )
-        .join(
-            F.broadcast(sizes.select(
-                F.col(group).alias("ga"),
-                F.col("n_distinct").alias("exact_a"),
-                F.col("sk_rows").alias("rows_a"),
-            )),
-            "ga",
-        )
-        .join(
-            F.broadcast(sizes.select(
-                F.col(group).alias("gb"),
-                F.col("n_distinct").alias("exact_b"),
-                F.col("sk_rows").alias("rows_b"),
-            )),
-            "gb",
-        )
-    )
-    # exhaustive iff both sides' sketches hold their FULL hash sets and
-    # the merged set fit under k — then the union sketch IS the union
-    exhaustive = (
-        (F.col("rows_a") == F.col("exact_a"))
-        & (F.col("rows_b") == F.col("exact_b"))
-        & (F.col("n_k") < F.lit(k))
-    )
-    union_est = F.when(exhaustive, F.col("n_k").cast("double")).otherwise(
-        F.lit(float(k - 1)) / _kmv_frac(F.col("h_k"))
-    )
-    jac = F.col("n_both") / F.col("n_k")
-    return agg.select(
-        F.col("ga"), F.col("gb"),
-        F.col("exact_a").cast("long").alias("exact_a"),
-        F.col("exact_b").cast("long").alias("exact_b"),
-        F.col("n_both").cast("long").alias("k_overlap"),
-        F.round(union_est.cast("decimal(28,12)"), 4)
-        .cast("double").alias("union_est"),
-        F.round(jac.cast("decimal(28,12)"), 6)
-        .cast("double").alias("jaccard_est"),
-        F.round((jac * union_est).cast("decimal(28,12)"), 4)
-        .cast("double").alias("inter_est"),
-    )
-
-
-def q_kmv_type_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct user-day overlap between every pair of event types,
-    estimated ONLY from 64-row KMV sketches, with the exact per-type
-    distinct counts in-band and the exact pairwise intersection joined
-    beside the estimate as the error ledger.  The `approx_distinct_users`
-    HLL census answers "how many distinct per group"; this one answers
-    the question HLL structurally cannot — "how many distinct are
-    SHARED between groups" — from summaries that never grow with the
-    data.  Reference analog: the reference's duplicate identity is a
-    single per-file content hash (src/utils/helpers.py:83
-    get_file_hash) and it has no cross-corpus overlap facility at
-    all."""
-    events = load(spark, sf_dir, "events")
-    keyed = events.select(
-        "event_type",
-        F.concat(
-            F.col("user_id").cast("string"),
-            F.lit("@"),
-            F.date_format("ts", "yyyy-MM-dd"),
-        ).alias("user_day"),
-    )
-    sk = kmv_sketches(keyed, group="event_type", key="user_day")
-    est = kmv_set_estimates(sk, group="event_type")
-    # exact pairwise intersection: the ledger the estimate is judged by
-    d = keyed.distinct()
-    exact_pairs = (
-        d.select(F.col("event_type").alias("ga"), "user_day")
-        .join(d.select(F.col("event_type").alias("gb"), "user_day"), "user_day")
-        .filter(F.col("ga") < F.col("gb"))
-        .groupBy("ga", "gb")
-        .agg(F.count("*").alias("exact_inter"))
-    )
-    return (
-        est.join(exact_pairs, ["ga", "gb"], "left")
-        .select(
-            F.col("ga").alias("type_a"),
-            F.col("gb").alias("type_b"),
-            "exact_a", "exact_b",
-            F.coalesce("exact_inter", F.lit(0)).cast("long").alias("exact_inter"),
-            "union_est", "jaccard_est", "inter_est",
-        )
-        .orderBy("type_a", "type_b")
-    )
-
-
-# --- AMS F2 sketch: self-join size estimation ------------------------------
-
-AMS_GROUPS = 5       # odd, so the cross-group median is exact (no midpoint)
-AMS_PER_GROUP = 16   # counters averaged within a group (std ≈ F2·√(2/16);
-#                      measured sf0.1 rel_err 0.12 vs 0.48 at 8-per-group)
-
-
-def _ams_sign(key_col, j: int):
-    """Deterministic ±1 sign for counter ``j``: +1 when the first hex
-    nibble of md5('ams<j>:' || key) is 0-7 (its high bit clear), else
-    -1 — the same string function in Spark and DuckDB, so the whole
-    sketch is byte-identical across engines (the `_cms_cell` idiom
-    applied to signed counting)."""
-    nibble = F.substring(
-        F.md5(F.concat(F.lit(f"ams{j}:"), key_col.cast("string"))), 1, 1
-    )
-    return F.when(nibble.isin(*"01234567"), F.lit(1)).otherwise(F.lit(-1))
-
-
-def ams_f2_estimate(stream: DataFrame, key: str) -> DataFrame:
-    """AMS second-frequency-moment sketch (Alon, Matias & Szegedy 1996):
-    estimate F2 = Σ_k count(k)² — the size of the stream's SELF-JOIN on
-    ``key`` — from AMS_GROUPS × AMS_PER_GROUP signed counters, without
-    ever shuffling the key space.  F2 is what a join planner needs to
-    size the output of `events ⋈ events ON user_id` before running it;
-    the exact answer costs a groupBy over every key, the sketch costs a
-    constant-width exchange.
-
-    Scale shape: each stream row expands to the 80 (j, ±1) counter
-    increments, which partial-aggregate map-side to at most 80 running
-    sums per task — the exchange carries 80 rows TOTAL regardless of
-    stream size (the Misra-Gries/CMS mergeable-summary discipline).
-    Each counter's square is an unbiased F2 estimate; means of 16 cut
-    the variance 16×, the median across 5 group-means cuts outlier
-    probability exponentially (standard AMS analysis).  Deterministic
-    given the md5 signs, so the estimate itself hash-checks against
-    the SQL oracle.  Returns one row: (ams_est double).
-    """
-    n = AMS_GROUPS * AMS_PER_GROUP
-    sums = (
-        stream.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"),
-                            _ams_sign(F.col(key), j).alias("s"),
-                        )
-                        for j in range(n)
-                    ]
-                )
-            ).alias("o")
-        )
-        .groupBy(F.col("o.j").alias("j"))
-        .agg(F.sum("o.s").alias("S"))
-    )
-    group_means = sums.groupBy(
-        (F.col("j") % AMS_GROUPS).alias("g")
-    ).agg(F.avg(F.col("S") * F.col("S")).alias("gmean"))
-    return group_means.agg(F.median("gmean").alias("ams_est"))
-
-
-def q_ams_selfjoin_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Self-join size of events on user_id — exact F2 vs the 40-counter
-    AMS estimate, relative error in-band (the sketch-ships-its-error
-    discipline).  Exact F2 here is the row count `events ⋈ events ON
-    user_id` would produce; the sketch answers it from a constant-size
-    exchange.  Hash-checked: the md5 sign construction is
-    engine-identical, so the estimate (not just a bound) must match."""
-    events = load(spark, sf_dir, "events")
-    exact = (
-        events.groupBy("user_id")
-        .agg(F.count("*").alias("c"))
-        .agg(F.sum(F.col("c") * F.col("c")).cast("long").alias("exact_f2"))
-    )
-    est = ams_f2_estimate(events.select("user_id"), key="user_id")
-    return (
-        exact.crossJoin(F.broadcast(est))
-        .select(
-            "exact_f2",
-            F.round(F.col("ams_est").cast("decimal(28,10)"), 2)
-            .cast("double")
-            .alias("ams_est"),
-            F.round(
-                (
-                    F.abs(F.col("ams_est") - F.col("exact_f2"))
-                    / F.col("exact_f2")
-                ).cast("decimal(18,10)"),
-                4,
-            )
-            .cast("double")
-            .alias("rel_err"),
-            F.lit(AMS_GROUPS * AMS_PER_GROUP).cast("int").alias("n_counters"),
-        )
-    )
-
-
-_AMS_SQL = f"""
-    WITH counters AS (
-        SELECT j FROM range({AMS_GROUPS * AMS_PER_GROUP}) t(j)
-    ), sums AS (
-        SELECT c.j,
-               CAST(sum(CASE WHEN substr(md5('ams' || c.j || ':'
-                                          || CAST(e.user_id AS VARCHAR)),
-                                   1, 1) IN ('0','1','2','3','4','5','6','7')
-                             THEN 1 ELSE -1 END) AS BIGINT) AS S
-        FROM events e CROSS JOIN counters c
-        GROUP BY c.j
-    ), gmeans AS (
-        SELECT j % {AMS_GROUPS} AS g, avg(CAST(S AS DOUBLE) * S) AS gmean
-        FROM sums GROUP BY 1
-    ), est AS (
-        SELECT median(gmean) AS ams_est FROM gmeans
-    ), exact AS (
-        SELECT CAST(sum(c * c) AS BIGINT) AS exact_f2
-        FROM (SELECT CAST(count(*) AS BIGINT) AS c
-              FROM events GROUP BY user_id)
-    )
-    SELECT exact_f2,
-           CAST(round(CAST(ams_est AS DECIMAL(28,10)), 2) AS DOUBLE)
-               AS ams_est,
-           CAST(round(CAST(abs(ams_est - exact_f2) / exact_f2
-                           AS DECIMAL(18,10)), 4) AS DOUBLE) AS rel_err,
-           CAST({AMS_GROUPS * AMS_PER_GROUP} AS INTEGER) AS n_counters
-    FROM exact, est
-"""
-
-
-_KMV_SQL = f"""
-    WITH keyed AS (
-        SELECT DISTINCT event_type AS g,
-               md5('kmv:' || CAST(user_id AS VARCHAR) || '@'
-                   || strftime(ts, '%Y-%m-%d')) AS h
-        FROM events
-    ),
-    counts AS (SELECT g, count(*) AS n_distinct FROM keyed GROUP BY g),
-    sk AS (
-        SELECT g, h, n_distinct FROM (
-            SELECT k.g, k.h, c.n_distinct,
-                   row_number() OVER (PARTITION BY k.g ORDER BY k.h) AS rank
-            FROM keyed k JOIN counts c USING (g)
-        ) WHERE rank <= {KMV_K}
-    ),
-    sizes AS (
-        SELECT g, max(n_distinct) AS n_distinct, count(*) AS sk_rows
-        FROM sk GROUP BY g
-    ),
-    pairs AS (
-        SELECT a.g AS ga, b.g AS gb
-        FROM sizes a, sizes b WHERE a.g < b.g
-    ),
-    union_rows AS (
-        SELECT ga, gb, h, max(in_a) AS in_a, max(in_b) AS in_b FROM (
-            SELECT p.ga, p.gb, s.h, 1 AS in_a, 0 AS in_b
-            FROM pairs p JOIN sk s ON s.g = p.ga
-            UNION ALL
-            SELECT p.ga, p.gb, s.h, 0 AS in_a, 1 AS in_b
-            FROM pairs p JOIN sk s ON s.g = p.gb
-        ) GROUP BY ga, gb, h
-    ),
-    kmin AS (
-        SELECT * FROM (
-            SELECT ga, gb, h, in_a, in_b,
-                   row_number() OVER (PARTITION BY ga, gb ORDER BY h) AS rank
-            FROM union_rows
-        ) WHERE rank <= {KMV_K}
-    ),
-    agg AS (
-        SELECT k.ga, k.gb,
-               count(*) AS n_k,
-               CAST(sum(k.in_a * k.in_b) AS BIGINT) AS n_both,
-               max(k.h) AS h_k,
-               sa.n_distinct AS exact_a, sa.sk_rows AS rows_a,
-               sb.n_distinct AS exact_b, sb.sk_rows AS rows_b
-        FROM kmin k
-        JOIN sizes sa ON sa.g = k.ga
-        JOIN sizes sb ON sb.g = k.gb
-        GROUP BY k.ga, k.gb, sa.n_distinct, sa.sk_rows,
-                 sb.n_distinct, sb.sk_rows
-    ),
-    est AS (
-        SELECT ga, gb, exact_a, exact_b, n_both AS k_overlap,
-               CASE WHEN rows_a = exact_a AND rows_b = exact_b
-                         AND n_k < {KMV_K}
-                    THEN CAST(n_k AS DOUBLE)
-                    ELSE {float(KMV_K - 1)} /
-                         (CAST(('0x' || substr(h_k, 1, 15)) AS BIGINT)
-                          / {_KMV_DENOM})
-               END AS union_est,
-               CAST(n_both AS DOUBLE) / n_k AS jac
-        FROM agg
-    ),
-    keyed_full AS (
-        SELECT DISTINCT event_type AS g,
-               CAST(user_id AS VARCHAR) || '@'
-                   || strftime(ts, '%Y-%m-%d') AS ud
-        FROM events
-    ),
-    exact_pairs AS (
-        SELECT a.g AS ga, b.g AS gb, count(*) AS exact_inter
-        FROM keyed_full a JOIN keyed_full b ON a.ud = b.ud AND a.g < b.g
-        GROUP BY 1, 2
-    )
-    SELECT e.ga AS type_a, e.gb AS type_b,
-           CAST(e.exact_a AS BIGINT) AS exact_a,
-           CAST(e.exact_b AS BIGINT) AS exact_b,
-           CAST(COALESCE(x.exact_inter, 0) AS BIGINT) AS exact_inter,
-           CAST(round(CAST(e.union_est AS DECIMAL(28,12)), 4) AS DOUBLE)
-               AS union_est,
-           CAST(round(CAST(e.jac AS DECIMAL(28,12)), 6) AS DOUBLE)
-               AS jaccard_est,
-           CAST(round(CAST(e.jac * e.union_est AS DECIMAL(28,12)), 4)
-                AS DOUBLE) AS inter_est
-    FROM est e LEFT JOIN exact_pairs x ON e.ga = x.ga AND e.gb = x.gb
-    ORDER BY type_a, type_b
-"""
-
-
 ORACLE_SQL = {
-    # the md5 hash + exact power-of-two normalizer are engine-identical,
-    # so the Theta-sketch union/intersection ESTIMATES hash-check too
-    "kmv_type_overlap": _KMV_SQL,
-    # the md5 sign construction is engine-identical, so the AMS estimate
-    # itself (not just an error bound) is hash-checked
-    "ams_selfjoin_size": _AMS_SQL,
-    # the md5 cell construction is engine-identical, so the whole sketch
-    # (and therefore every estimate and overcount) is hash-checked, not
-    # just bounded — the bloom_membership idiom applied to counting
-    "cms_user_frequency": f"""
-        WITH depths AS (
-            SELECT * FROM (VALUES (0), (1), (2)) AS t(d)
-        ), cells AS (
-            SELECT d.d AS depth,
-                   substr(md5('cms' || d.d || ':'
-                              || CAST(e.user_id AS VARCHAR)),
-                          1, {CMS_HEX}) AS cell,
-                   CAST(count(*) AS BIGINT) AS c
-            FROM events e CROSS JOIN depths d
-            GROUP BY 1, 2
-        ), exact AS (
-            SELECT user_id, CAST(count(*) AS BIGINT) AS exact_n
-            FROM events GROUP BY 1
-        ), probe AS (
-            SELECT * FROM exact ORDER BY exact_n DESC, user_id
-            LIMIT {CMS_TOPK}
-        ), est AS (
-            SELECT p.user_id, p.exact_n, min(c.c) AS cms_est
-            FROM probe p
-            CROSS JOIN depths d
-            JOIN cells c
-              ON c.depth = d.d
-             AND c.cell = substr(md5('cms' || d.d || ':'
-                                     || CAST(p.user_id AS VARCHAR)),
-                                 1, {CMS_HEX})
-            GROUP BY 1, 2
-        )
-        SELECT user_id, exact_n,
-               CAST(cms_est AS BIGINT) AS cms_est,
-               CAST(cms_est - exact_n AS BIGINT) AS overcount
-        FROM est
-        ORDER BY exact_n DESC, user_id
-    """,
-    # independent formulation: quadratic NOT-EXISTS dominance test over
-    # the per-(brand, price) maxima — a different algorithm from the
-    # Spark side's bucketed prefix-max sweep, so a hash match proves the
-    # sweep IS the frontier
-    "part_skyline": """
-        WITH g AS (
-            SELECT p_brand AS brand, p_retailprice AS price,
-                   max(p_size) AS size
-            FROM part GROUP BY 1, 2
-        ), sky AS (
-            SELECT brand, price, size FROM g a
-            WHERE NOT EXISTS (
-                SELECT 1 FROM g b
-                WHERE b.brand = a.brand
-                  AND b.price <= a.price AND b.size >= a.size
-                  AND (b.price < a.price OR b.size > a.size)
-            )
-        )
-        SELECT s.brand, s.price, CAST(s.size AS INTEGER) AS size,
-               CAST(count(*) AS BIGINT) AS n_parts
-        FROM part p
-        JOIN sky s ON p.p_brand = s.brand
-                  AND p.p_retailprice = s.price AND p.p_size = s.size
-        GROUP BY 1, 2, 3
-        ORDER BY brand, price
-    """,
     "order_price_percentiles": """
         SELECT CAST(round(CAST(quantile_cont(o_totalprice, 0.25) AS DECIMAL(18,10)), 4) AS DOUBLE) AS p25,
                CAST(round(CAST(quantile_cont(o_totalprice, 0.50) AS DECIMAL(18,10)), 4) AS DOUBLE) AS p50,
@@ -1922,36 +705,6 @@ ORACLE_SQL = {
                CAST(round(CAST(quantile_cont(o_totalprice, 0.95) AS DECIMAL(18,10)), 4) AS DOUBLE) AS p95,
                count(*) AS n_orders
         FROM orders
-    """,
-    # the TRUE literal is the invariant, not a tautology: Spark computes
-    # approx_within_bound from its real HLL++ estimate, so a drifting
-    # sketch breaks the value hash (see q_approx_distinct_users)
-    "approx_distinct_users": """
-        SELECT event_type,
-               count(DISTINCT user_id) AS exact_users,
-               TRUE AS approx_within_bound
-        FROM events
-        GROUP BY event_type
-        ORDER BY event_type
-    """,
-# is_heavy is exact arithmetic (both engines floor-divide); within_bound
-# follows the HLL idiom — Spark computes it from the real MG estimates,
-# the oracle asserts the proven Misra-Gries bound holds (TRUE literal),
-# so a sketch drifting past ±n/k breaks the value hash
-    "heavy_keys_sketch": f"""
-        WITH keyed AS (
-            SELECT CASE WHEN user_id % {_MG_SENTINEL_MOD} = 0 THEN 0
-                        ELSE user_id END AS key
-            FROM events
-        ),
-        exact AS (SELECT key, count(*) AS n_exact FROM keyed GROUP BY key),
-        tot AS (SELECT count(*) AS t FROM keyed)
-        SELECT key, n_exact,
-               n_exact > t // {MG_K + 1} AS is_heavy,
-               TRUE AS within_bound
-        FROM exact, tot
-        ORDER BY n_exact DESC, key ASC
-        LIMIT 10
     """,
     "fulfillment_latency": """
         SELECT o_orderpriority,
@@ -1964,54 +717,6 @@ ORACLE_SQL = {
         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         GROUP BY o_orderpriority
         ORDER BY o_orderpriority
-    """,
-    "user_retention_cohorts": f"""
-        WITH daily AS (
-            SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
-        ),
-        cohorts AS (
-            SELECT user_id, min(day) AS cohort_day FROM daily GROUP BY user_id
-        ),
-        activity AS (
-            SELECT c.cohort_day,
-                   datediff('day', c.cohort_day, d.day) AS "offset",
-                   count(DISTINCT d.user_id) AS n_active
-            FROM daily d JOIN cohorts c USING (user_id)
-            WHERE datediff('day', c.cohort_day, d.day) <= {_COHORT_MAX_OFFSET}
-            GROUP BY 1, 2
-        ),
-        base AS (
-            SELECT cohort_day, n_active AS cohort_size
-            FROM activity WHERE "offset" = 0
-        )
-        SELECT a.cohort_day, a."offset" AS "offset", a.n_active, b.cohort_size,
-               CAST(round(CAST(a.n_active::DOUBLE / b.cohort_size
-                               AS DECIMAL(18,10)), 4) AS DOUBLE) AS retention_rate
-        FROM activity a JOIN base b USING (cohort_day)
-        ORDER BY a.cohort_day, a."offset"
-    """,
-    "events_hourly_gapfilled": f"""
-        WITH hourly AS (
-            SELECT time_bucket(INTERVAL '1 hour', ts) AS hour_start,
-                   count(*) AS n_events
-            FROM events WHERE event_type = '{_GAPFILL_TYPE}'
-            GROUP BY hour_start
-        ),
-        bounds AS (
-            SELECT time_bucket(INTERVAL '1 hour', min(ts)) AS lo,
-                   time_bucket(INTERVAL '1 hour', max(ts)) AS hi
-            FROM events
-        ),
-        spine AS (
-            SELECT unnest(generate_series(lo, hi, INTERVAL '1 hour'))
-                     AS hour_start
-            FROM bounds
-        )
-        SELECT s.hour_start,
-               coalesce(h.n_events, 0) AS n_events,
-               h.n_events IS NULL AS was_gap
-        FROM spine s LEFT JOIN hourly h USING (hour_start)
-        ORDER BY s.hour_start
     """,
     "snapshot_diff": f"""
         WITH old AS (
@@ -2036,28 +741,6 @@ ORACLE_SQL = {
         GROUP BY coalesce(o.source, n.source)
         ORDER BY source
     """,
-    "user_value_outliers": f"""
-        WITH med AS (
-            SELECT user_id, quantile_cont(value, 0.5) AS med
-            FROM events GROUP BY user_id
-        ),
-        dev AS (
-            SELECT e.user_id, e.event_type, abs(e.value - m.med) AS adev
-            FROM events e JOIN med m USING (user_id)
-        ),
-        mad AS (
-            SELECT user_id, quantile_cont(adev, 0.5) AS mad
-            FROM dev GROUP BY user_id
-        )
-        SELECT d.event_type,
-               count(*) AS n_events,
-               CAST(sum(CASE WHEN round(CAST(d.adev - {_MAD_CUTOFF * _MAD_SIGMA} * m.mad
-                                             AS DECIMAL(18,10)), 6) > 0
-                              THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-        FROM dev d JOIN mad m USING (user_id)
-        GROUP BY d.event_type
-        ORDER BY d.event_type
-    """,
     "referential_integrity": f"""
         WITH cust AS (
             SELECT * FROM customer WHERE c_custkey % {_RI_DROP_MOD} <> 0
@@ -2078,33 +761,6 @@ ORACLE_SQL = {
                 WHERE c_nationkey NOT IN (SELECT n_nationkey FROM nation))
         ORDER BY fk
     """,
-    "event_streaks": """
-        WITH flagged AS (
-            SELECT user_id, event_type, ts, event_id,
-                   CASE WHEN lag(event_type) OVER w IS NULL
-                             OR lag(event_type) OVER w <> event_type
-                        THEN 1 ELSE 0 END AS chg
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ),
-        islands AS (
-            SELECT user_id,
-                   CAST(sum(chg) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS UNBOUNDED PRECEDING
-                   ) AS BIGINT) AS island
-            FROM flagged
-        ),
-        runs AS (
-            SELECT user_id, island, count(*) AS run_len
-            FROM islands GROUP BY user_id, island
-        ),
-        per_user AS (
-            SELECT user_id, max(run_len) AS max_streak FROM runs GROUP BY user_id
-        )
-        SELECT max_streak, count(*) AS n_users
-        FROM per_user GROUP BY max_streak ORDER BY max_streak
-    """,
     "order_price_percentiles_approx": """
         SELECT CAST(round(CAST(quantile_cont(o_totalprice, 0.25) AS DECIMAL(18,10)), 4) AS DOUBLE) AS p25,
                CAST(round(CAST(quantile_cont(o_totalprice, 0.50) AS DECIMAL(18,10)), 4) AS DOUBLE) AS p50,
@@ -2116,37 +772,6 @@ ORACLE_SQL = {
                TRUE AS p95_within_bound,
                count(*) AS n_orders
         FROM orders
-    """,
-    # unsalted join: the salt must be output-invisible, so the oracle is
-    # the plain SQL join the salted plan must reproduce exactly
-    "salted_hot_key_join": f"""
-        WITH keyed AS (
-            SELECT CASE WHEN user_id % {_MG_SENTINEL_MOD} = 0 THEN 0
-                        ELSE user_id END AS key,
-                   event_type, value
-            FROM events
-        ),
-        dim AS (SELECT DISTINCT key, key % {_SEG_MOD} AS segment FROM keyed)
-        SELECT d.segment,
-               count(*) AS n_events,
-               count(DISTINCT k.key) AS n_keys,
-               CAST(round(sum(k.value::DECIMAL(18,6)), 4) AS DOUBLE) AS total_value
-        FROM keyed k JOIN dim d ON k.key = d.key
-        GROUP BY d.segment
-        ORDER BY d.segment
-    """,
-    "key_skew_profile": """
-        WITH per_key AS (
-            SELECT user_id, count(*) AS n FROM events GROUP BY user_id
-        )
-        SELECT count(*) AS n_keys,
-               CAST(sum(n) AS BIGINT) AS total_rows,
-               max(n) AS max_per_key,
-               CAST(round(CAST(sum(n)::DOUBLE / count(*) AS DECIMAL(18,10)), 4) AS DOUBLE) AS avg_per_key,
-               CAST(round(CAST(quantile_cont(n, 0.50) AS DECIMAL(18,10)), 4) AS DOUBLE) AS p50_per_key,
-               CAST(round(CAST(quantile_cont(n, 0.99) AS DECIMAL(18,10)), 4) AS DOUBLE) AS p99_per_key,
-               CAST(round(CAST(max(n)::DOUBLE * count(*) / sum(n) AS DECIMAL(18,10)), 4) AS DOUBLE) AS skew_ratio
-        FROM per_key
     """,
     "big_spenders": f"""
         SELECT o_custkey, n_orders,
@@ -2172,20 +797,6 @@ ORACLE_SQL = {
           AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
         GROUP BY c_nationkey
         ORDER BY c_nationkey
-    """,
-    "signup_purchase_funnel": """
-        -- CAST(sum(..) AS BIGINT): DuckDB sum(INTEGER) yields HUGEINT; Spark yields BIGINT.
-        SELECT CAST(sum(CASE WHEN first_signup IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_signed_up,
-               CAST(sum(CASE WHEN first_signup IS NOT NULL AND first_purchase IS NOT NULL
-                         AND first_purchase >= first_signup THEN 1 ELSE 0 END) AS BIGINT) AS n_converted
-        FROM (
-            SELECT user_id,
-                   min(CASE WHEN event_type = 'signup' THEN ts END) AS first_signup,
-                   min(CASE WHEN event_type = 'purchase' THEN ts END) AS first_purchase
-            FROM events
-            WHERE event_type IN ('signup', 'purchase')
-            GROUP BY user_id
-        )
     """,
     "shipping_priority": """
         SELECT o_orderkey, o_orderdate,
@@ -2314,15 +925,6 @@ ORACLE_SQL = {
         GROUP BY user_id, session_id
         ORDER BY user_id, session_id
     """,
-    "events_hourly": """
-        SELECT time_bucket(INTERVAL '1 hour', ts) AS hour_start,
-               event_type,
-               count(*) AS n_events,
-               CAST(round(sum(value::DECIMAL(18,6)), 4) AS DOUBLE) AS total_value
-        FROM events
-        GROUP BY hour_start, event_type
-        ORDER BY hour_start, event_type
-    """,
     "order_price_deciles": """
         SELECT decile,
                count(*) AS n_orders,
@@ -2335,18 +937,6 @@ ORACLE_SQL = {
         )
         GROUP BY decile
         ORDER BY decile
-    """,
-    "event_type_pivot": """
-        -- CAST(sum(..) AS BIGINT): DuckDB sum(INTEGER) yields HUGEINT; Spark yields BIGINT.
-        SELECT user_id % 10 AS user_bucket,
-               CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
-               CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase,
-               CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS n_view,
-               CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
-               CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error
-        FROM events
-        GROUP BY user_bucket
-        ORDER BY user_bucket
     """,
     "topk_urgent_orders": """
         SELECT o_orderkey, o_totalprice, o_orderpriority
@@ -2433,47 +1023,8 @@ ORACLE_SQL = {
         GROUP BY r_name
         ORDER BY r_name
     """,
-    "first_event_per_user": """
-        SELECT user_id, event_id, event_type FROM (
-            SELECT user_id, event_id, event_type,
-                   row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-            FROM events
-        ) WHERE rn = 1
-        ORDER BY user_id
-    """,
-    "event_value_increases": """
-        SELECT event_type, count(*) AS n_increases FROM (
-            SELECT event_type, value,
-                   lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_value
-            FROM events
-        ) WHERE value > prev_value
-        GROUP BY event_type
-        ORDER BY event_type
-    """,
-    "user_rolling_value": """
-        SELECT user_id, event_id, ts,
-               row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS seq,
-               CAST(SUM(dec) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                    ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS DOUBLE) AS moving_value_3,
-               CAST(SUM(dec) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cum_value
-        FROM (
-            SELECT user_id, event_id, ts,
-                   CAST(round(CAST(value AS DECIMAL(18,10)), 4) AS DECIMAL(18,4)) AS dec
-            FROM events
-        )
-        ORDER BY user_id, seq
-    """,
-    "event_type_stats": """
-        SELECT event_type,
-               count(*) AS n_events,
-               count(DISTINCT user_id) AS n_users,
-               CAST(round(avg(value::DECIMAL(18,6)), 4) AS DOUBLE) AS avg_value
-        FROM events
-        GROUP BY event_type
-        ORDER BY event_type
-    """,
 }
+
 
 # ---------------------------------------------------------------------------
 # Per-user value trend: exact-moment least squares (regr_slope twin)
@@ -2538,8 +1089,7 @@ def user_value_trend(events: DataFrame) -> DataFrame:
 
 
 def q_user_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT a ``queries()`` entry (final-round frozen-window policy);
-    DuckDB parity is pinned in tests/test_driver_contract.py."""
+    """DuckDB parity is pinned in tests/test_driver_contract.py."""
     return user_value_trend(load(spark, sf_dir, "events"))
 
 
@@ -2589,17 +1139,19 @@ def benford_digit_census(
     unit-mixing audit (naturally-grown multiplicative amounts follow
     Benford; synthetic uniforms and copy-pastes don't).
 
-    Engine-portable digit extraction: the value is quantized to
-    DECIMAL(18,2) and cast to STRING — decimal-to-string is exact and
-    renders identically on both engines, where double-to-string
-    formatting does NOT (Spark '1.0E5' vs DuckDB '100000.0'); the first
-    character of the non-fractional part is the digit.  Shares and the
+    Engine-portable digit extraction: the TRUNCATED integer part
+    (``floor``) is cast through DECIMAL(18,0) to STRING — decimal-to-string
+    is exact and renders identically on both engines, where
+    double-to-string formatting does NOT (Spark '1.0E5' vs DuckDB
+    '100000.0'); its first character is the digit, exact for every
+    amount >= 1.  Quantizing to DECIMAL(18,2) instead would round
+    HALF_UP first and move 9.997 to '10.00', digit 1.  Shares and the
     expectation are fixed IEEE chains over exact counts, rounded
     through DECIMAL(18,10).  Rows with NULL or < 1 amounts are excluded
     (no first significant digit in this simple extraction)."""
     amt = F.col(amount_col)
     digit = F.substring(
-        amt.cast("decimal(18,2)").cast("string"), 1, 1
+        F.floor(amt).cast("decimal(18,0)").cast("string"), 1, 1
     ).cast("int")
     per_digit = (
         df.filter(amt.isNotNull() & (amt >= 1))
@@ -2628,14 +1180,13 @@ def benford_digit_census(
 
 
 def q_benford_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT a ``queries()`` entry (frozen-window policy); DuckDB parity
-    pinned in tests/test_driver_contract.py."""
+    """DuckDB parity is pinned in tests/test_driver_contract.py."""
     return benford_digit_census(load(spark, sf_dir, "orders"))
 
 
 ORACLE_BENFORD = """
     WITH pd AS (
-        SELECT CAST(substr(CAST(CAST(o_totalprice AS DECIMAL(18,2))
+        SELECT CAST(substr(CAST(CAST(floor(o_totalprice) AS DECIMAL(18,0))
                                 AS VARCHAR), 1, 1) AS INT) AS digit,
                CAST(count(*) AS BIGINT) AS n_rows
         FROM orders
@@ -2671,8 +1222,7 @@ def gini_concentration(
 ) -> DataFrame:
     """Per-group Gini coefficient of a value column — the concentration
     census behind "is this source/priority dominated by a few huge
-    rows?" (the same question `key_skew_profile` answers for shuffle
-    keys, asked of VALUE mass).
+    rows?", asked of VALUE mass).
 
     G = 2·Σ(i·x_i) / (n·Σx) − (n+1)/n over values ranked ascending
     (row_number with a deterministic ``value, natural-key`` tie-break —
@@ -2723,8 +1273,7 @@ def gini_concentration(
 
 
 def q_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT a ``queries()`` entry (frozen-window policy); DuckDB parity
-    pinned in tests/test_driver_contract.py."""
+    """DuckDB parity is pinned in tests/test_driver_contract.py."""
     return gini_concentration(load(spark, sf_dir, "orders"))
 
 
@@ -2758,121 +1307,6 @@ ORACLE_REVENUE_GINI = """
                AS DECIMAL(18,10)), 6) AS DOUBLE) AS gini
     FROM m
     WHERE sx > 0
-    ORDER BY o_orderpriority
-"""
-
-
-def pareto_cut_census(
-    df: DataFrame,
-    group_col: str = "o_orderpriority",
-    value_col: str = "o_totalprice",
-    key_col: str = "o_orderkey",
-) -> DataFrame:
-    """Per-group Pareto cuts: the smallest fraction of rows (ranked by
-    value, descending) that carries >= 50% and >= 80% of the value mass
-    — the "do 20% of orders carry 80% of revenue?" census that pairs
-    with :func:`gini_concentration`.
-
-    The thresholds are EXACT RATIONAL comparisons on exact decimal
-    running sums — ``2·cum >= Σ`` and ``5·cum >= 4·Σ`` — never
-    ``cum >= 0.5*Σ`` in floats, so no boundary row can flip between
-    engines on a rounding ulp.  One rank window per group (running sum
-    + total share the partition), then a group-sized aggregate."""
-    x = F.col(value_col).cast("decimal(18,2)")
-    w = Window.partitionBy(group_col).orderBy(
-        F.col("_raw").desc(), F.col(key_col)
-    )
-    ranked = (
-        df.filter(F.col(value_col).isNotNull() & (F.col(value_col) >= 0))
-        .select(
-            group_col, key_col, x.alias("x"),
-            F.col(value_col).alias("_raw"),
-        )
-        .withColumn("i", F.row_number().over(w))
-        .withColumn(
-            "cum",
-            F.sum("x").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-        .withColumn(
-            "sx",
-            F.sum("x").over(
-                Window.partitionBy(group_col).rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            ),
-        )
-    )
-    k50 = F.min(
-        F.when(F.col("cum") * 2 >= F.col("sx"), F.col("i"))
-    ).alias("k50")
-    k80 = F.min(
-        F.when(F.col("cum") * 5 >= F.col("sx") * 4, F.col("i"))
-    ).alias("k80")
-    m = ranked.groupBy(group_col).agg(
-        F.count("*").alias("n"), F.max("sx").alias("sx_total"), k50, k80
-    )
-    def share(k):
-        return F.round(
-            (F.col(k).cast("double") / F.col("n").cast("double")).cast(
-                "decimal(18,10)"
-            ),
-            6,
-        ).cast("double")
-    return (
-        m.filter(F.col("sx_total") > 0)
-        .select(
-            group_col,
-            F.col("n").alias("n_rows"),
-            F.col("k50").cast("long").alias("rows_for_half"),
-            share("k50").alias("row_share_for_half"),
-            F.col("k80").cast("long").alias("rows_for_80pct"),
-            share("k80").alias("row_share_for_80pct"),
-        )
-        .orderBy(group_col)
-    )
-
-
-def q_pareto_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT a ``queries()`` entry (frozen-window policy); DuckDB parity
-    pinned in tests/test_driver_contract.py."""
-    return pareto_cut_census(load(spark, sf_dir, "orders"))
-
-
-ORACLE_PARETO_REVENUE = """
-    WITH ranked AS (
-        SELECT o_orderpriority,
-               CAST(o_totalprice AS DECIMAL(18,2)) AS x,
-               row_number() OVER (
-                   PARTITION BY o_orderpriority
-                   ORDER BY o_totalprice DESC, o_orderkey
-               ) AS i,
-               CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-                   PARTITION BY o_orderpriority
-                   ORDER BY o_totalprice DESC, o_orderkey
-                   ROWS UNBOUNDED PRECEDING
-               ) AS DECIMAL(38,2)) AS cum,
-               CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-                   PARTITION BY o_orderpriority
-               ) AS DECIMAL(38,2)) AS sx
-        FROM orders
-        WHERE o_totalprice IS NOT NULL AND o_totalprice >= 0
-    ),
-    m AS (
-        SELECT o_orderpriority, count(*) AS n, max(sx) AS sx_total,
-               min(CASE WHEN cum * 2 >= sx THEN i END) AS k50,
-               min(CASE WHEN cum * 5 >= sx * 4 THEN i END) AS k80
-        FROM ranked GROUP BY o_orderpriority
-    )
-    SELECT o_orderpriority,
-           CAST(n AS BIGINT) AS n_rows,
-           CAST(k50 AS BIGINT) AS rows_for_half,
-           CAST(round(CAST(CAST(k50 AS DOUBLE) / CAST(n AS DOUBLE)
-               AS DECIMAL(18,10)), 6) AS DOUBLE) AS row_share_for_half,
-           CAST(k80 AS BIGINT) AS rows_for_80pct,
-           CAST(round(CAST(CAST(k80 AS DOUBLE) / CAST(n AS DOUBLE)
-               AS DECIMAL(18,10)), 6) AS DOUBLE) AS row_share_for_80pct
-    FROM m
-    WHERE sx_total > 0
     ORDER BY o_orderpriority
 """
 
@@ -2921,8 +1355,7 @@ def seasonality_census(events: DataFrame) -> DataFrame:
 
 
 def q_event_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT a ``queries()`` entry (frozen-window policy); DuckDB parity
-    pinned in tests/test_driver_contract.py."""
+    """DuckDB parity is pinned in tests/test_driver_contract.py."""
     return seasonality_census(load(spark, sf_dir, "events"))
 
 
@@ -2947,21 +1380,12 @@ ORACLE_EVENT_SEASONALITY = """
 
 QUERIES = {
     "order_price_percentiles": q_order_price_percentiles,
-    "key_skew_profile": q_key_skew_profile,
-    "heavy_keys_sketch": q_heavy_keys_sketch,
-    "salted_hot_key_join": q_salted_hot_key_join,
     "order_price_percentiles_approx": q_order_price_percentiles_approx,
-    "event_streaks": q_event_streaks,
     "referential_integrity": q_referential_integrity,
-    "user_value_outliers": q_user_value_outliers,
     "snapshot_diff": q_snapshot_diff,
-    "events_hourly_gapfilled": q_events_hourly_gapfilled,
-    "user_retention_cohorts": q_user_retention_cohorts,
     "fulfillment_latency": q_fulfillment_latency,
-    "approx_distinct_users": q_approx_distinct_users,
     "big_spenders": q_big_spenders,
     "idle_rich_customers": q_idle_rich_customers,
-    "signup_purchase_funnel": q_signup_purchase_funnel,
     "shipping_priority": q_shipping_priority,
     "local_supplier_volume": q_local_supplier_volume,
     "top_supplier_per_nation": q_top_supplier_per_nation,
@@ -2971,12 +1395,6 @@ QUERIES = {
     "customer_only_nations": q_customer_only_nations,
     "part_type_stats": q_part_type_stats,
     "user_sessions": q_user_sessions,
-    "event_type_pivot": q_event_type_pivot,
-    "events_hourly": q_events_hourly,
-    "part_skyline": q_part_skyline,
-    "cms_user_frequency": q_cms_user_frequency,
-    "kmv_type_overlap": q_kmv_type_overlap,
-    "ams_selfjoin_size": q_ams_selfjoin_size,
     "order_price_deciles": q_order_price_deciles,
     "topk_urgent_orders": q_topk_urgent_orders,
     "recent_orders": q_recent_orders,
@@ -2988,8 +1406,5 @@ QUERIES = {
     "american_suppliers": q_american_suppliers,
     "active_nation_keys": q_active_nation_keys,
     "region_nation_list": q_region_nation_list,
-    "first_event_per_user": q_first_event_per_user,
-    "event_value_increases": q_event_value_increases,
-    "user_rolling_value": q_user_rolling_value,
-    "event_type_stats": q_event_type_stats,
 }
+
