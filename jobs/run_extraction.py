@@ -18,6 +18,11 @@ Local sandbox (same code path):
     python jobs/run_extraction.py --input /tmp/transcripts \
         --output /tmp/out --run-id r1 --buckets 64
 
+Output files: rows are clustered by bucket before the writes, so
+--buckets 4096 gives about 4096 files per output (more only for a bucket
+larger than spark.sql.adaptive.advisoryPartitionSizeInBytes), not
+input splits × 4096.
+
 Resumability: rerunning with the same --output skips buckets already in
 the manifest; a crashed run repeats only its unfinished buckets
 (idempotent dynamic partition overwrite).

@@ -371,6 +371,153 @@ def test_lineage_no_duplicates_after_crash_resume(spark, transcripts_df, out_dir
     assert sum(r["n_turns"] for r in lineage.collect()) == r1.n_turns
 
 
+def _files_per_bucket(data_dir):
+    """bucket=* directory name → number of parquet files in it."""
+    import glob
+
+    return {
+        os.path.basename(d): len(glob.glob(os.path.join(d, "*.parquet")))
+        for d in glob.glob(os.path.join(data_dir, "bucket=*"))
+    }
+
+
+def _sql_status_store(spark):
+    """The session's SQL status store (the data behind the SQL UI tab),
+    once the listener bus has delivered every event."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark._jsparkSession.sharedState().statusStore()
+
+
+def _sql_execution_ids(store):
+    execs = store.executionsList()
+    return [execs.apply(i).executionId() for i in range(execs.size())]
+
+
+def _sql_graphs_since(spark, after_id):
+    """(nodes, edges) of the executed plan of every SQL execution with an
+    id above ``after_id``: nodes id → (name, desc), edges child → parent."""
+    store = _sql_status_store(spark)
+    graphs = []
+    for eid in _sql_execution_ids(store):
+        if eid <= after_id:
+            continue
+        g = store.planGraph(eid)
+        nodes, edges = g.allNodes(), g.edges()
+        graphs.append((
+            {n.id(): (n.name(), n.desc()) for n in
+             (nodes.apply(j) for j in range(nodes.size()))},
+            {e.fromId(): e.toId() for e in
+             (edges.apply(j) for j in range(edges.size()))},
+        ))
+    return graphs
+
+
+def test_run_extraction_one_file_per_bucket(spark, transcripts_df, out_dir):
+    """Rows are clustered by bucket before the writes: every bucket of
+    every bucketed output is one file (not one per scan task), each run
+    adds one manifest file, lineage equals a per-bucket aggregate of the
+    written turns, and the write plans carry exactly one bucket exchange,
+    after the extract UDF."""
+    import glob
+    from pyspark.sql import functions as F
+
+    bucket = F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int")
+    manifest_glob = os.path.join(out_dir, "manifest", "*.parquet")
+    since = max(_sql_execution_ids(_sql_status_store(spark)), default=-1)
+
+    r1 = run_extraction(spark, transcripts_df.filter(bucket < 4), out_dir,
+                        run_id="r1", n_buckets=8)
+    assert r1.buckets_processed > 0
+    assert len(glob.glob(manifest_glob)) == 1
+    # resume over the full input: only the remaining buckets run
+    r2 = run_extraction(spark, transcripts_df, out_dir, run_id="r2", n_buckets=8)
+    assert r2.buckets_processed > 0 and r2.buckets_skipped == r1.buckets_processed
+    assert len(glob.glob(manifest_glob)) == 2
+
+    n_buckets = r1.buckets_processed + r2.buckets_processed
+    for sub in ("turns_extracted", "product_spans", "lineage"):
+        files = _files_per_bucket(os.path.join(out_dir, sub))
+        assert len(files) == n_buckets, sub
+        assert set(files.values()) == {1}, (sub, files)
+
+    turns = spark.read.parquet(os.path.join(out_dir, "turns_extracted"))
+    expected = (
+        turns.groupBy("bucket")
+        .agg(
+            F.count("*").alias("n_turns"),
+            F.sum("n_spans").alias("n_spans"),
+            F.sum("n_tokens").alias("n_tokens"),
+            F.sum(F.when(F.col("parse_error"), 1).otherwise(0)).alias("n_errors"),
+            F.countDistinct("conv_id").alias("n_convs"),
+        )
+        .withColumn("run_id", F.when(F.col("bucket") < 4, "r1").otherwise("r2"))
+    )
+    lineage = spark.read.parquet(os.path.join(out_dir, "lineage"))
+    expected = expected.select(*lineage.columns)
+    assert [(f.name, f.dataType) for f in lineage.schema] == [
+        (f.name, f.dataType) for f in expected.schema
+    ]
+    assert sorted(lineage.collect()) == sorted(expected.collect())
+
+    writes = 0
+    for nodes, edges in _sql_graphs_since(spark, since):
+        sink = [d for name, d in nodes.values() if name.startswith("Execute Insert")]
+        if not sink or not any(o in sink[0] for o in ("turns_extracted", "product_spans")):
+            continue
+        writes += 1
+        exchanges = [i for i, (name, d) in nodes.items()
+                     if name == "Exchange" and d.startswith("Exchange hashpartitioning(bucket")]
+        assert len(exchanges) == 1, sink[0]
+        # the exchange sits above the UDF: walk up from ArrowEvalPython
+        (node,) = [i for i, (name, _) in nodes.items() if name == "ArrowEvalPython"]
+        ancestors = set()
+        while node in edges:
+            node = edges[node]
+            ancestors.add(node)
+        assert exchanges[0] in ancestors
+    assert writes == 4  # turns + spans, two runs
+
+
+def test_run_extraction_splits_hot_bucket(spark, transcripts_df, out_dir):
+    """A bucket larger than the AQE advisory partition size is written by
+    several tasks (more than one file) instead of being forced through
+    one; the content is the same as under the default setting."""
+    from pyspark.sql import functions as F
+    from text_extractor_for_bioeconomic_products_spark.operators.extract import (
+        TURNS_EXTRACTED_COLS,
+    )
+
+    def content(d):
+        turns = spark.read.parquet(os.path.join(d, "turns_extracted"))
+        h = turns.agg(F.sum(F.xxhash64(*TURNS_EXTRACTED_COLS).cast("decimal(38,0)")))
+        hot = turns.groupBy("bucket").count().orderBy(F.desc("count"), "bucket").first()
+        return h.first()[0], hot["bucket"]
+
+    ref_dir, skew_dir = out_dir + "_ref", out_dir + "_skew"
+    run_extraction(spark, transcripts_df, ref_dir, run_id="ref", n_buckets=8)
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    saved = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "16KB")
+        run_extraction(spark, transcripts_df, skew_dir, run_id="skew", n_buckets=8)
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+
+    ref_hash, hot = content(ref_dir)
+    skew_hash, _ = content(skew_dir)
+    assert skew_hash == ref_hash
+    ref_files = _files_per_bucket(os.path.join(ref_dir, "turns_extracted"))
+    skew_files = _files_per_bucket(os.path.join(skew_dir, "turns_extracted"))
+    assert set(ref_files.values()) == {1}
+    assert skew_files[f"bucket={hot}"] > 1
+    # the split bucket still has one lineage row
+    lineage = spark.read.parquet(os.path.join(skew_dir, "lineage"))
+    assert lineage.count() == lineage.select("bucket").distinct().count() == len(ref_files)
+
+
 def test_watermarked_streaming_agg(spark, transcripts_df, tmp_path):
     """streaming_conversation_counts: watermark + event-time window agg over
     the stream; availableNow totals == batch windowed totals."""
@@ -478,6 +625,36 @@ def test_merge_turns_keyed_upsert(spark, transcripts_df, tmp_path):
         spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower()
         == "static"
     )
+
+
+def test_merge_turns_one_file_per_bucket(spark, transcripts_df, tmp_path):
+    """merge_turns clusters the merged rows by bucket: a base merge and two
+    upserts into the same bucket leave every bucket as one file instead
+    of adding a file per merge to each rewritten bucket."""
+    from pyspark.sql import functions as F
+    from text_extractor_for_bioeconomic_products_spark.plans.pipeline import (
+        merge_turns,
+    )
+
+    turns_dir = str(tmp_path / "turns")
+    base = extract_turns(transcripts_df).drop("spans").cache()
+    merge_turns(spark, turns_dir, base, n_buckets=8)
+    assert set(_files_per_bucket(turns_dir).values()) == {1}
+
+    hot = (
+        base.withColumn("b", F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int"))
+        .filter(F.col("b") == base.select(
+            F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int")).first()[0])
+        .drop("b").orderBy("conv_id", "turn_idx")
+    )
+    upd = hot.limit(3).withColumn("lang", F.lit("MERGED"))
+    ins = hot.limit(2).withColumn("turn_idx", F.col("turn_idx") + 100000)
+    for delta in (upd, ins):
+        stats = merge_turns(spark, turns_dir, delta, n_buckets=8)
+        assert len(stats["buckets_rewritten"]) == 1
+        assert set(_files_per_bucket(turns_dir).values()) == {1}
+    assert spark.read.parquet(turns_dir).count() == base.count() + 2
+    base.unpersist()
 
 
 def test_streaming_dedup_exactly_once_per_key(spark, transcripts_df, tmp_path):

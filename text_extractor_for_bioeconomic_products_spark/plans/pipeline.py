@@ -9,7 +9,7 @@ reference's per-file JSON outputs + combined run stats
 Layout under ``out_dir``:
     turns_extracted/   parquet, partitioned by bucket=pmod(xxhash64(conv_id), N)
     product_spans/     parquet, same bucketing
-    lineage/           one row per (run, bucket): counters + timings
+    lineage/           one row per (run, bucket): counters only, no timings
     manifest/          processed-bucket ids (the checkpoint)
 
 Idempotency: writes use dynamic partition overwrite — re-running a bucket
@@ -18,8 +18,13 @@ replaces exactly that bucket's files (the parquet analog of Iceberg
 `writeTo(...).overwritePartitions()` on a cluster with an Iceberg catalog).
 
 Scale: the bucket column is both the resume unit and the output partition
-key.  Extraction itself stays a narrow map; the only added wide operation
-is the resume semi-join against the (tiny, broadcast) manifest.
+key.  Extraction itself stays a narrow map.  The job adds one keyed
+exchange after it, ``REBALANCE`` on bucket (``_cluster_by_bucket``), so
+each bucketed write emits one file per bucket instead of one per scan
+task × bucket; AQE coalesces small buckets into one task and splits a
+bucket larger than ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+across several.  The only other wide operation is the resume semi-join
+against the (tiny, broadcast) manifest.
 """
 
 from __future__ import annotations
@@ -38,21 +43,26 @@ N_BUCKETS_DEFAULT = 64
 
 
 @contextmanager
+def _scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set one SQL conf for a block and restore the session's own value
+    (or unset it) afterwards."""
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+
+
 def _dynamic_partition_overwrite(spark: SparkSession):
     """Scope partitionOverwriteMode=dynamic to one write job.  Leaving it
     set on the shared session would silently turn a later plain
     mode('overwrite').partitionBy(...) elsewhere into a per-partition
     overwrite that leaves stale partitions behind."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    try:
-        prior = spark.conf.get(key)
-    except Exception:
-        prior = "static"
-    spark.conf.set(key, "dynamic")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prior)
+    return _scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic")
 
 
 @dataclass
@@ -70,6 +80,14 @@ def _with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(
         "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
     )
+
+
+def _cluster_by_bucket(df: DataFrame) -> DataFrame:
+    """One keyed exchange on ``bucket`` ahead of a ``partitionBy("bucket")``
+    write: every bucket lands in one task (or, when it is larger than the
+    AQE advisory partition size, a few), so the write emits about one file
+    per bucket rather than one per input task × bucket."""
+    return df.hint("rebalance", "bucket")
 
 
 def _processed_buckets(spark: SparkSession, manifest_dir: str) -> List[int]:
@@ -168,7 +186,7 @@ def merge_turns(
         merged = new_b
     # the merged affected buckets must be fully materialized before the
     # overwrite deletes their source files
-    merged = merged.localCheckpoint(eager=True)
+    merged = _cluster_by_bucket(merged).localCheckpoint(eager=True)
     with _dynamic_partition_overwrite(spark):
         merged.write.mode("overwrite").partitionBy("bucket").parquet(turns_dir)
     if stored is None:
@@ -206,17 +224,31 @@ def run_extraction(
     if done:
         df = df.filter(~F.col("bucket").isin(done))
 
-    turns = extract_turns(df).withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-    )
-    turns.persist()
+    turns = _cluster_by_bucket(_with_bucket(extract_turns(df), n_buckets))
+    # the cached plan is fixed at persist(): AQE may coalesce small buckets
+    # and split one larger than the advisory size only if that plan is
+    # allowed to change its output partitioning
+    with _scoped_conf(
+        spark, "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+    ):
+        turns.persist()
 
-    # todo buckets come from the persisted extraction output — one cheap
-    # pass over cached data, NOT an extra full scan of the input (which
-    # would double I/O at 100 TB just to enumerate a known codomain)
-    todo = sorted(
-        r["bucket"] for r in turns.select("bucket").distinct().collect()
+    # per-bucket lineage counters (A7 generalization), collected to the
+    # driver (at most n_buckets rows): the one action that fills the cache
+    # also yields the todo buckets and the run totals
+    lineage = (
+        turns.groupBy("bucket")
+        .agg(
+            F.count("*").alias("n_turns"),
+            F.sum("n_spans").alias("n_spans"),
+            F.sum("n_tokens").alias("n_tokens"),
+            F.sum(F.when(F.col("parse_error"), 1).otherwise(0)).alias("n_errors"),
+            F.countDistinct("conv_id").alias("n_convs"),
+        )
+        .withColumn("run_id", F.lit(run_id))
     )
+    lineage_rows = lineage.collect()
+    todo = sorted(r["bucket"] for r in lineage_rows)
     if not todo:
         turns.unpersist()
         return RunResult(run_id, n_buckets, 0, len(done), 0, 0,
@@ -234,28 +266,15 @@ def run_extraction(
             "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
         )
         spans.write.mode("overwrite").partitionBy("bucket").parquet(spans_dir)
-
-    # per-bucket lineage counters (A7 generalization); partitioned dynamic
-    # overwrite, NOT append — a crash-and-resume rerun of a bucket replaces
-    # its lineage row instead of duplicating it ("one row per bucket, from
-    # the attempt that durably wrote it")
-    lineage = (
-        turns.groupBy("bucket")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.sum("n_spans").alias("n_spans"),
-            F.sum("n_tokens").alias("n_tokens"),
-            F.sum(F.when(F.col("parse_error"), 1).otherwise(0)).alias("n_errors"),
-            F.countDistinct("conv_id").alias("n_convs"),
+        # partitioned dynamic overwrite, NOT append — a crash-and-resume
+        # rerun of a bucket replaces its lineage row instead of duplicating
+        # it ("one row per bucket, from the attempt that durably wrote it")
+        (
+            spark.createDataFrame(lineage_rows, lineage.schema)
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(lineage_dir)
         )
-        .withColumn("run_id", F.lit(run_id))
-    )
-    with _dynamic_partition_overwrite(spark):
-        lineage.write.mode("overwrite").partitionBy("bucket").parquet(lineage_dir)
-
-    totals = turns.select(
-        F.count("*").alias("n_turns"), F.sum("n_spans").alias("n_spans")
-    ).collect()[0]
 
     # checkpoint LAST: a bucket enters the manifest only after its data,
     # spans, and lineage are durable (crash before this line ⇒ the bucket
@@ -263,7 +282,7 @@ def run_extraction(
     manifest = spark.createDataFrame(
         [(b, run_id) for b in todo], "bucket int, run_id string"
     )
-    manifest.write.mode("append").parquet(manifest_dir)
+    manifest.coalesce(1).write.mode("append").parquet(manifest_dir)
 
     turns.unpersist()
     return RunResult(
@@ -271,8 +290,8 @@ def run_extraction(
         n_buckets=n_buckets,
         buckets_processed=len(todo),
         buckets_skipped=len(done),
-        n_turns=totals["n_turns"],
-        n_spans=totals["n_spans"] or 0,
+        n_turns=sum(r["n_turns"] for r in lineage_rows),
+        n_spans=sum(r["n_spans"] or 0 for r in lineage_rows),
         wall_sec=round(time.monotonic() - t0, 3),
     )
 
@@ -286,11 +305,13 @@ def compact_buckets(
     """Small-file compaction for a bucket-partitioned dataset: rewrite
     each selected bucket into ceil(bucket_bytes / target) files.
 
-    Incremental writers (streaming micro-batches, repeated merge_turns)
-    fragment buckets into many small parquet files; at scale that
-    degrades scan planning and shuffle-read efficiency.  Content is
-    byte-preserved (read → coalesce-by-size → dynamic partition
-    overwrite of exactly the selected buckets).
+    ``run_extraction`` and ``merge_turns`` cluster rows by bucket and
+    leave one file per bucket per write, but a writer without that
+    exchange (a plain ``partitionBy("bucket")`` from many tasks, an
+    appending stream sink) fragments buckets into many small parquet
+    files; at scale that degrades scan planning and shuffle-read
+    efficiency.  Content is byte-preserved (read → coalesce-by-size →
+    dynamic partition overwrite of exactly the selected buckets).
     """
     import math as _math
 

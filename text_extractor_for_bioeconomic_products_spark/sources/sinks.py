@@ -1,8 +1,9 @@
 """Output sinks mirroring the reference's export surface (SURVEY §2.1).
 
 S8 JSON envelope, S9 exploding CSV (explode_outer — a product with no
-uses still emits one row, batch_process.py:162-171), parquet defaults,
-S11 XML/HTML presentation exports, S10 Excel (import-gated).
+uses still emits one row, batch_process.py:162-171), S11 XML/HTML
+presentation exports, S10 Excel (import-gated).  The bucket-partitioned
+parquet output is written by ``plans/pipeline.py``.
 """
 
 from __future__ import annotations
@@ -40,19 +41,6 @@ def write_spans_json(spans: DataFrame, path: str) -> None:
         )
         .write.mode("overwrite")
         .json(path)
-    )
-
-
-def write_turns_parquet(turns: DataFrame, path: str, n_buckets: int = 64) -> None:
-    """Default analytic sink: bucket-partitioned parquet so downstream
-    per-conversation work prunes partitions (Iceberg table swap-in point)."""
-    (
-        turns.withColumn(
-            "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-        )
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
     )
 
 
