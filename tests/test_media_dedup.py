@@ -254,6 +254,26 @@ def test_media_dedup_apply_end_to_end(spark):
     assert kept == [0, 10, 11, 12, 13, 14, 999]
 
 
+def test_media_dedup_victims_keeps_caller_cache(spark):
+    """A caller that cached ``hashes`` for its own later reads (the
+    ``run_media_dedup`` job runs ``phash_hot_bands`` after the victims)
+    still has them cached afterwards; an uncached input is not left
+    cached."""
+    from text_extractor_for_bioeconomic_products_spark.operators.media_dedup import (
+        media_dedup_victims,
+    )
+
+    hashes = image_phashes(_media_df(spark)).persist()
+    victims = {r["media_id"] for r in media_dedup_victims(hashes).collect()}
+    assert {100, 104, 108} <= victims
+    assert hashes.storageLevel.useMemory
+    hashes.unpersist()
+
+    uncached = image_phashes(_media_df(spark))
+    media_dedup_victims(uncached).collect()
+    assert not uncached.storageLevel.useMemory
+
+
 def test_dhash_hypothesis_invariants():
     """Property battery over arbitrary images (pure numpy, no Spark):
     determinism, signed-64 range, channel-permutation invariance (gray

@@ -460,9 +460,19 @@ def test_run_extraction_one_file_per_bucket(spark, transcripts_df, out_dir):
     assert sorted(lineage.collect()) == sorted(expected.collect())
 
     writes = 0
+    local_writes = 0
     for nodes, edges in _sql_graphs_since(spark, since):
         sink = [d for name, d in nodes.values() if name.startswith("Execute Insert")]
-        if not sink or not any(o in sink[0] for o in ("turns_extracted", "product_spans")):
+        if not sink:
+            continue
+        if any(os.path.join(out_dir, o) in sink[0] for o in ("lineage", "manifest")):
+            # driver-side rows reach the JVM as Arrow: no PythonRDD stage
+            names = [name for name, _ in nodes.values()]
+            assert "LocalTableScan" in names, (sink[0], names)
+            assert not any("ExistingRDD" in n for n in names), (sink[0], names)
+            local_writes += 1
+            continue
+        if not any(o in sink[0] for o in ("turns_extracted", "product_spans")):
             continue
         writes += 1
         exchanges = [i for i, (name, d) in nodes.items()
@@ -476,6 +486,45 @@ def test_run_extraction_one_file_per_bucket(spark, transcripts_df, out_dir):
             ancestors.add(node)
         assert exchanges[0] in ancestors
     assert writes == 4  # turns + spans, two runs
+    assert local_writes == 4  # lineage + manifest, two runs
+
+
+def _python_daemons(parent_pid):
+    """pids of the ``pyspark.daemon`` processes whose parent is
+    ``parent_pid`` (one per executor Python worker pool)."""
+    pids = []
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as f:
+                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+            with open(f"/proc/{d}/cmdline", "rb") as f:
+                cmdline = f.read()
+        except (OSError, IndexError, ValueError):
+            continue  # exited while listing
+        if ppid == parent_pid and b"pyspark.daemon" in cmdline:
+            pids.append(int(d))
+    return pids
+
+
+@pytest.mark.skipif(not os.path.isdir("/proc"), reason="needs procfs")
+def test_one_python_worker_pool_per_executor(spark, transcripts_df):
+    """Python-RDD work (createDataFrame of a list) and the Arrow extract
+    UDF share one daemon: Spark keys daemons by worker env, so a runner
+    whose env differs from the UDF's would start a second pool of idle
+    workers on every executor."""
+    from pyspark import SparkContext
+    from pyspark.sql import functions as F
+
+    rows = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string").collect()
+    assert len(rows) == 2
+    # an action that needs the UDF's output (a bare count prunes the UDF)
+    (agg,) = extract_turns(transcripts_df).agg(
+        F.count("clean_text").alias("n")).collect()
+    assert agg["n"] > 0
+    jvm = SparkContext._gateway.proc.pid
+    assert len(_python_daemons(jvm)) == 1
 
 
 def test_run_extraction_splits_hot_bucket(spark, transcripts_df, out_dir):
@@ -654,6 +703,9 @@ def test_merge_turns_one_file_per_bucket(spark, transcripts_df, tmp_path):
         assert len(stats["buckets_rewritten"]) == 1
         assert set(_files_per_bucket(turns_dir).values()) == {1}
     assert spark.read.parquet(turns_dir).count() == base.count() + 2
+    # the _meta sidecar still records the modulus as an int
+    (meta,) = spark.read.json(turns_dir + "_meta").collect()
+    assert meta["n_buckets"] == 8 and isinstance(meta["n_buckets"], int)
     base.unpersist()
 
 

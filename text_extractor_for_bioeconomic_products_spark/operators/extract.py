@@ -129,23 +129,6 @@ def conversation_stats(turns: DataFrame, salt_buckets: int = 16) -> DataFrame:
     )
 
 
-def corpus_stats(turns: DataFrame) -> DataFrame:
-    """A1 PDFProcessor.get_processing_stats analog (pdf_processor.py:124-171):
-    corpus totals + per-language counts as a single grouped aggregate."""
-    return (
-        turns.groupBy("lang")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.sum(F.length("clean_text")).alias("total_chars"),
-            F.avg(F.length("clean_text")).alias("avg_chars"),
-            F.sum("n_pages").alias("total_pages"),
-            F.sum("n_spans").alias("total_spans"),
-            F.avg("relevance").alias("avg_relevance"),
-        )
-        .orderBy("lang")
-    )
-
-
 def quality_metrics(spans: DataFrame) -> DataFrame:
     """A4 validate_extraction_quality (response_parser.py:388-440) as a
     grouped aggregate per conversation: completeness-weighted score."""

@@ -268,8 +268,11 @@ def media_dedup_victims(
     # the decode+hash mapInPandas pass is the expensive stage; without a
     # persist it re-executes for the band-size census and BOTH sides of
     # the self-join.  CC runs eagerly (driver-loop actions over
-    # localCheckpointed frames), so the cache can drop before returning.
-    hashes = hashes.persist()
+    # localCheckpointed frames), so a cache this call made can drop
+    # before returning; a caller's cache stays for its own later reads.
+    owns_cache = not hashes.is_cached
+    if owns_cache:
+        hashes = hashes.persist()
     try:
         pairs = phash_near_dup_pairs(hashes, max_hamming, max_band_media)
         clusters = connected_components_star(
@@ -279,7 +282,8 @@ def media_dedup_victims(
             )
         )
     finally:
-        hashes.unpersist()
+        if owns_cache:
+            hashes.unpersist()
     return (
         clusters.select(
             "component",

@@ -440,7 +440,6 @@ def _zigzag_order() -> np.ndarray:
 
 
 _ZIGZAG = _zigzag_order()
-_UNZIGZAG = np.argsort(_ZIGZAG)
 
 # orthonormal 8-point DCT-II basis: dct2(B) = M @ B @ M.T
 _DCT_M = np.array([
@@ -1441,10 +1440,6 @@ def resize_media(media: DataFrame, max_dim: int = 64) -> DataFrame:
             yield pdf
 
     return media.mapInPandas(op, schema=media.schema)
-
-
-# kept name for earlier-round callers; images resize for real now
-resize_stub = resize_media
 
 
 def frame_sample(media: DataFrame, every_n: int = 2) -> DataFrame:

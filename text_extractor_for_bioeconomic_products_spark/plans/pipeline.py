@@ -25,6 +25,11 @@ task × bucket; AQE coalesces small buckets into one task and splits a
 bucket larger than ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
 across several.  The only other wide operation is the resume semi-join
 against the (tiny, broadcast) manifest.
+
+Python runs only inside the extract UDF.  The driver-side tables (the
+lineage and manifest rows, ``merge_turns``'s ``_meta`` sidecar) reach the
+JVM as Arrow (``_local_table``), so they plan as ``LocalTableScan`` and
+start no Python task.
 """
 
 from __future__ import annotations
@@ -33,9 +38,13 @@ import os
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass
-from typing import List, Optional
+from typing import List, Optional, Sequence, Union
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..operators.extract import explode_spans, extract_turns
 
@@ -88,6 +97,22 @@ def _cluster_by_bucket(df: DataFrame) -> DataFrame:
     AQE advisory partition size, a few), so the write emits about one file
     per bucket rather than one per input task × bucket."""
     return df.hint("rebalance", "bucket")
+
+
+def _local_table(
+    spark: SparkSession, rows: Sequence[tuple], schema: Union[StructType, str]
+) -> DataFrame:
+    """A small driver-side table handed to the JVM as Arrow: it plans as
+    a ``LocalTableScan`` and runs no Python task.  ``createDataFrame``
+    of a Python list would add a PythonRDD stage instead, and the pandas
+    path silently falls back to that stage when conversion fails."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = schema.fieldNames()
+    table = pa.Table.from_pylist(
+        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _processed_buckets(spark: SparkSession, manifest_dir: str) -> List[int]:
@@ -192,7 +217,7 @@ def merge_turns(
     if stored is None:
         # first write, or adopting a pre-sidecar dataset at the caller's
         # declared modulus
-        spark.createDataFrame([(n_buckets,)], "n_buckets int") \
+        _local_table(spark, [(n_buckets,)], "n_buckets int") \
             .coalesce(1).write.mode("overwrite").json(meta_dir)
     new_b.unpersist()
     return {"buckets_rewritten": affected, "n_upserted": n_upserted}
@@ -270,7 +295,7 @@ def run_extraction(
         # rerun of a bucket replaces its lineage row instead of duplicating
         # it ("one row per bucket, from the attempt that durably wrote it")
         (
-            spark.createDataFrame(lineage_rows, lineage.schema)
+            _local_table(spark, lineage_rows, lineage.schema)
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(lineage_dir)
@@ -279,8 +304,8 @@ def run_extraction(
     # checkpoint LAST: a bucket enters the manifest only after its data,
     # spans, and lineage are durable (crash before this line ⇒ the bucket
     # reruns; dynamic overwrite makes the rerun idempotent)
-    manifest = spark.createDataFrame(
-        [(b, run_id) for b in todo], "bucket int, run_id string"
+    manifest = _local_table(
+        spark, [(b, run_id) for b in todo], "bucket int, run_id string"
     )
     manifest.coalesce(1).write.mode("append").parquet(manifest_dir)
 

@@ -3,6 +3,10 @@
 Local sandbox runs use ``local[N]``; the same configs are what we would
 ship to a 1000-executor cluster via spark-submit (AQE, skew join handling,
 Arrow batching sized for text payloads).
+
+Python runs in one worker pool per executor: one ``pyspark.daemon`` plus
+one worker per core, shared by the Arrow UDF and any Python-RDD work
+(the executor env matches the UDF runner's, see ``get_spark``).
 """
 
 from __future__ import annotations
@@ -58,6 +62,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # Spark keys executor Python daemons by worker env, and the Arrow
+        # UDF runner adds SPARK_SIMPLIFIED_TRACEBACK=1 where the RDD runner
+        # (createDataFrame of a Python list, rdd.map) does not; setting it
+        # for every runner lets both share the UDF's one worker pool
+        # instead of keeping a second daemon with an idle worker per core.
+        .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
