@@ -38,15 +38,6 @@ def main() -> None:
          "ArrowEvalPython → project. At 100 TB this is scan → UDF → sink, "
          "embarrassingly parallel.",
          extract_turns(synthesize_transcripts(spark, n_convs=20, seed=42))),
-        ("topk_urgent_orders (O1 top-k search)",
-         "Predicates pushed into the parquet scan (PushedFilters), 3-column "
-         "ReadSchema, TakeOrderedAndProject instead of global sort.",
-         qs["topk_urgent_orders"](spark, SF)),
-        ("revenue_by_priority (fact-fact join + agg)",
-         "AQE picks broadcast at this scale; at 100 TB both sides are "
-         "bucketed on orderkey so the join is co-located (see "
-         "sources/layout.py and the bucketed section below).",
-         qs["revenue_by_priority"](spark, SF)),
         ("dedup_minhash_lsh (shuffle-free signatures → band-keyed census)",
          "Round-2 rewrite: minhash signatures are narrow per-row expressions\n"
          "(`array_min(transform(words, w -> md5(seed‖w)))`) fused into the scan's\n"
@@ -121,13 +112,6 @@ def main() -> None:
          "battery); plan pinned by\n"
          "`test_set_similarity_join_plan_no_global_window`.",
          qs["set_similarity_join"](spark, SF)),
-        ("revenue_rollup (grouping sets from one fact scan)",
-         "ROLLUP plans as a single orders scan feeding one Expand (a row\n"
-         "per grouping set BEFORE the exchange, so map-side partial agg\n"
-         "still applies) with all three dim joins broadcast — one fact\n"
-         "pass where the naive per-level formulation scans three times.\n"
-         "Pinned by `test_revenue_rollup_single_fact_scan_plan`.",
-         qs["revenue_rollup"](spark, SF)),
         ("edit_distance_join (exact Ed-Join prefix filtering)",
          "The edit-distance complement of set_similarity_join: only the\n"
          "q*k+1 RAREST positional q-grams per string (rarity broadcast,\n"

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
-"""Reachability inventory of the operator modules (stdlib ``ast`` only).
+"""Reachability inventory of the package (stdlib ``ast`` only).
 
-For every top-level name in ``operators/*.py`` this records what reaches
-it, following imports, module attributes and calls statically across the
+For every top-level name in every module of the package (dunder names
+such as ``__version__`` excepted) this records what reaches it,
+following imports, module attributes and calls statically across the
 package, ``jobs/``, ``tests/``, ``perfbench/``, ``bench.py`` and
 ``__spark_entry__.py``:
 
@@ -17,6 +18,7 @@ package, ``jobs/``, ``tests/``, ``perfbench/``, ``bench.py`` and
 Walks stop at the registry, so a job or test that looks a query up by
 name through ``queries()`` counts under ``registry``, not under itself.
 A name nothing reaches is listed as unreachable: a deletion candidate.
+``tests/test_reachability.py`` keeps that count at zero.
 
     python jobs/reachability.py > REACHABILITY.md
 """
@@ -37,7 +39,8 @@ CATEGORIES = ("jobs", "extraction", "streaming", "tests", "registry", "bench")
 
 class Module:
     def __init__(self, path: str):
-        rel = os.path.relpath(path, REPO)[:-3].split(os.sep)
+        self.path = os.path.relpath(path, REPO)
+        rel = self.path[:-3].split(os.sep)
         self.is_pkg = rel[-1] == "__init__"
         self.name = ".".join(rel[:-1] if self.is_pkg else rel)
         with open(path, encoding="utf-8") as f:
@@ -179,7 +182,7 @@ def _reach(graph: dict[tuple, set], roots: set, stop: set) -> set:
 
 
 def inventory() -> dict[str, dict[str, list[str]]]:
-    """operators module → name → the categories reaching it."""
+    """package module path → name → the categories reaching it."""
     mods = _load_modules()
     graph = _build_graph(mods)
     pipeline, streaming = f"{PKG}.plans.pipeline", f"{PKG}.streaming.pipeline"
@@ -198,20 +201,28 @@ def inventory() -> dict[str, dict[str, list[str]]]:
         for c, r in roots.items()
     }
     out: dict[str, dict[str, list[str]]] = {}
-    prefix = f"{PKG}.operators."
-    for m in sorted(mods):
-        if not m.startswith(prefix):
+    pkg_dir = PKG + os.sep
+    for m in sorted(mods.values(), key=lambda m: m.path):
+        if not m.path.startswith(pkg_dir):
             continue
-        names = sorted(n for n in mods[m].nodes if n != MODULE_CODE)
-        out[m[len(prefix):]] = {
-            n: [c for c in CATEGORIES if (m, n) in reached[c]] for n in names
+        names = sorted(n for n in m.nodes if n != MODULE_CODE
+                       and not (n.startswith("__") and n.endswith("__")))
+        out[m.path[len(pkg_dir):]] = {
+            n: [c for c in CATEGORIES if (m.name, n) in reached[c]]
+            for n in names
         }
     return out
 
 
+def unreachable(inv: dict[str, dict[str, list[str]]]) -> list[str]:
+    """``module/path.py:name`` for every name nothing reaches."""
+    return [f"{mod}:{n}" for mod, names in inv.items()
+            for n, cats in names.items() if not cats]
+
+
 def render(inv: dict[str, dict[str, list[str]]]) -> str:
     lines = [
-        "# REACHABILITY — what reaches each top-level name in operators/",
+        f"# REACHABILITY — what reaches each top-level name in {PKG}/",
         "",
         "Generated by `python jobs/reachability.py > REACHABILITY.md` "
         "(static `ast` walk; see the script's docstring for the categories).",
@@ -222,12 +233,17 @@ def render(inv: dict[str, dict[str, list[str]]]) -> str:
         "| module | names | unreachable | registry only |",
         "|---|---:|---:|---:|",
     ]
+    totals = [0, 0, 0]
     for mod, names in inv.items():
-        unreachable = sum(1 for c in names.values() if not c)
-        reg_only = sum(1 for c in names.values() if c == ["registry"])
-        lines.append(f"| `{mod}.py` | {len(names)} | {unreachable} | {reg_only} |")
+        row = [len(names), sum(1 for c in names.values() if not c),
+               sum(1 for c in names.values() if c == ["registry"])]
+        totals = [t + r for t, r in zip(totals, row)]
+        lines.append(f"| `{mod}` | " + " | ".join(map(str, row)) + " |")
+    lines.append("| **total** | " + " | ".join(map(str, totals)) + " |")
     for mod, names in inv.items():
-        lines += ["", f"## operators/{mod}.py", "",
+        if not names:
+            continue
+        lines += ["", f"## {mod}", "",
                   "| reached from | names |", "|---|---|"]
         groups: dict[str, list[str]] = {}
         for name, cats in names.items():

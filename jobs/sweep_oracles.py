@@ -18,11 +18,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
 
 def normalize(rows, cols):
     idx = sorted(range(len(cols)), key=lambda i: cols[i])
@@ -47,6 +42,7 @@ def main() -> int:
 
     import __spark_entry__ as entry_mod
     from text_extractor_for_bioeconomic_products_spark.session import get_spark
+    from text_extractor_for_bioeconomic_products_spark.sources.tables import TABLES
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     master = sys.argv[2] if len(sys.argv) > 2 else "local[8]"

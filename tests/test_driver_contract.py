@@ -14,6 +14,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
+from text_extractor_for_bioeconomic_products_spark.sources.tables import TABLES
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -21,8 +22,7 @@ SF_DIR = "/root/testdata/sf0.01"
 @pytest.fixture(scope="module")
 def duck(sf01_dir):
     con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-               "lineitem", "events", "documents", "embeddings"]:
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf01_dir}/{t}.parquet'"
         )
@@ -219,9 +219,9 @@ def test_query_names_unique_across_modules():
 def test_char_entropy_matches_duckdb(spark, duck, sf01_dir):
     """char_entropy_stats (in-row entropy fold, DECIMAL-rounded terms)
     vs the unnest-and-GROUP-BY DuckDB twin at sf0.01 — full per-doc
-    equality.  Deliberately NOT a queries() entry (final-round policy:
-    the driver window is frozen with every entry verified); this test
-    carries the oracle evidence instead."""
+    equality.  Not a queries() entry: jobs/run_datacard.py calls
+    char_entropy_stats directly, and this test carries the oracle
+    evidence."""
     from text_extractor_for_bioeconomic_products_spark.operators.textstats import (
         ORACLE_CHAR_ENTROPY,
         q_char_entropy,
@@ -281,7 +281,7 @@ def test_char_entropy_hand_fixture(spark):
 def test_doc_readability_matches_duckdb(spark, duck, sf01_dir):
     """doc_readability (native regexp counting + double-chain score) vs
     the DuckDB twin at sf0.01 — full per-doc equality.  Outside
-    queries() by the same frozen-window policy as char entropy."""
+    queries(): jobs/run_datacard.py calls doc_readability directly."""
     from text_extractor_for_bioeconomic_products_spark.operators.textstats import (
         ORACLE_DOC_READABILITY,
         q_doc_readability,
@@ -335,7 +335,7 @@ def test_doc_readability_hand_fixture(spark):
 def test_user_value_trend_matches_duckdb(spark, duck, sf01_dir):
     """user_value_trend (exact decimal moments → one fixed IEEE chain)
     vs the DuckDB twin at sf0.01 — per-user equality.  Outside
-    queries() by the frozen-window policy."""
+    queries(): jobs/run_datacard.py calls user_value_trend directly."""
     from text_extractor_for_bioeconomic_products_spark.operators.relational import (
         ORACLE_USER_VALUE_TREND,
         q_user_value_trend,
@@ -395,8 +395,7 @@ def test_user_value_trend_hand_fixture(spark):
 
 def test_numeric_corr_matches_duckdb(spark, duck, sf01_dir):
     """numeric_corr_matrix (exact decimal moments, one table pass) vs
-    the DuckDB twin at sf0.01.  Outside queries() by the frozen-window
-    policy."""
+    the DuckDB twin at sf0.01."""
     from text_extractor_for_bioeconomic_products_spark.operators.profiling import (
         ORACLE_NUMERIC_CORR,
         q_numeric_corr,
@@ -449,7 +448,8 @@ def test_numeric_corr_hand_fixture(spark):
 def test_chi_square_matches_duckdb(spark, duck, sf01_dir):
     """chi_square_cells (full grid incl. zero-observed cells, fixed
     IEEE chains over exact counts) vs the DuckDB twin at sf0.01.
-    Outside queries() by the frozen-window policy."""
+    Outside queries(): jobs/run_datacard.py calls chi_square_cells
+    directly."""
     from text_extractor_for_bioeconomic_products_spark.operators.profiling import (
         ORACLE_CHI_SQUARE,
         q_chi_square_source_lang,
@@ -508,8 +508,8 @@ def test_chi_square_hand_fixture(spark):
 def test_benford_matches_duckdb(spark, duck, sf01_dir):
     """benford_digit_census (decimal-string digit extraction — the only
     engine-portable route; double-to-string formats differ) vs the
-    DuckDB twin at sf0.01.  Outside queries() by the frozen-window
-    policy."""
+    DuckDB twin at sf0.01.  Outside queries(): jobs/run_datacard.py
+    calls benford_digit_census directly."""
     from text_extractor_for_bioeconomic_products_spark.operators.relational import (
         ORACLE_BENFORD,
         q_benford_order_totals,
@@ -556,7 +556,8 @@ def test_benford_hand_fixture(spark):
 
 def test_revenue_gini_matches_duckdb(spark, duck, sf01_dir):
     """gini_concentration (ranked exact-moment Gini) vs the DuckDB twin
-    at sf0.01.  Outside queries() by the frozen-window policy."""
+    at sf0.01.  Outside queries(): jobs/run_datacard.py calls
+    gini_concentration directly."""
     from text_extractor_for_bioeconomic_products_spark.operators.relational import (
         ORACLE_REVENUE_GINI,
         q_revenue_gini,
@@ -602,7 +603,8 @@ def test_revenue_gini_hand_fixture(spark):
 def test_seasonality_matches_duckdb(spark, duck, sf01_dir):
     """seasonality_census (integer-epoch calendar arithmetic — immune
     to the engines' conflicting dayofweek conventions) vs the DuckDB
-    twin at sf0.01.  Outside queries() by the frozen-window policy."""
+    twin at sf0.01.  Outside queries(): jobs/run_datacard.py calls
+    seasonality_census directly."""
     from text_extractor_for_bioeconomic_products_spark.operators.relational import (
         ORACLE_EVENT_SEASONALITY,
         q_event_seasonality,

@@ -1176,50 +1176,6 @@ def test_dsir_importance_prefers_target_like_docs(spark, tmp_path):
     assert by_id[100]["logw"] > 0 > by_id[101]["logw"]
 
 
-def test_percentile_approx_bounds_nonvacuous(spark, sf01_dir):
-    """The GK sketch's bound flags must be computed from a real sketch
-    (not constants): all TRUE on the corpus, and the approx value is a
-    genuine element (not the interpolated exact), proven by tightening
-    accuracy until approx != exact at some quantile on a known-gappy
-    planted distribution."""
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as entry_mod
-
-    row = entry_mod.queries()["order_price_percentiles_approx"](
-        spark, sf01_dir
-    ).collect()[0]
-    for q in (25, 50, 75, 95):
-        assert row[f"p{q}_within_bound"] is True, row
-
-    # planted: 0..999 — approx at accuracy 100 may deviate from the
-    # interpolated exact but must stay within the rank window
-    df = spark.createDataFrame([(float(i),) for i in range(1000)], "v double")
-    got = df.agg(
-        F.percentile_approx("v", [0.5], F.lit(100)).alias("apx"),
-        F.percentile("v", [0.48]).alias("lo"),
-        F.percentile("v", [0.52]).alias("hi"),
-    ).collect()[0]
-    assert got["lo"][0] <= got["apx"][0] <= got["hi"][0], got
-
-
-def test_referential_integrity_detects_planted_orphans(spark, sf001_dir):
-    """The simulated dim loss must surface as orphans on exactly the
-    orders->customer edge; the intact edges must pass clean."""
-    import __spark_entry__ as entry_mod
-
-    rows = {
-        r["fk"]: r
-        for r in entry_mod.queries()["referential_integrity"](
-            spark, sf001_dir
-        ).collect()
-    }
-    assert rows["orders->customer"]["n_orphans"] > 0
-    assert rows["lineitem->orders"]["n_orphans"] == 0
-    assert rows["customer->nation"]["n_orphans"] == 0
-    assert all(r["n_child_rows"] > 0 for r in rows.values())
-
-
 def test_token_pmi_planted_collocation_ranks_first(spark, tmp_path):
     """Two tokens that always co-occur (and appear in half the docs)
     must out-PMI the background tokens present everywhere."""
@@ -1247,20 +1203,6 @@ def test_token_pmi_planted_collocation_ranks_first(spark, tmp_path):
     # pmi = ln(20·10/(10·10)) = ln 2
     assert abs(top["pmi"] - 0.6931) < 1e-9
     assert all(r["pmi"] <= top["pmi"] for r in got)
-
-
-def test_snapshot_diff_accounts_every_row(spark, sf001_dir):
-    """Every old-snapshot row is deleted|updated|unchanged, every new-only
-    key is added, and all four paths are non-vacuous."""
-    import __spark_entry__ as entry_mod
-    from text_extractor_for_bioeconomic_products_spark.sources.tables import load
-
-    rows = entry_mod.queries()["snapshot_diff"](spark, sf001_dir).collect()
-    tot = {k: sum(r[k] for r in rows)
-           for k in ("n_added", "n_deleted", "n_updated", "n_unchanged")}
-    n_old = load(spark, sf001_dir, "documents").count()
-    assert tot["n_deleted"] + tot["n_updated"] + tot["n_unchanged"] == n_old
-    assert all(v > 0 for v in tot.values()), tot
 
 
 def test_lang_confusion_shares_sum_to_one(spark, sf001_dir):
@@ -1546,47 +1488,7 @@ def test_table_profile_single_scan_plan(spark, sf001_dir):
     assert "Expand" in final
 
 
-# --- round-5 final-session additions: rollup / bigram LM / set-similarity --
-
-
-def test_revenue_rollup_levels_consistent(spark, sf001_dir):
-    """ROLLUP's three levels must agree with each other: the grand total
-    (lvl 3) equals the sum of region subtotals (lvl 1) equals the sum of
-    detail rows (lvl 0), for both the count and (within the per-row 4dp
-    rounding) the revenue."""
-    import __spark_entry__ as entry_mod
-
-    rows = entry_mod.queries()["revenue_rollup"](spark, sf001_dir).collect()
-    by_lvl: dict[int, list] = {}
-    for r in rows:
-        by_lvl.setdefault(r["lvl"], []).append(r)
-    assert set(by_lvl) == {0, 1, 3}
-    assert len(by_lvl[3]) == 1
-    assert len(by_lvl[1]) == 5  # 5 regions
-    grand = by_lvl[3][0]
-    assert grand["r_name"] is None and grand["n_name"] is None
-    assert grand["n_orders"] == sum(r["n_orders"] for r in by_lvl[0])
-    assert grand["n_orders"] == sum(r["n_orders"] for r in by_lvl[1])
-    for lvl in (0, 1):
-        tol = 0.0001 * len(by_lvl[lvl]) + 0.0001
-        assert abs(grand["revenue"] - sum(r["revenue"] for r in by_lvl[lvl])) < tol
-    # every detail row's region appears as a subtotal row
-    assert {r["r_name"] for r in by_lvl[0]} == {r["r_name"] for r in by_lvl[1]}
-
-
-def test_revenue_rollup_single_fact_scan_plan(spark, sf001_dir):
-    """The whole point of ROLLUP vs three GROUP BY scans: the orders
-    fact table is scanned exactly ONCE, the grouping sets come from one
-    Expand, and all three dim joins are broadcasts."""
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["revenue_rollup"](spark, sf001_dir)
-    df.collect()
-    p = df._jdf.queryExecution().executedPlan().toString()
-    final = p.split("== Initial Plan ==")[0]
-    assert final.count("orders.parquet") == 1, final
-    assert "Expand" in final
-    assert "SortMergeJoin" not in final, final
+# --- round-5 final-session additions: bigram LM / set-similarity ----------
 
 
 def test_doc_bigram_lm_hand_computed(spark):

@@ -1,6 +1,6 @@
-"""Vectorized pandas/Arrow UDFs — the only Python on the executor hot path.
+"""The extraction pandas/Arrow UDF — the only Python on the executor hot path.
 
-Each UDF wraps the shared rules core (rules.py).  Regexes and gazetteers
+It wraps the shared rules core (rules.py).  Regexes and gazetteers
 compile once per Python worker at module import (broadcast-free closure
 state — SURVEY §4.2.1).  Per input_hint, there are no row-at-a-time Python
 UDFs anywhere in the engine.
@@ -13,7 +13,7 @@ empty output (its error is countable downstream via length guards).
 
 from __future__ import annotations
 
-from typing import Any, Callable, List, Optional
+from typing import Any, Callable
 
 import pandas as pd
 
@@ -62,12 +62,11 @@ def _safe_map(s: pd.Series, fn: Callable[[Any], Any], default: Any) -> pd.Series
     return s.map(guarded)
 
 
-def tag_spans_series(clean: pd.Series, lower: Optional[pd.Series] = None) -> pd.Series:
+def tag_spans_series(clean: pd.Series, lower: pd.Series) -> pd.Series:
     """Span tagging with a vectorized any-gazetteer-hit prefilter: rows
     mentioning no product term (the common case at corpus scale) skip the
-    per-row tagger entirely."""
-    if lower is None:
-        lower = clean.str.lower()
+    per-row tagger entirely.  ``lower`` is ``clean.str.lower()``, shared
+    with the other stages."""
     spans = pd.Series([[]] * len(clean), index=clean.index, dtype="object")
     # lowered prefilter (plain scan, non-capturing pattern); rows where
     # lowercasing changes length bypass it — the tagger handles those with
@@ -172,96 +171,3 @@ def _turn_features_frame(text: pd.Series) -> pd.DataFrame:
             ]
         ),
     })
-
-
-# ---------------------------------------------------------------------------
-# Standalone column UDFs (used by individual queries / operators)
-# ---------------------------------------------------------------------------
-
-@F.pandas_udf(T.StringType())
-def clean_rich_udf(text: pd.Series) -> pd.Series:
-    """T2 TextCleaner.clean (text_preprocessing.py:107-214)."""
-    return rules.clean_series_rich(text)
-
-
-@F.pandas_udf(T.StringType())
-def clean_basic_udf(text: pd.Series) -> pd.Series:
-    """T1 helpers.clean_text (helpers.py:208-230)."""
-    return rules.clean_series_basic(text)
-
-
-@F.pandas_udf(T.StringType())
-def strip_boilerplate_udf(text: pd.Series) -> pd.Series:
-    """HTML main-content strip (north_star tag-density/link-ratio)."""
-    return _safe_map(text.fillna(""), rules.strip_boilerplate, "")
-
-
-@F.pandas_udf(T.StringType())
-def detect_lang_udf(text: pd.Series) -> pd.Series:
-    """M5 heuristic language detection (text_preprocessing.py:25-104)."""
-    return rules.detect_language_frame(text)["lang"]
-
-
-@F.pandas_udf(T.DoubleType())
-def relevance_udf(text: pd.Series) -> pd.Series:
-    """F1 ContentFilter relevance (text_preprocessing.py:393-479)."""
-    return rules.relevance_series(text)
-
-
-@F.pandas_udf(T.ArrayType(SPAN_TYPE, False))
-def tag_spans_udf(clean_text: pd.Series) -> pd.Series:
-    """X1-replacement span tagger over already-cleaned text."""
-    spans = tag_spans_series(clean_text.fillna(""))
-    return spans.map(
-        lambda sl: [
-            (
-                sp["span_seq"], sp["nome_popular"], sp["nome_canonico"],
-                sp["nome_cientifico"], sp["begin"], sp["end"],
-                sp["paises"], sp["tipos_uso"], sp["categoria"], sp["confianca"],
-            )
-            for sp in sl
-        ]
-    )
-
-
-@F.pandas_udf(T.StringType())
-def normalize_product_name_udf(name: pd.Series) -> pd.Series:
-    """T3 helpers.normalize_product_name (helpers.py:350-383)."""
-    return _safe_map(name.fillna(""), rules.normalize_product_name, "")
-
-
-@F.pandas_udf(T.DoubleType())
-def similarity_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """T6 difflib SequenceMatcher ratio (helpers.py:286-306).
-
-    difflib is intentionally kept (levenshtein is a different metric —
-    SURVEY §2.8 T6); this UDF is only for small/filtered pairs, never a
-    full cross join.
-    """
-    return pd.Series(
-        [rules.text_similarity(x, y) for x, y in zip(a, b)],
-        index=a.index, dtype="float64",
-    )
-
-
-CHUNK_TYPE = T.ArrayType(
-    T.StructType([
-        T.StructField("chunk_id", T.IntegerType(), False),
-        T.StructField("begin", T.IntegerType(), False),
-        T.StructField("end", T.IntegerType(), False),
-    ]),
-    False,
-)
-
-
-@F.pandas_udf(CHUNK_TYPE)
-def chunk_offsets_udf(text: pd.Series) -> pd.Series:
-    """W1 overlapping chunk offsets (helpers.py:103-150; settings 2500/150)."""
-    return _safe_map(
-        text.fillna(""),
-        lambda t: [
-            (c["chunk_id"], c["begin"], c["end"])
-            for c in rules.chunk_text(t, chunk_size=2500, overlap=150)
-        ],
-        [],
-    )

@@ -198,8 +198,8 @@ def numeric_corr_matrix(df: DataFrame, cols=CORR_COLS) -> DataFrame:
 
 
 def q_numeric_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT a ``queries()`` entry (frozen-window policy); DuckDB parity
-    pinned in tests/test_driver_contract.py."""
+    """NOT a ``queries()`` entry; DuckDB parity pinned in
+    tests/test_driver_contract.py."""
     return numeric_corr_matrix(load(spark, sf_dir, "lineitem"))
 
 
@@ -310,8 +310,9 @@ def chi_square_cells(
 
 
 def q_chi_square_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT a ``queries()`` entry (frozen-window policy); DuckDB parity
-    pinned in tests/test_driver_contract.py."""
+    """NOT a ``queries()`` entry: ``jobs/run_datacard.py`` calls
+    ``chi_square_cells`` directly; DuckDB parity pinned in
+    tests/test_driver_contract.py."""
     return chi_square_cells(load(spark, sf_dir, "documents"))
 
 

@@ -7,9 +7,9 @@ DuckDB oracle can check it, plus the faithful-UDF extraction query
 
 The SQL-expressible language detector is generated programmatically from
 rules.LANGUAGE_PATTERNS in BOTH dialects, so Spark and DuckDB evaluate
-the identical formula.  (The Python-regex UDF version in functions/udfs.py
-remains the engine's faithful default; on the ASCII documents corpus the
-two are equivalent.)
+the identical formula.  (The Python-regex detector inside the extraction
+UDF in functions/udfs.py remains the engine's faithful default; on the
+ASCII documents corpus the two are equivalent.)
 """
 
 from __future__ import annotations
@@ -18,6 +18,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import rules
 from ..functions.udfs import extract_turn_features
@@ -329,6 +330,14 @@ def q_doc_extract_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus actually produces multi-chunk output with overlaps
 _CHUNK_SIZE = 200
 _CHUNK_OVERLAP = 20
+CHUNK_TYPE = T.ArrayType(
+    T.StructType([
+        T.StructField("chunk_id", T.IntegerType(), False),
+        T.StructField("begin", T.IntegerType(), False),
+        T.StructField("end", T.IntegerType(), False),
+    ]),
+    False,
+)
 
 
 def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -345,8 +354,6 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentence-respect branch fires), and for ``paragraph`` mode those
     breaks are then promoted to blank lines (multi-paragraph docs → the
     greedy packing branch fires)."""
-    from ..functions.udfs import CHUNK_TYPE
-
     def _chunk_sent(text):
         return text.fillna("").map(
             lambda t: [
@@ -1560,10 +1567,9 @@ def char_entropy_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc entropy/charset table, ordered for the oracle compare.
-    NOT a ``queries()`` entry by final-round policy (the driver window
-    is frozen at 50 with every entry driver-verified at least once);
-    oracle parity vs ORACLE_CHAR_ENTROPY is pinned in
-    tests/test_driver_contract.py instead."""
+    NOT a ``queries()`` entry: ``jobs/run_datacard.py`` calls
+    ``char_entropy_stats`` directly; oracle parity vs ORACLE_CHAR_ENTROPY
+    is pinned in tests/test_driver_contract.py."""
     return char_entropy_stats(load(spark, sf_dir, "documents")).orderBy(
         "doc_id"
     )
@@ -1668,8 +1674,8 @@ def doc_readability(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def q_doc_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc readability table (oracle compare order).  NOT a
-    ``queries()`` entry — final-round frozen-window policy, same as
-    ``q_char_entropy``; parity is pinned in
+    ``queries()`` entry: ``jobs/run_datacard.py`` calls
+    ``doc_readability`` directly; parity is pinned in
     tests/test_driver_contract.py."""
     return doc_readability(load(spark, sf_dir, "documents")).orderBy(
         "doc_id"

@@ -102,9 +102,9 @@ def colocated_join(spark: SparkSession, o_name: str, l_name: str) -> DataFrame:
 
 def q_bucketed_join_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders ⋈ lineitem per-orderstatus census via the bucketed layout —
-    the write-once-join-many twin of ``revenue_by_priority`` (which pays
-    the shuffle every run).  Result is layout-independent, so the DuckDB
-    oracle is the plain join; what the layout changes is the PLAN
+    write once, join many times without the shuffle a plain join of the
+    parquet tables pays every run.  Result is layout-independent, so the
+    DuckDB oracle is the plain join; what the layout changes is the PLAN
     (no Exchange for the join — plan-pinned), not the answer.
     """
     o_name, l_name = ensure_bucketed_orders_lineitem(spark, sf_dir)
