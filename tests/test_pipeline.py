@@ -412,12 +412,51 @@ def _sql_graphs_since(spark, after_id):
     return graphs
 
 
+def _sort_keys(desc):
+    """Column names of a ``Sort`` node's description, in key order."""
+    import re
+
+    return re.findall(r"(\w+)#\d+ (?:ASC|DESC)", desc)
+
+
+def _assert_bucket_files_layout(data_dir, tiebreak=()):
+    """Every file of a bucketed output: zstd pages, ``ts`` (when present)
+    as INT64 microseconds adjusted to UTC, rows strictly ascending on
+    ``(conv_id, turn_idx, *tiebreak)``."""
+    import glob
+    import json
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(data_dir, "bucket=*", "*.parquet"))
+    assert files, data_dir
+    key = ("conv_id", "turn_idx", *tiebreak)
+    for f in files:
+        pf = pq.ParquetFile(f)
+        md = pf.metadata
+        assert {md.row_group(g).column(c).compression
+                for g in range(md.num_row_groups)
+                for c in range(md.num_columns)} == {"ZSTD"}, f
+        names = [md.schema.column(c).name for c in range(md.num_columns)]
+        if "ts" in names:
+            col = md.schema.column(names.index("ts"))
+            logical = json.loads(col.logical_type.to_json())
+            assert col.physical_type == "INT64", f
+            assert (logical["Type"], logical["timeUnit"], logical["isAdjustedToUTC"]) \
+                == ("Timestamp", "microseconds", True), (f, logical)
+        t = pf.read(columns=list(key))
+        rows = list(zip(*(t.column(c).to_pylist() for c in key)))
+        assert all(a < b for a, b in zip(rows, rows[1:])), f
+
+
 def test_run_extraction_one_file_per_bucket(spark, transcripts_df, out_dir):
     """Rows are clustered by bucket before the writes: every bucket of
     every bucketed output is one file (not one per scan task), each run
     adds one manifest file, lineage equals a per-bucket aggregate of the
     written turns, and the write plans carry exactly one bucket exchange,
-    after the extract UDF."""
+    after the extract UDF.  Each of those writes sorts once, on a key that
+    begins ``bucket, conv_id, turn_idx``, and writes zstd pages with an
+    INT64 microsecond ``ts``."""
     import glob
     from pyspark.sql import functions as F
 
@@ -485,8 +524,58 @@ def test_run_extraction_one_file_per_bucket(spark, transcripts_df, out_dir):
             node = edges[node]
             ancestors.add(node)
         assert exchanges[0] in ancestors
+        (sort,) = [d for name, d in nodes.values() if name == "Sort"]
+        tiebreak = ["span_seq"] if "product_spans" in sink[0] else []
+        assert _sort_keys(sort) == ["bucket", "conv_id", "turn_idx", *tiebreak], sort
     assert writes == 4  # turns + spans, two runs
     assert local_writes == 4  # lineage + manifest, two runs
+    _assert_bucket_files_layout(os.path.join(out_dir, "turns_extracted"))
+    _assert_bucket_files_layout(os.path.join(out_dir, "product_spans"), ("span_seq",))
+
+
+def test_run_extraction_output_independent_of_input_order(
+    spark, transcripts_df, tmp_path
+):
+    """The same transcripts, scanned from files whose names sort in
+    opposite orders (and whose rows run in opposite orders), give the
+    same bucket files: equal rows in equal order, equal file sizes."""
+    import glob
+    import shutil
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from text_extractor_for_bioeconomic_products_spark.sources.transcripts import (
+        read_transcripts,
+    )
+
+    half = F.pmod(F.xxhash64("conv_id"), F.lit(2))
+    inputs = {"x": str(tmp_path / "in_x"), "y": str(tmp_path / "in_y")}
+    for label, first, desc in (("x", 0, False), ("y", 1, True)):
+        os.makedirs(inputs[label])
+        for i, h in enumerate((first, 1 - first)):
+            keys = [F.col(c).desc() if desc else F.col(c) for c in ("conv_id", "turn_idx")]
+            tmp = str(tmp_path / f"tmp_{label}{i}")
+            (transcripts_df.filter(half == h).orderBy(*keys)
+             .coalesce(1).write.parquet(tmp))
+            (part,) = glob.glob(os.path.join(tmp, "*.parquet"))
+            shutil.move(part, os.path.join(inputs[label], f"part-{i}.parquet"))
+
+    outs = {}
+    for label, path in inputs.items():
+        outs[label] = str(tmp_path / f"out_{label}")
+        run_extraction(spark, read_transcripts(spark, path), outs[label],
+                       run_id="r", n_buckets=4)
+
+    for sub in ("turns_extracted", "product_spans"):
+        files = {
+            label: sorted(glob.glob(os.path.join(d, sub, "bucket=*", "*.parquet")))
+            for label, d in outs.items()
+        }
+        assert len(files["x"]) == len(files["y"]) == 4, files
+        for fx, fy in zip(files["x"], files["y"]):
+            assert os.path.basename(os.path.dirname(fx)) == os.path.basename(os.path.dirname(fy))
+            assert pq.read_table(fx).to_pylist() == pq.read_table(fy).to_pylist(), fx
+            assert os.path.getsize(fx) == os.path.getsize(fy), fx
 
 
 def _python_daemons(parent_pid):
@@ -679,7 +768,10 @@ def test_merge_turns_keyed_upsert(spark, transcripts_df, tmp_path):
 def test_merge_turns_one_file_per_bucket(spark, transcripts_df, tmp_path):
     """merge_turns clusters the merged rows by bucket: a base merge and two
     upserts into the same bucket leave every bucket as one file instead
-    of adding a file per merge to each rewritten bucket."""
+    of adding a file per merge to each rewritten bucket.  The checkpoint
+    holds the one bucket exchange; each write sorts once, on a key that
+    begins ``bucket, conv_id, turn_idx``, and writes zstd pages with an
+    INT64 microsecond ``ts``."""
     from pyspark.sql import functions as F
     from text_extractor_for_bioeconomic_products_spark.plans.pipeline import (
         merge_turns,
@@ -687,6 +779,7 @@ def test_merge_turns_one_file_per_bucket(spark, transcripts_df, tmp_path):
 
     turns_dir = str(tmp_path / "turns")
     base = extract_turns(transcripts_df).drop("spans").cache()
+    since = max(_sql_execution_ids(_sql_status_store(spark)), default=-1)
     merge_turns(spark, turns_dir, base, n_buckets=8)
     assert set(_files_per_bucket(turns_dir).values()) == {1}
 
@@ -706,6 +799,24 @@ def test_merge_turns_one_file_per_bucket(spark, transcripts_df, tmp_path):
     # the _meta sidecar still records the modulus as an int
     (meta,) = spark.read.json(turns_dir + "_meta").collect()
     assert meta["n_buckets"] == 8 and isinstance(meta["n_buckets"], int)
+
+    checkpoints = writes = 0
+    for nodes, _edges in _sql_graphs_since(spark, since):
+        exchanges = [d for name, d in nodes.values() if name == "Exchange"]
+        if any("REBALANCE" in d for d in exchanges):
+            # the localCheckpoint of the merged rows
+            checkpoints += 1
+            assert len([d for d in exchanges
+                        if d.startswith("Exchange hashpartitioning(bucket")]) == 1, exchanges
+        sink = [d for name, d in nodes.values() if name.startswith("Execute Insert")]
+        if not (sink and turns_dir + "," in sink[0]):
+            continue
+        writes += 1
+        assert not exchanges, sink[0]  # the write reads the checkpoint
+        (sort,) = [d for name, d in nodes.values() if name == "Sort"]
+        assert _sort_keys(sort) == ["bucket", "conv_id", "turn_idx"], sort
+    assert checkpoints == writes == 3
+    _assert_bucket_files_layout(turns_dir)
     base.unpersist()
 
 
@@ -791,36 +902,6 @@ def test_xml_html_excel_sinks(spark, transcripts_df, tmp_path):
         summary = ET.fromstring(z.read("xl/worksheets/sheet3.xml"))
         srows = summary.findall(f"{ns}sheetData/{ns}row")
         assert len(srows) >= 2  # header + ≥1 category census row
-
-
-def test_compact_buckets(spark, transcripts_df, tmp_path):
-    """Fragmented buckets (high write parallelism) compact to one file
-    each with byte-identical content."""
-    import glob
-    from pyspark.sql import functions as F
-    from text_extractor_for_bioeconomic_products_spark.plans.pipeline import (
-        compact_buckets,
-    )
-
-    # the directory name contains a space: input_file_name()-style URIs
-    # percent-encode it, which broke the old per-file getsize path — the
-    # _metadata aggregate must be encoding-agnostic
-    data_dir = str(tmp_path / "frag out")
-    turns = extract_turns(transcripts_df.limit(400)).drop("spans")
-    bucketed = turns.withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(4)).cast("int")
-    )
-    bucketed.repartition(16).write.partitionBy("bucket").parquet(data_dir)
-    before_files = glob.glob(f"{data_dir}/bucket=*/*.parquet")
-    before = {tuple(r) for r in spark.read.parquet(data_dir).collect()}
-    assert len(before_files) > 8  # genuinely fragmented
-
-    stats = compact_buckets(spark, data_dir, target_file_bytes=1 << 30)
-    after_files = glob.glob(f"{data_dir}/bucket=*/*.parquet")
-    after = {tuple(r) for r in spark.read.parquet(data_dir).collect()}
-    assert after == before
-    assert len(after_files) == stats["files_after"] <= 4
-    assert stats["files_before"] == len(before_files)
 
 
 def test_streaming_microbatch_rate(spark, transcripts_df, tmp_path):
@@ -2655,8 +2736,10 @@ def test_iceberg_metadata_export_structure(spark, transcripts_df, tmp_path):
     # earlier metadata files exist too (one per snapshot)
     assert {"v1.metadata.json", "v2.metadata.json"} <= set(os.listdir(md))
     # schema carries ids for every column incl. key cols
-    names = {f["name"] for f in doc["schemas"][0]["fields"]}
-    assert {"conv_id", "turn_idx"} <= names
+    types = {f["name"]: f["type"] for f in doc["schemas"][0]["fields"]}
+    assert {"conv_id", "turn_idx"} <= set(types)
+    # INT64 UTC-adjusted microseconds: Iceberg's type for TimestampType
+    assert types["ts"] == "timestamptz"
 
     # manifest-list → manifest → data files chain resolves with real
     # counts; the avro schemas embed the spec field-ids

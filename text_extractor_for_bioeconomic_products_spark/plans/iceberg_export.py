@@ -118,6 +118,8 @@ def _iceberg_schema_of(arrow_schema: pa.Schema) -> dict:
                 "element-required": False,
             }
         if pa.types.is_timestamp(t):
+            # Spark's TimestampType, written as INT64 micros adjusted to
+            # UTC (session.get_spark), reads back zoned: timestamptz
             return "timestamptz" if t.tz else "timestamp"
         for pred, name in (
             (pa.types.is_string, "string"),

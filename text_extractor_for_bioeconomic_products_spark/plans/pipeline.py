@@ -7,10 +7,18 @@ reference's per-file JSON outputs + combined run stats
 (direct_batch_process.py:107-110, 184-208).
 
 Layout under ``out_dir``:
-    turns_extracted/   parquet, partitioned by bucket=pmod(xxhash64(conv_id), N)
-    product_spans/     parquet, same bucketing
+    turns_extracted/   parquet, partitioned by bucket=pmod(xxhash64(conv_id), N);
+                       rows in (conv_id, turn_idx) order within each file
+    product_spans/     parquet, same bucketing; rows in
+                       (conv_id, turn_idx, span_seq) order
     lineage/           one row per (run, bucket): counters only, no timings
     manifest/          processed-bucket ids (the checkpoint)
+
+Every bucketed file is written the way Iceberg writes a table with a
+declared sort order: zstd pages and ``ts`` as an INT64 microsecond
+timestamp adjusted to UTC (``session.get_spark``), rows sorted on the
+table key (``_write_bucketed``).  So a file's bytes depend only on the
+rows it holds, not on the order in which the input was scanned.
 
 Idempotency: writes use dynamic partition overwrite — re-running a bucket
 replaces exactly that bucket's files (the parquet analog of Iceberg
@@ -38,7 +46,7 @@ import os
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass
-from typing import List, Optional, Sequence, Union
+from typing import List, Sequence, Union
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -97,6 +105,26 @@ def _cluster_by_bucket(df: DataFrame) -> DataFrame:
     AQE advisory partition size, a few), so the write emits about one file
     per bucket rather than one per input task × bucket."""
     return df.hint("rebalance", "bucket")
+
+
+def _write_bucketed(df: DataFrame, path: str, *tiebreak: str) -> None:
+    """Overwrite ``df`` into ``path`` partitioned by bucket, each file's
+    rows in ``(conv_id, turn_idx, *tiebreak)`` order: the one physical
+    layout of every bucketed output.  Call under
+    ``_dynamic_partition_overwrite``.
+
+    A partitioned write plans a sort on ``bucket`` alone in its own
+    stage; this states the whole key in that same place, so the write
+    still sorts once.  A sort placed earlier is lost before the write:
+    the explode of the spans and ``merge_turns``'s checkpoint of an
+    adaptive plan both drop the ordering, and the writer's bucket-only
+    sort is not stable once it spills."""
+    (
+        df.sortWithinPartitions("bucket", "conv_id", "turn_idx", *tiebreak)
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(path)
+    )
 
 
 def _local_table(
@@ -213,7 +241,7 @@ def merge_turns(
     # overwrite deletes their source files
     merged = _cluster_by_bucket(merged).localCheckpoint(eager=True)
     with _dynamic_partition_overwrite(spark):
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(turns_dir)
+        _write_bucketed(merged, turns_dir)
     if stored is None:
         # first write, or adopting a pre-sidecar dataset at the caller's
         # declared modulus
@@ -280,17 +308,12 @@ def run_extraction(
                           round(time.monotonic() - t0, 3))
 
     with _dynamic_partition_overwrite(spark):
-        (
-            turns.drop("spans")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(turns_dir)
-        )
+        _write_bucketed(turns.drop("spans"), turns_dir)
         # bucket is a pure function of conv_id — recompute, don't re-join
         spans = explode_spans(turns).withColumn(
             "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
         )
-        spans.write.mode("overwrite").partitionBy("bucket").parquet(spans_dir)
+        _write_bucketed(spans, spans_dir, "span_seq")
         # partitioned dynamic overwrite, NOT append — a crash-and-resume
         # rerun of a bucket replaces its lineage row instead of duplicating
         # it ("one row per bucket, from the attempt that durably wrote it")
@@ -319,66 +342,3 @@ def run_extraction(
         n_spans=sum(r["n_spans"] or 0 for r in lineage_rows),
         wall_sec=round(time.monotonic() - t0, 3),
     )
-
-
-def compact_buckets(
-    spark: SparkSession,
-    data_dir: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    buckets: Optional[List[int]] = None,
-) -> dict:
-    """Small-file compaction for a bucket-partitioned dataset: rewrite
-    each selected bucket into ceil(bucket_bytes / target) files.
-
-    ``run_extraction`` and ``merge_turns`` cluster rows by bucket and
-    leave one file per bucket per write, but a writer without that
-    exchange (a plain ``partitionBy("bucket")`` from many tasks, an
-    appending stream sink) fragments buckets into many small parquet
-    files; at scale that degrades scan planning and shuffle-read
-    efficiency.  Content is byte-preserved (read → coalesce-by-size →
-    dynamic partition overwrite of exactly the selected buckets).
-    """
-    import math as _math
-
-    df = spark.read.parquet(data_dir)
-    if buckets is not None:
-        df = df.filter(F.col("bucket").isin(list(buckets)))
-    # Per-bucket byte sizes via the _metadata hidden column — a fully
-    # distributed aggregate over (file_path, file_size) pairs, so the
-    # driver materializes only one row per BUCKET regardless of file
-    # count (the earlier per-file collect + os.path.getsize broke on
-    # percent-encoded paths and non-local schemes, and listed millions
-    # of rows at 100 TB).  file_path is constant within a file, so
-    # distinct() dedups to one row per file before the rollup.
-    bucket_stats = (
-        df.select(
-            F.col("_metadata.file_path").alias("f"),
-            F.col("_metadata.file_size").alias("nbytes"),
-            F.col("bucket"),
-        )
-        .distinct()
-        .groupBy("bucket")
-        .agg(F.sum("nbytes").alias("nbytes"), F.count("*").alias("n_files"))
-        .collect()
-    )
-    sizes = {int(r["bucket"]): int(r["nbytes"]) for r in bucket_stats}
-    n_files_before = sum(int(r["n_files"]) for r in bucket_stats)
-    rewritten = {}
-    for b, nbytes in sorted(sizes.items()):
-        n_out = max(1, _math.ceil(nbytes / target_file_bytes))
-        # materialize BEFORE the overwrite deletes the source files of the
-        # very bucket being read (same read-write-same-path hazard as
-        # merge_turns)
-        sub = (
-            df.filter(F.col("bucket") == b)
-            .repartition(n_out)
-            .localCheckpoint(eager=True)
-        )
-        with _dynamic_partition_overwrite(spark):
-            sub.write.mode("overwrite").partitionBy("bucket").parquet(data_dir)
-        rewritten[b] = n_out
-    return {
-        "buckets_compacted": sorted(rewritten),
-        "files_before": n_files_before,
-        "files_after": sum(rewritten.values()),
-    }

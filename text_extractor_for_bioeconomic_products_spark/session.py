@@ -7,6 +7,10 @@ Arrow batching sized for text payloads).
 Python runs in one worker pool per executor: one ``pyspark.daemon`` plus
 one worker per core, shared by the Arrow UDF and any Python-RDD work
 (the executor env matches the UDF runner's, see ``get_spark``).
+
+Parquet is written with Iceberg's own defaults: zstd pages and timestamps
+as INT64 microseconds adjusted to UTC (Iceberg's ``timestamptz``), not
+snappy and the deprecated INT96.
 """
 
 from __future__ import annotations
@@ -68,6 +72,11 @@ def get_spark(
         # for every runner lets both share the UDF's one worker pool
         # instead of keeping a second daemon with an idle worker per core.
         .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
+        # Iceberg's own parquet write defaults: zstd pages, and timestamps
+        # as INT64 microseconds adjusted to UTC (Iceberg's timestamptz),
+        # never the deprecated INT96
+        .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
