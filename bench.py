@@ -1,20 +1,13 @@
 #!/usr/bin/env python
-"""Benchmark harness — prints ONE JSON line.
+"""Extraction bench: the sf0.1 output hash and the N→4N scaling pair.
 
-Measures
-  1. headline query latencies at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-     local[$SPARK_GRAFT_CPUS] (default 32), and
-  2. extraction throughput (turns/sec) over synthesized transcripts at two
-     parallelism levels (default pair local[2] vs local[8], measured on a
-     SCALE_MULT× corpus — default 5× — SCALE_REPEATS INTERLEAVED rounds:
-     8,2,8,2,...,8 so time-correlated co-tenancy hits both ends of each
-     positional ratio) — the sandbox evidence for north_rule's N→4N
-     scaling-efficiency ≥ 0.8 target (BASELINE.md; rationale in BENCH.md).
+Builds the seed-42, 22,000-conversation corpus (~1M turns) once, then
+times ``extract_turns`` at two core counts, one subprocess (one JVM) per
+run, interleaved lo, hi, lo, hi.  Equal ``xxhash64`` sums over every run
+pin per-turn equality under the scaling run itself.  Prints ONE JSON line.
 
-Each parallelism level runs in a fresh subprocess (one JVM per master).
-Usage:
-    python bench.py                 # full run → one JSON line on stdout
-    python bench.py --phase extract --cpus 8 --input DIR   # internal
+    python bench.py                                        # full run
+    python bench.py --phase extract --cpus 4 --input DIR   # one run
 """
 
 from __future__ import annotations
@@ -29,472 +22,107 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+NCPU = os.cpu_count() or 1
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", NCPU))
 BENCH_TMP = os.environ.get("SPARK_GRAFT_BENCH_TMP", "/tmp/spark_graft_bench")
-
-# conversations scale with sf; sized so extraction compute dominates task
-# overhead at 32 cores (sf0.1 → 22000 convs ≈ 1M turns ≈ 0.6 GB text —
-# FIXTURES.md bench tier)
-SF_CONVS = {"sf0.001": 200, "sf0.01": 2000, "sf0.1": 22000}
-
-HEADLINE = [
-    "doc_lang_detect",
-    "dedup_minhash_lsh",
-    "dup_components",
-    "doc_pii_scrub",
-    "sequence_packing",
-    "ann_brute_force",
-]
+N_CONVS = 22000  # sf0.1 (FIXTURES.md bench tier)
+# The pair stays at or below 8 cores: the shared host stops scaling
+# between 8 and 16 aggregate cores, for pure-CPU work too (BENCH.md).
+HI = min(CPUS, NCPU, 8)
+LO = max(1, HI // 4)
 
 
 def _get_spark(cpus: int):
     from text_extractor_for_bioeconomic_products_spark.session import get_spark
-    return get_spark(
-        app_name=f"bench_{cpus}",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
+    return get_spark(f"bench_{cpus}", f"local[{cpus}]", shuffle_partitions=cpus)
 
 
-def _sf_label() -> str:
-    return os.path.basename(SF_DIR.rstrip("/"))
-
-
-def _sf_value() -> float:
-    label = _sf_label()
-    try:
-        return float(label.replace("sf", ""))
-    except ValueError:
-        return 0.0
-
-
-def phase_generate(input_dir: str, n_convs: int | None = None) -> int:
-    """Synthesize + persist bench transcripts once (excluded from timing).
-
-    The corpus is deterministic (seed 42), so an existing directory with
-    the expected conversation count is reused as-is."""
+def phase_generate(input_dir: str) -> None:
+    """Write the corpus once; a committed copy is reused (it is seeded)."""
+    if os.path.exists(os.path.join(input_dir, "_SUCCESS")):
+        return
     from text_extractor_for_bioeconomic_products_spark.sources.transcripts import (
         synthesize_transcripts, write_transcripts,
     )
-    spark = _get_spark(CPUS)
-    if n_convs is None:
-        n_convs = SF_CONVS.get(_sf_label(), 500)
+    spark = _get_spark(HI)
     try:
-        existing = spark.read.parquet(input_dir)
-        if existing.select("conv_id").distinct().count() == n_convs:
-            n = existing.count()
-            spark.stop()
-            return n
-    except Exception:
-        pass
-    df = synthesize_transcripts(spark, n_convs=n_convs, seed=42)
-    write_transcripts(df, input_dir)
-    n = spark.read.parquet(input_dir).count()
-    spark.stop()
-    return n
+        write_transcripts(synthesize_transcripts(spark, N_CONVS, seed=42), input_dir)
+    finally:
+        spark.stop()
 
 
 def phase_extract(cpus: int, input_dir: str) -> dict:
-    """Timed: read transcripts → extract_turns → noop sink (full
-    materialization, no collect)."""
-    from text_extractor_for_bioeconomic_products_spark.operators.extract import (
-        extract_turns,
-    )
-    from text_extractor_for_bioeconomic_products_spark.sources.transcripts import (
-        read_transcripts,
-    )
-    spark = _get_spark(cpus)
-    df = read_transcripts(spark, input_dir)
-    # The bench corpus is small (sub-GB), so Spark's small-file packing
-    # coalesces it into ~1 scan partition; at 100 TB the scan naturally
-    # yields thousands of splits.  Materialize a cpus*2-way partitioned,
-    # cached input (untimed) so the timed region measures the extraction
-    # operator's steady-state compute — the quantity north_rule's N→4N
-    # efficiency target is about.
-    df = df.repartition(cpus * 2).persist()
-    n_turns = df.count()
-    # Warm-up: spin up one Python UDF worker per core (worker reuse) so
-    # module-import cost stays out of the timed region; the 2% sample
-    # touches every partition.
-    extract_turns(df.sample(0.02, seed=1)).write.format("noop").mode("overwrite").save()
+    """Timed: sum ``xxhash64`` of every extracted turn of a cached input
+    (as decimal: ANSI mode overflows a bigint sum).  A 2% warm-up run
+    keeps Python worker start-up out of the timed region."""
     from pyspark.sql import functions as F
     from text_extractor_for_bioeconomic_products_spark.operators.extract import (
-        TURNS_EXTRACTED_COLS,
+        TURNS_EXTRACTED_COLS, extract_turns,
     )
-    # The timed materialization IS the equality-hash aggregation: one
-    # pass runs every row through the extraction UDF and reduces an
-    # order-insensitive content hash over EVERY output column (incl. the
-    # float lang_conf/relevance raw bits — extraction is a pure per-row
-    # function, so any cross-level drift is a real bug, not noise).
-    # Identical hashes across parallelism levels ⇒ the per-turn equality
-    # invariant holds under the N→4N scaling run itself.  The final
-    # aggregate reduces one partial sum per partition — noise-level next
-    # to the per-row UDF work (r2 paid a SECOND full extraction pass for
-    # this hash, ~doubling every level's wall cost for no extra signal).
-    # decimal(38,0): ANSI mode overflows on sum(bigint hashes).
-    t0 = time.monotonic()
-    out_hash = (
-        extract_turns(df)
-        .select(
+    from text_extractor_for_bioeconomic_products_spark.sources import transcripts
+    spark = _get_spark(cpus)
+    try:
+        df = transcripts.read_transcripts(spark, input_dir).repartition(cpus * 2).persist()
+        n_turns = df.count()
+        extract_turns(df.sample(0.02, seed=1)).write.format("noop").mode("overwrite").save()
+        t0 = time.monotonic()
+        out_hash = extract_turns(df).select(
             F.xxhash64(*TURNS_EXTRACTED_COLS).cast("decimal(38,0)").alias("h")
-        )
-        .agg(F.sum("h").alias("s")).collect()[0]["s"]
-    )
-    elapsed = time.monotonic() - t0
-    df.unpersist()
-    spark.stop()
-    return {
-        "cpus": cpus,
-        "n_turns": n_turns,
-        "extract_sec": round(elapsed, 3),
-        "turns_per_sec": round(n_turns / elapsed, 1),
-        "output_hash": str(out_hash),
-    }
+        ).agg(F.sum("h")).collect()[0][0]
+        elapsed = time.monotonic() - t0
+    finally:
+        spark.stop()
+    return {"cpus": cpus, "n_turns": n_turns, "extract_sec": round(elapsed, 3),
+            "turns_per_sec": round(n_turns / elapsed, 1), "output_hash": str(out_hash)}
 
 
-def run_headline_queries() -> dict:
-    import __spark_entry__ as entry_mod
-    spark = _get_spark(CPUS)
-    qs = entry_mod.queries()
-    times = {}
-    for name in HEADLINE:
-        t0 = time.monotonic()
-        qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        times[name] = round(time.monotonic() - t0, 3)
-    spark.stop()
-    return times
+def pair_efficiency(lo_runs: list, hi_runs: list, lo_cpus: int, hi_cpus: int) -> float:
+    """Min-of-level efficiency (min lo)/(min hi)/(hi/lo): interference
+    only adds time, so each level's fastest run is its cleanest estimate."""
+    lo, hi = (min(r["extract_sec"] for r in rs) for rs in (lo_runs, hi_runs))
+    return round(lo / hi / (hi_cpus / lo_cpus), 3)
 
 
-def hardware_ceiling(lo: int, hi: int) -> float:
-    """Measured parallel-scaling ceiling of this machine (hyperthreading /
-    shared cache): speedup of a pure-CPU md5 workload from lo to hi
-    processes, normalized by hi/lo.  Reported alongside the Spark
-    efficiency so the judge can separate engine overhead from hardware."""
-    import hashlib
-    import multiprocessing as mp
-
-    def rate(procs: int) -> float:
-        t0 = time.monotonic()
-        with mp.Pool(procs) as pool:
-            pool.map(_md5_unit, range(procs * 2))
-        return procs * 2 / (time.monotonic() - t0)
-
-    # the VM's burst scheduling makes single trials noisy — use the median
-    trials = sorted((rate(hi) / rate(lo)) / (hi / lo) for _ in range(3))
-    return round(trials[1], 3)
-
-
-def _md5_unit(_: int) -> int:
-    import hashlib
-    h = b"x"
-    for _i in range(200000):
-        h = hashlib.md5(h).digest()
-    return 1
-
-
-def pair_efficiency_candidates(
-    lo_runs: list, hi_runs: list, lo_cpus: int, hi_cpus: int
-) -> dict:
-    """Efficiency candidates for one (lo, hi) pair under the INTERLEAVED
-    repeat schedule (lo,hi,lo,hi,...).
-
-    Two estimators, both shipped raw:
-      - min_of_level: (min lo)/(min hi)/ratio.  Cancels INDEPENDENT slow
-        outliers (interference is strictly additive) but not a slow *hour*
-        that covers one whole level — which is exactly what the r3/r4
-        sequential schedule exposed (all lo repeats ran before any hi
-        repeat, so a co-tenancy window inflated one end of the ratio:
-        driver read 0.696 while same-code builder runs read 0.915/0.836).
-      - position_i: (lo_i)/(hi_i)/ratio for each interleaved round i.  The
-        two runs are adjacent in wall time, so time-correlated interference
-        hits BOTH ends and divides out of the ratio.
-
-    A third estimator activates when hi_runs carries ONE MORE run than
-    lo_runs (the strict-alternation schedule prepends a hi warm-length
-    run, so the time order is hi₀,lo₀,hi₁,lo₁,…,hiₙ and every lo is
-    BRACKETED by two adjacent hi runs):
-      - bracket_i: lo_i / min(hi_i, hi_{i+1}) / ratio.  Interference is
-        additive, so of the two hi windows surrounding lo_i the faster
-        one is the cleaner estimate of the true hi-level time; a single
-        inflated hi sample can no longer sink its position (r5 live
-        data: hi spread 58.7–94.2 s while lo spread was ≤6%, so hi-side
-        noise dominated three of four positional ratios).
-
-    Selection within the pair: max over plausible (≤1.0) candidates —
-    same rule as the cross-pair headline (select_scaling_headline); if
-    every candidate is superlinear the raw max ships (labeled upstream).
-    Pinned by tests/test_search.py::test_bench_pair_efficiency."""
-    ratio = hi_cpus / lo_cpus
-    lo_secs = [r["extract_sec"] for r in lo_runs]
-    hi_secs = [r["extract_sec"] for r in hi_runs]
-    eff_min = (min(lo_secs) / min(hi_secs)) / ratio if min(hi_secs) > 0 else 0.0
-    bracketed = len(hi_secs) == len(lo_secs) + 1
-    # positional his: the hi run that directly FOLLOWS lo_i in wall time
-    pos_his = hi_secs[1:] if bracketed else hi_secs
-    eff_pos = [
-        (lo / hi) / ratio
-        for lo, hi in zip(lo_secs, pos_his)
-        if hi > 0
-    ]
-    eff_bracket = [
-        (lo / min(a, b)) / ratio
-        for lo, a, b in zip(lo_secs, hi_secs, hi_secs[1:])
-        if min(a, b) > 0
-    ] if bracketed else []
-    candidates = (
-        [("min_of_level", round(eff_min, 3))]
-        + [(f"position_{i}", round(e, 3)) for i, e in enumerate(eff_pos)]
-        + [(f"bracket_{i}", round(e, 3)) for i, e in enumerate(eff_bracket)]
-    )
-    plausible = [(b, e) for b, e in candidates if e <= 1.0]
-    basis, eff = max(plausible or candidates, key=lambda be: be[1])
-    out = {
-        "scaling_efficiency": eff,
-        "efficiency_basis": basis,
-        "efficiency_min_of_level": round(eff_min, 3),
-        "efficiency_by_position": [round(e, 3) for e in eff_pos],
-    }
-    if bracketed:
-        out["efficiency_by_bracket"] = [round(e, 3) for e in eff_bracket]
-    return out
-
-
-def select_scaling_headline(pair_results: list) -> tuple:
-    """Headline selection: best CREDIBLE pair.  Efficiency > 1.0 is
-    physically impossible for this workload and means the pair's slow
-    baseline absorbed interference (see BENCH.md) — an INFLATED ratio,
-    not a lower bound.  Such pairs are excluded from the headline; if
-    EVERY pair is superlinear there is no credible measurement this run,
-    so the raw (inflated) value ships under an explicit
-    'all_pairs_superlinear' label rather than a fabricated clamp — a
-    consumer reading only scaling_efficiency must see a number that was
-    actually measured, with the selection label as the warning.
-    (Pinned by tests/test_search.py::test_bench_headline_selection.)"""
-    plausible = [p for p in pair_results if p["scaling_efficiency"] <= 1.0]
-    if plausible:
-        return max(plausible, key=lambda p: p["scaling_efficiency"]), \
-            "max_over_plausible_pairs"
-    if pair_results:
-        return max(pair_results, key=lambda p: p["scaling_efficiency"]), \
-            "all_pairs_superlinear"
-    return {"scaling_efficiency": None, "pair": None}, "none"
-
-
-def _run_subprocess_extract(cpus: int, input_dir: str) -> dict:
-    env = dict(os.environ)
-    env["SPARK_GRAFT_CPUS"] = str(cpus)
+def _run_extract(cpus: int, input_dir: str) -> dict:
     out = subprocess.run(
-        [sys.executable, os.path.abspath(__file__),
-         "--phase", "extract", "--cpus", str(cpus), "--input", input_dir],
-        capture_output=True, text=True, env=env, cwd=REPO, timeout=3600,
+        [sys.executable, os.path.abspath(__file__), "--phase", "extract",
+         "--cpus", str(cpus), "--input", input_dir],
+        capture_output=True, text=True, cwd=REPO, timeout=3600,
+        env={**os.environ, "SPARK_GRAFT_CPUS": str(cpus)},
     )
     if out.returncode != 0:
-        raise RuntimeError(f"extract phase failed (cpus={cpus}):\n{out.stderr[-4000:]}")
+        raise RuntimeError(f"extract (cpus={cpus}) failed:\n{out.stderr[-4000:]}")
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--phase", choices=["full", "extract"], default="full")
-    ap.add_argument("--cpus", type=int, default=CPUS)
+    ap.add_argument("--cpus", type=int, default=HI)
     ap.add_argument("--input", default=None)
     args = ap.parse_args()
-
     if args.phase == "extract":
         print(json.dumps(phase_extract(args.cpus, args.input)))
         return
 
-    input_dir = os.path.join(BENCH_TMP, f"transcripts_{_sf_label()}")
+    input_dir = os.path.join(BENCH_TMP, "transcripts_sf0.1")
     phase_generate(input_dir)
-
-    # The scaling pair runs on a SCALE_MULT× corpus (default 5× ⇒ ~4.9 M
-    # turns at sf0.1): r3's driver pair ran 20-60 s per level where fixed
-    # overhead + this VM's ±40% co-tenancy swings dominated the ratio
-    # (driver read 0.496 while five same-code builder runs read 0.74-0.92).
-    # At 5× each level still runs minutes-scale so interference amortizes,
-    # and the wall budget saved vs r4's 10× buys a 4th interleaved round —
-    # more positional ratios for the same ~25-min bench (r4 postmortem:
-    # within-level spread collapsed to ≤17% at 10×, but the SEQUENTIAL
-    # schedule left the between-level window exposed; positions fix that).
-    # Synthesis is one-time (dir reused across rounds).
-    scale_mult = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "5"))
-    scale_dir = os.path.join(
-        BENCH_TMP, f"transcripts_{_sf_label()}_x{scale_mult}"
-    )
-    scale_convs = SF_CONVS.get(_sf_label(), 500) * scale_mult
-    phase_generate(scale_dir, n_convs=scale_convs)
-
-    # N→4N scaling pairs; override e.g. SPARK_GRAFT_SCALE_PAIR=4,16.
-    # Default pair sits entirely below this VM's burst-throttle knee
-    # (the upper-core region caps even pure-CPU multiprocessing at
-    # ~0.5-0.6; the hardware_ceiling field quantifies that).  See BENCH.md.
-    pair_env = os.environ.get("SPARK_GRAFT_SCALE_PAIR")
-    ncpu = os.cpu_count() or CPUS
-    if pair_env:
-        pairs = [tuple(int(x) for x in pair_env.split(","))]
-    elif ncpu >= 32:
-        # full box: ONE N→4N pair, (2,8) — entirely below the host's
-        # throttle/contention knee.  Measured per-core extraction rate on
-        # the 5× corpus decays 6442 (2-core) → 5929 (8) → 4206 (16) →
-        # 3182 (32) turns/s/core: the knee sits between 8 and 16 cores,
-        # and the same knee shows in the PURE-CPU md5 control (4→16
-        # ceiling readings 0.52-0.84 across r4/r5 runs — the host, not
-        # the engine, stops scaling above ~8 aggregate cores).  (4,16)
-        # therefore measured host throttle noise and hovered AT the 0.8
-        # target (r4 driver 0.696; r5 runs 0.77-0.89), while (2,8)
-        # probes read 0.92-0.94 bracketed.  r3's objection to a 2-core
-        # level (its ~2-min runs absorbed interference whole) is void on
-        # the SCALE_MULT× corpus where the 2-core leg runs ~6-7 min.
-        # The 32-core headline level is measured min-of-REPEATS below
-        # (r2's single-shot 32-core run absorbed a ±40% swing straight
-        # into the headline).
-        pairs = [(2, 8)]
-    else:
-        # only pairs whose hi level fits the physical cores — local[16] on
-        # an 8-core host would measure oversubscription, not scaling; the
-        # 4× candidates descend so small hosts still get a true N→4N pair
-        pairs = [p for p in [(2, 8), (4, 16), (1, 4)] if p[1] <= ncpu][:2]
-        if not pairs and ncpu >= 2:
-            pairs = [(1, ncpu)]  # tiny host: measure what ratio exists
-    pairs = [p for p in pairs if p[0] < p[1]]  # never self-compare
-    levels = sorted({c for p in pairs for c in p}) or [min(CPUS, ncpu)]
-    # peak-throughput level (full box) — headline turns/s only, never an
-    # efficiency pair endpoint
-    top_level = min(CPUS, ncpu)
-    # This VM's time-sharing adds ±25-40% interference to single runs
-    # (observed live: the same 8-core job 51 s and 89 s twenty minutes
-    # apart).  Interference is strictly additive, so each scaling level
-    # runs REPEATS times and the min is used; every raw timing ships in
-    # the JSON (extract_runs_sec) so the selection is auditable.
-    repeats = max(1, int(os.environ.get("SPARK_GRAFT_EXTRACT_REPEATS", "2")))
-    # pair levels: SCALE_REPEATS interleaved rounds on the SCALE_MULT×
-    # corpus.  The schedule is (lo,hi,lo,hi,...) — NOT all-lo-then-all-hi —
-    # so a time-correlated co-tenancy window inflates both ends of each
-    # positional ratio symmetrically instead of one whole level (the r4
-    # failure mode: driver 0.696 vs builder 0.915 on identical code).
-    # Every raw timing ships in the JSON for audit.
-    # 3 interleaved rounds (lo at ~6-7 min each on the 5× corpus) keeps
-    # the whole bench ~35 min; with the (2,8) pair's measured 0.92-0.94
-    # true efficiency the margin over the 0.8 target no longer needs a
-    # 4th positional sample.
-    scale_repeats = max(
-        1, int(os.environ.get("SPARK_GRAFT_SCALE_REPEATS", "3"))
-    )
-    scale_runs_all: dict = {c: [] for c in levels}
-    # strict 2-level alternation additionally PREPENDS one hi run so the
-    # wall-time order is hi,lo,hi,lo,…,hi: every lo run is then bracketed
-    # by two adjacent hi runs and pair_efficiency_candidates can score
-    # each position against the cleaner of its two hi neighbors (the hi
-    # level is the short, proportionally noisier end; one inflated hi
-    # sample otherwise sinks its whole position)
-    if len(levels) == 2:
-        scale_runs_all[levels[1]].append(
-            _run_subprocess_extract(levels[1], scale_dir)
-        )
-    for _rep in range(scale_repeats):
-        for c in levels:
-            scale_runs_all[c].append(_run_subprocess_extract(c, scale_dir))
-    scale_runs = {
-        c: min(rs, key=lambda r: r["extract_sec"])
-        for c, rs in scale_runs_all.items()
-    }
-    # headline level: min-of-REPEATS on the 1× corpus (comparable to
-    # prior rounds' extract_pipeline timings) — never a single
-    # interference-exposed sample
-    all_runs: dict = {
-        top_level: [
-            _run_subprocess_extract(top_level, input_dir)
-            for _ in range(repeats)
-        ]
-    }
-    runs = {c: min(rs, key=lambda r: r["extract_sec"]) for c, rs in all_runs.items()}
-    pair_results = []
-    for lo_cpus, hi_cpus in pairs:
-        lo, hi = scale_runs[lo_cpus], scale_runs[hi_cpus]
-        cand = pair_efficiency_candidates(
-            scale_runs_all[lo_cpus], scale_runs_all[hi_cpus], lo_cpus, hi_cpus
-        )
-        efficiency = cand["scaling_efficiency"]
-        ceiling = hardware_ceiling(lo_cpus, hi_cpus)
-        pair_results.append({
-            "pair": f"local[{lo_cpus}]->local[{hi_cpus}]",
-            f"turns_per_sec_local{lo_cpus}": lo["turns_per_sec"],
-            f"turns_per_sec_local{hi_cpus}": hi["turns_per_sec"],
-            "scaling_speedup": round(efficiency * hi_cpus / lo_cpus, 3),
-            **cand,
-            "hardware_ceiling": ceiling,
-            "scaling_efficiency_vs_hardware": round(
-                efficiency / ceiling, 3) if ceiling else None,
-        })
-    best, selection = select_scaling_headline(pair_results)
-    top = runs[top_level]
-
-    queries = run_headline_queries()
-    queries["extract_pipeline"] = top["extract_sec"]
-
-    result = {
-        "metric": "headline_queries_total",
-        "value": round(sum(queries.values()), 3),
-        "unit": "sec",
-        "queries": queries,
-        "sf": _sf_value(),
-        "extraction": {
-            "n_turns": top["n_turns"],
-            "turns_per_sec": top["turns_per_sec"],
-            # per-turn equality under the scaling run: within EACH corpus,
-            # every parallelism level AND every repeat produced the
-            # identical content hash (the two corpora differ by design)
-            "output_hash_consistent": (
-                len({r["output_hash"] for rs in all_runs.values() for r in rs}) == 1
-                and len(
-                    {r["output_hash"] for rs in scale_runs_all.values() for r in rs}
-                ) == 1
-            ),
-            "output_hash": top["output_hash"],
-            # 1×-corpus rates ONLY (top level); the pair levels' rates are
-            # measured on the SCALE_MULT× corpus and live under
-            # scale_corpus.turns_per_sec_by_cpus so a consumer always knows
-            # which corpus produced a given rate (the r4 artifact merged
-            # both into this dict, keyed only by cpu count).
-            "turns_per_sec_by_cpus": {
-                str(c): runs[c]["turns_per_sec"] for c in sorted(runs)
-            },
-            # raw per-repeat timings behind the min-selection (noise audit)
-            "extract_runs_sec": {
-                str(c): [r["extract_sec"] for r in rs]
-                for c, rs in sorted(all_runs.items())
-            },
-            # the scaling pair's own corpus: SCALE_MULT× conversations so
-            # each level runs minutes and co-tenancy noise amortizes
-            "scale_corpus": {
-                "mult": scale_mult,
-                "n_turns": next(iter(scale_runs.values()))["n_turns"],
-                "turns_per_sec_by_cpus": {
-                    str(c): scale_runs[c]["turns_per_sec"]
-                    for c in sorted(scale_runs)
-                },
-                "repeat_schedule": (
-                    "interleaved_bracketed" if len(levels) == 2
-                    else "interleaved"
-                ),
-                "extract_runs_sec": {
-                    str(c): [r["extract_sec"] for r in rs]
-                    for c, rs in sorted(scale_runs_all.items())
-                },
-                "output_hash": next(iter(scale_runs.values()))["output_hash"],
-            },
-            "scaling_target": 0.8,
-            # headline = best measured pair; selection is explicit and the
-            # full per-pair detail (incl. same-run hardware ceilings) is
-            # always reported alongside
-            "scaling_efficiency": best["scaling_efficiency"],
-            "scaling_pair": best["pair"],
-            "scaling_efficiency_selection": selection,
-            "scaling_pairs": pair_results,
-        },
-    }
-    print(json.dumps(result))
+    runs = {LO: [], HI: []}
+    for _ in range(2):
+        for c in (LO, HI):
+            runs[c].append(_run_extract(c, input_dir))
+    hashes = {r["output_hash"] for rs in runs.values() for r in rs}
+    print(json.dumps({
+        "n_turns": runs[HI][0]["n_turns"],
+        "output_hash": runs[HI][0]["output_hash"],
+        "output_hash_consistent": len(hashes) == 1,
+        "pair": f"local[{LO}]->local[{HI}]",
+        "turns_per_sec_by_cpus": {c: max(r["turns_per_sec"] for r in rs)
+                                  for c, rs in runs.items()},
+        "extract_runs_sec": {c: [r["extract_sec"] for r in rs] for c, rs in runs.items()},
+        "scaling_efficiency": pair_efficiency(runs[LO], runs[HI], LO, HI),
+        "scaling_target": 0.8,
+    }))
 
 
 if __name__ == "__main__":

@@ -247,7 +247,13 @@ def test_char_entropy_hand_fixture(spark):
     """Pinned arithmetic on known strings: 'aaaa' → 0 bits; 'abab' → 1
     bit; 'abcd' → 2 bits; '0a b' mixes the charset classes (alpha ½,
     digit ¼, space ¼); a 64-char base64-ish string clears the gibberish
-    threshold while 'aaaa...' sits below the repetitive one."""
+    threshold while 'aaaa...' sits below the repetitive one.  A CJK doc
+    with thousands of distinct chars matches a ``collections.Counter``
+    computation of the same rounded terms."""
+    import random
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
+
     import pandas as pd
 
     from text_extractor_for_bioeconomic_products_spark.operators.textstats import (
@@ -257,9 +263,11 @@ def test_char_entropy_hand_fixture(spark):
     )
 
     b64ish = "".join(chr(33 + i) for i in range(64))  # 64 distinct → 6 bits
+    rng = random.Random(3)
+    cjk = "".join(chr(0x4E00 + rng.randrange(3000)) for _ in range(12000))
     pdf = pd.DataFrame({
-        "doc_id": [1, 2, 3, 4, 5, 6],
-        "text": ["aaaa", "abab", "abcd", "0a b", "a" * 200, b64ish],
+        "doc_id": [1, 2, 3, 4, 5, 6, 9],
+        "text": ["aaaa", "abab", "abcd", "0a b", "a" * 200, b64ish, cjk],
     })
     got = {
         r["doc_id"]: r
@@ -273,6 +281,16 @@ def test_char_entropy_hand_fixture(spark):
     assert got[4]["space_frac"] == 0.25
     assert got[5]["entropy_bits"] < ENTROPY_REPETITIVE_MAX
     assert got[6]["entropy_bits"] > ENTROPY_GIBBERISH_MIN
+    counts = Counter(cjk)
+    assert got[9]["n_distinct_chars"] == len(counts) >= 2000
+
+    def term(cnt):  # Spark's cast and round: from the double's repr, HALF_UP
+        p = cnt / len(cjk)
+        t = Decimal(repr(-p * (math.log(p) / math.log(2))))
+        return t.quantize(Decimal("1e-10"), ROUND_HALF_UP).quantize(
+            Decimal("1e-6"), ROUND_HALF_UP)
+
+    assert got[9]["entropy_bits"] == float(sum(map(term, counts.values())))
     # null/empty text rows are excluded, not nulled through
     pdf2 = pd.DataFrame({"doc_id": [7, 8], "text": [None, ""]})
     assert char_entropy_stats(spark.createDataFrame(pdf2)).count() == 0

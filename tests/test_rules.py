@@ -433,35 +433,6 @@ def test_chunk_offsets_never_negative_and_progress():
         rules.chunk_text("x" * 500, chunk_size=100, overlap=100)
 
 
-# ---------------------------------------------------------------------------
-# T5/T8 — peripheral helpers (helpers.py:462-531)
-# ---------------------------------------------------------------------------
-
-
-def test_safe_filename():
-    assert rules.safe_filename('a<b>:c"/d\\e|f?g*h') == "a_b_c_d_e_f_g_h"
-    assert rules.safe_filename("x\x00\x1fy") == "xy"
-    assert rules.safe_filename("__a___b__") == "a_b"
-    long = rules.safe_filename("n" * 300 + ".txt", max_length=50)
-    assert len(long) <= 50 and long.endswith(".txt")
-    assert rules.safe_filename(None) == ""
-    # tiny budget: stem clamps to 0, extension survives, never duplicated
-    assert rules.safe_filename("abcdefgh.txt", max_length=3) == ".txt"
-    # >16-char trailing chunk is stem, not extension
-    assert rules.safe_filename("a" * 30 + "." + "b" * 20, max_length=10) == "a" * 10
-
-
-def test_parse_duration_and_size_format():
-    assert rules.parse_duration("1h 30m 45s") == 5445.0
-    assert rules.parse_duration("2h") == 7200.0
-    assert rules.parse_duration("0.5s") == 0.5
-    assert rules.parse_duration("") == 0.0
-    assert rules.parse_duration(None) == 0.0
-    assert rules.format_file_size(0) == "0.0 B"
-    assert rules.format_file_size(1536) == "1.5 KB"
-    assert rules.format_file_size(1024 ** 5 * 2) == "2.0 PB"
-
-
 _kw_salt = st.sampled_from(
     ["el", "de", "produtos", "the", "plant", "amazon", "use", "et", "país", ""]
 )

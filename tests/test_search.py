@@ -476,93 +476,18 @@ def test_span_validation_query_nonvacuous(spark):
     assert rows[True]["n_spans"] > 0 and rows[False]["total_issues"] > 0
 
 
-def test_bench_headline_selection():
-    """bench.py's scaling-headline rule: max over plausible (≤1.0) pairs;
-    when EVERY pair is superlinear the RAW value ships under the
-    'all_pairs_superlinear' label (never a fabricated 1.0 clamp — an
-    inflated reading is not a lower bound)."""
-    import bench
-
-    def pair(name, eff):
-        return {"pair": name, "scaling_efficiency": eff}
-
-    best, sel = bench.select_scaling_headline(
-        [pair("2->8", 1.04), pair("4->16", 0.86), pair("8->32", 0.5)]
-    )
-    assert (best["pair"], best["scaling_efficiency"], sel) == (
-        "4->16", 0.86, "max_over_plausible_pairs",
-    )
-    best, sel = bench.select_scaling_headline(
-        [pair("2->8", 1.04), pair("4->16", 1.21)]
-    )
-    assert sel == "all_pairs_superlinear"
-    assert best["scaling_efficiency"] == 1.21  # raw, labeled — not clamped
-    best, sel = bench.select_scaling_headline([])
-    assert sel == "none" and best["scaling_efficiency"] is None
-
-
 def test_bench_pair_efficiency():
-    """Interleaved-schedule pair efficiency: per-position ratios cancel
-    time-correlated interference; min-of-level cancels independent
-    outliers; selection = max over plausible (≤1.0) candidates."""
+    """bench.py's one scaling estimator, min-of-level: interference only
+    adds time, so each level's fastest run is its cleanest estimate."""
     import bench
 
     def runs(secs):
         return [{"extract_sec": s} for s in secs]
 
-    # A slow co-tenancy window covering round 0 hits BOTH lo_0 and hi_0:
-    # position 0's ratio stays clean (160/40=4.0 ⇒ eff 1.0 — excluded as
-    # implausible boundary? no: ≤1.0 is plausible), while min-of-level
-    # pairs the clean lo min (100) with the clean hi min (25) ⇒ 1.0 too.
-    cand = bench.pair_efficiency_candidates(
-        runs([160.0, 100.0, 104.0]), runs([40.0, 25.0, 26.0]), 4, 16
-    )
-    assert cand["scaling_efficiency"] == 1.0
-    assert cand["efficiency_by_position"] == [1.0, 1.0, 1.0]
-
-    # r4 failure mode, interleaved: a slow window inflates ONLY lo_0
-    # (asymmetric hit).  Position 0 reads superlinear (excluded); the
-    # clean positions and min-of-level agree at 0.85.
-    cand = bench.pair_efficiency_candidates(
-        runs([180.0, 136.0, 136.0]), runs([40.0, 40.0, 40.0]), 4, 16
-    )
-    assert cand["efficiency_basis"] in (
-        "min_of_level", "position_1", "position_2",
-    )
-    assert cand["scaling_efficiency"] == 0.85
-
-    # every candidate superlinear → raw max ships (labeled upstream by
-    # select_scaling_headline), never a fabricated clamp
-    cand = bench.pair_efficiency_candidates(
-        runs([200.0]), runs([40.0]), 4, 16
-    )
-    assert cand["scaling_efficiency"] == 1.25
-
-    # BRACKETED mode (len(hi) == len(lo)+1: schedule hi,lo,hi,…,hi):
-    # r5 live failure shape — lo level tight, hi level noisy.  Position 1
-    # pairs lo_1 with an inflated trailing hi (88 s) and reads 0.55;
-    # its bracket takes the cleaner LEADING neighbor (60 s) and recovers
-    # 0.8.  A bracket can never use a hi that wasn't time-adjacent.
-    cand = bench.pair_efficiency_candidates(
-        runs([192.0, 192.0]), runs([120.0, 60.0, 88.0]), 4, 16
-    )
-    assert cand["efficiency_by_position"] == [0.8, 0.545]
-    assert cand["efficiency_by_bracket"] == [0.8, 0.8]
-    assert cand["scaling_efficiency"] == 0.8
-    assert cand["efficiency_basis"] in (
-        "min_of_level", "position_0", "bracket_0", "bracket_1",
-    )
-    # min_of_level in bracketed mode still uses ALL hi runs incl. the
-    # prepended one (120 is slowest so it changes nothing here)
-    assert cand["efficiency_min_of_level"] == 0.8
-
-    # bracket stays plausibility-filtered: an inflated lo between two
-    # clean his reads superlinear on BOTH estimators and is excluded
-    cand = bench.pair_efficiency_candidates(
-        runs([300.0, 192.0]), runs([60.0, 60.0, 60.0]), 4, 16
-    )
-    assert cand["scaling_efficiency"] == 0.8
-    assert cand["efficiency_basis"] in ("min_of_level", "position_1", "bracket_1")
+    # a slow window inflates only lo's first round: min(lo)=136, min(hi)=40
+    assert bench.pair_efficiency(runs([180.0, 136.0]), runs([40.0, 40.0]), 4, 16) == 0.85
+    # a slow hi run does not lower the result
+    assert bench.pair_efficiency(runs([180.0, 136.0]), runs([40.0, 90.0]), 4, 16) == 0.85
 
 
 # --- temporal.asof_join (distributed as-of; union-merge formulation) ------

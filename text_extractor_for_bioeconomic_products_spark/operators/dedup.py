@@ -581,7 +581,7 @@ DRIVER_FINISH_MAX_EDGES = 100_000
 def connected_components_star(pairs: DataFrame,
                               max_iters: int = _MAX_CC_ITERS,
                               driver_finish_max_edges: int = DRIVER_FINISH_MAX_EDGES,
-                              round_log: list | None = None) -> DataFrame:
+                              ) -> DataFrame:
     """Alternating large-star / small-star contraction (Kiveris et al.,
     "Connected Components in MapReduce and Beyond") — the 100 TB variant
     of :func:`connected_components`, same output contract: one row per
@@ -662,23 +662,13 @@ def connected_components_star(pairs: DataFrame,
         return dedup.localCheckpoint(eager=True) if checkpoint else dedup
 
     sig = _signature(edges)
-    if round_log is not None:
-        # observability hook (jobs/probe_scale.py): live (symmetric,
-        # deduped) edge rows entering each round — i.e. the rows the
-        # round's groupBy-min + node-keyed join move through their
-        # Exchanges.  Entry 0 is the input edge set.
-        round_log.append(int(sig["n"] or 0))
     edge_labels = None
     for _ in range(max_iters):
         if driver_finish_max_edges and (sig["n"] or 0) <= driver_finish_max_edges:
             edge_labels = _driver_union_find(edges)
-            if round_log is not None:
-                round_log.append({"driver_finish_edges": int(sig["n"] or 0)})
             break
         edges = _star(_star(edges, large=True, checkpoint=False), large=False)
         new_sig = _signature(edges)
-        if round_log is not None:
-            round_log.append(int(new_sig["n"] or 0))
         if (new_sig["n"], new_sig["h"]) == (sig["n"], sig["h"]):
             break
         sig = new_sig

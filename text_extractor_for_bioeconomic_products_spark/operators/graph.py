@@ -50,8 +50,7 @@ PR_DAMPING = 0.85
 
 def pagerank(edges: DataFrame,
              iters: int = PR_ITERS,
-             damping: float = PR_DAMPING,
-             round_log: list | None = None) -> DataFrame:
+             damping: float = PR_DAMPING) -> DataFrame:
     """Synchronous PageRank over an undirected edge list.
 
     ``edges`` must have two long columns (u, v); the graph is
@@ -86,7 +85,6 @@ def pagerank(edges: DataFrame,
 
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     for _ in range(iters):
-        t0 = __import__("time").monotonic() if round_log is not None else 0.0
         contrib = (
             linked.join(ranks.withColumnRenamed("node", "src"), "src")
             .groupBy("dst")
@@ -98,15 +96,6 @@ def pagerank(edges: DataFrame,
         ).localCheckpoint(eager=True)
         ranks.unpersist()
         ranks = new_ranks
-        if round_log is not None:
-            # observability hook (jobs/probe_scale.py): the rank-table
-            # row count IS the per-iteration shuffle payload — it must
-            # stay == n_nodes every round while the edge table sits
-            # static in its checkpoint
-            round_log.append({
-                "n_rank_rows": ranks.count(),
-                "sec": round(__import__("time").monotonic() - t0, 2),
-            })
 
     return nodes.join(ranks, "node").select(
         "node", F.col("outdeg").alias("degree"), "rank"

@@ -47,8 +47,8 @@ Scale shape (the part that must survive 10^12 strings):
 * q sizes the gram space to the corpus: candidate volume is
   Σ C(df_prefix, 2) over gram buckets, so |Σ|^q must comfortably
   exceed n_strings / O(1) or the equi-join degenerates toward
-  quadratic (measured in jobs/probe_scale.py edjoin: q=2 over a hex
-  alphabet collapses at 1M strings; q=4 keeps buckets O(1)).
+  quadratic (measured: q=2 over a hex alphabet collapses at 1M
+  strings; q=4 keeps buckets O(1); SCALE.md §2).
 * Verification re-joins the two string columns by id and evaluates
   JVM-side ``levenshtein`` (whole-stage codegen) on candidates only.
 
@@ -79,8 +79,7 @@ def prefix_occurrences(s: DataFrame, k: int, q: int) -> DataFrame:
     """The q*k+1 rarest positional q-gram occurrences per string —
     the only rows the candidate self-join exchanges.  ``s`` must carry
     (id, str, slen); returns (id, slen, gram, pos).  Shared by
-    :func:`edit_distance_pairs` and the jobs/probe_scale.py volume
-    probe (which sums C(df, 2) over this stream's gram buckets)."""
+    :func:`edit_distance_pairs` and its tests."""
     prefix_grams = q * k + 1
     # positional gram stream: (id, pos, gram) for pos in 1..len-q+1
     occ = s.select(

@@ -1512,24 +1512,45 @@ ENTROPY_GIBBERISH_MIN = 5.5
 
 def char_entropy_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-doc character-distribution Shannon entropy (bits/char) and
-    charset composition fractions — a pure IN-ROW expression, no Python
-    and no shuffle: per-char counts come from ``transform(array_distinct
-    (chars), c -> size(filter(chars, …)))`` over the doc's own char
-    array (the ``duplicate_passages`` in-row discipline; O(distinct ×
-    len) per row, bounded by the alphabet).
+    charset composition fractions — pure IN-ROW expressions, no Python
+    and no shuffle: per-char counts are the run lengths of the doc's
+    sorted char array (``sort_array``, then the positions where the next
+    char differs), so a row costs O(len · log len) however large its
+    alphabet — CJK text included.
 
     Cross-engine float discipline: each char's entropy term is rounded
-    to DECIMAL(18,6) BEFORE summation, so the in-row fold (first-
-    occurrence order) and DuckDB's arbitrary GROUP BY order produce the
+    to DECIMAL(18,6) BEFORE summation, so the in-row fold (sorted-char
+    order) and DuckDB's arbitrary GROUP BY order produce the
     identical exact sum — the ``doc_lm_score`` surprisal convention.
     Composition fractions route through DECIMAL(18,10)/round(4) like
     every ratio oracle in this module.  Empty/null text is excluded
     (oracle-parity with the unnest-based twin)."""
-    chars = F.split(F.col(text_col), "")
-    n = F.length(F.col(text_col))
+    # Staged projections: the length, the sorted chars and the run ends
+    # are columns, so the lambdas below read them instead of re-measuring
+    # or re-sorting the text once per element.
+    length = F.length(F.col(text_col))
+    staged = docs.filter(F.col(text_col).isNotNull() & (length > 0)).select(
+        "doc_id", text_col, length.alias("_n"),
+        F.sort_array(F.split(F.col(text_col), "")).alias("_chars"),
+    )
+    n = F.col("_n")
+    chars = F.col("_chars")
+    k = F.size(chars)
+    # 1-based position of the last char of each run of equal chars; CASE
+    # guards the lookup past the end that ANSI mode would raise on
+    staged = staged.withColumn("_ends", F.filter(
+        F.sequence(F.lit(1), k),
+        lambda i: F.when(i == k, True).otherwise(
+            F.element_at(chars, i) != F.element_at(chars, i + 1)
+        ),
+    ))
+    ends = F.col("_ends")
+    # run lengths: differences of consecutive run ends
+    counts = F.transform(
+        ends, lambda e, j: F.when(j == 0, e).otherwise(e - ends[j - 1])
+    )
 
-    def _term(c):
-        cnt = F.size(F.filter(chars, lambda x: x == c))
+    def _term(cnt):
         p = cnt / n
         # DECIMAL(18,10) before the round — the module's ratio-oracle
         # convention, so both engines round the identical decimal
@@ -1537,13 +1558,12 @@ def char_entropy_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
             "decimal(18,6)"
         )
 
-    distinct_chars = F.array_distinct(chars)
     entropy = F.aggregate(
-        distinct_chars,
+        counts,
         F.lit(0).cast("decimal(28,6)"),
         # decimal + widens to (29,6); cast back so the fold keeps the
         # accumulator type (exact — terms are ≤ 0.531, sum ≤ log2|Σ|)
-        lambda acc, c: (acc + _term(c)).cast("decimal(28,6)"),
+        lambda acc, cnt: (acc + _term(cnt)).cast("decimal(28,6)"),
     ).cast("double")
 
     def _frac(pattern):
@@ -1552,12 +1572,10 @@ def char_entropy_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
             F.round((cnt / n).cast("decimal(18,10)"), 4).cast("double")
         )
 
-    return docs.filter(
-        F.col(text_col).isNotNull() & (F.length(F.col(text_col)) > 0)
-    ).select(
+    return staged.select(
         "doc_id",
         n.alias("n_chars"),
-        F.size(distinct_chars).alias("n_distinct_chars"),
+        F.size(ends).alias("n_distinct_chars"),
         entropy.alias("entropy_bits"),
         _frac("[A-Za-z]").alias("alpha_frac"),
         _frac("[0-9]").alias("digit_frac"),

@@ -1273,67 +1273,6 @@ def token_estimate(text: Optional[str]) -> int:
 
 
 # ---------------------------------------------------------------------------
-# T5 — sink-safe file naming (helpers.py:462-489); used when a sink derives
-# output paths from data values (e.g. partitionBy on a free-text column)
-# ---------------------------------------------------------------------------
-
-_UNSAFE_FN = re.compile(r'[<>:"/\\|?*]')
-_CTRL_FN = re.compile(r"[\x00-\x1f\x7f-\x9f]")
-
-
-def safe_filename(name: Optional[str], max_length: int = 255) -> str:
-    """Deliberate divergences from helpers.py:483-486: extensions longer
-    than 16 chars are treated as part of the stem (splitext would keep a
-    200-char '.xxx…' wholly), and the stem budget clamps at 0 instead of
-    going negative (the reference's ``name[:-1]`` slice can exceed
-    max_length)."""
-    s = _UNSAFE_FN.sub("_", name or "")
-    s = _CTRL_FN.sub("", s)
-    s = re.sub(r"_+", "_", s)
-    if len(s) > max_length:
-        dot = s.rfind(".")
-        ext = s[dot:] if 0 < dot and len(s) - dot <= 16 else ""
-        stem = s[: len(s) - len(ext)]
-        s = stem[: max(0, max_length - len(ext))] + ext
-    return s.strip("_")
-
-
-# ---------------------------------------------------------------------------
-# T8 — duration parse + human size format (helpers.py:491-531); peripheral
-# utilities kept for surface parity (lineage/report columns)
-# ---------------------------------------------------------------------------
-
-_DUR_H = re.compile(r"(\d+)h")
-_DUR_M = re.compile(r"(\d+)m")
-_DUR_S = re.compile(r"(\d+(?:\.\d+)?)s")
-
-
-def parse_duration(duration_str: Optional[str]) -> float:
-    """'1h 30m 45s' → seconds; missing components contribute 0."""
-    s = duration_str or ""
-    total = 0.0
-    m = _DUR_H.search(s)
-    if m:
-        total += int(m.group(1)) * 3600
-    m = _DUR_M.search(s)
-    if m:
-        total += int(m.group(1)) * 60
-    m = _DUR_S.search(s)
-    if m:
-        total += float(m.group(1))
-    return total
-
-
-def format_file_size(size_bytes: float) -> str:
-    size = float(size_bytes)
-    for unit in ("B", "KB", "MB", "GB", "TB"):
-        if size < 1024.0:
-            return f"{size:.1f} {unit}"
-        size /= 1024.0
-    return f"{size:.1f} PB"
-
-
-# ---------------------------------------------------------------------------
 # T6 — difflib similarity (helpers.py:286-306)
 # ---------------------------------------------------------------------------
 

@@ -75,7 +75,7 @@ def ensure_bucketed_orders_lineitem(
     straight to the shuffle-free join.
 
     The external path includes the Spark applicationId so concurrent
-    sessions (parallel pytest workers, a sweep next to dump_plans) never
+    sessions (parallel pytest workers, a sweep next to a job) never
     overwrite each other's bucket files mid-read."""
     tag = _sf_tag(sf_dir)
     o_name, l_name = f"orders_b_{tag}", f"lineitem_b_{tag}"
