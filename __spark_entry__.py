@@ -2,7 +2,7 @@
 
 ``entry(spark)`` — flagship extraction query on /root/testdata/sf0.001.
 ``queries()`` — one callable per implemented operator (SURVEY.md §2 +
-the training-data-pipeline extensions: dedup, ANN, text analysis).
+the training-data-pipeline extensions: dedup, text analysis).
 ``oracle_sql()`` — DuckDB-runnable ANSI SQL twins for every
 SQL-expressible query; UDF-pipeline queries are rows-only by design
 (their byte-exactness is covered by tests/test_extraction_equality.py's
@@ -22,7 +22,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from text_extractor_for_bioeconomic_products_spark.operators import (  # noqa: E402
     bpe,
-    clustering,
     conversation,
     curation,
     graph,
@@ -31,7 +30,6 @@ from text_extractor_for_bioeconomic_products_spark.operators import (  # noqa: E
     normalize,
     profiling,
     relational,
-    similarity,
     stringjoin,
     temporal,
     textstats,
@@ -81,9 +79,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q.update(curation.QUERIES)
     q.update(textstats.QUERIES)
     q.update(dedup.QUERIES)
-    q.update(similarity.QUERIES)
     q.update(stringjoin.QUERIES)
-    q.update(clustering.QUERIES)
     q.update(temporal.QUERIES)
     q.update(normalize.QUERIES)
     q.update(multimodal.QUERIES)
@@ -103,9 +99,7 @@ def oracle_sql() -> dict[str, str]:
     o.update(curation.ORACLE_SQL)
     o.update(textstats.ORACLE_SQL)
     o.update(dedup.ORACLE_SQL)
-    o.update(similarity.ORACLE_SQL)
     o.update(stringjoin.ORACLE_SQL)
-    o.update(clustering.ORACLE_SQL)
     o.update(temporal.ORACLE_SQL)
     o.update(normalize.ORACLE_SQL)
     o.update(conversation.ORACLE_SQL)

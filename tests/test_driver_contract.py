@@ -199,12 +199,19 @@ def test_query_against_oracle(spark, duck, sf01_dir, name):
 def test_query_names_unique_across_modules():
     """__spark_entry__ merges per-module QUERIES/ORACLE_SQL dicts with
     .update() — a duplicated name would silently shadow an operator and
-    shrink coverage without any failure."""
-    from text_extractor_for_bioeconomic_products_spark.operators import (
-        curation, dedup, normalize, relational, similarity, textstats,
-    )
+    shrink coverage without any failure.  The module list is every
+    module __spark_entry__ imports that carries a QUERIES dict, so a new
+    family is covered without editing this test."""
+    import inspect
 
-    mods = [relational, curation, textstats, dedup, similarity, normalize]
+    mods = [
+        m for m in vars(entry_mod).values()
+        if inspect.ismodule(m) and hasattr(m, "QUERIES")
+    ]
+    assert sum(len(m.QUERIES) for m in mods) == len(entry_mod.queries())
+    assert sum(len(getattr(m, "ORACLE_SQL", {})) for m in mods) == len(
+        entry_mod.oracle_sql()
+    )
     seen: dict = {}
     for m in mods:
         for k in m.QUERIES:

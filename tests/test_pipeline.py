@@ -119,7 +119,7 @@ def test_streaming_matches_batch(spark, transcripts_df, tmp_path):
 def test_multimodal_plumbing(spark):
     from text_extractor_for_bioeconomic_products_spark.operators.multimodal import (
         extract_media_features,
-        frame_sample_stub,
+        frame_sample,
         resize_media,
         synthesize_media,
     )
@@ -163,7 +163,7 @@ def test_multimodal_plumbing(spark):
         else:
             assert f["sha256"] == orig[mid]["sha256"]
     # REAL frame sampling: only video rows, real per-frame pixel means
-    frames = frame_sample_stub(media).collect()
+    frames = frame_sample(media).collect()
     video_ids = {f["media_id"] for f in frames}
     assert video_ids and all(mid % 3 == 2 for mid in video_ids)
     assert all(
@@ -1029,72 +1029,6 @@ def test_minhash_second_band_recall(spark):
     assert census == {band1_key: 2}  # caught by band 1, and ONLY band 1
 
 
-def test_near_dup_fine_split_drop_is_observable(spark):
-    """Two-level capped LSH intentionally skips same-coarse-bucket pairs
-    that straddle fine buckets; this pins the behavior on a constructed
-    pair AND checks the stats query reports the loss (the recall ledger
-    the pair output can't show).  va = coarse plane 0 + 0.5·coarse plane 3
-    (every plane dot ≥ 3 from zero, so float summation-order noise can't
-    flip a bucket bit — a pure plane-0 base has an exactly-zero dot with
-    plane 3 and rounding decides the bit); vb = va nudged along fine
-    plane 0 just enough to flip that fine bit (same coarse bucket,
-    cos ≈ 0.97 ≫ threshold); 60 scalar multiples of va make the coarse
-    bucket hot (> MAX_BUCKET_VECS) so refinement triggers."""
-    from pyspark.sql import functions as F
-
-    from text_extractor_for_bioeconomic_products_spark.operators.similarity import (
-        MAX_BUCKET_VECS,
-        N_PLANES,
-        N_PLANES_FINE,
-        NEAR_DUP_THRESHOLD,
-        _hyperplanes,
-        embedding_near_dup_stats,
-        embedding_near_dups,
-    )
-
-    coarse = _hyperplanes(N_PLANES)
-    fine = _hyperplanes(N_PLANES_FINE, seed_prefix="plane2")
-
-    def dot(a, b):
-        return sum(x * y for x, y in zip(a, b))
-
-    def bucket(v, planes):
-        return sum((1 << p) for p, pl in enumerate(planes) if dot(v, pl) > 0)
-
-    va = [float(a) + 0.5 * float(b) for a, b in zip(coarse[0], coarse[3])]
-    s = 1.0 if dot(va, fine[0]) > 0 else -1.0
-    vb = [x - s * 0.25 * f for x, f in zip(va, fine[0])]
-    cos = dot(va, vb) / (dot(va, va) ** 0.5 * dot(vb, vb) ** 0.5)
-    # fixture preconditions: same coarse bucket, different fine bucket,
-    # similarity well above the near-dup threshold
-    assert bucket(va, coarse) == bucket(vb, coarse)
-    assert bucket(va, fine) != bucket(vb, fine)
-    assert cos > NEAR_DUP_THRESHOLD
-    rows = [(1000, "a", va), (1001, "b", vb)] + [
-        (i, "fill", [x * (1.0 + 0.01 * i) for x in va])
-        for i in range(1, MAX_BUCKET_VECS + 20)
-    ]
-    emb = spark.createDataFrame(
-        rows, "vec_id long, label string, embedding array<double>"
-    )
-    pair_rows = {
-        (r["vec_a"], r["vec_b"]) for r in embedding_near_dups(emb).collect()
-    }
-    assert (1000, 1001) not in pair_rows  # the documented recall loss...
-    stats = embedding_near_dup_stats(emb).collect()[0]
-    assert stats["n_hot_buckets"] >= 1  # ...now observable:
-    assert stats["refined_vecs"] >= MAX_BUCKET_VECS + 1
-    assert stats["candidate_pairs_skipped"] >= 1
-    # sanity: the skipped count is exactly C(n,2) - sum_fine C(m,2) for
-    # the one hot bucket in this fixture
-    from collections import Counter
-
-    fine_sizes = Counter(bucket(v, fine) for _, _, v in rows)
-    n = len(rows)
-    expected = n * (n - 1) // 2 - sum(m * (m - 1) // 2 for m in fine_sizes.values())
-    assert stats["candidate_pairs_skipped"] == expected
-
-
 def test_xlsx_writer_edge_cases(tmp_path):
     """Built-in OOXML writer unit surface: column letters past Z, sheet
     name sanitization/uniquing, every cell type, XML-hostile strings."""
@@ -1381,47 +1315,6 @@ def test_streaming_dedup_admission_replay_idempotent(
     assert recomputed.count() == 0
 
 
-def test_centroid_similarity_planted_geometry(spark):
-    """Label-centroid cosine census on hand-built geometry: centroids
-    along orthogonal axes read 0.0, an identical-direction pair reads
-    1.0, and an opposed pair reads -1.0; per-label counts survive."""
-    from text_extractor_for_bioeconomic_products_spark.operators.clustering import (
-        centroid_similarity_census,
-    )
-
-    def vec(axis, scale, dim=4):
-        v = [0.0] * dim
-        v[axis] = scale
-        return v
-
-    rows = (
-        # label 0: x-axis (2 vectors, mean direction +x)
-        [(0, vec(0, 1.0)), (0, vec(0, 3.0))]
-        # label 1: y-axis — orthogonal to 0
-        + [(1, vec(1, 2.0)), (1, vec(1, 4.0))]
-        # label 2: also +x — parallel to 0
-        + [(2, vec(0, 5.0))]
-        # label 3: -x — opposed to 0
-        + [(3, vec(0, -2.0)), (3, vec(0, -6.0))]
-    )
-    emb = spark.createDataFrame(
-        [(i, l, v) for i, (l, v) in enumerate(rows)],
-        "vec_id long, label int, embedding array<float>",
-    ).select("label", "embedding")
-    got = {
-        (r["label_a"], r["label_b"]): (r["cos_sim"], r["n_a"], r["n_b"])
-        for r in centroid_similarity_census(emb, dim=4).collect()
-    }
-    assert len(got) == 6  # C(4,2)
-    assert got[(0, 1)][0] == 0.0
-    assert got[(0, 2)][0] == 1.0
-    assert got[(0, 3)][0] == -1.0
-    assert got[(1, 2)][0] == 0.0
-    assert got[(2, 3)][0] == -1.0
-    assert got[(0, 1)][1:] == (2, 2)
-    assert got[(0, 2)][2] == 1
-
-
 def test_bloom_membership_forced_false_positives(spark):
     """Bloom census semantics under a deliberately tiny cell space
     (hex_chars=1 ⇒ 16 cells): every count — members, might-contains,
@@ -1607,40 +1500,6 @@ def test_fuzzy_dedup_apply_drops_non_canonical(spark, tmp_path):
     assert got == {"s0": (2, 1, 1), "s1": (1, 0, 1)}, got
 
 
-def test_pca_matches_numpy_oracle(spark, sf001_dir):
-    """The distributed moment pipeline + driver eigh must equal plain
-    numpy PCA on the collected corpus: eigenvalues, trace, and the
-    projection (up to per-component sign, which eigh leaves free)."""
-    import numpy as np
-
-    from text_extractor_for_bioeconomic_products_spark.operators.clustering import (
-        PCA_K,
-        pca_fit,
-        pca_project,
-    )
-
-    emb = spark.read.parquet(os.path.join(sf001_dir, "embeddings.parquet"))
-    fit = pca_fit(emb)
-    rows = emb.select("vec_id", "embedding").collect()
-    m = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    cov = np.cov(m, rowvar=False, bias=True)
-    ref_vals = np.sort(np.linalg.eigvalsh(cov))[::-1]
-    assert fit["n"] == len(rows)
-    assert abs(fit["trace"] - float(np.trace(cov))) < 1e-8 * fit["trace"]
-    np.testing.assert_allclose(
-        fit["eigvals"][:PCA_K], ref_vals[:PCA_K], rtol=1e-8, atol=1e-12
-    )
-    # projection: centered @ components.T, sign-free per component
-    got = {r["vec_id"]: np.array(r["pc"]) for r in pca_project(emb, fit).collect()}
-    centered = m - m.mean(axis=0)
-    ref = centered @ fit["components"].T
-    ids = [r["vec_id"] for r in rows]
-    got_m = np.stack([got[i] for i in ids])
-    np.testing.assert_allclose(got_m, ref, rtol=1e-8, atol=1e-10)
-    # variance captured along PC1 equals the top eigenvalue
-    assert abs(got_m[:, 0].var() - fit["eigvals"][0]) < 1e-6 * fit["eigvals"][0]
-
-
 def test_run_curation_end_to_end(spark, sf001_dir, tmp_path):
     """The composed job: every input row is accounted to exactly one
     fate (quality-dropped, dedup-dropped, or written to one split), the
@@ -1678,33 +1537,6 @@ def test_run_curation_end_to_end(spark, sf001_dir, tmp_path):
         for r in spark.read.parquet(os.path.join(out2, "val")).collect()
     }
     assert ids2_val == ids["val"]
-
-
-def test_pq_codes_shape_and_adc_sanity(spark, sf001_dir):
-    """PQ encoding: every vector gets M in-range codes, the code table
-    is deterministic across repartitionings, and the ADC ledger reports
-    recall in [0,1] with the exact side always k rows."""
-    from text_extractor_for_bioeconomic_products_spark.operators.clustering import (
-        PQ_CODEBOOK_K,
-        PQ_SUB,
-        pq_encode,
-        pq_fit,
-        q_ann_pq_recall,
-    )
-
-    emb = spark.read.parquet(os.path.join(sf001_dir, "embeddings.parquet"))
-    books = pq_fit(emb)
-    assert len(books) == PQ_SUB
-    codes = pq_encode(emb, books).collect()
-    assert len(codes) == emb.count()
-    for r in codes:
-        for m in range(PQ_SUB):
-            assert 0 <= r[f"code_{m}"] < PQ_CODEBOOK_K
-    codes2 = pq_encode(emb.repartition(7), books).collect()
-    assert sorted(map(tuple, codes)) == sorted(map(tuple, codes2))
-    ledger = q_ann_pq_recall(spark, sf001_dir).collect()
-    assert ledger and all(r["n_exact"] == 10 for r in ledger)
-    assert all(0.0 <= r["recall_at_k"] <= 1.0 for r in ledger)
 
 
 def test_avi_codec_roundtrip():

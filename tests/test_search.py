@@ -602,127 +602,6 @@ def test_interval_join_rejects_empty_window():
         )
 
 
-# --- clustering.kmeans (Lloyd's, driver state O(k·dim)) -------------------
-
-def test_semantic_dedup_planted_fixture(spark):
-    """Two clean clusters with one planted near-duplicate pair: the
-    higher-id twin is dropped, its lower-id original and everything
-    merely same-topic (cosine below threshold) is kept, and
-    max_sim_lower reports the deciding similarity.  Exercises the
-    keep-the-first rule, the NULL path (cluster-minimum vec_ids), and
-    the cluster_size ledger on a corpus where the answer is derivable
-    by hand."""
-    from text_extractor_for_bioeconomic_products_spark.operators.clustering import (
-        semantic_dedup,
-    )
-
-    emb = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0, 0.0, 0.0], 0),   # cluster A seed
-            (1, [0.0, 1.0, 0.0, 0.0], 1),   # cluster B seed
-            (2, [0.99, 0.14, 0.0, 0.0], 0),  # near-dup of 0 (cos ≈ .99)
-            (3, [0.0, 0.7, 0.7, 0.0], 1),    # same topic as 1, cos = .7
-        ],
-        "vec_id long, embedding array<double>, label int",
-    )
-    rows = {
-        r["vec_id"]: r
-        for r in semantic_dedup(emb, k=2, iters=2, threshold=0.9).collect()
-    }
-    assert len(rows) == 4
-    assert [rows[i]["keep"] for i in range(4)] == [1, 1, 0, 1]
-    # cluster-minimum ids have no lower-id mate → NULL ledger entry
-    assert rows[0]["max_sim_lower"] is None
-    assert rows[1]["max_sim_lower"] is None
-    assert rows[2]["max_sim_lower"] > 0.99  # the deciding similarity
-    # cos = 0.7 / √(0.7² + 0.7²) = 1/√2 — kept: < 0.9
-    assert abs(rows[3]["max_sim_lower"] - 0.7071) < 1e-3
-    assert all(r["cluster_size"] == 2 for r in rows.values())
-    assert rows[0]["cluster"] == rows[2]["cluster"]
-    assert rows[1]["cluster"] == rows[3]["cluster"]
-    assert rows[0]["cluster"] != rows[1]["cluster"]
-    # empty corpus (no vectors to seed centroids) → empty, typed result,
-    # not an unevaluable array_min(array()) plan
-    empty = semantic_dedup(emb.filter("vec_id < 0"), k=2, iters=2)
-    assert empty.count() == 0
-    assert [f.name for f in empty.schema.fields] == [
-        "vec_id", "cluster", "cluster_size", "max_sim_lower", "keep",
-    ]
-
-
-def test_kmeans_sse_monotone_and_full_clusters(spark, sf001_dir):
-    """Lloyd's invariant: mean squared distance to the assigned centroid
-    is non-increasing across assignment passes; with the smallest-vec_id
-    init on this corpus every cluster stays populated."""
-    from pyspark.sql import functions as F
-
-    from text_extractor_for_bioeconomic_products_spark.operators.clustering import (
-        assign_clusters, update_centroids,
-    )
-    from text_extractor_for_bioeconomic_products_spark.sources.tables import load
-
-    emb = load(spark, sf001_dir, "embeddings")
-    init = emb.filter(F.col("vec_id") < 8).select("vec_id", "embedding").collect()
-    cents = {int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in init}
-    sses = []
-    asg = assign_clusters(emb, cents)
-    for _ in range(3):
-        sses.append(asg.agg(F.avg("dist")).collect()[0][0])
-        cents = update_centroids(emb, asg)
-        asg = assign_clusters(emb, cents)
-    assert sses[0] >= sses[1] >= sses[2]
-    assert sses[2] < sses[0]  # it actually moved
-    assert len(cents) == 8  # no cluster died on this corpus
-
-
-def test_kmeans_assignment_is_argmin(spark, sf001_dir):
-    """Spot-check the struct-array argmin against numpy on the final
-    centroids (tolerance-based: numpy's summation order differs)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from text_extractor_for_bioeconomic_products_spark.operators.clustering import (
-        assign_clusters, kmeans_fit_predict, update_centroids,
-    )
-    from text_extractor_for_bioeconomic_products_spark.sources.tables import load
-
-    emb = load(spark, sf001_dir, "embeddings")
-    init = emb.filter(F.col("vec_id") < 8).select("vec_id", "embedding").collect()
-    cents = {int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in init}
-    for _ in range(2):
-        cents = update_centroids(emb, assign_clusters(emb, cents))
-    final = {r["vec_id"]: r["cluster"] for r in kmeans_fit_predict(emb).collect()}
-    cids = sorted(cents)
-    C = np.array([cents[c] for c in cids])
-    sample = emb.filter(F.col("vec_id") % 17 == 0).collect()
-    assert sample
-    for r in sample:
-        v = np.array(r["embedding"], dtype=np.float64)
-        d = ((C - v) ** 2).sum(axis=1)
-        best = d.min()
-        # every centroid strictly better than the chosen one would
-        # contradict argmin beyond float-order noise
-        chosen = d[cids.index(final[r["vec_id"]])]
-        assert chosen <= best + 1e-9
-
-
-def test_kmeans_assignment_stage_is_narrow(spark, sf001_dir):
-    """The assignment pass is a pure map (centroids are literals): no
-    Exchange of any kind in its plan."""
-    from pyspark.sql import functions as F
-
-    from text_extractor_for_bioeconomic_products_spark.operators.clustering import (
-        assign_clusters,
-    )
-    from text_extractor_for_bioeconomic_products_spark.sources.tables import load
-
-    emb = load(spark, sf001_dir, "embeddings")
-    init = emb.filter(F.col("vec_id") < 8).select("vec_id", "embedding").collect()
-    cents = {int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in init}
-    p = assign_clusters(emb, cents)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in p, p
-
-
 def test_source_mix_weights_normalized(spark, sf001_dir):
     """Temperature mix: weights sum to 1, expected counts sum to N, and
     the temperature tempers dominance (max source's weight share < its
@@ -804,37 +683,6 @@ def test_train_val_test_split_stable_and_proportioned(spark, sf001_dir, tmp_path
     assert totals["val"] / n < 0.2 and totals["test"] / n < 0.2
 
 
-def test_kmeans_survives_empty_cluster(spark):
-    """A duplicate init vector makes every point tie toward the smaller
-    cid (struct-argmin tie-break), so cluster 1 empties after pass 1 —
-    the rebuild must simply drop it (same semantics as the SQL oracle's
-    regrouping) and converge on the survivors without error."""
-    from text_extractor_for_bioeconomic_products_spark.operators.clustering import (
-        kmeans_fit_predict,
-    )
-
-    base = [0.0] * 8
-    far = [5.0] * 8
-    rows = [
-        (0, 0, base),
-        (1, 0, list(base)),          # exact duplicate of the init centroid 0
-        (2, 1, far),
-        (3, 1, [5.1] * 8),
-        (4, 0, [0.1] * 8),
-    ]
-    emb = spark.createDataFrame(
-        rows, "vec_id long, label int, embedding array<float>"
-    )
-    out = {r["vec_id"]: r["cluster"] for r in
-           kmeans_fit_predict(emb, k=3, iters=3).collect()}
-    # init: c0 = c1 = base (duplicate), c2 = far.  Every near point ties
-    # between c0 and c1 and takes the smaller cid, so cluster 1 empties
-    # after pass 1 and must drop out cleanly.
-    assert out[0] == out[1] == out[4] == 0
-    assert out[2] == out[3] == 2
-    assert 1 not in out.values()
-
-
 def test_gopher_rules_keep_path(spark):
     """The corpus-wide query honestly rejects word salad (stopword
     poverty), so the keep=1 branch is driven by a planted realistic doc
@@ -879,58 +727,6 @@ def test_gopher_rules_corpus_nonvacuous(spark, sf001_dir):
     flags = {r["flag_words"] for r in rows}
     assert flags == {0, 1}
     assert all(r["flag_stop"] == 0 for r in rows)
-
-
-def test_ann_lsh_recall_invariants(spark, sf001_dir):
-    """recall@k is a true ratio of the exact top-k found by the LSH path:
-    full exact sets, hits bounded by k, ratio consistent — and <1 recall
-    actually occurs (otherwise the ledger is vacuous on this corpus)."""
-    import __spark_entry__ as entry_mod
-    from text_extractor_for_bioeconomic_products_spark.operators.similarity import (
-        K_RECALL,
-        N_BATCH_QUERIES,
-    )
-
-    rows = entry_mod.queries()["ann_lsh_recall"](spark, sf001_dir).collect()
-    assert len(rows) == N_BATCH_QUERIES
-    for r in rows:
-        assert r["n_exact"] == K_RECALL
-        assert 0 <= r["n_hits_one_band"] <= K_RECALL
-        assert 0 <= r["n_hits_two_band"] <= K_RECALL
-        # OR-ing a second band can only add candidates: recall monotone.
-        assert r["n_hits_two_band"] >= r["n_hits_one_band"]
-        assert (
-            abs(r["recall_one_band"] - round(r["n_hits_one_band"] / r["n_exact"], 4))
-            < 1e-12
-        )
-        assert (
-            abs(r["recall_two_band"] - round(r["n_hits_two_band"] / r["n_exact"], 4))
-            < 1e-12
-        )
-        assert 0 <= r["n_hits_multiprobe"] <= K_RECALL
-        # Hamming-1 probes include the exact bucket, so the multiprobe
-        # candidate set is a superset of the one-band set; with a fixed k
-        # and true-score ranking, recall@k is monotone in the candidate
-        # set (anything that displaces a hit scores higher, so it is
-        # itself an exact-top-k member).
-        assert r["n_hits_multiprobe"] >= r["n_hits_one_band"]
-        assert (
-            abs(
-                r["recall_multiprobe"]
-                - round(r["n_hits_multiprobe"] / r["n_exact"], 4)
-            )
-            < 1e-12
-        )
-    assert any(r["recall_one_band"] < 1.0 for r in rows)
-    # The second band must actually lift recall somewhere on this corpus,
-    # otherwise the multi-band lever is vacuous here.
-    assert sum(r["n_hits_two_band"] for r in rows) > sum(
-        r["n_hits_one_band"] for r in rows
-    )
-    # ... and so must the probe fan-out, else multiprobe is vacuous here.
-    assert sum(r["n_hits_multiprobe"] for r in rows) > sum(
-        r["n_hits_one_band"] for r in rows
-    )
 
 
 def test_duplicate_passage_planted_fixture(spark):

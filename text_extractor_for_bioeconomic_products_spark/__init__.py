@@ -9,7 +9,7 @@ Layout:
     session      — SparkSession factory with scale-tuned defaults
     functions/   — Spark column expressions + vectorized pandas UDFs
     operators/   — DataFrame-level operators (extract, relational, dedup,
-                   similarity, textstats, multimodal)
+                   textstats, multimodal)
     sources/     — transcript synthesis + readers/sinks
     plans/       — end-to-end jobs (repartition/salt/checkpoint/lineage)
     streaming/   — Structured Streaming variant of the pipeline

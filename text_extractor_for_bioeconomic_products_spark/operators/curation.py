@@ -189,13 +189,13 @@ def q_benchmark_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFra
         "text",
         F.when(F.col("doc_id") % 97 == 0, F.concat(F.col("text"), F.lit(_PLANT)))
         .otherwise(F.col("text")),
-    )
-    words = F.filter(
-        F.split(F.lower("text"), r"[^a-z0-9]+"), lambda w: w != ""
+    ).withColumn(
+        "words",
+        F.filter(F.split(F.lower("text"), r"[^a-z0-9]+"), lambda w: w != ""),
     )
     grams = docs.select(
         "doc_id", "source",
-        F.explode(word_ngrams(words, _CONTAM_N)).alias("gram"),
+        F.explode(word_ngrams(F.col("words"), _CONTAM_N)).alias("gram"),
     ).select("doc_id", "source", F.md5("gram").alias("gram_md5"))
     bench = grams.filter(F.col("doc_id") < _BENCH_MAX_DOC_ID) \
         .select("gram_md5").distinct()

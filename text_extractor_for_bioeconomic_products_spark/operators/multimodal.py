@@ -1490,10 +1490,6 @@ def frame_sample(media: DataFrame, every_n: int = 2) -> DataFrame:
     )
 
 
-# back-compat name (pre-round-3 callers); the AVI path is real now
-frame_sample_stub = frame_sample
-
-
 def q_multimodal_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-surface window into the multimodal plumbing (rows-only —
     input is the deterministic synthetic media table, not an sf table):

@@ -1086,7 +1086,10 @@ ORACLE_STRATIFIED_SAMPLE = f"""
 def word_ngrams(words, n: int):
     """Array of space-joined word n-grams as a narrow per-row expression
     (guarded: Spark's sequence(1, k) is DESCENDING for k<1, so short rows
-    explicitly yield an empty array)."""
+    explicitly yield an empty array).  Pass ``words`` as a column the
+    caller has already selected, not as an expression: the lambda reads
+    it once per n-gram, so an inline ``split`` would re-split the text
+    each time, quadratic in document length."""
     cnt = F.size(words) - (n - 1)
     idx = F.when(cnt >= 1, F.sequence(F.lit(1), cnt)).otherwise(
         F.array().cast("array<int>")
@@ -1112,8 +1115,10 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc repetition census — all narrow column math, zero shuffle
     before the final sort; at 100 TB this runs as a pure map alongside
     the other quality signals."""
-    docs = load(spark, sf_dir, "documents")
-    words = F.split(F.lower("text"), " ")
+    docs = load(spark, sf_dir, "documents").select(
+        "doc_id", F.split(F.lower("text"), " ").alias("words")
+    )
+    words = F.col("words")
     return (
         docs.select(
             "doc_id",

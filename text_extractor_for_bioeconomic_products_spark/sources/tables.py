@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
+    "orders", "lineitem", "events", "documents",
 ]
 
 
