@@ -1,8 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship extraction query on /root/testdata/sf0.001.
-``queries()`` — one callable per implemented operator (SURVEY.md §2 +
-the training-data-pipeline extensions: dedup, text analysis).
+``queries()`` — one callable per registered query: the extraction flow
+plus the training-data-pipeline extensions (dedup, text analysis,
+curation).  The scalar SURVEY.md §2 rules are checked by
+tests/test_rules.py, not through the registry.
 ``oracle_sql()`` — DuckDB-runnable ANSI SQL twins for every
 SQL-expressible query; UDF-pipeline queries are rows-only by design
 (their byte-exactness is covered by tests/test_extraction_equality.py's
@@ -27,11 +29,8 @@ from text_extractor_for_bioeconomic_products_spark.operators import (  # noqa: E
     graph,
     multimodal,
     dedup,
-    normalize,
     profiling,
-    relational,
     stringjoin,
-    temporal,
     textstats,
 )
 from text_extractor_for_bioeconomic_products_spark.plans import (  # noqa: E402
@@ -75,13 +74,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    q.update(relational.QUERIES)
     q.update(curation.QUERIES)
     q.update(textstats.QUERIES)
     q.update(dedup.QUERIES)
     q.update(stringjoin.QUERIES)
-    q.update(temporal.QUERIES)
-    q.update(normalize.QUERIES)
     q.update(multimodal.QUERIES)
     q.update(conversation.QUERIES)
     q.update(bpe.QUERIES)
@@ -95,13 +91,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     o: dict[str, str] = {}
-    o.update(relational.ORACLE_SQL)
     o.update(curation.ORACLE_SQL)
     o.update(textstats.ORACLE_SQL)
     o.update(dedup.ORACLE_SQL)
     o.update(stringjoin.ORACLE_SQL)
-    o.update(temporal.ORACLE_SQL)
-    o.update(normalize.ORACLE_SQL)
     o.update(conversation.ORACLE_SQL)
     o.update(graph.ORACLE_SQL)
     o.update(profiling.ORACLE_SQL)

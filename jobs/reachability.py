@@ -9,7 +9,6 @@ package, ``jobs/``, ``tests/``, ``perfbench/``, ``bench.py`` and
 
   jobs        a script under ``jobs/``
   extraction  ``plans/pipeline.py::run_extraction``
-  streaming   a top-level function of ``streaming/pipeline.py``
   tests       a test module under ``tests/`` names it directly
   registry    ``__spark_entry__.queries()`` / ``oracle_sql()``, whose every
               entry ``test_query_against_oracle`` runs
@@ -34,7 +33,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "text_extractor_for_bioeconomic_products_spark"
 MODULE_CODE = "<module>"
 REGISTRY = {("__spark_entry__", "queries"), ("__spark_entry__", "oracle_sql")}
-CATEGORIES = ("jobs", "extraction", "streaming", "tests", "registry", "bench")
+CATEGORIES = ("jobs", "extraction", "tests", "registry", "bench")
 
 
 class Module:
@@ -185,11 +184,10 @@ def inventory() -> dict[str, dict[str, list[str]]]:
     """package module path → name → the categories reaching it."""
     mods = _load_modules()
     graph = _build_graph(mods)
-    pipeline, streaming = f"{PKG}.plans.pipeline", f"{PKG}.streaming.pipeline"
+    pipeline = f"{PKG}.plans.pipeline"
     roots = {
         "jobs": {n for n in graph if n[0].startswith("jobs.")},
         "extraction": {(pipeline, "run_extraction")},
-        "streaming": {n for n in graph if n[0] == streaming},
         "tests": {n for n in graph if n[0].startswith("tests.")},
         "registry": set(REGISTRY),
         "bench": {n for n in graph

@@ -205,125 +205,3 @@ def test_greedy_pack_fold_invariants_hypothesis():
             assert examples[j][1] + tokens[i] > ctx
 
     check()
-
-
-def test_streaming_sessionizer_matches_batch(spark, tmp_path):
-    """Event-time session windows (applyInPandasWithState +
-    EventTimeTimeout) == batch sessionize on the same events, with the
-    input deliberately split across micro-batches so sessions MERGE
-    across batch boundaries and close both ways (in-batch gap and
-    watermark timeout).  Watermark-pusher users drive the final
-    timeouts and are excluded from the comparison.  User 4 is new and
-    sends only null-ts events: the stream skips them without opening
-    state (an empty open session must not reach ``state.update``)."""
-    import datetime as dt
-
-    from text_extractor_for_bioeconomic_products_spark.operators.relational import (
-        sessionize,
-    )
-    from text_extractor_for_bioeconomic_products_spark.streaming.pipeline import (
-        run_streaming_sessionizer,
-    )
-
-    base = dt.datetime(2024, 3, 1)
-
-    def ev(eid, user, sec):
-        return (eid, base + dt.timedelta(seconds=sec), user, "click",
-                eid * 0.125 + 0.0005, "{}")
-
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    # file1 ≤ 1000 s; file2 (1000, 4000]; file3 (4000, 21000]; sessions
-    # split at gap > 1800 s: u1 → 3 sessions, u2 → 2, u3 → ONE session
-    # whose three events arrive in three different micro-batches
-    files = [
-        [ev(1, 1, 0), ev(2, 1, 60), ev(3, 1, 120), ev(10, 2, 100),
-         ev(20, 3, 900)],
-        [ev(4, 1, 5000), ev(5, 1, 5060), ev(11, 2, 2200), ev(21, 3, 2650),
-         (30, None, 4, "click", 1.0, "{}"),
-         (31, None, 4, "click", 2.0, "{}")],
-        [ev(6, 1, 20000), ev(22, 3, 4400)],
-        [ev(900, 999, 21000 + 5 * 86400)],   # pusher: fires most timeouts
-        [ev(901, 998, 21000 + 10 * 86400)],  # pusher 2: fires the rest
-    ]
-    in_dir = str(tmp_path / "events_stream_in")
-    for chunk in files:  # sequential writes → increasing file mtimes
-        spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-    out_dir = str(tmp_path / "events_stream_out")
-    run_streaming_sessionizer(
-        spark, in_dir, out_dir, gap_sec=1800, timeout_sec=240
-    )
-
-    got = spark.read.parquet(out_dir + "/sessions_stream").filter(
-        "user_id < 900"
-    ).collect()
-    assert len(got) == 6
-    assert 4 not in {r["user_id"] for r in got}
-    assert {r["closed_by"] for r in got} == {"gap", "timeout"}
-    stream_set = sorted(
-        (r["user_id"], r["n_events"], r["session_value"], r["first_event_id"])
-        for r in got
-    )
-    batch_events = spark.createDataFrame(
-        [e for chunk in files[:3] for e in chunk if e[1] is not None], schema
-    )
-    batch_set = sorted(
-        (r["user_id"], r["n_events"], r["session_value"], r["first_event_id"])
-        for r in sessionize(batch_events).collect()
-    )
-    assert stream_set == batch_set
-
-
-def test_streaming_sessionizer_late_event_merges_order_aware(spark, tmp_path):
-    """A cross-batch LATE event (older than the open session's last
-    event, still within the gap) must merge without regressing the
-    session clock: one session, batch-equal — the naive last=epoch
-    merge split it by measuring the next gap against the straggler."""
-    import datetime as dt
-
-    from text_extractor_for_bioeconomic_products_spark.operators.relational import (
-        sessionize,
-    )
-    from text_extractor_for_bioeconomic_products_spark.streaming.pipeline import (
-        run_streaming_sessionizer,
-    )
-
-    base = dt.datetime(2024, 3, 1)
-
-    def ev(eid, sec):
-        return (eid, base + dt.timedelta(seconds=sec), 7, "c", 1.0, "{}")
-
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    files = [
-        [ev(1, 1000), ev(2, 1008)],
-        [ev(3, 999), ev(4, 2500)],     # 999 is LATE vs open last=1008
-        [ev(90, 10 * 86400)],          # pusher (user 7 filtered below? no—same schema, user 7)
-    ]
-    # pusher must be a different user so user 7's session can time out
-    files[2] = [(90, base + dt.timedelta(days=10), 999, "c", 0.0, "{}")]
-    in_dir = str(tmp_path / "late_in")
-    for chunk in files:
-        spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-    out_dir = str(tmp_path / "late_out")
-    run_streaming_sessionizer(
-        spark, in_dir, out_dir, gap_sec=1800, timeout_sec=240
-    )
-    got = spark.read.parquet(out_dir + "/sessions_stream").filter(
-        "user_id = 7"
-    ).collect()
-    assert len(got) == 1
-    r = got[0]
-    assert r["n_events"] == 4
-    assert (r["start_epoch"], r["end_epoch"]) == (
-        int(base.timestamp()) + 999, int(base.timestamp()) + 2500
-    )
-    batch = sessionize(
-        spark.createDataFrame(files[0] + files[1], schema)
-    ).collect()
-    assert len(batch) == 1 and batch[0]["n_events"] == 4
-    assert r["session_value"] == batch[0]["session_value"]

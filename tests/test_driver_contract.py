@@ -58,53 +58,6 @@ def _normalize(rows, cols):
     return sorted(out, key=repr)
 
 
-def test_user_sessions_subsecond_epoch_parity(spark, tmp_path):
-    """Both engines must integer-truncate epoch seconds: a fractional gap
-    of 1800.8 s truncates to exactly 1800 (= the 30-min threshold, NOT
-    exceeded) — raw DuckDB epoch() would split this session while Spark's
-    unix_timestamp would not.  The synthetic corpus is whole-second, so
-    without this fixture the oracle passes vacuously."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from text_extractor_for_bioeconomic_products_spark.operators.relational import (
-        sessionize,
-    )
-
-    base = dt.datetime(2024, 1, 1, 0, 0, 0, 100000)  # .1 s
-    rows = pd.DataFrame({
-        "event_id": [1, 2, 3],
-        # gaps: 1800.8 s (trunc 1800 → same session), 1801.1 s (trunc
-        # 1801 → new session)
-        "ts": [
-            base,
-            base + dt.timedelta(seconds=1800.8),
-            base + dt.timedelta(seconds=1800.8 + 1801.1),
-        ],
-        "user_id": [7, 7, 7],
-        "event_type": ["view"] * 3,
-        "value": [1.0, 2.0, 3.0],
-        "props": ["{}"] * 3,
-    })
-    pq = str(tmp_path / "events.parquet")
-    rows.to_parquet(pq)
-
-    sdf = spark.createDataFrame(rows)
-    got = {
-        (r["session_id"], r["n_events"]) for r in sessionize(sdf).collect()
-    }
-    assert got == {(0, 2), (1, 1)}, got
-
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW events AS SELECT * FROM '{pq}'")
-    oracle_rows = con.execute(entry_mod.oracle_sql()["user_sessions"]).fetchall()
-    cols = [d[0] for d in con.execute(
-        entry_mod.oracle_sql()["user_sessions"]).description]
-    si, ne = cols.index("session_id"), cols.index("n_events")
-    assert {(r[si], r[ne]) for r in oracle_rows} == got
-
-
 def test_doc_chunks_exercises_both_modes_nonvacuously(spark, sf01_dir):
     """The corpus ships with no punctuation/newlines, so doc_chunks
     plants structure; this guard fails if a future corpus/seed change

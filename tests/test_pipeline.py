@@ -1077,45 +1077,6 @@ def test_xlsx_writer_edge_cases(tmp_path):
         assert by_ref["G2"].find(f"{ns}is/{ns}t").text == 'a<b&c>"dé'
 
 
-def test_stream_stream_interval_join_matches_batch(spark, sf001_dir, tmp_path):
-    """Watermarked stream-stream interval join == batch interval_join on
-    the same input: the events fixture is split into 4 files (4
-    micro-batches at maxFilesPerTrigger=1) so purchases and touches
-    genuinely arrive in different batches and must meet in the join
-    state store; the 30-day watermark covers the fixture span so nothing
-    is dropped."""
-    from pyspark.sql import functions as F
-
-    from text_extractor_for_bioeconomic_products_spark.operators.temporal import (
-        interval_join,
-    )
-    from text_extractor_for_bioeconomic_products_spark.streaming.pipeline import (
-        streaming_purchase_followups,
-    )
-
-    events = spark.read.parquet(f"{sf001_dir}/events.parquet")
-    in_dir = str(tmp_path / "events_in")
-    events.repartition(4).write.parquet(in_dir)
-
-    out_dir = str(tmp_path / "out")
-    streaming_purchase_followups(spark, in_dir, out_dir)
-    streamed = spark.read.parquet(f"{out_dir}/followups_stream")
-
-    purchases = events.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        "user_id",
-        F.col("ts").alias("purchase_ts"),
-    )
-    batch = interval_join(
-        purchases, events, key="user_id", probe_time="purchase_ts",
-        build_time="ts", lower_exclusive_s=0, upper_inclusive_s=86400,
-        payload_cols=["event_id"],
-    )
-    got = {(r["purchase_id"], r["event_id"]) for r in streamed.collect()}
-    want = {(r["purchase_id"], r["match"]["event_id"]) for r in batch.collect()}
-    assert got == want and len(want) > 100
-
-
 def test_spark_submit_pyfiles_job(spark, transcripts_df, tmp_path):
     """North-rule submission mechanics, evidenced with the REAL path: the
     extraction job runs under ``spark-submit --py-files engine.zip`` with

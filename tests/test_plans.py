@@ -182,24 +182,6 @@ def test_ngram_contamination_broadcasts_benchmark_side(spark):
     assert p.count("split(") == 2, p
 
 
-def test_interval_join_is_bucket_keyed_hash_join(spark):
-    """purchase_followups' interval join must be a HASH join keyed by
-    (user, time-bucket) with the range predicate as a join condition —
-    never a nested-loop/cartesian pair explosion.  This is the whole
-    point of the bucketization: at 100 TB a plain equi-join on the key
-    followed by the range filter builds (hot-key)² pairs first."""
-    p = plan_of(spark, "purchase_followups")
-    assert "Cartesian" not in p
-    assert "NestedLoop" not in p
-    # the pair join is keyed by the composite including the bucket
-    assert "_iv_bucket" in p
-    join_lines = [
-        ln for ln in p.splitlines()
-        if ("HashJoin" in ln or "SortMergeJoin" in ln) and "_iv_bucket" in ln
-    ]
-    assert join_lines, f"no bucket-keyed hash join in plan:\n{p}"
-
-
 def test_lm_score_vocab_broadcasts_into_token_stream(spark):
     """doc_lm_score: the capped vocab is a distributed top-k
     (TakeOrderedAndProject, never a single-partition global sort) that

@@ -354,128 +354,6 @@ def test_connected_components_long_chain(spark):
     assert rows[100]["members"] == "100,101,103"
 
 
-def test_span_validation_columns_equal_scalar(spark):
-    """X3 vectorized validator (pure column expressions) produces exactly
-    the scalar rules.validate_product_span outputs on branch-covering
-    fixtures."""
-    from pyspark.sql import functions as F
-
-    from text_extractor_for_bioeconomic_products_spark import rules
-    from text_extractor_for_bioeconomic_products_spark.operators.normalize import (
-        span_validation_columns,
-    )
-
-    cases = [
-        ("acai berry", "Brazil", "Euterpe oleracea", ["alimentar", "medicinal"]),
-        ("Extracts Ltd Company", "", None, []),
-        ("oil company", "Peru", "Genus species", ["x", "y"]),
-        ("x", "brasil", "euterpe Oleracea", [" a ", "", "b"]),
-        (None, None, "NotABinomialHere", None),
-        ("maca", "peru", "", ["medicinal"]),
-        ("Something SPA", "bolivia", "Q", ["  "]),
-        ("natural extract", "colombia", "Abc def ghi", ["one"]),
-        ("tea", "french guiana", "ABC", ["u1", "u2", "u3"]),
-        ("", "xx", None, ["ok"]),
-        # whitespace-padded fields: scalar and column twins must strip
-        # the identical ASCII class (review-confirmed divergence before
-        # _ascii_trim: tab-padded name lengths differed)
-        ("a\t", "peru", "Genus species", ["u1", "u2"]),
-        ("maca ", "\tbrazil\n", "Genus species\t", ["\tu1", "u2"]),
-        (" herb\n", "peru", "\n genus SPECIES ", ["x\ty"]),
-    ]
-    df = spark.createDataFrame(
-        cases, "name string, country string, sci string, uses array<string>"
-    )
-    v = span_validation_columns(
-        F.col("name"), F.col("country"), F.col("sci"), F.col("uses")
-    )
-    got = df.select(
-        "name", "country", "sci", "uses",
-        v["is_valid"].alias("is_valid"),
-        v["confidence"].alias("confidence"),
-        v["n_issues"].alias("n_issues"),
-        v["n_corrections"].alias("n_corrections"),
-        v["country_corrected"].alias("country_corrected"),
-        v["scientific_corrected"].alias("scientific_corrected"),
-    ).collect()
-    for row in got:
-        exp = rules.validate_product_span(
-            row["name"], row["country"], row["sci"], row["uses"]
-        )
-        for k in ("is_valid", "n_issues", "n_corrections",
-                  "country_corrected", "scientific_corrected"):
-            assert row[k] == exp[k], (row["name"], k, row[k], exp[k])
-        assert row["confidence"] == pytest.approx(exp["confidence"]), row["name"]
-
-
-def test_span_validation_columns_equal_scalar_randomized(spark):
-    """One Spark job over 300 pseudo-random inputs (deterministic seed):
-    names/countries/scis/uses drawn from vocab fragments, whitespace,
-    punctuation, unicode accents, and Nones — scalar and column twins
-    must agree on every output field."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from text_extractor_for_bioeconomic_products_spark import rules
-    from text_extractor_for_bioeconomic_products_spark.operators.normalize import (
-        span_validation_columns,
-    )
-
-    rng = random.Random(42)
-    frags = ["acai", "oil", "ltd", "spa", "café", "maca", "xyz", "Genus",
-             "species", "SHOUT", "q", "", " ", "\t", "\n", "perú", "brazil",
-             "dominican republic", "nut", "12", "ñandú"]
-
-    def rand_str():
-        if rng.random() < 0.1:
-            return None
-        return rng.choice(["", " ", "\t"]).join(
-            rng.choices(frags, k=rng.randint(0, 4))
-        )
-
-    def rand_uses():
-        if rng.random() < 0.15:
-            return None
-        return [rand_str() or "" for _ in range(rng.randint(0, 3))]
-
-    cases = [(rand_str(), rand_str(), rand_str(), rand_uses())
-             for _ in range(300)]
-    df = spark.createDataFrame(
-        [(i, *c) for i, c in enumerate(cases)],
-        "i int, name string, country string, sci string, uses array<string>",
-    )
-    v = span_validation_columns(
-        F.col("name"), F.col("country"), F.col("sci"), F.col("uses")
-    )
-    got = {r["i"]: r for r in df.select(
-        "i",
-        v["is_valid"].alias("is_valid"),
-        v["confidence"].alias("confidence"),
-        v["n_issues"].alias("n_issues"),
-        v["n_corrections"].alias("n_corrections"),
-        v["scientific_corrected"].alias("scientific_corrected"),
-    ).collect()}
-    for i, (name, country, sci, uses) in enumerate(cases):
-        exp = rules.validate_product_span(name, country, sci, uses)
-        row = got[i]
-        for k in ("is_valid", "n_issues", "n_corrections", "scientific_corrected"):
-            assert row[k] == exp[k], (i, k, (name, country, sci, uses), row[k], exp[k])
-        assert row["confidence"] == pytest.approx(exp["confidence"]), (i, cases[i])
-
-
-def test_span_validation_query_nonvacuous(spark):
-    """The end-to-end census finds BOTH valid and invalid spans on the
-    transcript corpus (the tagger emits some one-word-name / no-use
-    spans), so the validator's reject path is exercised for real."""
-    import __spark_entry__ as entry_mod
-
-    rows = {r["is_valid"]: r for r in
-            entry_mod.queries()["span_validation"](spark, "/root/testdata/sf0.001").collect()}
-    assert set(rows) == {True, False}
-    assert rows[True]["n_spans"] > 0 and rows[False]["total_issues"] > 0
-
-
 def test_bench_pair_efficiency():
     """bench.py's one scaling estimator, min-of-level: interference only
     adds time, so each level's fastest run is its cleanest estimate."""
@@ -488,118 +366,6 @@ def test_bench_pair_efficiency():
     assert bench.pair_efficiency(runs([180.0, 136.0]), runs([40.0, 40.0]), 4, 16) == 0.85
     # a slow hi run does not lower the result
     assert bench.pair_efficiency(runs([180.0, 136.0]), runs([40.0, 90.0]), 4, 16) == 0.85
-
-
-# --- temporal.asof_join (distributed as-of; union-merge formulation) ------
-
-def _asof_fixture(spark):
-    from datetime import datetime as dt
-    probe = spark.createDataFrame(
-        [
-            (100, 1, dt(2024, 1, 10)),   # normal: two earlier touches
-            (101, 1, dt(2024, 1, 2)),    # touch AT the same instant counts (<=)
-            (102, 2, dt(2024, 1, 5)),    # tie on touch ts -> max event_id wins
-            (103, 3, dt(2024, 1, 5)),    # key with no touches -> nulls
-            (104, 4, dt(2024, 1, 1)),    # touches exist but all AFTER -> nulls
-        ],
-        "purchase_id long, user_id long, purchase_ts timestamp",
-    )
-    build = spark.createDataFrame(
-        [
-            (10, 1, dt(2024, 1, 1), "view"),
-            (11, 1, dt(2024, 1, 2), "click"),
-            (20, 2, dt(2024, 1, 4), "view"),
-            (21, 2, dt(2024, 1, 4), "click"),  # same ts as 20: id 21 wins
-            (40, 4, dt(2024, 2, 1), "view"),
-        ],
-        "event_id long, user_id long, ts timestamp, event_type string",
-    )
-    return probe, build
-
-
-def test_asof_join_semantics(spark):
-    """<= boundary, deterministic same-ts tie-break, and left-null rows."""
-    from text_extractor_for_bioeconomic_products_spark.operators.temporal import (
-        asof_join,
-    )
-    probe, build = _asof_fixture(spark)
-    out = asof_join(
-        probe, build, key="user_id", probe_time="purchase_ts",
-        build_time="ts", payload_cols=["event_id", "event_type"],
-        tiebreak_col="event_id",
-    )
-    rows = {r["purchase_id"]: r["asof"] for r in out.collect()}
-    assert rows[100]["event_id"] == 11          # most recent of two
-    assert rows[101]["event_id"] == 11          # ts == probe instant included
-    assert rows[102]["event_id"] == 21          # same-ts tie -> max event_id
-    assert rows[103] is None                    # key never seen on build side
-    assert rows[104] is None                    # only future touches
-    assert out.count() == 5                     # every probe row survives
-
-
-def test_asof_join_single_shuffle(spark):
-    """The union-merge as-of is exactly ONE Exchange (on the key) — no
-    join explosion, no extra shuffle for the window."""
-    from text_extractor_for_bioeconomic_products_spark.operators.temporal import (
-        asof_join,
-    )
-    probe, build = _asof_fixture(spark)
-    out = asof_join(
-        probe, build, key="user_id", probe_time="purchase_ts",
-        build_time="ts", payload_cols=["event_id"], tiebreak_col="event_id",
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    n_exchanges = plan.count("Exchange hashpartitioning")
-    assert n_exchanges == 1, plan
-
-
-def test_interval_join_subsecond_boundary(spark):
-    """Boundary semantics of the bucketized interval join with
-    MICROSECOND timestamps: strict > at the lower bound, <= at the
-    upper, and a match in the NEXT time bucket (probe late in its
-    bucket, build just past midnight) proving the 2-bucket candidate
-    explode covers bucket-crossing windows even though bucketing
-    truncates to whole seconds."""
-    from datetime import datetime as dt
-
-    from text_extractor_for_bioeconomic_products_spark.operators.temporal import (
-        interval_join,
-    )
-
-    t0 = dt(2024, 1, 10, 23, 30, 0, 250000)  # late in its day-bucket
-    probe = spark.createDataFrame(
-        [(1, 7, t0)], "purchase_id long, user_id long, purchase_ts timestamp"
-    )
-    build = spark.createDataFrame(
-        [
-            (10, 7, t0),                                   # == t0: excluded (strict >)
-            (11, 7, dt(2024, 1, 10, 23, 30, 0, 250001)),   # t0+1µs: included
-            (12, 7, dt(2024, 1, 11, 0, 30, 0)),            # next bucket, in window
-            (13, 7, dt(2024, 1, 11, 23, 30, 0, 250000)),   # == t0+24h: included (<=)
-            (14, 7, dt(2024, 1, 11, 23, 30, 0, 250001)),   # t0+24h+1µs: excluded
-            (15, 8, dt(2024, 1, 11, 0, 0, 0)),             # other key: excluded
-        ],
-        "event_id long, user_id long, ts timestamp",
-    )
-    out = interval_join(
-        probe, build, key="user_id", probe_time="purchase_ts",
-        build_time="ts", lower_exclusive_s=0, upper_inclusive_s=86400,
-        payload_cols=["event_id"],
-    )
-    matched = sorted(r["match"]["event_id"] for r in out.collect())
-    assert matched == [11, 12, 13]
-
-
-def test_interval_join_rejects_empty_window():
-    from text_extractor_for_bioeconomic_products_spark.operators.temporal import (
-        interval_join,
-    )
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        interval_join(
-            None, None, key="k", probe_time="t", build_time="t",
-            lower_exclusive_s=60, upper_inclusive_s=60, payload_cols=[],
-        )
 
 
 def test_source_mix_weights_normalized(spark, sf001_dir):
@@ -1518,73 +1284,3 @@ def test_per_source_cap_deterministic_and_binding(spark, sf001_dir):
         spark.conf.set("spark.sql.shuffle.partitions", old)
     key = lambda rs: sorted((r["source"], r["kept_id_sum"]) for r in rs)  # noqa: E731
     assert key(rows) == key(rows2)
-
-
-def test_markov_transitions_hand_computed(spark):
-    """Transition matrix over a hand-built two-user sequence equals the
-    enumerated pairs, probabilities condition on from_state, and no
-    transition crosses a user boundary."""
-    from datetime import datetime
-
-    from text_extractor_for_bioeconomic_products_spark.operators.temporal import (
-        markov_transitions,
-    )
-
-    def t(s):
-        return datetime(2026, 1, 1, 0, 0, s)
-
-    # u1: a a b ; u2: b a   — pairs: (a,a) (a,b) from u1, (b,a) from u2
-    rows = [
-        (1, t(0), 1, "a"), (1, t(1), 2, "a"), (1, t(2), 3, "b"),
-        (2, t(0), 4, "b"), (2, t(5), 5, "a"),
-    ]
-    events = spark.createDataFrame(
-        rows, "user_id long, ts timestamp, event_id long, event_type string"
-    )
-    got = {
-        (r["from_state"], r["to_state"]): (r["n_transitions"], r["prob"])
-        for r in markov_transitions(
-            events, key="user_id", time_col="ts",
-            tiebreak_col="event_id", state="event_type",
-        ).collect()
-    }
-    assert got == {
-        ("a", "a"): (1, 0.5),
-        ("a", "b"): (1, 0.5),
-        ("b", "a"): (1, 1.0),
-    }
-    # the u1-end → u2-start pair ("b","b") must NOT exist
-    assert ("b", "b") not in got
-
-
-def test_burstiness_periodic_user_hits_minus_one_bin(spark):
-    """A perfectly periodic user (σ=0 ⇒ B=−1) lands in bin −10; a user
-    with < 2 gaps is excluded; the histogram sums are exact integers."""
-    from datetime import datetime, timedelta
-
-    from text_extractor_for_bioeconomic_products_spark.operators.temporal import (
-        interarrival_burstiness,
-    )
-
-    base = datetime(2026, 1, 1)
-    rows = []
-    # user 1: 5 events exactly 60 s apart — periodic, B = -1
-    rows += [(1, base + timedelta(seconds=60 * i), i) for i in range(5)]
-    # user 2: gaps 1 s, 1 s, 3598 s — bursty, B > 0
-    for i, off in enumerate([0, 1, 2, 3600]):
-        rows.append((2, base + timedelta(seconds=off), 10 + i))
-    # user 3: only two events (one gap) — excluded (sample σ undefined)
-    rows += [(3, base, 20), (3, base + timedelta(seconds=9), 21)]
-    events = spark.createDataFrame(rows, "user_id long, ts timestamp, event_id long")
-    got = {
-        r["burst_bin"]: (r["n_users"], r["n_gaps"], r["total_gap_s"])
-        for r in interarrival_burstiness(
-            events, key="user_id", time_col="ts", tiebreak_col="event_id"
-        ).collect()
-    }
-    assert got.get(-10) == (1, 4, 240)          # the periodic user
-    # the bursty user: gaps (1,1,3598) ⇒ μ=1200, σ≈2076.7,
-    # B≈0.2676 ⇒ bin 2
-    assert got.get(2) == (1, 3, 3600)
-    assert sum(v[0] for v in got.values()) == 2  # user 3 excluded
-

@@ -1,13 +1,9 @@
-"""Sessionization and data-card censuses over the testdata tables.
+"""Data-card censuses over the testdata tables.
 
-``sessionize`` is the batch reference for the streaming sessionizer
-(``streaming/pipeline.py::run_streaming_sessionizer``); its query
-``user_sessions`` is the one ``QUERIES`` entry and has an ANSI-SQL oracle
-in ORACLE_SQL (runnable by DuckDB on the same parquet views).  The
-trend, Benford, Gini and seasonality censuses feed
-``jobs/run_datacard.py`` and carry ``ORACLE_*`` twins.  Column aliases
-match exactly between both sides (driver hashes by sorted column name).
-Floats are rounded to 4 decimals on both sides.
+The trend, Benford, Gini and seasonality censuses feed
+``jobs/run_datacard.py`` and carry ``ORACLE_*`` twins (runnable by
+DuckDB on the same parquet views).  Column aliases match exactly between
+both sides (the parity tests compare by sorted column name).
 """
 from __future__ import annotations
 
@@ -15,83 +11,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load
-
-
-# --- Sessionization: gap-based session ids (lag + conditional cumsum) ------
-
-SESSION_GAP_MIN = 30
-
-
-def sessionize(events: DataFrame) -> DataFrame:
-    """Session aggregation over an events frame (new session when the gap
-    to the previous event exceeds SESSION_GAP_MIN minutes) — the classic
-    two-window composition (lag → cumsum) with a single
-    user_id-partitioned shuffle.
-
-    Gap seconds are INTEGER-truncated on purpose: ``unix_timestamp``
-    drops fractional seconds, and the DuckDB oracle pins the same
-    semantics with ``CAST(floor(epoch(ts)) AS BIGINT)`` — sub-second timestamps
-    must split sessions identically in both engines (covered by a
-    sub-second fixture test, not just the whole-second synthetic data).
-    """
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # TIMESTAMP_NTZ has no direct long cast in Spark 4; epoch seconds via
-    # unix_timestamp (session tz fixed to UTC in session.py)
-    epoch = F.unix_timestamp("ts")
-    gapped = events.withColumn(
-        "new_session",
-        F.when(
-            epoch - F.lag(epoch).over(w) > SESSION_GAP_MIN * 60, 1
-        ).otherwise(0),
-    )
-    sessioned = gapped.withColumn(
-        "session_id",
-        F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return (
-        sessioned.groupBy("user_id", "session_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,6)")), 4).cast("double").alias("session_value"),
-            F.min("event_id").alias("first_event_id"),
-        )
-        .orderBy("user_id", "session_id")
-    )
-
-
-def q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sessionize(load(spark, sf_dir, "events"))
-
-
-ORACLE_SQL = {
-    "user_sessions": f"""
-        SELECT user_id, session_id,
-               count(*) AS n_events,
-               CAST(round(sum(value::DECIMAL(18,6)), 4) AS DOUBLE) AS session_value,
-               min(event_id) AS first_event_id
-        FROM (
-            -- CAST to BIGINT: DuckDB window sum(INTEGER) yields HUGEINT; Spark yields BIGINT.
-            -- floor(epoch): integer-truncate seconds like Spark's unix_timestamp —
-            -- DuckDB epoch() keeps fractional seconds and a bare CAST(double AS
-            -- BIGINT) would ROUND, splitting sub-second sessions differently.
-            SELECT user_id, event_id, value,
-                   CAST(sum(new_session) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                   ) AS BIGINT) AS session_id
-            FROM (
-                SELECT *,
-                       CASE WHEN CAST(floor(epoch(ts)) AS BIGINT) - lag(CAST(floor(epoch(ts)) AS BIGINT)) OVER (
-                                PARTITION BY user_id ORDER BY ts, event_id
-                            ) > {SESSION_GAP_MIN * 60}
-                            THEN 1 ELSE 0 END AS new_session
-                FROM events
-            )
-        )
-        GROUP BY user_id, session_id
-        ORDER BY user_id, session_id
-    """,
-}
 
 
 # ---------------------------------------------------------------------------
@@ -113,8 +32,7 @@ def user_value_trend(events: DataFrame) -> DataFrame:
     (n, Σx, Σy, Σxy, Σx²) as EXACT decimal sums (x = centered integer
     epoch seconds, y quantized DECIMAL(18,6)) so the shuffle order
     cannot move a bit, then derives the slope through one fixed IEEE
-    expression both engines evaluate identically — the
-    ``user_burstiness`` discipline applied to regression.
+    expression both engines evaluate identically.
 
     Output: (user_id, n_events, slope_per_hour) for users with ≥ 2
     distinct-time events (a degenerate x-variance has no slope);
@@ -445,7 +363,3 @@ ORACLE_EVENT_SEASONALITY = """
     ORDER BY dow, hour
 """
 
-
-QUERIES = {
-    "user_sessions": q_user_sessions,
-}

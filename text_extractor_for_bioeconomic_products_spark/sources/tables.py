@@ -10,10 +10,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents",
-]
+TABLES = ["orders", "lineitem", "events", "documents"]
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

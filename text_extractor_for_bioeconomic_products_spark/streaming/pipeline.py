@@ -4,7 +4,8 @@ The reference is strictly batch (SURVEY §2.11); this module is the
 engine's forward-looking stream path: the same stateless extraction
 operators applied via ``readStream`` → ``writeStream``.  Because
 ``extract_turns`` is a narrow map, it is streaming-safe with no state
-store; per-conversation aggregation uses a watermark on ``ts``.
+store; per-conversation aggregation uses a watermark on ``ts``.  Every
+stream here reads transcripts; ``jobs/run_streaming.py`` runs the modes.
 
 ``Trigger.AvailableNow`` gives batch-equivalent semantics for backfill —
 the test suite asserts stream output == batch output on the same input.
@@ -555,79 +556,6 @@ def run_streaming_near_dup_admission(
     return seen
 
 
-EVENTS_SCHEMA = (
-    "event_id long, ts timestamp_ntz, user_id long, "
-    "event_type string, value double"
-)
-
-
-def streaming_purchase_followups(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    window_s: int = 86400,
-    watermark: str = "30 days",
-    timeout_sec: int = 300,
-) -> None:
-    """Watermarked STREAM-STREAM interval join — the streaming twin of
-    ``operators.temporal.interval_join``: purchases joined to the same
-    user's events within ``(purchase_ts, purchase_ts + window]``, both
-    sides file-source streams over the same events directory.
-
-    The watermark bounds join state: a buffered purchase can be evicted
-    once the touch-side watermark passes ``purchase_ts + window`` (Spark
-    derives the state-cleanup condition from the time-range predicate),
-    so state is O(events within the window + lateness horizon), not
-    O(stream history).  With ``availableNow`` and a watermark covering
-    the fixture's full time span, output is exactly the batch
-    ``interval_join`` pair set — pinned by
-    ``test_stream_stream_interval_join_matches_batch``."""
-
-    def src() -> DataFrame:
-        # watermarks require TIMESTAMP (tz-aware); the events table stores
-        # TIMESTAMP_NTZ — cast is deterministic under the session's fixed
-        # UTC timezone (session.py)
-        return (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(input_dir)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-        )
-
-    purchases = (
-        src()
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", watermark)
-    )
-    touches = src().withWatermark("ts", watermark)
-    joined = purchases.join(
-        touches,
-        F.expr(
-            f"user_id = p_user_id AND ts > purchase_ts "
-            f"AND ts <= purchase_ts + INTERVAL {int(window_s)} SECOND"
-        ),
-        "inner",
-    ).select("purchase_id", "user_id", "purchase_ts", "event_id", "ts", "value")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", os.path.join(out_dir, "followups_stream"))
-        .option(
-            "checkpointLocation", os.path.join(out_dir, "_followups_checkpoint")
-        )
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
-
-
 def measure_streaming_rate(
     spark: SparkSession,
     input_dir: str,
@@ -694,191 +622,3 @@ def measure_streaming_rate(
             round(p["processedRowsPerSecond"], 1) for p in steady
         ],
     }
-
-
-def read_event_stream(spark: SparkSession, input_dir: str,
-                      max_files_per_trigger: int = 1) -> DataFrame:
-    """File-source stream over an events parquet directory (the
-    ``events`` table schema)."""
-    schema = ("event_id long, ts timestamp, user_id long, "
-              "event_type string, value double, props string")
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-
-
-def run_streaming_sessionizer(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    gap_sec: int = 1800,
-    watermark: str = "10 seconds",
-    timeout_sec: int = 300,
-) -> dict:
-    """Event-time SESSION WINDOWS via ``applyInPandasWithState`` +
-    ``EventTimeTimeout`` — the canonical arbitrary-stateful pattern the
-    built-in window functions cannot express incrementally: a session
-    has no fixed width, it closes only when the event-time watermark
-    passes ``last_event + gap``.
-
-    Per user, state is the OPEN session (start/last epoch, count, exact
-    micro-unit value sum, first event id).  Each micro-batch merges its
-    (sorted) events into the open session, emits every session CLOSED
-    by an in-batch gap immediately, keeps the tail open, and arms an
-    event-time timeout at ``last + gap``; when the watermark passes it,
-    the timeout callback emits the final session and drops the state —
-    so state is O(open sessions), never O(history).
-
-    Semantics match the batch ``relational.sessionize`` exactly (strict
-    ``> gap_sec`` split on INTEGER epoch seconds; session_value as a
-    DECIMAL(18,6)-quantized exact sum rounded to 4 — micro-units here,
-    pytest-pinned stream == batch on multi-batch input).  Emitted rows
-    carry ``closed_by`` ∈ {gap, timeout} for observability.
-
-    At 10^12-turn scale this is the shape that matters: per-key state is
-    five numbers regardless of session length, the state store shuffles
-    once on user_id.  Lateness: each batch sorts ITS OWN events, and a
-    cross-batch late event merges order-aware into the open session
-    (start = min, last = max — never regressing the session clock); a
-    straggler older than an already-CLOSED session necessarily starts a
-    new one (sessions are emitted append-mode and cannot reopen — the
-    standard online-sessionization boundary, same as Spark's built-in
-    session_window)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    events = read_event_stream(spark, input_dir).withWatermark(
-        "ts", watermark
-    )
-
-    out_schema = (
-        "user_id long, n_events long, session_value double, "
-        "first_event_id long, start_epoch long, end_epoch long, "
-        "closed_by string"
-    )
-    state_schema = (
-        "start_epoch long, last_epoch long, n_events long, "
-        "value_micro long, first_event_id long"
-    )
-
-    def _row(user_id, sess, closed_by):
-        start, last, n, micro, first_eid = sess
-        # DECIMAL(18,6)-exact sum → HALF_UP round to 4 (the batch
-        # sessionize contract: sum(cast(value as decimal(18,6)))→round 4)
-        import decimal
-        val = float(
-            (decimal.Decimal(micro) / decimal.Decimal(1_000_000)).quantize(
-                decimal.Decimal("0.0001"), rounding=decimal.ROUND_HALF_UP
-            )
-        )
-        return (user_id, n, val, first_eid, start, last, closed_by)
-
-    def track(key, pdfs, state: GroupState):
-        import decimal
-        user_id = key[0]
-        if state.hasTimedOut:
-            sess = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [_row(user_id, sess, "timeout")],
-                columns=["user_id", "n_events", "session_value",
-                         "first_event_id", "start_epoch", "end_epoch",
-                         "closed_by"],
-            )
-            return
-        rows = []
-        for pdf in pdfs:
-            for eid, ts, val in zip(pdf["event_id"], pdf["ts"], pdf["value"]):
-                if ts is None or ts != ts:  # NaT: batch sessionize's
-                    continue               # window also never sees it
-                # INTEGER epoch seconds — the unix_timestamp contract
-                rows.append((int(ts.timestamp()), int(eid), float(val)))
-        rows.sort()
-        open_sess = tuple(state.get) if state.exists else None
-        closed = []
-        for epoch, eid, val in rows:
-            # null value: counts toward n_events, adds 0 to the sum —
-            # the SQL sum-ignores-nulls contract
-            micro = 0 if val != val else int(
-                decimal.Decimal(str(val)).quantize(
-                    decimal.Decimal("0.000001"),
-                    rounding=decimal.ROUND_HALF_UP,
-                ) * 1_000_000
-            )
-            if open_sess is None:
-                open_sess = (epoch, epoch, 1, micro, eid)
-            elif epoch - open_sess[1] > gap_sec:
-                closed.append(_row(user_id, open_sess, "gap"))
-                open_sess = (epoch, epoch, 1, micro, eid)
-            else:
-                # ORDER-AWARE merge: a cross-batch LATE event (epoch <
-                # open last) must extend the session's membership, never
-                # regress its clock — last = max, start = min (the naive
-                # last = epoch would shrink last and make the NEXT gap
-                # check measure against the late straggler, splitting a
-                # session batch mode keeps whole)
-                start, last, n, vm, first_eid = open_sess
-                open_sess = (min(start, epoch), max(last, epoch), n + 1,
-                             vm + micro, min(first_eid, eid))
-        if open_sess is None:
-            # only null-ts events for a key with no state: nothing to
-            # open, and state.update(None) would kill the query
-            return
-        state.update(open_sess)
-        # arm the close timer; must stay ahead of the current watermark
-        desired_ms = (open_sess[1] + gap_sec) * 1000 + 1
-        state.setTimeoutTimestamp(
-            max(desired_ms, state.getCurrentWatermarkMs() + 1)
-        )
-        if closed:
-            yield pd.DataFrame(
-                closed,
-                columns=["user_id", "n_events", "session_value",
-                         "first_event_id", "start_epoch", "end_epoch",
-                         "closed_by"],
-            )
-
-    sessions = events.groupBy("user_id").applyInPandasWithState(
-        track, out_schema, state_schema, "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-
-    def write_batch(batch_df, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(
-            os.path.join(out_dir, "sessions_stream")
-        )
-
-    q = (
-        sessions.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation",
-                os.path.join(out_dir, "_sessionizer_checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(timeout_sec)
-    # state-store telemetry per micro-batch (read BEFORE stop — the
-    # progress ring dies with the query): numRowsTotal is the count of
-    # OPEN sessions, the probe's boundedness evidence (state must track
-    # open keys, never event history)
-    import json as _json
-    telemetry = []
-    for p in q.recentProgress:
-        d = _json.loads(p.json)
-        ops = d.get("stateOperators") or [{}]
-        telemetry.append({
-            "batch_id": d["batchId"],
-            "n_input_rows": d["numInputRows"],
-            "state_rows": ops[0].get("numRowsTotal"),
-            "trigger_ms": d["durationMs"].get("triggerExecution"),
-        })
-    if q.isActive:
-        q.stop()
-    if not finished:
-        raise RuntimeError(
-            f"streaming sessionizer did not finish within {timeout_sec}s — "
-            "output and telemetry are truncated, not measurements"
-        )
-    return {"batches": telemetry}
