@@ -24,8 +24,14 @@ larger than spark.sql.adaptive.advisoryPartitionSizeInBytes), not
 input splits × 4096.
 
 Resumability: rerunning with the same --output skips buckets already in
-the manifest; a crashed run repeats only its unfinished buckets
+the manifest, and returns without scanning the input when the manifest
+lists every bucket; a crashed run repeats only its unfinished buckets
 (idempotent dynamic partition overwrite).
+
+Commit order: the bucketed data, then lineage/lineage.parquet, then
+manifest/manifest.parquet.  The driver writes each of the last two as
+one file, renamed into place, so --output must be a local (or locally
+mounted) path.
 """
 
 from __future__ import annotations

@@ -451,30 +451,36 @@ def _assert_bucket_files_layout(data_dir, tiebreak=()):
 
 def test_run_extraction_one_file_per_bucket(spark, transcripts_df, out_dir):
     """Rows are clustered by bucket before the writes: every bucket of
-    every bucketed output is one file (not one per scan task), each run
-    adds one manifest file, lineage equals a per-bucket aggregate of the
-    written turns, and the write plans carry exactly one bucket exchange,
-    after the extract UDF.  Each of those writes sorts once, on a key that
+    every bucketed output is one file (not one per scan task), lineage
+    and manifest stay one file each across runs and are written by no
+    Spark job, lineage equals a per-bucket aggregate of the written
+    turns, and the write plans carry exactly one bucket exchange, after
+    the extract UDF.  Each of those writes sorts once, on a key that
     begins ``bucket, conv_id, turn_idx``, and writes zstd pages with an
     INT64 microsecond ``ts``."""
     import glob
     from pyspark.sql import functions as F
 
     bucket = F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int")
-    manifest_glob = os.path.join(out_dir, "manifest", "*.parquet")
     since = max(_sql_execution_ids(_sql_status_store(spark)), default=-1)
+
+    def one_file(sub):
+        assert glob.glob(os.path.join(out_dir, sub, "*")) == [
+            os.path.join(out_dir, sub, sub + ".parquet")], sub
 
     r1 = run_extraction(spark, transcripts_df.filter(bucket < 4), out_dir,
                         run_id="r1", n_buckets=8)
     assert r1.buckets_processed > 0
-    assert len(glob.glob(manifest_glob)) == 1
+    one_file("lineage")
+    one_file("manifest")
     # resume over the full input: only the remaining buckets run
     r2 = run_extraction(spark, transcripts_df, out_dir, run_id="r2", n_buckets=8)
     assert r2.buckets_processed > 0 and r2.buckets_skipped == r1.buckets_processed
-    assert len(glob.glob(manifest_glob)) == 2
+    one_file("lineage")
+    one_file("manifest")
 
     n_buckets = r1.buckets_processed + r2.buckets_processed
-    for sub in ("turns_extracted", "product_spans", "lineage"):
+    for sub in ("turns_extracted", "product_spans"):
         files = _files_per_bucket(os.path.join(out_dir, sub))
         assert len(files) == n_buckets, sub
         assert set(files.values()) == {1}, (sub, files)
@@ -499,18 +505,13 @@ def test_run_extraction_one_file_per_bucket(spark, transcripts_df, out_dir):
     assert sorted(lineage.collect()) == sorted(expected.collect())
 
     writes = 0
-    local_writes = 0
     for nodes, edges in _sql_graphs_since(spark, since):
         sink = [d for name, d in nodes.values() if name.startswith("Execute Insert")]
         if not sink:
             continue
-        if any(os.path.join(out_dir, o) in sink[0] for o in ("lineage", "manifest")):
-            # driver-side rows reach the JVM as Arrow: no PythonRDD stage
-            names = [name for name, _ in nodes.values()]
-            assert "LocalTableScan" in names, (sink[0], names)
-            assert not any("ExistingRDD" in n for n in names), (sink[0], names)
-            local_writes += 1
-            continue
+        # lineage and manifest are committed by the driver, not by Spark
+        assert not any(os.path.join(out_dir, o) in sink[0]
+                       for o in ("lineage", "manifest")), sink[0]
         if not any(o in sink[0] for o in ("turns_extracted", "product_spans")):
             continue
         writes += 1
@@ -528,9 +529,154 @@ def test_run_extraction_one_file_per_bucket(spark, transcripts_df, out_dir):
         tiebreak = ["span_seq"] if "product_spans" in sink[0] else []
         assert _sort_keys(sort) == ["bucket", "conv_id", "turn_idx", *tiebreak], sort
     assert writes == 4  # turns + spans, two runs
-    assert local_writes == 4  # lineage + manifest, two runs
     _assert_bucket_files_layout(os.path.join(out_dir, "turns_extracted"))
     _assert_bucket_files_layout(os.path.join(out_dir, "product_spans"), ("span_seq",))
+
+
+def _spark_jobs(spark, fn):
+    """(Spark jobs that ``fn()`` ran, its result), counted by job group
+    through the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+
+def _content_sum(spark, path):
+    """Order-free content sum of a parquet output: Σ xxhash64 of every
+    column of every row."""
+    from pyspark.sql import functions as F
+
+    df = spark.read.parquet(path)
+    return df.agg(F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)"))).first()[0]
+
+
+def _table_rows(path):
+    """(bucket, run_id) of every row of a driver-written table."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(path, columns=["bucket", "run_id"])
+    return sorted(zip(t["bucket"].to_pylist(), t["run_id"].to_pylist()))
+
+
+def test_run_extraction_spark_jobs(spark, transcripts_df, out_dir):
+    """The bookkeeping runs no Spark job: a fresh run is the cache-filling
+    aggregate plus the two bucketed writes, and a run over a dir whose
+    manifest lists every bucket returns without touching the input."""
+    n, r1 = _spark_jobs(spark, lambda: run_extraction(
+        spark, transcripts_df, out_dir, run_id="r1", n_buckets=4))
+    assert r1.buckets_processed == 4
+    assert n <= 5, n
+    n, r2 = _spark_jobs(spark, lambda: run_extraction(
+        spark, transcripts_df, out_dir, run_id="r2", n_buckets=4))
+    assert (r2.buckets_processed, r2.buckets_skipped) == (0, 4)
+    assert n == 0, n
+
+
+def test_run_extraction_rerun_keeps_one_manifest_row_per_bucket(
+    spark, transcripts_df, out_dir
+):
+    """A ``resume=False`` rerun replaces each bucket's manifest and lineage
+    rows instead of appending a second one."""
+    r1 = run_extraction(spark, transcripts_df, out_dir, run_id="r1", n_buckets=8)
+    r2 = run_extraction(spark, transcripts_df, out_dir, run_id="r2", n_buckets=8,
+                        resume=False)
+    assert r2.buckets_processed == r1.buckets_processed
+    for sub in ("manifest", "lineage"):
+        rows = _table_rows(os.path.join(out_dir, sub))
+        assert len(rows) == r1.buckets_processed, (sub, rows)
+        assert {run for _, run in rows} == {"r2"}, (sub, rows)
+
+
+def test_run_extraction_crash_before_manifest_reruns_clean(
+    spark, transcripts_df, out_dir, monkeypatch
+):
+    """A crash after the lineage rename and before the manifest's leaves
+    no bucket committed; the rerun under a new run id equals a clean run:
+    same turns and spans, one lineage and one manifest row per bucket,
+    all from the rerun."""
+    from text_extractor_for_bioeconomic_products_spark.plans import pipeline
+
+    clean_dir = out_dir + "_clean"
+    clean = run_extraction(spark, transcripts_df, clean_dir, run_id="clean", n_buckets=8)
+
+    commit = pipeline._commit_table
+
+    def crash_at_manifest(path, rows):
+        if os.path.basename(path) == "manifest":
+            raise RuntimeError("injected crash before the manifest commit")
+        commit(path, rows)
+
+    monkeypatch.setattr(pipeline, "_commit_table", crash_at_manifest)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_extraction(spark, transcripts_df, out_dir, run_id="c1", n_buckets=8)
+    monkeypatch.undo()
+    assert {run for _, run in _table_rows(os.path.join(out_dir, "lineage"))} == {"c1"}
+    assert not os.path.exists(os.path.join(out_dir, "manifest"))
+
+    r2 = run_extraction(spark, transcripts_df, out_dir, run_id="c2", n_buckets=8)
+    assert r2.buckets_processed == clean.buckets_processed
+    for sub in ("turns_extracted", "product_spans"):
+        assert _content_sum(spark, os.path.join(out_dir, sub)) == \
+            _content_sum(spark, os.path.join(clean_dir, sub)), sub
+    for sub in ("lineage", "manifest"):
+        rows = _table_rows(os.path.join(out_dir, sub))
+        assert [b for b, _ in rows] == [b for b, _ in
+                                        _table_rows(os.path.join(clean_dir, sub))], sub
+        assert {run for _, run in rows} == {"c2"}, (sub, rows)
+
+
+def test_run_extraction_temp_leftover_skipped_then_removed(
+    spark, transcripts_df, out_dir
+):
+    """A temp file left by a crash mid-write (dot-named, truncated) is
+    skipped by both Spark and pyarrow readers, and the next commit
+    removes it."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    r = run_extraction(spark, transcripts_df, out_dir, run_id="r1", n_buckets=8)
+    for sub in ("lineage", "manifest"):
+        table = os.path.join(out_dir, sub, sub + ".parquet")
+        with open(table, "rb") as src, \
+                open(os.path.join(out_dir, sub, f".{sub}.parquet.dead.tmp"), "wb") as dst:
+            dst.write(src.read()[:100])
+        d = os.path.join(out_dir, sub)
+        assert spark.read.parquet(d).count() == r.buckets_processed
+        assert pq.read_table(d).num_rows == r.buckets_processed
+    run_extraction(spark, transcripts_df, out_dir, run_id="r2", n_buckets=8,
+                   resume=False)
+    for sub in ("lineage", "manifest"):
+        assert os.listdir(os.path.join(out_dir, sub)) == [sub + ".parquet"], sub
+        assert len(_table_rows(os.path.join(out_dir, sub))) == r.buckets_processed
+    assert not glob.glob(os.path.join(out_dir, "*", ".*.tmp"))
+
+
+def test_run_extraction_refuses_per_bucket_lineage_layout(
+    spark, transcripts_df, out_dir
+):
+    """An output dir whose lineage is in the per-bucket directory layout
+    of earlier versions fails before any work instead of gaining a
+    one-file table beside it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    old = os.path.join(out_dir, "lineage", "bucket=0")
+    os.makedirs(old)
+    pq.write_table(pa.table({"n_turns": [1], "run_id": ["old"]}),
+                   os.path.join(old, "part-00000.parquet"))
+    with pytest.raises(ValueError, match="per-bucket layout"):
+        run_extraction(spark, transcripts_df, out_dir, run_id="r1", n_buckets=8)
+    assert sorted(os.listdir(out_dir)) == ["lineage"]
+    assert os.listdir(os.path.join(out_dir, "lineage")) == ["bucket=0"]
 
 
 def test_run_extraction_output_independent_of_input_order(
@@ -854,6 +1000,50 @@ def test_merge_turns_rejects_bad_inputs(spark, transcripts_df, tmp_path):
         merge_turns(spark, turns_dir, base.unionByName(base.limit(1)), n_buckets=8)
     with _pytest.raises(ValueError, match="n_buckets"):
         merge_turns(spark, turns_dir, base.limit(1), n_buckets=16)
+
+
+def test_merge_turns_spark_jobs(spark, transcripts_df, tmp_path):
+    """An upsert into an existing table runs one pre-write aggregate and
+    no Spark job for the ``_meta`` sidecar: at most 7 jobs per call."""
+    from text_extractor_for_bioeconomic_products_spark.plans.pipeline import (
+        merge_turns,
+    )
+
+    turns_dir = str(tmp_path / "turns")
+    base = extract_turns(transcripts_df).drop("spans").cache()
+    merge_turns(spark, turns_dir, base, n_buckets=8)
+    since = max(_sql_execution_ids(_sql_status_store(spark)), default=-1)
+    n, stats = _spark_jobs(spark, lambda: merge_turns(
+        spark, turns_dir, base.limit(5), n_buckets=8))
+    assert stats["n_upserted"] == 5
+    assert n <= 7, n
+    for nodes, _edges in _sql_graphs_since(spark, since):
+        assert not any(turns_dir + "_meta" in d for _, d in nodes.values())
+    base.unpersist()
+
+
+def test_merge_turns_reads_spark_written_meta(spark, transcripts_df, tmp_path):
+    """A ``_meta`` sidecar that Spark wrote (a ``part-*.json`` file) is
+    still read: the modulus it records is enforced and kept."""
+    import shutil
+
+    import pytest as _pytest
+    from text_extractor_for_bioeconomic_products_spark.plans.pipeline import (
+        merge_turns,
+    )
+
+    turns_dir = str(tmp_path / "turns")
+    meta_dir = turns_dir + "_meta"
+    base = extract_turns(transcripts_df).drop("spans").limit(50)
+    merge_turns(spark, turns_dir, base, n_buckets=8)
+    assert os.listdir(meta_dir) == ["n_buckets.json"]
+    shutil.rmtree(meta_dir)
+    spark.createDataFrame([(8,)], "n_buckets int").coalesce(1).write.json(meta_dir)
+    with _pytest.raises(ValueError, match="n_buckets=8"):
+        merge_turns(spark, turns_dir, base.limit(1), n_buckets=16)
+    merge_turns(spark, turns_dir, base.limit(1), n_buckets=8)
+    (meta,) = spark.read.json(meta_dir).collect()
+    assert meta["n_buckets"] == 8
 
 
 def test_xml_html_excel_sinks(spark, transcripts_df, tmp_path):

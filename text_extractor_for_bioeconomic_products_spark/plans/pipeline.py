@@ -11,8 +11,9 @@ Layout under ``out_dir``:
                        rows in (conv_id, turn_idx) order within each file
     product_spans/     parquet, same bucketing; rows in
                        (conv_id, turn_idx, span_seq) order
-    lineage/           one row per (run, bucket): counters only, no timings
-    manifest/          processed-bucket ids (the checkpoint)
+    lineage/lineage.parquet    one row per bucket (from the run that last
+                       wrote it): counters only, no timings
+    manifest/manifest.parquet  processed-bucket ids (the checkpoint)
 
 Every bucketed file is written the way Iceberg writes a table with a
 declared sort order: zstd pages and ``ts`` as an INT64 microsecond
@@ -20,10 +21,22 @@ timestamp adjusted to UTC (``session.get_spark``), rows sorted on the
 table key (``_write_bucketed``).  So a file's bytes depend only on the
 rows it holds, not on the order in which the input was scanned.
 
-Idempotency: writes use dynamic partition overwrite — re-running a bucket
-replaces exactly that bucket's files (the parquet analog of Iceberg
-``MERGE INTO`` keyed on (conv_id, turn_idx); swap the writer for Iceberg
-`writeTo(...).overwritePartitions()` on a cluster with an Iceberg catalog).
+Idempotency: the data writes use dynamic partition overwrite — re-running
+a bucket replaces exactly that bucket's files (the parquet analog of
+Iceberg ``MERGE INTO`` keyed on (conv_id, turn_idx); swap the writer for
+Iceberg `writeTo(...).overwritePartitions()` on a cluster with an Iceberg
+catalog).
+
+Commit order: data, then lineage, then the manifest.  Lineage and
+manifest are tiny (≤ ``n_buckets`` rows) and stay one file each: the
+driver reads the current rows, replaces those of the buckets this run
+wrote, writes the result to a dot-named temp file beside the table and
+renames it into place (``_commit_table``).  The rename is atomic, so a
+reader sees the old table or the new one, and a crash before the
+manifest's rename reruns the run's buckets.  These tables, and
+``merge_turns``'s ``_meta`` sidecar, are written with pyarrow and
+``json`` on the driver and run no Spark job; they need a local (or
+locally mounted) path.
 
 Scale: the bucket column is both the resume unit and the output partition
 key.  Extraction itself stays a narrow map.  The job adds one keyed
@@ -31,28 +44,27 @@ exchange after it, ``REBALANCE`` on bucket (``_cluster_by_bucket``), so
 each bucketed write emits one file per bucket instead of one per scan
 task × bucket; AQE coalesces small buckets into one task and splits a
 bucket larger than ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
-across several.  The only other wide operation is the resume semi-join
-against the (tiny, broadcast) manifest.
+across several.  Nothing else is wide: resuming filters the input on
+the manifest's bucket ids (``isin``).
 
-Python runs only inside the extract UDF.  The driver-side tables (the
-lineage and manifest rows, ``merge_turns``'s ``_meta`` sidecar) reach the
-JVM as Arrow (``_local_table``), so they plan as ``LocalTableScan`` and
-start no Python task.
+Python runs on the executors only inside the extract UDF.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import time
+import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass
-from typing import List, Sequence, Union
+from typing import Callable, List, Optional
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
 
 from ..operators.extract import explode_spans, extract_turns
 
@@ -127,36 +139,77 @@ def _write_bucketed(df: DataFrame, path: str, *tiebreak: str) -> None:
     )
 
 
-def _local_table(
-    spark: SparkSession, rows: Sequence[tuple], schema: Union[StructType, str]
-) -> DataFrame:
-    """A small driver-side table handed to the JVM as Arrow: it plans as
-    a ``LocalTableScan`` and runs no Python task.  ``createDataFrame``
-    of a Python list would add a PythonRDD stage instead, and the pandas
-    path silently falls back to that stage when conversion fails."""
-    if isinstance(schema, str):
-        schema = StructType.fromDDL(schema)
-    names = schema.fieldNames()
-    table = pa.Table.from_pylist(
-        [dict(zip(names, r)) for r in rows], schema=to_arrow_schema(schema)
-    )
-    return spark.createDataFrame(table, schema)
-
-
-def _processed_buckets(spark: SparkSession, manifest_dir: str) -> List[int]:
-    # existence pre-check: probing a fresh dir via read.parquet would be
-    # caught below anyway, but the JVM logs the AnalysisException stack
-    # to stderr — needless alarm on every first run (local paths only;
-    # an object-store deployment swaps in its own listing call)
-    if not os.path.isdir(manifest_dir):
+def _table_files(path: str) -> List[str]:
+    """The data files of a driver-written table, in name order: every
+    entry of ``path`` that Spark and pyarrow read (names starting with
+    ``.`` or ``_`` are temp and marker files); [] when ``path`` does not
+    exist.  A partition directory is the per-bucket layout that earlier
+    versions wrote; it is refused rather than mixed with one file."""
+    if "://" in path:
+        raise ValueError(f"{path}: driver-written tables need a local path")
+    if not os.path.isdir(path):
         return []
+    files = sorted(
+        e.path for e in os.scandir(path) if not e.name.startswith((".", "_"))
+    )
+    for f in files:
+        if os.path.isdir(f):
+            raise ValueError(
+                f"{path} holds {os.path.basename(f)}/, the per-bucket layout of "
+                f"an earlier version; delete {path} and the manifest beside it "
+                f"to rerun every bucket into the one-file layout"
+            )
+    return files
+
+
+def _publish(path: str, name: str, write: Callable[[str], None]) -> None:
+    """Commit one file: ``write`` fills a dot-named temp file in ``path``,
+    which is then renamed onto ``path/name`` (atomic on a POSIX file
+    system).  Every other file in ``path`` goes afterwards: the leftover
+    of a crash mid-write, or the part files of an older layout."""
+    os.makedirs(path, exist_ok=True)
+    tmp = os.path.join(path, f".{name}.{uuid.uuid4().hex}.tmp")
+    write(tmp)
+    os.replace(tmp, os.path.join(path, name))
+    for e in os.scandir(path):
+        if e.name != name and e.is_file():
+            os.remove(e.path)
+
+
+def _commit_table(path: str, rows: pa.Table) -> None:
+    """Replace the rows of the buckets in ``rows`` in the one-file table
+    at ``path``: one row per bucket survives a rerun, from the run that
+    wrote it last."""
+    files = _table_files(path)
+    if files:
+        current = pq.read_table(files)
+        rerun = pc.is_in(current["bucket"], rows["bucket"].combine_chunks())
+        rows = pa.concat_tables([current.filter(pc.invert(rerun)), rows])
+    rows = rows.sort_by("bucket")
+    _publish(path, os.path.basename(path) + ".parquet",
+             lambda tmp: pq.write_table(rows, tmp, compression="zstd"))
+
+
+def _processed_buckets(manifest_dir: str) -> List[int]:
     try:
-        return [
-            r["bucket"]
-            for r in spark.read.parquet(manifest_dir).select("bucket").distinct().collect()
-        ]
+        files = _table_files(manifest_dir)
+        if not files:
+            return []
+        return sorted(set(pq.read_table(files, columns=["bucket"])["bucket"].to_pylist()))
     except Exception:
         return []  # manifest unreadable/partial — treat as fresh run
+
+
+def _stored_n_buckets(meta_dir: str) -> Optional[int]:
+    """The modulus in ``merge_turns``'s sidecar: one JSON line
+    ``{"n_buckets": N}``, the file this module writes or the ``part-*``
+    file Spark wrote before; None when there is no sidecar.  Any other
+    read error raises, so it never falls through to a write that would
+    overwrite existing buckets with partial data."""
+    for f in _table_files(meta_dir):
+        with open(f) as fh:
+            return int(json.loads(fh.readline())["n_buckets"])
+    return None
 
 
 def merge_turns(
@@ -176,67 +229,46 @@ def merge_turns(
     on disk is untouched (dynamic partition overwrite).  ``new_turns`` is
     extraction output (``extract_turns(...).drop("spans")``).
     """
-    new_b = _with_bucket(new_turns, n_buckets).persist()
-    # MERGE contract: the source must be key-unique (Iceberg raises
-    # "multiple matching rows"; silently keeping both would corrupt the
-    # target's key uniqueness)
-    dup_keys = (
-        new_b.groupBy("conv_id", "turn_idx").count().filter(F.col("count") > 1).count()
-    )
-    if dup_keys:
-        new_b.unpersist()
-        raise ValueError(
-            f"merge_turns: {dup_keys} duplicate (conv_id, turn_idx) keys in new_turns"
-        )
-    affected = sorted(
-        r["bucket"] for r in new_b.select("bucket").distinct().collect()
-    )
-    n_upserted = new_b.count()
     # the bucket modulus is part of the dataset layout: merging with a
     # different n_buckets would hash matched keys into unscanned buckets
-    # and duplicate them silently — validate against the sidecar.  Only
-    # a missing path means "not there"; any other read error (permissions,
-    # corrupt footer) must NOT fall through to a write that would
-    # dynamic-overwrite existing buckets with partial data.
-    def _missing_path(ex: Exception) -> bool:
-        msg = str(ex)
-        return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-
+    # and duplicate them silently — validate against the sidecar
     meta_dir = turns_dir.rstrip("/") + "_meta"
-    stored = None
-    # pre-check local existence so the fresh-target path never fires an
-    # AnalysisException (the JVM logs its stack to stderr on every first
-    # micro-batch otherwise); the _missing_path fallback stays for
-    # non-local URIs where isdir() can't see the store
-    if os.path.isdir(meta_dir) or "://" in meta_dir:
-        try:
-            stored = int(spark.read.json(meta_dir).collect()[0]["n_buckets"])
-        except Exception as ex:
-            if not _missing_path(ex):
-                new_b.unpersist()
-                raise
+    stored = _stored_n_buckets(meta_dir)
     if stored is not None and stored != n_buckets:
-        new_b.unpersist()
         raise ValueError(
             f"merge_turns: dataset written with n_buckets={stored}, "
             f"merge called with {n_buckets}"
         )
-    existing = None  # first write — plain insert
-    if os.path.isdir(turns_dir) or "://" in turns_dir:
-        try:
-            existing = spark.read.parquet(turns_dir).filter(
-                F.col("bucket").isin(affected)
-            )
-        except Exception as ex:
-            if not _missing_path(ex):
-                new_b.unpersist()
-                raise
-    if existing is not None:
+    new_b = _with_bucket(new_turns, n_buckets).persist()
+    # one aggregate gives the affected buckets, the row count and the
+    # MERGE contract check: the source must be key-unique (Iceberg raises
+    # "multiple matching rows"; silently keeping both would corrupt the
+    # target's key uniqueness).  A key lies in one bucket, so the source
+    # has duplicates exactly when Σ rows > Σ distinct keys; the key is
+    # counted as a struct so that a null turn_idx is a key like any other.
+    per_bucket = (
+        new_b.groupBy("bucket")
+        .agg(
+            F.count("*").alias("rows"),
+            F.countDistinct(F.struct("conv_id", "turn_idx")).alias("keys"),
+        )
+        .collect()
+    )
+    n_upserted = sum(r["rows"] for r in per_bucket)
+    dup_rows = n_upserted - sum(r["keys"] for r in per_bucket)
+    if dup_rows:
+        new_b.unpersist()
+        raise ValueError(
+            f"merge_turns: {dup_rows} duplicate (conv_id, turn_idx) rows in new_turns"
+        )
+    affected = sorted(r["bucket"] for r in per_bucket)
+    if os.path.isdir(turns_dir):
+        existing = spark.read.parquet(turns_dir).filter(F.col("bucket").isin(affected))
         keys = new_b.select("conv_id", "turn_idx").distinct()
         kept = existing.join(keys, ["conv_id", "turn_idx"], "left_anti")
         merged = kept.unionByName(new_b.select(*kept.columns))
     else:
-        merged = new_b
+        merged = new_b  # first write — plain insert
     # the merged affected buckets must be fully materialized before the
     # overwrite deletes their source files
     merged = _cluster_by_bucket(merged).localCheckpoint(eager=True)
@@ -245,8 +277,11 @@ def merge_turns(
     if stored is None:
         # first write, or adopting a pre-sidecar dataset at the caller's
         # declared modulus
-        _local_table(spark, [(n_buckets,)], "n_buckets int") \
-            .coalesce(1).write.mode("overwrite").json(meta_dir)
+        def write_meta(tmp: str) -> None:
+            with open(tmp, "w") as fh:
+                fh.write(json.dumps({"n_buckets": n_buckets}) + "\n")
+
+        _publish(meta_dir, "n_buckets.json", write_meta)
     new_b.unpersist()
     return {"buckets_rewritten": affected, "n_upserted": n_upserted}
 
@@ -271,9 +306,14 @@ def run_extraction(
     lineage_dir = os.path.join(out_dir, "lineage")
     manifest_dir = os.path.join(out_dir, "manifest")
 
-    df = _with_bucket(transcripts, n_buckets)
+    _table_files(lineage_dir)  # refuse an older layout before any work
+    done = _processed_buckets(manifest_dir) if resume else []
+    if set(range(n_buckets)) <= set(done):
+        # every bucket is committed: nothing to scan
+        return RunResult(run_id, n_buckets, 0, n_buckets, 0, 0,
+                         round(time.monotonic() - t0, 3))
 
-    done = _processed_buckets(spark, manifest_dir) if resume else []
+    df = _with_bucket(transcripts, n_buckets)
     if done:
         df = df.filter(~F.col("bucket").isin(done))
 
@@ -287,8 +327,8 @@ def run_extraction(
         turns.persist()
 
     # per-bucket lineage counters (A7 generalization), collected to the
-    # driver (at most n_buckets rows): the one action that fills the cache
-    # also yields the todo buckets and the run totals
+    # driver as Arrow (at most n_buckets rows): the one action that fills
+    # the cache also yields the todo buckets and the run totals
     lineage = (
         turns.groupBy("bucket")
         .agg(
@@ -299,13 +339,13 @@ def run_extraction(
             F.countDistinct("conv_id").alias("n_convs"),
         )
         .withColumn("run_id", F.lit(run_id))
+        .toArrow()
     )
-    lineage_rows = lineage.collect()
-    todo = sorted(r["bucket"] for r in lineage_rows)
+    todo = sorted(lineage["bucket"].to_pylist())
     if not todo:
         turns.unpersist()
         return RunResult(run_id, n_buckets, 0, len(done), 0, 0,
-                          round(time.monotonic() - t0, 3))
+                         round(time.monotonic() - t0, 3))
 
     with _dynamic_partition_overwrite(spark):
         _write_bucketed(turns.drop("spans"), turns_dir)
@@ -314,31 +354,26 @@ def run_extraction(
             "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
         )
         _write_bucketed(spans, spans_dir, "span_seq")
-        # partitioned dynamic overwrite, NOT append — a crash-and-resume
-        # rerun of a bucket replaces its lineage row instead of duplicating
-        # it ("one row per bucket, from the attempt that durably wrote it")
-        (
-            _local_table(spark, lineage_rows, lineage.schema)
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(lineage_dir)
-        )
+    turns.unpersist()
 
+    # a rerun of a bucket replaces its lineage row instead of duplicating
+    # it ("one row per bucket, from the attempt that durably wrote it")
+    _commit_table(lineage_dir, lineage)
     # checkpoint LAST: a bucket enters the manifest only after its data,
     # spans, and lineage are durable (crash before this line ⇒ the bucket
     # reruns; dynamic overwrite makes the rerun idempotent)
-    manifest = _local_table(
-        spark, [(b, run_id) for b in todo], "bucket int, run_id string"
-    )
-    manifest.coalesce(1).write.mode("append").parquet(manifest_dir)
+    manifest = pa.table({
+        "bucket": pa.array(todo, pa.int32()),
+        "run_id": pa.array([run_id] * len(todo), pa.string()),
+    })
+    _commit_table(manifest_dir, manifest)
 
-    turns.unpersist()
     return RunResult(
         run_id=run_id,
         n_buckets=n_buckets,
         buckets_processed=len(todo),
         buckets_skipped=len(done),
-        n_turns=sum(r["n_turns"] for r in lineage_rows),
-        n_spans=sum(r["n_spans"] or 0 for r in lineage_rows),
+        n_turns=pc.sum(lineage["n_turns"]).as_py(),
+        n_spans=pc.sum(lineage["n_spans"]).as_py() or 0,
         wall_sec=round(time.monotonic() - t0, 3),
     )
