@@ -33,9 +33,6 @@ from text_extractor_for_bioeconomic_products_spark.operators import (  # noqa: E
     stringjoin,
     textstats,
 )
-from text_extractor_for_bioeconomic_products_spark.plans import (  # noqa: E402
-    versioned,
-)
 from text_extractor_for_bioeconomic_products_spark.sources import (  # noqa: E402
     avro,
     layout,
@@ -84,7 +81,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q.update(graph.QUERIES)
     q.update(profiling.QUERIES)
     q.update(layout.QUERIES)
-    q.update(versioned.QUERIES)
     q.update(avro.QUERIES)
     return q
 

@@ -24,9 +24,11 @@ larger than spark.sql.adaptive.advisoryPartitionSizeInBytes), not
 input splits × 4096.
 
 Resumability: rerunning with the same --output skips buckets already in
-the manifest, and returns without scanning the input when the manifest
-lists every bucket; a crashed run repeats only its unfinished buckets
-(idempotent dynamic partition overwrite).
+the manifest.  A run commits every bucket it scans, empty ones included,
+so a rerun over the same input returns without scanning it; a crashed
+run repeats only its unfinished buckets.  Each bucketed write is staged
+beside the live buckets and swapped in by rename after a commit record;
+a rerun first rolls an interrupted swap forward.
 
 Commit order: the bucketed data, then lineage/lineage.parquet, then
 manifest/manifest.parquet.  The driver writes each of the last two as

@@ -39,20 +39,31 @@ def test_run_extraction_full_and_resume(spark, transcripts_df, out_dir):
 def test_run_extraction_partial_resume(spark, transcripts_df, out_dir):
     """Simulate a crash after half the buckets: preload a partial manifest;
     the rerun must process exactly the missing buckets, idempotently."""
-    from pyspark.sql import functions as F
-
     full = run_extraction(spark, transcripts_df, out_dir + "_ref", run_id="ref", n_buckets=8)
 
-    # process only buckets 0..3 first (filter the input to simulate)
-    part_df = transcripts_df.filter(
-        F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int") < 4
-    )
-    r1 = run_extraction(spark, part_df, out_dir, run_id="r1", n_buckets=8)
-    # now run over the full input — only the remaining buckets execute
+    r1 = run_extraction(spark, transcripts_df, out_dir, run_id="r1", n_buckets=8)
+    _keep_manifest_buckets(out_dir, range(4))
+    # rerun over the same input — only the remaining buckets execute
     r2 = run_extraction(spark, transcripts_df, out_dir, run_id="r2", n_buckets=8)
-    assert r1.buckets_processed + r2.buckets_processed == full.buckets_processed
+    assert (r2.buckets_processed, r2.buckets_skipped) == (4, 4)
+    assert r1.buckets_processed == full.buckets_processed == 8
     total = spark.read.parquet(os.path.join(out_dir, "turns_extracted")).count()
     assert total == full.n_turns
+    assert _content_sum(spark, os.path.join(out_dir, "product_spans")) == \
+        _content_sum(spark, os.path.join(out_dir + "_ref", "product_spans"))
+
+
+def _keep_manifest_buckets(out_dir, keep):
+    """Cut the manifest down to the buckets in ``keep``: the state a run
+    that had committed only those buckets leaves behind."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    path = os.path.join(out_dir, "manifest", "manifest.parquet")
+    t = pq.read_table(path)
+    keep = pa.array(list(keep), t["bucket"].type)
+    pq.write_table(t.filter(pc.is_in(t["bucket"], value_set=keep)), path)
 
 
 def test_lineage_counters(spark, transcripts_df, out_dir):
@@ -461,29 +472,30 @@ def test_run_extraction_one_file_per_bucket(spark, transcripts_df, out_dir):
     import glob
     from pyspark.sql import functions as F
 
-    bucket = F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int")
     since = max(_sql_execution_ids(_sql_status_store(spark)), default=-1)
 
     def one_file(sub):
         assert glob.glob(os.path.join(out_dir, sub, "*")) == [
             os.path.join(out_dir, sub, sub + ".parquet")], sub
 
-    r1 = run_extraction(spark, transcripts_df.filter(bucket < 4), out_dir,
-                        run_id="r1", n_buckets=8)
-    assert r1.buckets_processed > 0
+    r1 = run_extraction(spark, transcripts_df, out_dir, run_id="r1", n_buckets=8)
+    assert r1.buckets_processed == 8
     one_file("lineage")
     one_file("manifest")
-    # resume over the full input: only the remaining buckets run
+    # resume after a partial commit: only the remaining buckets run
+    _keep_manifest_buckets(out_dir, range(4))
     r2 = run_extraction(spark, transcripts_df, out_dir, run_id="r2", n_buckets=8)
-    assert r2.buckets_processed > 0 and r2.buckets_skipped == r1.buckets_processed
+    assert (r2.buckets_processed, r2.buckets_skipped) == (4, 4)
     one_file("lineage")
     one_file("manifest")
 
-    n_buckets = r1.buckets_processed + r2.buckets_processed
+    n_buckets = len(_table_rows(os.path.join(out_dir, "lineage")))  # buckets with turns
     for sub in ("turns_extracted", "product_spans"):
         files = _files_per_bucket(os.path.join(out_dir, sub))
         assert len(files) == n_buckets, sub
         assert set(files.values()) == {1}, (sub, files)
+        # the commit leaves only the bucket dirs behind
+        assert sorted(os.listdir(os.path.join(out_dir, sub))) == sorted(files), sub
 
     turns = spark.read.parquet(os.path.join(out_dir, "turns_extracted"))
     expected = (
@@ -588,10 +600,12 @@ def test_run_extraction_rerun_keeps_one_manifest_row_per_bucket(
     r1 = run_extraction(spark, transcripts_df, out_dir, run_id="r1", n_buckets=8)
     r2 = run_extraction(spark, transcripts_df, out_dir, run_id="r2", n_buckets=8,
                         resume=False)
-    assert r2.buckets_processed == r1.buckets_processed
-    for sub in ("manifest", "lineage"):
+    assert r2.buckets_processed == r1.buckets_processed == 8
+    expected = {"manifest": 8,
+                "lineage": len(_files_per_bucket(os.path.join(out_dir, "turns_extracted")))}
+    for sub, n in expected.items():
         rows = _table_rows(os.path.join(out_dir, sub))
-        assert len(rows) == r1.buckets_processed, (sub, rows)
+        assert len(rows) == n, (sub, rows)
         assert {run for _, run in rows} == {"r2"}, (sub, rows)
 
 
@@ -644,19 +658,21 @@ def test_run_extraction_temp_leftover_skipped_then_removed(
     import pyarrow.parquet as pq
 
     r = run_extraction(spark, transcripts_df, out_dir, run_id="r1", n_buckets=8)
-    for sub in ("lineage", "manifest"):
+    expected = {"manifest": r.buckets_processed,
+                "lineage": len(_files_per_bucket(os.path.join(out_dir, "turns_extracted")))}
+    for sub, n in expected.items():
         table = os.path.join(out_dir, sub, sub + ".parquet")
         with open(table, "rb") as src, \
                 open(os.path.join(out_dir, sub, f".{sub}.parquet.dead.tmp"), "wb") as dst:
             dst.write(src.read()[:100])
         d = os.path.join(out_dir, sub)
-        assert spark.read.parquet(d).count() == r.buckets_processed
-        assert pq.read_table(d).num_rows == r.buckets_processed
+        assert spark.read.parquet(d).count() == n
+        assert pq.read_table(d).num_rows == n
     run_extraction(spark, transcripts_df, out_dir, run_id="r2", n_buckets=8,
                    resume=False)
-    for sub in ("lineage", "manifest"):
+    for sub, n in expected.items():
         assert os.listdir(os.path.join(out_dir, sub)) == [sub + ".parquet"], sub
-        assert len(_table_rows(os.path.join(out_dir, sub))) == r.buckets_processed
+        assert len(_table_rows(os.path.join(out_dir, sub))) == n
     assert not glob.glob(os.path.join(out_dir, "*", ".*.tmp"))
 
 
@@ -902,9 +918,9 @@ def test_merge_turns_keyed_upsert(spark, transcripts_df, tmp_path):
     assert after.groupBy("conv_id", "turn_idx").count().filter("count > 1").count() == 0
     # only the buckets holding new keys were rewritten
     assert 0 < len(stats["buckets_rewritten"]) <= 8
-    # the dynamic-overwrite conf is scoped to the write, not left on the
-    # shared session (a later plain partitioned overwrite elsewhere would
-    # silently become per-partition)
+    # the shared session keeps static partition overwrite: a dynamic mode
+    # left set would silently turn a later plain partitioned overwrite
+    # elsewhere into a per-partition one
     assert (
         spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower()
         == "static"
@@ -914,10 +930,10 @@ def test_merge_turns_keyed_upsert(spark, transcripts_df, tmp_path):
 def test_merge_turns_one_file_per_bucket(spark, transcripts_df, tmp_path):
     """merge_turns clusters the merged rows by bucket: a base merge and two
     upserts into the same bucket leave every bucket as one file instead
-    of adding a file per merge to each rewritten bucket.  The checkpoint
-    holds the one bucket exchange; each write sorts once, on a key that
-    begins ``bucket, conv_id, turn_idx``, and writes zstd pages with an
-    INT64 microsecond ``ts``."""
+    of adding a file per merge to each rewritten bucket.  Each write
+    reads the table directly (no checkpoint), holds the one bucket
+    exchange, sorts once, on a key that begins ``bucket, conv_id,
+    turn_idx``, and writes zstd pages with an INT64 microsecond ``ts``."""
     from pyspark.sql import functions as F
     from text_extractor_for_bioeconomic_products_spark.plans.pipeline import (
         merge_turns,
@@ -946,22 +962,23 @@ def test_merge_turns_one_file_per_bucket(spark, transcripts_df, tmp_path):
     (meta,) = spark.read.json(turns_dir + "_meta").collect()
     assert meta["n_buckets"] == 8 and isinstance(meta["n_buckets"], int)
 
-    checkpoints = writes = 0
+    writes = 0
     for nodes, _edges in _sql_graphs_since(spark, since):
         exchanges = [d for name, d in nodes.values() if name == "Exchange"]
-        if any("REBALANCE" in d for d in exchanges):
-            # the localCheckpoint of the merged rows
-            checkpoints += 1
-            assert len([d for d in exchanges
-                        if d.startswith("Exchange hashpartitioning(bucket")]) == 1, exchanges
         sink = [d for name, d in nodes.values() if name.startswith("Execute Insert")]
-        if not (sink and turns_dir + "," in sink[0]):
+        is_write = bool(sink) and turns_dir + "/.staging-" in sink[0]
+        # no checkpoint: the write is the only execution that rebalances
+        assert is_write or not any("REBALANCE" in d for d in exchanges), exchanges
+        if not is_write:
             continue
         writes += 1
-        assert not exchanges, sink[0]  # the write reads the checkpoint
+        (bucket_exchange,) = [d for d in exchanges
+                              if d.startswith("Exchange hashpartitioning(bucket")]
+        assert "REBALANCE" in bucket_exchange, bucket_exchange
         (sort,) = [d for name, d in nodes.values() if name == "Sort"]
         assert _sort_keys(sort) == ["bucket", "conv_id", "turn_idx"], sort
-    assert checkpoints == writes == 3
+    assert writes == 3
+    assert sorted(os.listdir(turns_dir)) == _bucket_dirs(turns_dir)  # no leftovers
     _assert_bucket_files_layout(turns_dir)
     base.unpersist()
 
@@ -1003,8 +1020,9 @@ def test_merge_turns_rejects_bad_inputs(spark, transcripts_df, tmp_path):
 
 
 def test_merge_turns_spark_jobs(spark, transcripts_df, tmp_path):
-    """An upsert into an existing table runs one pre-write aggregate and
-    no Spark job for the ``_meta`` sidecar: at most 7 jobs per call."""
+    """An upsert into an existing table runs one pre-write aggregate, no
+    checkpoint, and no Spark job for the ``_meta`` sidecar or the commit:
+    at most 6 jobs per call."""
     from text_extractor_for_bioeconomic_products_spark.plans.pipeline import (
         merge_turns,
     )
@@ -1016,7 +1034,7 @@ def test_merge_turns_spark_jobs(spark, transcripts_df, tmp_path):
     n, stats = _spark_jobs(spark, lambda: merge_turns(
         spark, turns_dir, base.limit(5), n_buckets=8))
     assert stats["n_upserted"] == 5
-    assert n <= 7, n
+    assert n <= 6, n
     for nodes, _edges in _sql_graphs_since(spark, since):
         assert not any(turns_dir + "_meta" in d for _, d in nodes.values())
     base.unpersist()
@@ -1044,6 +1062,207 @@ def test_merge_turns_reads_spark_written_meta(spark, transcripts_df, tmp_path):
     merge_turns(spark, turns_dir, base.limit(1), n_buckets=8)
     (meta,) = spark.read.json(meta_dir).collect()
     assert meta["n_buckets"] == 8
+
+
+def test_run_extraction_resume_skips_empty_buckets(spark, transcripts_df, out_dir):
+    """Every bucket a run scans is committed, one the input has no rows
+    for included, so a resume over the same input runs no Spark job.  At
+    8 buckets the fixture leaves a bucket empty; were it left out of the
+    manifest, every resume would rescan the input for it."""
+    run_extraction(spark, transcripts_df, out_dir, run_id="r1", n_buckets=8)
+    with_rows = _bucket_dirs(os.path.join(out_dir, "turns_extracted"))
+    assert len(with_rows) < 8  # the case under test
+    assert len(_table_rows(os.path.join(out_dir, "lineage"))) == len(with_rows)
+    assert [b for b, _ in _table_rows(os.path.join(out_dir, "manifest"))] == list(range(8))
+    n, r2 = _spark_jobs(spark, lambda: run_extraction(
+        spark, transcripts_df, out_dir, run_id="r2", n_buckets=8))
+    assert (r2.buckets_processed, r2.buckets_skipped) == (0, 8)
+    assert n == 0, n
+
+
+CRASH_POINTS = ("staged", "recorded", "mid_swap", "swapped")
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _bucket_dirs(table_dir):
+    return sorted(n for n in os.listdir(table_dir) if n.startswith("bucket="))
+
+
+def _leftovers(table_dir):
+    """Staging dirs and commit records left in a bucketed table."""
+    return [n for n in os.listdir(table_dir)
+            if n.startswith(".staging-") or n == "_pending.json"]
+
+
+def _inject_crash(monkeypatch, point):
+    """Make the next bucketed-table commit fail at ``point``:
+
+    staged    after the staging write, before the record is published;
+    recorded  right after the record is published;
+    mid_swap  with one live bucket removed and its staged twin not moved;
+    swapped   after every bucket moved, before the record is cleared."""
+    import shutil
+
+    from text_extractor_for_bioeconomic_products_spark.plans import pipeline
+
+    publish, rename, rmtree = pipeline._publish, os.rename, shutil.rmtree
+
+    def crash_publish(path, name, write):
+        if name == pipeline.PENDING and point == "staged":
+            raise _Crash(point)
+        publish(path, name, write)
+        if name == pipeline.PENDING and point == "recorded":
+            raise _Crash(point)
+
+    def crash_rename(src, dst):
+        if os.path.basename(os.path.dirname(src)).startswith(".staging-"):
+            raise _Crash(point)
+        rename(src, dst)
+
+    def crash_rmtree(path, *args, **kwargs):
+        if os.path.basename(path).startswith(".staging-"):
+            raise _Crash(point)
+        rmtree(path, *args, **kwargs)
+
+    if point in ("staged", "recorded"):
+        monkeypatch.setattr(pipeline, "_publish", crash_publish)
+    elif point == "mid_swap":
+        monkeypatch.setattr(os, "rename", crash_rename)
+    else:
+        monkeypatch.setattr(shutil, "rmtree", crash_rmtree)
+
+
+def _assert_crashed_at(table_dir, live_before, point):
+    names = os.listdir(table_dir)
+    assert len([n for n in names if n.startswith(".staging-")]) == 1, names
+    assert ("_pending.json" in names) == (point != "staged"), names
+    missing = set(live_before) - set(_bucket_dirs(table_dir))
+    assert len(missing) == (point == "mid_swap"), (point, missing)
+
+
+def _copy_turns_table(turns_dir, dst):
+    import shutil
+
+    shutil.copytree(turns_dir, dst)
+    shutil.copytree(turns_dir + "_meta", dst + "_meta")
+    return dst
+
+
+@pytest.fixture(scope="module")
+def merge_case(spark, transcripts_df, tmp_path_factory):
+    """(a merged base table, an upsert delta of 3 updates and 2 inserts,
+    the content sum of the table after a clean upsert of the delta)."""
+    from pyspark.sql import functions as F
+    from text_extractor_for_bioeconomic_products_spark.plans.pipeline import (
+        merge_turns,
+    )
+
+    root = tmp_path_factory.mktemp("merge_case")
+    base = extract_turns(transcripts_df).drop("spans")
+    first = base.orderBy("conv_id", "turn_idx")
+    delta = first.limit(3).withColumn("lang", F.lit("MERGED")).unionByName(
+        first.limit(2).withColumn("turn_idx", F.col("turn_idx") + 100000))
+    base_dir = str(root / "base")
+    merge_turns(spark, base_dir, base, n_buckets=8)
+    clean_dir = _copy_turns_table(base_dir, str(root / "clean"))
+    merge_turns(spark, clean_dir, delta, n_buckets=8)
+    return base_dir, delta, _content_sum(spark, clean_dir)
+
+
+@pytest.mark.parametrize("point", CRASH_POINTS)
+def test_merge_turns_crash_at_each_commit_point(
+    spark, merge_case, tmp_path, monkeypatch, point
+):
+    """An upsert that crashes at any point of its commit, then the
+    stream's replay of the same batch, leave the table a clean upsert
+    leaves, and no staging dir or commit record.  At ``mid_swap`` a
+    bucket's old rows exist only in the staging dir; the replay's
+    roll-forward keeps them."""
+    from text_extractor_for_bioeconomic_products_spark.plans.pipeline import (
+        merge_turns,
+    )
+
+    base_dir, delta, clean_sum = merge_case
+    turns_dir = _copy_turns_table(base_dir, str(tmp_path / "turns"))
+    live = _bucket_dirs(turns_dir)
+    _inject_crash(monkeypatch, point)
+    with pytest.raises(_Crash):
+        merge_turns(spark, turns_dir, delta, n_buckets=8)
+    monkeypatch.undo()
+    _assert_crashed_at(turns_dir, live, point)
+
+    stats = merge_turns(spark, turns_dir, delta, n_buckets=8)  # the replay
+    assert stats["n_upserted"] == 5
+    assert _content_sum(spark, turns_dir) == clean_sum
+    assert _leftovers(turns_dir) == []
+
+
+def test_merge_turns_first_write_crash_then_replay(
+    spark, transcripts_df, tmp_path, monkeypatch
+):
+    """A first write that crashes before its commit record leaves a table
+    dir holding only a staging dir; the replay clears it away and writes
+    the table as a clean first write does."""
+    from text_extractor_for_bioeconomic_products_spark.plans.pipeline import (
+        merge_turns,
+    )
+
+    base = (extract_turns(transcripts_df).drop("spans")
+            .orderBy("conv_id", "turn_idx").limit(50))
+    clean_dir, turns_dir = str(tmp_path / "clean"), str(tmp_path / "turns")
+    merge_turns(spark, clean_dir, base, n_buckets=8)
+    _inject_crash(monkeypatch, "staged")
+    with pytest.raises(_Crash):
+        merge_turns(spark, turns_dir, base, n_buckets=8)
+    monkeypatch.undo()
+    assert [n[:9] for n in os.listdir(turns_dir)] == [".staging-"]
+
+    merge_turns(spark, turns_dir, base, n_buckets=8)
+    assert _content_sum(spark, turns_dir) == _content_sum(spark, clean_dir)
+    assert _leftovers(turns_dir) == []
+
+
+@pytest.fixture(scope="module")
+def extraction_case(spark, transcripts_df, tmp_path_factory):
+    """(the out dir of a committed run, its turns and spans content sums)."""
+    out = str(tmp_path_factory.mktemp("extraction_case") / "out")
+    run_extraction(spark, transcripts_df, out, run_id="clean", n_buckets=8)
+    return out, {sub: _content_sum(spark, os.path.join(out, sub))
+                 for sub in ("turns_extracted", "product_spans")}
+
+
+@pytest.mark.parametrize("point", CRASH_POINTS)
+def test_run_extraction_rerun_crash_at_each_commit_point(
+    spark, transcripts_df, extraction_case, tmp_path, monkeypatch, point
+):
+    """A ``resume=False`` rerun that crashes at any point of its turns
+    commit, then the next default run, leave the turns and spans of a
+    clean run and no staging dir or commit record.  At ``mid_swap`` a
+    turns bucket is gone while the manifest still lists it; the default
+    run scans nothing, and its roll-forward restores the bucket."""
+    import shutil
+
+    clean_dir, sums = extraction_case
+    out_dir = str(tmp_path / "out")
+    shutil.copytree(clean_dir, out_dir)
+    turns_dir = os.path.join(out_dir, "turns_extracted")
+    live = _bucket_dirs(turns_dir)
+    _inject_crash(monkeypatch, point)
+    with pytest.raises(_Crash):
+        run_extraction(spark, transcripts_df, out_dir, run_id="c1", n_buckets=8,
+                       resume=False)
+    monkeypatch.undo()
+    _assert_crashed_at(turns_dir, live, point)
+
+    r = run_extraction(spark, transcripts_df, out_dir, run_id="c2", n_buckets=8)
+    assert (r.buckets_processed, r.buckets_skipped) == (0, 8)
+    for sub, h in sums.items():
+        d = os.path.join(out_dir, sub)
+        assert _content_sum(spark, d) == h, sub
+        assert _leftovers(d) == [], sub
 
 
 def test_xml_html_excel_sinks(spark, transcripts_df, tmp_path):
@@ -1092,35 +1311,6 @@ def test_xml_html_excel_sinks(spark, transcripts_df, tmp_path):
         summary = ET.fromstring(z.read("xl/worksheets/sheet3.xml"))
         srows = summary.findall(f"{ns}sheetData/{ns}row")
         assert len(srows) >= 2  # header + ≥1 category census row
-
-
-def test_streaming_microbatch_rate(spark, transcripts_df, tmp_path):
-    """Continuous-trigger micro-batches sustain a real per-batch cadence:
-    one file per trigger, all rows delivered exactly once, steady-state
-    batch latency bounded (measured ~0.8-1.0 s median on 4 cores for
-    ~450-turn batches; the bound leaves headroom for VM noise)."""
-    from text_extractor_for_bioeconomic_products_spark.streaming.pipeline import (
-        measure_streaming_rate,
-    )
-
-    in_dir = str(tmp_path / "rate_in")
-    transcripts_df.repartition(8).write.parquet(in_dir)
-    stats = measure_streaming_rate(
-        spark, in_dir, str(tmp_path / "rate_out"), timeout_sec=120
-    )
-    assert stats["complete"]
-    assert stats["n_rows"] == transcripts_df.count()
-    assert stats["n_batches"] >= 5  # genuinely incremental, not one gulp
-    assert stats["median_batch_ms"] is not None
-    # wall-clock latency asserted only when the env opts in: this VM's
-    # co-tenancy swings the same job ±40% (BENCH.md), so an unconditional
-    # tight bound is flake, not signal; correctness assertions above stay
-    # unconditional
-    if os.environ.get("SPARK_GRAFT_ASSERT_LATENCY"):
-        assert stats["median_batch_ms"] < 2500
-    # parquet sink holds exactly the streamed rows (exactly-once manifest)
-    out = spark.read.parquet(str(tmp_path / "rate_out" / "rate_stream"))
-    assert out.count() == stats["n_rows"]
 
 
 def test_star_contraction_matches_pointer_jumping(spark):
@@ -1322,8 +1512,8 @@ def test_spark_submit_pyfiles_job(spark, transcripts_df, tmp_path):
         return json.loads(out.stdout.strip().splitlines()[-1])
 
     first = submit("sub1")
-    # only non-empty buckets are processed (20 convs over 8 hash buckets)
-    assert first["buckets_processed"] > 0 and first["buckets_skipped"] == 0
+    # every bucket is scanned and committed, an empty one included
+    assert (first["buckets_processed"], first["buckets_skipped"]) == (8, 0)
     assert first["n_turns"] == n_turns_expected
 
     second = submit("sub2")
@@ -1824,436 +2014,6 @@ def test_mp4_mjpeg_roundtrip_and_probe():
         probe_mp4(lied)
 
 
-def test_versioned_table_time_travel_and_rollback(spark, transcripts_df, tmp_path):
-    """The Iceberg metadata-layer analog: immutable files + versioned
-    manifests give time travel (read any snapshot), metadata-only
-    rollback, keyed-merge semantics per commit, and CAS conflict
-    refusal."""
-    from pyspark.sql import functions as F
-
-    from text_extractor_for_bioeconomic_products_spark.plans.versioned import (
-        CommitConflict,
-        commit_merge,
-        read_version,
-        rollback,
-    )
-
-    table = str(tmp_path / "vtable")
-    turns = extract_turns(transcripts_df).drop("spans").cache()
-    first = turns.filter("turn_idx < 2")
-    r1 = commit_merge(spark, table, first, run_id="r1")
-    assert r1["version"] == 1
-    v1_count = read_version(spark, table).count()
-    assert v1_count == first.count()
-
-    # second commit: updates (overlapping keys) + inserts
-    second = turns.filter("turn_idx < 4").withColumn(
-        "n_tokens", F.col("n_tokens") + 1000
-    )
-    r2 = commit_merge(spark, table, second, run_id="r2")
-    assert r2["version"] == 2
-    v2 = read_version(spark, table)
-    assert v2.count() == turns.filter("turn_idx < 4").count()
-    # keyed merge: overlapping keys took the new values
-    assert v2.filter("turn_idx < 2").filter("n_tokens < 1000").count() == 0
-    assert (
-        v2.groupBy("conv_id", "turn_idx").count().filter("count > 1").count()
-        == 0
-    )
-    # time travel: v1 still reads exactly as committed
-    assert read_version(spark, table, version=1).count() == v1_count
-    assert (
-        read_version(spark, table, version=1)
-        .filter("n_tokens >= 1000").count() == 0
-    )
-
-    # rollback is metadata-only and reversible
-    rollback(table, 1)
-    assert read_version(spark, table).count() == v1_count
-    rollback(table, 2)
-    assert read_version(spark, table).count() == v2.count()
-
-    # CAS: a writer whose base moved must refuse
-    import text_extractor_for_bioeconomic_products_spark.plans.versioned as V
-
-    real_current = V._current_version
-    _calls = {"n": 0}
-
-    def stale_current(d):
-        # first read (the writer's base) is stale v1; the CAS-time read
-        # sees the true pointer (v2) — i.e. someone committed under us.
-        # (A CONSISTENT v1 reading is now a legitimate rollback state:
-        # versions are allocated above the historical max, so such a
-        # writer correctly lands a new branch instead of colliding.)
-        _calls["n"] += 1
-        return 1 if _calls["n"] == 1 else real_current(d)
-
-    V._current_version = stale_current
-    try:
-        with pytest.raises((CommitConflict, Exception)) as ei:
-            commit_merge(spark, table, first, run_id="r3")
-    finally:
-        V._current_version = real_current
-    # either the pointer check or the manifest hard-link check fired
-    assert "Conflict" in type(ei.value).__name__ or "published" in str(ei.value) or "base was" in str(ei.value)
-
-
-def test_versioned_table_history_and_immutability(spark, transcripts_df, tmp_path):
-    """Five commits: every historical version stays readable with its
-    exact row count, and the files backing version 1 are byte-identical
-    after four later commits (immutability — the property snapshot
-    isolation rests on)."""
-    import glob
-    import hashlib
-
-    from text_extractor_for_bioeconomic_products_spark.plans.versioned import (
-        commit_merge,
-        read_version,
-    )
-
-    table = str(tmp_path / "vt")
-    turns = extract_turns(transcripts_df).drop("spans").cache()
-    counts = {}
-    for v in range(1, 6):
-        batch = turns.filter(f"turn_idx < {v}")
-        r = commit_merge(spark, table, batch, run_id=f"r{v}")
-        assert r["version"] == v
-        counts[v] = read_version(spark, table).count()
-        assert counts[v] == batch.count()
-        if v == 1:
-            v1_files = sorted(glob.glob(f"{table}/data/part-r1-*/*.parquet"))
-            v1_hashes = [
-                hashlib.sha256(open(f, "rb").read()).hexdigest()
-                for f in v1_files
-            ]
-    # history: every version still reads its own snapshot
-    for v in range(1, 6):
-        assert read_version(spark, table, version=v).count() == counts[v]
-    # immutability: v1's physical files never changed
-    now = [
-        hashlib.sha256(open(f, "rb").read()).hexdigest()
-        for f in sorted(glob.glob(f"{table}/data/part-r1-*/*.parquet"))
-    ]
-    assert now == v1_hashes and v1_files
-
-
-def test_versioned_table_rollback_then_commit(spark, transcripts_df, tmp_path):
-    """The r3-ADVICE failure mode: after rollback() the next commit must
-    NOT collide with the abandoned branch's manifest.  Versions are
-    allocated above the historical max (Iceberg-monotonic), parent
-    records the rolled-back base, and the table stays writable."""
-    from text_extractor_for_bioeconomic_products_spark.plans.versioned import (
-        commit_merge,
-        read_version,
-        rollback,
-    )
-
-    table = str(tmp_path / "vt_rb")
-    turns = extract_turns(transcripts_df).drop("spans").cache()
-    commit_merge(spark, table, turns.filter("turn_idx < 1"), run_id="a")
-    commit_merge(spark, table, turns.filter("turn_idx < 3"), run_id="b")
-    rb = rollback(table, 1)
-    # rollback is itself a FORWARD metadata-only commit (v3 carrying
-    # v1's files by reference) — versions never regress, so the r3
-    # failure mode (post-rollback commit colliding with the abandoned
-    # branch's manifest) is unrepresentable
-    assert rb == 3
-    r = commit_merge(spark, table, turns.filter("turn_idx = 4"), run_id="c")
-    assert r["version"] == 4 and r["parent"] == 3
-    got = read_version(spark, table)
-    assert got.count() == (
-        turns.filter("turn_idx < 1").count() + turns.filter("turn_idx = 4").count()
-    )
-    # the abandoned branch is still time-travel readable
-    assert read_version(spark, table, version=2).count() == turns.filter(
-        "turn_idx < 3"
-    ).count()
-
-
-def test_versioned_table_concurrent_committers_rebase(
-    spark, transcripts_df, tmp_path
-):
-    """Two interleaved committers with DISJOINT key sets: the loser
-    rebases and both land (Iceberg's commit-retry); with OVERLAPPING
-    keys the loser raises CommitConflict even with retries — a genuine
-    write-write race is never silently merged."""
-    import text_extractor_for_bioeconomic_products_spark.plans.versioned as V
-    from text_extractor_for_bioeconomic_products_spark.plans.versioned import (
-        CommitConflict,
-        commit_merge,
-        read_version,
-    )
-
-    table = str(tmp_path / "vt_cc")
-    turns = extract_turns(transcripts_df).drop("spans").cache()
-    base_rows = turns.filter("turn_idx < 1")
-    commit_merge(spark, table, base_rows, run_id="base")
-
-    # interleave: A reads base=1, then B commits v2 under it.  Simulate
-    # A's stale read by monkeypatching the FIRST _current_version call.
-    a_rows = turns.filter("turn_idx = 2")
-    b_rows = turns.filter("turn_idx = 3")
-    commit_b = commit_merge(spark, table, b_rows, run_id="B")
-    assert commit_b["version"] == 2
-
-    real_current = V._current_version
-    calls = {"n": 0}
-
-    def stale_once(d):
-        calls["n"] += 1
-        return 1 if calls["n"] == 1 else real_current(d)
-
-    V._current_version = stale_once
-    try:
-        r = commit_merge(spark, table, a_rows, run_id="A", retries=2)
-    finally:
-        V._current_version = real_current
-    assert r["version"] == 3 and r["rebases"] == 1 and r["parent"] == 2
-    got = read_version(spark, table)
-    assert got.count() == base_rows.count() + a_rows.count() + b_rows.count()
-
-    # overlapping keys: same interleave shape, but the concurrent commit
-    # (B2, landing v4) writes exactly the keys A2 wants to write — the
-    # rebase validation must refuse no matter how many retries remain
-    import pytest as _pytest
-
-    commit_merge(spark, table, turns.filter("turn_idx = 3"), run_id="B2")
-
-    def stale_at_3_once(d):
-        calls["n"] += 1
-        return 3 if calls["n"] == 1 else real_current(d)
-
-    calls["n"] = 0
-    V._current_version = stale_at_3_once
-    try:
-        with _pytest.raises(CommitConflict, match="overlapping keys"):
-            commit_merge(
-                spark, table, turns.filter("turn_idx = 3"), run_id="A2",
-                retries=5,
-            )
-    finally:
-        V._current_version = real_current
-
-
-def test_versioned_table_loser_cleanup_and_vacuum(
-    spark, transcripts_df, tmp_path
-):
-    """A terminally-conflicted writer deletes every data file it wrote
-    (no orphans), and vacuum() removes crash debris without touching any
-    manifest-referenced file — including rolled-back branches."""
-    import glob
-    import os
-
-    import pytest as _pytest
-
-    import text_extractor_for_bioeconomic_products_spark.plans.versioned as V
-    from text_extractor_for_bioeconomic_products_spark.plans.versioned import (
-        CommitConflict,
-        commit_merge,
-        read_version,
-        vacuum,
-    )
-
-    table = str(tmp_path / "vt_vac")
-    turns = extract_turns(transcripts_df).drop("spans").cache()
-    commit_merge(spark, table, turns.filter("turn_idx < 2"), run_id="a")
-    before = set(glob.glob(f"{table}/data/*"))
-
-    real_current = V._current_version
-    calls = {"n": 0}
-
-    def stale_base_once(d):  # stale base read; retries=0 -> terminal
-        calls["n"] += 1
-        return 0 if calls["n"] == 1 else real_current(d)
-
-    V._current_version = stale_base_once
-    try:
-        with _pytest.raises(CommitConflict):
-            commit_merge(spark, table, turns.filter("turn_idx = 3"), run_id="x")
-    finally:
-        V._current_version = real_current
-    # loser cleaned up after itself
-    assert set(glob.glob(f"{table}/data/*")) == before
-
-    # crash debris: a data dir no manifest references + a stranded
-    # manifest temp (crashed mid-_publish)
-    orphan = os.path.join(table, "data", "part-crashed-deadbeef-0.parquet")
-    os.makedirs(orphan)
-    open(os.path.join(orphan, "junk"), "w").write("x")
-    tmp_manifest = os.path.join(table, "meta", "v99.json.tmp.deadbeef")
-    open(tmp_manifest, "w").write("{}")
-    # default grace window: a FRESH unreferenced file is treated as a
-    # possibly-in-flight writer's and NOT swept (sweeping it would
-    # corrupt a commit that links right after)
-    rep = vacuum(table)
-    assert rep["orphans_removed"] == 0 and os.path.exists(orphan)
-    # past the grace window both debris kinds go
-    rep = vacuum(table, min_age_sec=0)
-    assert rep["orphans_removed"] == 2
-    assert not os.path.exists(orphan) and not os.path.exists(tmp_manifest)
-    assert set(glob.glob(f"{table}/data/*")) == before
-    assert read_version(spark, table).count() == turns.filter("turn_idx < 2").count()
-
-
-def test_versioned_vacuum_cwd_independent(spark, transcripts_df, tmp_path):
-    """Manifests store table_dir-RELATIVE paths, so vacuum computes the
-    same live-file set from any cwd (the r4 ADVICE medium: manifests
-    stored paths as written, and realpath resolved relative spellings
-    against the CALLER's cwd — vacuuming from a different cwd missed
-    every live file and swept them after the grace)."""
-    import json as _json
-    import os
-
-    from text_extractor_for_bioeconomic_products_spark.plans.versioned import (
-        commit_merge,
-        read_version,
-        vacuum,
-    )
-
-    table = str(tmp_path / "vt_cwd")
-    turns = extract_turns(transcripts_df).drop("spans")
-    commit_merge(spark, table, turns.filter("turn_idx < 2"), run_id="a")
-    commit_merge(spark, table, turns.filter("turn_idx = 2"), run_id="b")
-    n = read_version(spark, table).count()
-
-    # every manifest path is relative to the table root
-    for f in os.listdir(os.path.join(table, "meta")):
-        man = _json.load(open(os.path.join(table, "meta", f)))
-        paths = [p for fs in man["buckets"].values() for p in fs]
-        paths += man["key_files"] + man["new_files"]
-        assert paths and not any(os.path.isabs(p) for p in paths)
-
-    # vacuum with zero grace from a DIFFERENT cwd: nothing live is swept
-    old_cwd = os.getcwd()
-    os.chdir("/")
-    try:
-        rep = vacuum(table, min_age_sec=0)
-    finally:
-        os.chdir(old_cwd)
-    assert rep["orphans_removed"] == 0
-    assert read_version(spark, table).count() == n
-
-
-def test_versioned_legacy_manifest_conflict_fallback(
-    spark, transcripts_df, tmp_path
-):
-    """Rebase conflict-validation never silently skips a commit: for a
-    pre-key_files manifest (neither key_files nor new_files — the
-    round-3 format) the validator falls back to the bucket files that
-    commit introduced (diff vs its parent), so a rebasing writer still
-    sees the legacy commit's keys.  Conservative: survivor rows in
-    those files count as conflicts."""
-    import json as _json
-    import os
-
-    import pytest as _pytest
-
-    import text_extractor_for_bioeconomic_products_spark.plans.versioned as V
-    from text_extractor_for_bioeconomic_products_spark.plans.versioned import (
-        CommitConflict,
-        commit_merge,
-    )
-
-    table = str(tmp_path / "vt_legacy")
-    turns = extract_turns(transcripts_df).drop("spans").cache()
-    commit_merge(spark, table, turns.filter("turn_idx < 2"), run_id="a")
-    # strip v1 down to the legacy (round-3) manifest shape
-    mpath = os.path.join(table, "meta", "v1.json")
-    man = _json.load(open(mpath))
-    del man["key_files"], man["new_files"]
-    os.unlink(mpath)  # _publish hard-links; rewrite in place
-    _json.dump(man, open(mpath, "w"))
-    assert V._upserted_key_files_between(table, 0, 1)  # diff vs v0 = all
-
-    # a stale-base writer whose keys OVERLAP the legacy commit must
-    # raise CommitConflict even with retries available
-    real_current, calls = V._current_version, {"n": 0}
-
-    def stale_once(d):
-        calls["n"] += 1
-        return 0 if calls["n"] == 1 else real_current(d)
-
-    V._current_version = stale_once
-    try:
-        with _pytest.raises(CommitConflict, match="overlapping keys"):
-            commit_merge(
-                spark, table, turns.filter("turn_idx < 1"),
-                run_id="x", retries=2,
-            )
-    finally:
-        V._current_version = real_current
-
-    # disjoint keys still rebase fine across the legacy manifest
-    calls["n"] = 0
-    V._current_version = stale_once
-    try:
-        res = commit_merge(
-            spark, table, turns.filter("turn_idx = 3"),
-            run_id="y", retries=2,
-        )
-    finally:
-        V._current_version = real_current
-    assert res["version"] == 2 and res["rebases"] == 1
-
-
-def test_versioned_vacuum_during_inflight_commit(
-    spark, transcripts_df, tmp_path
-):
-    """Vacuum racing a slow commit: the writer's data files exist but
-    its manifest is not yet linked when vacuum runs.  Under the default
-    grace window the fresh unreferenced files survive and the in-flight
-    writer still lands; its snapshot reads back complete."""
-    import text_extractor_for_bioeconomic_products_spark.plans.versioned as V
-    from text_extractor_for_bioeconomic_products_spark.plans.versioned import (
-        commit_merge,
-        read_version,
-        vacuum,
-    )
-
-    table = str(tmp_path / "vt_race")
-    turns = extract_turns(transcripts_df).drop("spans").cache()
-    commit_merge(spark, table, turns.filter("turn_idx < 2"), run_id="a")
-
-    real_publish, swept = V._publish, {}
-
-    def vacuum_then_publish(table_dir, version, doc):
-        # the race: a retention sweep fires between the writer's data
-        # write and its commit link
-        swept.update(vacuum(table_dir))
-        return real_publish(table_dir, version, doc)
-
-    V._publish = vacuum_then_publish
-    try:
-        res = commit_merge(spark, table, turns.filter("turn_idx = 3"), run_id="b")
-    finally:
-        V._publish = real_publish
-    assert swept["orphans_removed"] == 0  # grace protected the in-flight files
-    assert res["version"] == 2
-    expect = turns.filter("turn_idx < 2").count() + turns.filter("turn_idx = 3").count()
-    assert read_version(spark, table).count() == expect
-
-
-def test_versioned_history_query(spark, sf001_dir):
-    """The driver-gate query: deterministic census of 3 commits + 1
-    rollback + 1 rebased racer, with time-travel row counts."""
-    import __spark_entry__ as entry_mod
-
-    rows = entry_mod.queries()["versioned_table_history"](
-        spark, sf001_dir
-    ).collect()
-    assert [
-        (r["version"], r["parent"], r["run_id"], r["is_rollback"],
-         r["n_upserted"], r["n_rows_at_version"])
-        for r in rows
-    ] == [
-        (1, 0, "ingest", False, 8, 8),
-        (2, 1, "append", False, 5, 13),
-        (3, 2, "revise", False, 2, 14),
-        (4, 3, "rollback-to-2", True, 0, 13),
-        (5, 4, "racer", False, 1, 14),
-    ]
-
-
 def test_png_roundtrip_property():
     """Hypothesis battery: PNG encode→decode is EXACT for arbitrary
     pixel content and dimensions (the lossless contract), including the
@@ -2370,54 +2130,6 @@ def test_mp4_roundtrip_property():
     roundtrip()
 
 
-def test_versioned_rebase_ignores_survivor_rows(spark, transcripts_df, tmp_path):
-    """Conflict validation is against the keys a concurrent commit
-    UPSERTED (the manifest's key_files), not the full rewritten bucket
-    files: a bucket file also carries the bucket's untouched survivor
-    rows, and counting those as conflicts would spuriously refuse any
-    update of an existing key that merely shares a bucket with
-    concurrent activity."""
-    import text_extractor_for_bioeconomic_products_spark.plans.versioned as V
-    from text_extractor_for_bioeconomic_products_spark.plans.versioned import (
-        commit_merge,
-        read_version,
-    )
-    from pyspark.sql import functions as F
-
-    table = str(tmp_path / "vt_sv")
-    turns = extract_turns(transcripts_df).drop("spans").cache()
-    # v1: the existing key set (turn_idx = 0) — one bucket per conv_id
-    base_rows = turns.filter("turn_idx = 0")
-    commit_merge(spark, table, base_rows, run_id="base")
-
-    # B upserts brand-new keys (turn_idx = 5) that land in the SAME
-    # buckets (same conv_ids); its bucket files therefore carry the
-    # turn_idx=0 survivors
-    commit_merge(spark, table, turns.filter("turn_idx = 5"), run_id="B")
-
-    # A concurrently UPDATES the existing turn_idx=0 keys from base v1.
-    # B never wrote those keys — A must rebase and land, not conflict.
-    real_current = V._current_version
-    calls = {"n": 0}
-
-    def stale_once(d):
-        calls["n"] += 1
-        return 1 if calls["n"] == 1 else real_current(d)
-
-    updated = base_rows.withColumn("n_tokens", F.col("n_tokens") + 7777)
-    V._current_version = stale_once
-    try:
-        r = commit_merge(spark, table, updated, run_id="A", retries=2)
-    finally:
-        V._current_version = real_current
-    assert r["rebases"] == 1 and r["version"] == 3
-    got = read_version(spark, table)
-    # A's update applied, B's inserts intact, no duplicate keys
-    assert got.filter("turn_idx = 0").filter("n_tokens < 7777").count() == 0
-    assert got.filter("turn_idx = 5").count() == turns.filter("turn_idx = 5").count()
-    assert got.groupBy("conv_id", "turn_idx").count().filter("count > 1").count() == 0
-
-
 def test_jpeg_rejects_non_ycbcr():
     """Grayscale (1-component) baseline JPEG must refuse loudly — the
     YCbCr math would otherwise silently decode it green-tinted."""
@@ -2434,346 +2146,6 @@ def test_jpeg_rejects_non_ycbcr():
     gray = b"\xff\xd8" + sof + b"\xff\xd9"
     with _pytest.raises(NotImplementedError, match="3-component"):
         decode_jpeg(gray)
-
-
-def test_versioned_schema_evolution_add_and_missing_columns(spark, tmp_path):
-    """Iceberg add-column semantics: a commit carrying a NEW column
-    null-fills survivors and untouched buckets; a later commit MISSING a
-    column null-fills its own rows instead of dropping the column; time
-    travel to a pre-evolution snapshot still returns the old schema; and
-    the manifest records each commit's written column list."""
-    from text_extractor_for_bioeconomic_products_spark.plans.versioned import (
-        _manifest,
-        commit_merge,
-        read_version,
-    )
-
-    table = str(tmp_path / "vtable_evo")
-
-    def df(rows, schema):
-        return spark.createDataFrame(rows, schema)
-
-    base = [(f"c{i}", t, f"c{i} turn {t}") for i in range(6) for t in (0, 1)]
-    commit_merge(
-        spark, table,
-        df(base, "conv_id string, turn_idx int, text string"),
-        run_id="v1", n_buckets=4,
-    )
-    assert set(read_version(spark, table, 1).columns) == {
-        "conv_id", "turn_idx", "text"
-    }
-
-    # v2 adds `lang`, touching only conv c0 (other buckets keep v1 files)
-    commit_merge(
-        spark, table,
-        df([("c0", 0, "c0 revised", "en")],
-           "conv_id string, turn_idx int, text string, lang string"),
-        run_id="v2", n_buckets=4,
-    )
-    cur = read_version(spark, table)
-    assert set(cur.columns) == {"conv_id", "turn_idx", "text", "lang"}
-    rows = {(r["conv_id"], r["turn_idx"]): r for r in cur.collect()}
-    assert rows[("c0", 0)]["lang"] == "en"
-    assert rows[("c0", 0)]["text"] == "c0 revised"
-    # survivor in the same bucket and rows in untouched buckets: lang null
-    assert rows[("c0", 1)]["lang"] is None
-    assert all(
-        r["lang"] is None for k, r in rows.items() if k != ("c0", 0)
-    )
-    assert len(rows) == len(base)
-
-    # v3 lacks `text`: the column must survive with nulls for v3's rows
-    commit_merge(
-        spark, table,
-        df([("c0", 0, "fr"), ("c9", 5, "de")],
-           "conv_id string, turn_idx int, lang string"),
-        run_id="v3", n_buckets=4,
-    )
-    cur3 = {(r["conv_id"], r["turn_idx"]): r
-            for r in read_version(spark, table).collect()}
-    assert set(read_version(spark, table).columns) == {
-        "conv_id", "turn_idx", "text", "lang"
-    }
-    assert cur3[("c0", 0)]["lang"] == "fr" and cur3[("c0", 0)]["text"] is None
-    assert cur3[("c9", 5)]["lang"] == "de" and cur3[("c9", 5)]["text"] is None
-    assert cur3[("c1", 0)]["text"] == "c1 turn 0"
-
-    # time travel: pre-evolution snapshots keep their old schema
-    assert set(read_version(spark, table, 1).columns) == {
-        "conv_id", "turn_idx", "text"
-    }
-    # manifests record what each commit wrote
-    assert _manifest(table, 2)["columns"] == [
-        "conv_id", "turn_idx", "text", "lang"
-    ]
-    assert _manifest(table, 3)["columns"] == ["conv_id", "turn_idx", "lang"]
-
-
-def test_versioned_bucket_count_guard_and_rebucketing_compaction(
-    spark, transcripts_df, tmp_path,
-):
-    """n_buckets is a TABLE property: before the guard, one 8-bucket
-    plus one 3-bucket commit duplicated 67 keys (same key hashed into
-    two bucket numberings).  Now the manifest records it, later commits
-    auto-resolve it, an explicit disagreeing value refuses, and
-    compact(to_buckets=...) is the sanctioned re-bucketing — content-
-    identical, recorded, and terminal for any in-flight stale-keyed
-    rebase."""
-    from pyspark.sql import functions as F
-
-    from text_extractor_for_bioeconomic_products_spark.plans.versioned import (
-        CommitConflict,
-        _manifest,
-        commit_merge,
-        compact,
-        read_version,
-        version_changes,
-    )
-
-    table = str(tmp_path / "vt_bk")
-    turns = extract_turns(transcripts_df.limit(400)).drop("spans").cache()
-    commit_merge(spark, table, turns.filter("turn_idx < 3"), run_id="a",
-                 n_buckets=8)
-    assert _manifest(table, 1)["n_buckets"] == 8
-
-    # the exact pre-guard corruption recipe now refuses
-    with pytest.raises(ValueError, match="duplicate keys across buckets"):
-        commit_merge(spark, table, turns.limit(50), run_id="bad", n_buckets=3)
-
-    # None auto-resolves to the recorded count; no duplicates ever
-    commit_merge(spark, table, turns, run_id="b")
-    assert _manifest(table, 2)["n_buckets"] == 8
-    v2 = read_version(spark, table)
-    assert v2.count() == turns.count()
-    assert v2.groupBy("conv_id", "turn_idx").count() \
-             .filter("count > 1").count() == 0
-
-    # re-bucketing compaction: 8 -> 2 buckets, content identical
-    out = compact(spark, table, to_buckets=2)
-    assert out["version"] == 3 and out["n_buckets"] == 2
-    assert out["files_after"] <= 2 < out["files_before"]
-    assert _manifest(table, 3)["n_buckets"] == 2
-    v3 = read_version(spark, table)
-    assert sorted(map(str, v3.collect())) == sorted(map(str, v2.collect()))
-    # CDC agrees: compaction is a content no-op
-    assert version_changes(spark, table, 2, 3).count() == 0
-
-    # later merges auto-resolve the NEW count and stay duplicate-free
-    commit_merge(
-        spark, table,
-        turns.limit(100).withColumn("n_tokens", F.col("n_tokens") + 5),
-        run_id="c",
-    )
-    assert _manifest(table, 4)["n_buckets"] == 2
-    v4 = read_version(spark, table)
-    assert v4.count() == turns.count()
-    assert v4.groupBy("conv_id", "turn_idx").count() \
-             .filter("count > 1").count() == 0
-
-    # an in-flight writer keyed under a STALE bucket count must fail its
-    # rebase terminally: simulate by making the writer read base v4
-    # while a concurrent compaction re-buckets to 4
-    import text_extractor_for_bioeconomic_products_spark.plans.versioned as V
-    real_current = V._current_version
-    state = {"n": 0}
-
-    def stale_then_real(d):
-        state["n"] += 1
-        if state["n"] == 1:  # writer resolves base BEFORE the compaction
-            return 4
-        return real_current(d)
-
-    # deterministic sequencing: compact first, then a writer whose base
-    # was resolved before it (stale_then_real returns 4 exactly once)
-    compact(spark, table, to_buckets=4)
-    V._current_version = stale_then_real
-    try:
-        with pytest.raises(CommitConflict, match="re-bucketing"):
-            commit_merge(
-                spark, table, turns.limit(10), run_id="stale", retries=3,
-            )
-    finally:
-        V._current_version = real_current
-
-
-def test_version_changes_cdc_and_as_of_timestamp(spark, transcripts_df, tmp_path):
-    """Snapshot changelog (Delta-CDF analog): the keyed diff between
-    snapshots classifies inserts / update-postimages / deletes exactly
-    against hand-derivable expectations, a rollback surfaces as the
-    inverse change set, and version_at resolves AS-OF timestamps to the
-    manifest commit clock."""
-    import os
-    import time
-
-    from pyspark.sql import functions as F
-
-    from text_extractor_for_bioeconomic_products_spark.plans.versioned import (
-        commit_merge,
-        read_version,
-        rollback,
-        version_at,
-        version_changes,
-    )
-
-    table = str(tmp_path / "vt_cdc")
-    turns = extract_turns(transcripts_df.limit(400)).drop("spans").cache()
-    first = turns.filter("turn_idx < 2").cache()
-    commit_merge(spark, table, first, run_id="a")
-    second = turns.filter("turn_idx < 4").withColumn(
-        "n_tokens", F.col("n_tokens") + 1000).cache()
-    commit_merge(spark, table, second, run_id="b")
-
-    # v1 -> v2: every turn_idx<2 key updated (+1000 tokens), every
-    # 2<=turn_idx<4 key inserted, nothing deleted
-    ch = version_changes(spark, table, 1, 2).cache()
-    census = {r["change_type"]: r["n"] for r in
-              ch.groupBy("change_type").agg(F.count("*").alias("n")).collect()}
-    n_upd = first.count()
-    n_ins = turns.filter("turn_idx >= 2 AND turn_idx < 4").count()
-    assert census == {"insert": n_ins, "update_postimage": n_upd}
-    # postimages carry the TO-snapshot content
-    assert ch.filter("change_type = 'update_postimage'") \
-             .filter("n_tokens < 1000").count() == 0
-    assert ch.filter("change_type = 'insert'") \
-             .filter("turn_idx < 2").count() == 0
-
-    # rollback to v1 → v3; v2 -> v3 is the exact inverse: the inserted
-    # keys delete, the updated keys update back to pre-1000 values
-    rollback(table, 1)
-    inv = version_changes(spark, table, 2, 3).cache()
-    icensus = {r["change_type"]: r["n"] for r in
-               inv.groupBy("change_type").agg(F.count("*").alias("n")).collect()}
-    assert icensus == {"delete": n_ins, "update_postimage": n_upd}
-    assert inv.filter("change_type = 'update_postimage'") \
-              .filter("n_tokens >= 1000").count() == 0
-    # v1 -> v3 is a no-op changelog (rollback restored v1's content)
-    assert version_changes(spark, table, 1, 3).count() == 0
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="empty changelog"):
-        version_changes(spark, table, 2, 2)
-
-    # AS-OF timestamp resolves on the manifest commit clock
-    meta = os.path.join(table, "meta")
-    t_v2 = os.path.getmtime(os.path.join(meta, "v2.json"))
-    assert version_at(table, t_v2) == 2
-    assert version_at(table, time.time() + 60) == 3
-    with _pytest.raises(ValueError, match="no snapshot"):
-        version_at(table, 1.0)
-    # the resolved snapshot reads exactly as that version
-    assert read_version(spark, table, version_at(table, t_v2)).count() == \
-        read_version(spark, table, version=2).count()
-
-
-def test_iceberg_metadata_export_structure(spark, transcripts_df, tmp_path):
-    """The versioned chain exports in the Iceberg v2 metadata LAYOUT:
-    per-snapshot metadata.json (format-version 2, snapshot list,
-    refs/main), a manifest-list Avro whose single manifest_file row
-    carries spec field-ids, and a manifest Avro whose manifest_entry
-    rows resolve to the real data files with footer-true record counts
-    — the current snapshot's total equals read_version().count().
-    Re-export of an unchanged table is byte-identical."""
-    import hashlib
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from text_extractor_for_bioeconomic_products_spark.plans.iceberg_export import (
-        MANIFEST_ENTRY_SCHEMA,
-        export_iceberg_metadata,
-    )
-    from text_extractor_for_bioeconomic_products_spark.plans.versioned import (
-        commit_merge,
-        read_version,
-        rollback,
-    )
-    from text_extractor_for_bioeconomic_products_spark.sources.avro import (
-        read_avro_bytes,
-        read_avro_header,
-    )
-
-    table = str(tmp_path / "vt_ice")
-    turns = extract_turns(transcripts_df.limit(300)).drop("spans").cache()
-    commit_merge(spark, table, turns.filter("turn_idx < 2"), run_id="a")
-    commit_merge(
-        spark, table,
-        turns.filter("turn_idx < 4").withColumn(
-            "n_tokens", F.col("n_tokens") + 1000),
-        run_id="b",
-    )
-    rollback(table, 1)
-
-    census = export_iceberg_metadata(table)
-    md = census["metadata_dir"]
-    assert census["n_snapshots"] == 3 and census["current_snapshot_id"] == 3
-
-    doc = json.load(open(os.path.join(md, "v3.metadata.json")))
-    assert doc["format-version"] == 2
-    assert doc["current-snapshot-id"] == 3
-    assert doc["refs"]["main"]["snapshot-id"] == 3
-    assert [s["snapshot-id"] for s in doc["snapshots"]] == [1, 2, 3]
-    assert doc["snapshots"][1]["parent-snapshot-id"] == 1
-    # the rollback snapshot is metadata-only: summary op 'replace'
-    assert doc["snapshots"][2]["summary"]["operation"] == "replace"
-    # earlier metadata files exist too (one per snapshot)
-    assert {"v1.metadata.json", "v2.metadata.json"} <= set(os.listdir(md))
-    # schema carries ids for every column incl. key cols
-    types = {f["name"]: f["type"] for f in doc["schemas"][0]["fields"]}
-    assert {"conv_id", "turn_idx"} <= set(types)
-    # INT64 UTC-adjusted microseconds: Iceberg's type for TimestampType
-    assert types["ts"] == "timestamptz"
-
-    # manifest-list → manifest → data files chain resolves with real
-    # counts; the avro schemas embed the spec field-ids
-    ml = open(os.path.join(md, doc["snapshots"][-1]["manifest-list"]), "rb").read()
-    mf_schema, mf_rows = read_avro_bytes(ml)
-    assert {f.get("field-id") for f in mf_schema["fields"]} >= {500, 501, 503}
-    assert len(mf_rows) == 1
-    manifest_path = mf_rows[0][0]
-    mbytes = open(os.path.join(md, manifest_path), "rb").read()
-    assert mf_rows[0][1] == len(mbytes)  # manifest_length is real
-    me_schema, entries = read_avro_bytes(mbytes)
-    assert me_schema == MANIFEST_ENTRY_SCHEMA
-    assert all(e[4]["file_format"] == "PARQUET" for e in entries)
-    total = sum(e[4]["record_count"] for e in entries)
-    assert total == read_version(spark, table).count()
-    # v3 is the rollback: zero ADDED files, all EXISTING
-    assert all(e[0] == 0 for e in entries)
-    # OCF header parses standalone (magic, codec, sync) and carries
-    # the spec's required manifest header keys
-    _s, codec, _sync, _pos = read_avro_header(mbytes)
-    assert codec == "deflate"
-    raw_head = mbytes[:4096]
-    for key in (b"schema", b"partition-spec", b"format-version", b"content"):
-        assert key in raw_head
-    _s, codec_ml, _sync, _pos = read_avro_header(ml)
-    assert b"snapshot-id" in ml[:4096] and b"sequence-number" in ml[:4096]
-
-    # deterministic re-export
-    h1 = {f: hashlib.md5(open(os.path.join(md, f), "rb").read()).hexdigest()
-          for f in census["files"]}
-    export_iceberg_metadata(table)
-    h2 = {f: hashlib.md5(open(os.path.join(md, f), "rb").read()).hexdigest()
-          for f in census["files"]}
-    assert h1 == h2
-
-    # the metadata is COMPLETE, not just well-formed: reading every
-    # snapshot THROUGH the exported chain equals the versioned reader
-    from text_extractor_for_bioeconomic_products_spark.plans.iceberg_export import (
-        read_iceberg_snapshot,
-    )
-    for v in (1, 2, 3):
-        via_ice = read_iceberg_snapshot(spark, md, snapshot_id=v)
-        direct = read_version(spark, table, version=v)
-        assert sorted(map(str, via_ice.collect())) == sorted(
-            map(str, direct.collect()))
-    # default = current snapshot; unknown snapshot refuses
-    assert read_iceberg_snapshot(spark, md).count() == \
-        read_version(spark, table).count()
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="not in the metadata chain"):
-        read_iceberg_snapshot(spark, md, snapshot_id=99)
 
 
 def test_snm_finds_prefix_neighbors_and_bounds_pairs(spark):

@@ -13,7 +13,8 @@ Layout under ``out_dir``:
                        (conv_id, turn_idx, span_seq) order
     lineage/lineage.parquet    one row per bucket (from the run that last
                        wrote it): counters only, no timings
-    manifest/manifest.parquet  processed-bucket ids (the checkpoint)
+    manifest/manifest.parquet  ids of every bucket a run scanned, empty
+                       ones included (the checkpoint)
 
 Every bucketed file is written the way Iceberg writes a table with a
 declared sort order: zstd pages and ``ts`` as an INT64 microsecond
@@ -21,11 +22,16 @@ timestamp adjusted to UTC (``session.get_spark``), rows sorted on the
 table key (``_write_bucketed``).  So a file's bytes depend only on the
 rows it holds, not on the order in which the input was scanned.
 
-Idempotency: the data writes use dynamic partition overwrite — re-running
-a bucket replaces exactly that bucket's files (the parquet analog of
-Iceberg ``MERGE INTO`` keyed on (conv_id, turn_idx); swap the writer for
-Iceberg `writeTo(...).overwritePartitions()` on a cluster with an Iceberg
-catalog).
+Idempotency: re-running a bucket replaces exactly that bucket's files
+(the parquet analog of Iceberg ``MERGE INTO`` keyed on (conv_id,
+turn_idx); swap the writer for Iceberg `writeTo(...).overwritePartitions()`
+on a cluster with an Iceberg catalog).  Every bucketed write, here and in
+``merge_turns``, commits the same way (``_write_bucketed``): Spark writes
+the output into a hidden staging dir beside the live buckets, the driver
+publishes a ``_pending.json`` record naming it, then renames each staged
+bucket over the live one.  ``_finish_pending`` does that swap, and it is
+idempotent, so each entry point runs it first: a crash before the record
+leaves the old buckets, a crash after it rolls forward to the new ones.
 
 Commit order: data, then lineage, then the manifest.  Lineage and
 manifest are tiny (≤ ``n_buckets`` rows) and stay one file each: the
@@ -33,9 +39,9 @@ driver reads the current rows, replaces those of the buckets this run
 wrote, writes the result to a dot-named temp file beside the table and
 renames it into place (``_commit_table``).  The rename is atomic, so a
 reader sees the old table or the new one, and a crash before the
-manifest's rename reruns the run's buckets.  These tables, and
-``merge_turns``'s ``_meta`` sidecar, are written with pyarrow and
-``json`` on the driver and run no Spark job; they need a local (or
+manifest's rename reruns the run's buckets.  The commit records, these
+tables and ``merge_turns``'s ``_meta`` sidecar are written with pyarrow
+and ``json`` on the driver and run no Spark job; they need a local (or
 locally mounted) path.
 
 Scale: the bucket column is both the resume unit and the output partition
@@ -54,6 +60,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from contextlib import contextmanager
@@ -69,6 +76,7 @@ from pyspark.sql import functions as F
 from ..operators.extract import explode_spans, extract_turns
 
 N_BUCKETS_DEFAULT = 64
+PENDING = "_pending.json"  # a bucketed table's commit record
 
 
 @contextmanager
@@ -86,16 +94,12 @@ def _scoped_conf(spark: SparkSession, key: str, value: str):
             spark.conf.set(key, prior)
 
 
-def _dynamic_partition_overwrite(spark: SparkSession):
-    """Scope partitionOverwriteMode=dynamic to one write job.  Leaving it
-    set on the shared session would silently turn a later plain
-    mode('overwrite').partitionBy(...) elsewhere into a per-partition
-    overwrite that leaves stale partitions behind."""
-    return _scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-
 @dataclass
 class RunResult:
+    """``buckets_processed`` counts the buckets this run scanned and
+    committed (empty ones included), ``buckets_skipped`` those the
+    manifest already held; the two add up to ``n_buckets``."""
+
     run_id: str
     n_buckets: int
     buckets_processed: int
@@ -120,23 +124,39 @@ def _cluster_by_bucket(df: DataFrame) -> DataFrame:
 
 
 def _write_bucketed(df: DataFrame, path: str, *tiebreak: str) -> None:
-    """Overwrite ``df`` into ``path`` partitioned by bucket, each file's
-    rows in ``(conv_id, turn_idx, *tiebreak)`` order: the one physical
-    layout of every bucketed output.  Call under
-    ``_dynamic_partition_overwrite``.
+    """Write ``df`` into ``path`` partitioned by bucket, each file's rows
+    in ``(conv_id, turn_idx, *tiebreak)`` order, replacing exactly the
+    buckets that ``df`` holds: the one physical layout, and the one
+    commit path, of every bucketed output.
+
+    Spark writes the whole output with a plain overwrite into a fresh
+    ``path/.staging-<uuid>``, which readers of ``path`` skip.  The driver
+    then publishes ``path/_pending.json`` naming that dir (the commit
+    point) and swaps the staged buckets in (``_finish_pending``).  A crash
+    before the record leaves the live buckets untouched; a crash after it
+    rolls forward at the next entry.  No live file goes before the write
+    has ended, so ``df`` may read ``path`` itself.
 
     A partitioned write plans a sort on ``bucket`` alone in its own
     stage; this states the whole key in that same place, so the write
     still sorts once.  A sort placed earlier is lost before the write:
-    the explode of the spans and ``merge_turns``'s checkpoint of an
-    adaptive plan both drop the ordering, and the writer's bucket-only
-    sort is not stable once it spills."""
+    the explode of the spans and the bucket exchange both drop the
+    ordering, and the writer's bucket-only sort is not stable once it
+    spills."""
+    staging = f".staging-{uuid.uuid4().hex}"
     (
         df.sortWithinPartitions("bucket", "conv_id", "turn_idx", *tiebreak)
         .write.mode("overwrite")
         .partitionBy("bucket")
-        .parquet(path)
+        .parquet(os.path.join(path, staging))
     )
+
+    def write_record(tmp: str) -> None:
+        with open(tmp, "w") as fh:
+            fh.write(json.dumps({"staging": staging}) + "\n")
+
+    _publish(path, PENDING, write_record)
+    _finish_pending(path)
 
 
 def _table_files(path: str) -> List[str]:
@@ -174,6 +194,35 @@ def _publish(path: str, name: str, write: Callable[[str], None]) -> None:
     for e in os.scandir(path):
         if e.name != name and e.is_file():
             os.remove(e.path)
+
+
+def _finish_pending(path: str) -> None:
+    """Complete the bucket swap that ``path/_pending.json`` records, then
+    clear away what a crashed write left: the recovery run at every entry
+    as well as the last step of ``_write_bucketed``.
+
+    Each ``bucket=*`` dir of the named staging dir replaces the live dir
+    of that name; a bucket moved by an earlier attempt is no longer
+    staged, so a rerun skips it.  Then the staging dir and the record go,
+    and so does any ``.staging-*`` dir that no record names (a write that
+    crashed before its commit).  A no-op when ``path`` does not exist."""
+    record = os.path.join(path, PENDING)
+    if os.path.isfile(record):
+        with open(record) as fh:
+            staging = os.path.join(path, json.loads(fh.readline())["staging"])
+        if os.path.isdir(staging):
+            for name in sorted(os.listdir(staging)):
+                if name.startswith("bucket="):
+                    live = os.path.join(path, name)
+                    if os.path.isdir(live):
+                        shutil.rmtree(live)
+                    os.rename(os.path.join(staging, name), live)
+            shutil.rmtree(staging)
+        os.remove(record)
+    if os.path.isdir(path):
+        for e in os.scandir(path):
+            if e.name.startswith(".staging-"):
+                shutil.rmtree(e.path)
 
 
 def _commit_table(path: str, rows: pa.Table) -> None:
@@ -226,7 +275,10 @@ def merge_turns(
 
     Only buckets containing new keys are read and rewritten: existing rows
     in those buckets survive via an anti join on the key, everything else
-    on disk is untouched (dynamic partition overwrite).  ``new_turns`` is
+    on disk is untouched.  The write reads the affected buckets' current
+    files directly and commits through ``_write_bucketed``, so a crash
+    at any point leaves either the old buckets or the merged ones, and a
+    replay of the same batch gives the same table.  ``new_turns`` is
     extraction output (``extract_turns(...).drop("spans")``).
     """
     # the bucket modulus is part of the dataset layout: merging with a
@@ -239,41 +291,43 @@ def merge_turns(
             f"merge_turns: dataset written with n_buckets={stored}, "
             f"merge called with {n_buckets}"
         )
+    _finish_pending(turns_dir)  # roll an interrupted commit forward first
     new_b = _with_bucket(new_turns, n_buckets).persist()
-    # one aggregate gives the affected buckets, the row count and the
-    # MERGE contract check: the source must be key-unique (Iceberg raises
-    # "multiple matching rows"; silently keeping both would corrupt the
-    # target's key uniqueness).  A key lies in one bucket, so the source
-    # has duplicates exactly when Σ rows > Σ distinct keys; the key is
-    # counted as a struct so that a null turn_idx is a key like any other.
-    per_bucket = (
-        new_b.groupBy("bucket")
-        .agg(
-            F.count("*").alias("rows"),
-            F.countDistinct(F.struct("conv_id", "turn_idx")).alias("keys"),
+    try:
+        # one aggregate gives the affected buckets, the row count and the
+        # MERGE contract check: the source must be key-unique (Iceberg
+        # raises "multiple matching rows"; silently keeping both would
+        # corrupt the target's key uniqueness).  A key lies in one bucket,
+        # so the source has duplicates exactly when Σ rows > Σ distinct
+        # keys; the key is counted as a struct so that a null turn_idx is a
+        # key like any other.
+        per_bucket = (
+            new_b.groupBy("bucket")
+            .agg(
+                F.count("*").alias("rows"),
+                F.countDistinct(F.struct("conv_id", "turn_idx")).alias("keys"),
+            )
+            .collect()
         )
-        .collect()
-    )
-    n_upserted = sum(r["rows"] for r in per_bucket)
-    dup_rows = n_upserted - sum(r["keys"] for r in per_bucket)
-    if dup_rows:
+        n_upserted = sum(r["rows"] for r in per_bucket)
+        dup_rows = n_upserted - sum(r["keys"] for r in per_bucket)
+        if dup_rows:
+            raise ValueError(
+                f"merge_turns: {dup_rows} duplicate (conv_id, turn_idx) rows in new_turns"
+            )
+        affected = sorted(r["bucket"] for r in per_bucket)
+        if os.path.isdir(turns_dir) and any(
+            n.startswith("bucket=") for n in os.listdir(turns_dir)
+        ):
+            existing = spark.read.parquet(turns_dir).filter(F.col("bucket").isin(affected))
+            keys = new_b.select("conv_id", "turn_idx").distinct()
+            kept = existing.join(keys, ["conv_id", "turn_idx"], "left_anti")
+            merged = kept.unionByName(new_b.select(*kept.columns))
+        else:
+            merged = new_b  # first write — plain insert
+        _write_bucketed(_cluster_by_bucket(merged), turns_dir)
+    finally:
         new_b.unpersist()
-        raise ValueError(
-            f"merge_turns: {dup_rows} duplicate (conv_id, turn_idx) rows in new_turns"
-        )
-    affected = sorted(r["bucket"] for r in per_bucket)
-    if os.path.isdir(turns_dir):
-        existing = spark.read.parquet(turns_dir).filter(F.col("bucket").isin(affected))
-        keys = new_b.select("conv_id", "turn_idx").distinct()
-        kept = existing.join(keys, ["conv_id", "turn_idx"], "left_anti")
-        merged = kept.unionByName(new_b.select(*kept.columns))
-    else:
-        merged = new_b  # first write — plain insert
-    # the merged affected buckets must be fully materialized before the
-    # overwrite deletes their source files
-    merged = _cluster_by_bucket(merged).localCheckpoint(eager=True)
-    with _dynamic_partition_overwrite(spark):
-        _write_bucketed(merged, turns_dir)
     if stored is None:
         # first write, or adopting a pre-sidecar dataset at the caller's
         # declared modulus
@@ -282,7 +336,6 @@ def merge_turns(
                 fh.write(json.dumps({"n_buckets": n_buckets}) + "\n")
 
         _publish(meta_dir, "n_buckets.json", write_meta)
-    new_b.unpersist()
     return {"buckets_rewritten": affected, "n_upserted": n_upserted}
 
 
@@ -296,6 +349,12 @@ def run_extraction(
 ) -> RunResult:
     """Execute the full extract job, skipping already-processed buckets.
 
+    Every bucket the run scans enters the manifest, a bucket the input
+    has no rows for included, so a resume over the same input scans
+    nothing.  The manifest assumes the input does not change
+    between runs: rows that a later input adds to a committed bucket are
+    not read.  ``resume=False`` rescans and rewrites every bucket.
+
     ``run_id`` is caller-supplied (deterministic; never from the clock —
     SURVEY §7.4 rule 4 keeps lineage out of the equality path).
     """
@@ -307,8 +366,13 @@ def run_extraction(
     manifest_dir = os.path.join(out_dir, "manifest")
 
     _table_files(lineage_dir)  # refuse an older layout before any work
+    # a data write that a crash interrupted is rolled forward (or cleared
+    # away) before the manifest is trusted
+    _finish_pending(turns_dir)
+    _finish_pending(spans_dir)
     done = _processed_buckets(manifest_dir) if resume else []
-    if set(range(n_buckets)) <= set(done):
+    scanned = sorted(set(range(n_buckets)) - set(done))
+    if not scanned:
         # every bucket is committed: nothing to scan
         return RunResult(run_id, n_buckets, 0, n_buckets, 0, 0,
                          round(time.monotonic() - t0, 3))
@@ -326,54 +390,52 @@ def run_extraction(
     ):
         turns.persist()
 
-    # per-bucket lineage counters (A7 generalization), collected to the
-    # driver as Arrow (at most n_buckets rows): the one action that fills
-    # the cache also yields the todo buckets and the run totals
-    lineage = (
-        turns.groupBy("bucket")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.sum("n_spans").alias("n_spans"),
-            F.sum("n_tokens").alias("n_tokens"),
-            F.sum(F.when(F.col("parse_error"), 1).otherwise(0)).alias("n_errors"),
-            F.countDistinct("conv_id").alias("n_convs"),
+    try:
+        # per-bucket lineage counters (A7 generalization), collected to the
+        # driver as Arrow (at most n_buckets rows): the one action that
+        # fills the cache also yields the run totals.  Only buckets with
+        # turns have a row.
+        lineage = (
+            turns.groupBy("bucket")
+            .agg(
+                F.count("*").alias("n_turns"),
+                F.sum("n_spans").alias("n_spans"),
+                F.sum("n_tokens").alias("n_tokens"),
+                F.sum(F.when(F.col("parse_error"), 1).otherwise(0)).alias("n_errors"),
+                F.countDistinct("conv_id").alias("n_convs"),
+            )
+            .withColumn("run_id", F.lit(run_id))
+            .toArrow()
         )
-        .withColumn("run_id", F.lit(run_id))
-        .toArrow()
-    )
-    todo = sorted(lineage["bucket"].to_pylist())
-    if not todo:
+        if lineage.num_rows:
+            _write_bucketed(turns.drop("spans"), turns_dir)
+            # bucket is a pure function of conv_id — recompute, don't re-join
+            spans = explode_spans(turns).withColumn(
+                "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+            )
+            _write_bucketed(spans, spans_dir, "span_seq")
+            # a rerun of a bucket replaces its lineage row instead of
+            # duplicating it ("one row per bucket, from the attempt that
+            # durably wrote it")
+            _commit_table(lineage_dir, lineage)
+    finally:
         turns.unpersist()
-        return RunResult(run_id, n_buckets, 0, len(done), 0, 0,
-                         round(time.monotonic() - t0, 3))
 
-    with _dynamic_partition_overwrite(spark):
-        _write_bucketed(turns.drop("spans"), turns_dir)
-        # bucket is a pure function of conv_id — recompute, don't re-join
-        spans = explode_spans(turns).withColumn(
-            "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-        )
-        _write_bucketed(spans, spans_dir, "span_seq")
-    turns.unpersist()
-
-    # a rerun of a bucket replaces its lineage row instead of duplicating
-    # it ("one row per bucket, from the attempt that durably wrote it")
-    _commit_table(lineage_dir, lineage)
     # checkpoint LAST: a bucket enters the manifest only after its data,
     # spans, and lineage are durable (crash before this line ⇒ the bucket
-    # reruns; dynamic overwrite makes the rerun idempotent)
+    # reruns, and its rewrite replaces exactly that bucket)
     manifest = pa.table({
-        "bucket": pa.array(todo, pa.int32()),
-        "run_id": pa.array([run_id] * len(todo), pa.string()),
+        "bucket": pa.array(scanned, pa.int32()),
+        "run_id": pa.array([run_id] * len(scanned), pa.string()),
     })
     _commit_table(manifest_dir, manifest)
 
     return RunResult(
         run_id=run_id,
         n_buckets=n_buckets,
-        buckets_processed=len(todo),
-        buckets_skipped=len(done),
-        n_turns=pc.sum(lineage["n_turns"]).as_py(),
+        buckets_processed=len(scanned),
+        buckets_skipped=n_buckets - len(scanned),
+        n_turns=pc.sum(lineage["n_turns"]).as_py() or 0,
         n_spans=pc.sum(lineage["n_spans"]).as_py() or 0,
         wall_sec=round(time.monotonic() - t0, 3),
     )

@@ -435,8 +435,9 @@ def run_streaming_near_dup_admission(
     the corpus never got) or duplicates them (corpus-first: the replay's
     index misses what the corpus holds) depending on write order.  One
     physical commit point keeps replay exact; a deployment that wants a
-    materialized index commits corpus + index in one atomic snapshot —
-    exactly what ``plans.versioned.commit_merge`` provides.
+    materialized index commits corpus + index in one atomic snapshot (one
+    table-format commit, e.g. an Iceberg snapshot), which no job here
+    needs.
     """
     from pyspark.sql import Window
 
@@ -555,70 +556,3 @@ def run_streaming_near_dup_admission(
             q.stop()
     return seen
 
-
-def measure_streaming_rate(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    max_files_per_trigger: int = 1,
-    timeout_sec: int = 120,
-) -> dict:
-    """Continuous micro-batch run (processingTime=0) over a pre-split
-    input directory; returns per-batch telemetry from the query's
-    progress log — the streaming-latency twin of bench.py's batch
-    throughput measurement.
-
-    Output: {n_batches, n_rows, complete, batch_ms (sorted, batch 0
-    excluded — first-trigger JVM/worker warmup), median_batch_ms,
-    rows_per_sec_per_batch}.  ``complete`` is False when the deadline
-    expired before every input row was processed — telemetry from such a
-    run is partial and must not be read as a full-corpus measurement.
-    """
-    import json as _json
-    import time as _time
-
-    total = spark.read.parquet(input_dir).count()
-    stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
-    turns = extract_turns(stream).drop("spans")
-    q = (
-        turns.writeStream.format("parquet")
-        .option("path", os.path.join(out_dir, "rate_stream"))
-        .option("checkpointLocation", os.path.join(out_dir, "_rate_checkpoint"))
-        .outputMode("append")
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    # recentProgress is a ring buffer (spark.sql.streaming.
-    # numRecentProgressUpdates, default 100): merge each poll's snapshot
-    # into a dict keyed by batchId so runs of >100 micro-batches neither
-    # hang the completion check nor drop early batches from telemetry
-    seen: dict = {}
-    deadline = _time.monotonic() + timeout_sec
-    while _time.monotonic() < deadline:
-        for p in q.recentProgress:
-            d = _json.loads(p.json)
-            seen[d["batchId"]] = d
-        if (
-            sum(p["numInputRows"] for p in seen.values()) >= total
-            and not q.status["isDataAvailable"]
-        ):
-            break
-        _time.sleep(0.3)
-    for p in q.recentProgress:
-        d = _json.loads(p.json)
-        seen[d["batchId"]] = d
-    ps = [p for p in seen.values() if p["numInputRows"] > 0]
-    q.stop()
-    steady = [p for p in ps if p["batchId"] > 0]
-    batch_ms = sorted(p["durationMs"]["triggerExecution"] for p in steady)
-    n_rows = sum(p["numInputRows"] for p in ps)
-    return {
-        "n_batches": len(ps),
-        "n_rows": n_rows,
-        "complete": n_rows >= total,
-        "batch_ms": batch_ms,
-        "median_batch_ms": batch_ms[len(batch_ms) // 2] if batch_ms else None,
-        "rows_per_sec_per_batch": [
-            round(p["processedRowsPerSecond"], 1) for p in steady
-        ],
-    }
