@@ -10,10 +10,9 @@
 ``counts``   watermarked 10-min windowed span counts
 ``merge``    foreachBatch keyed MERGE upsert into the bucketed turns
              table (effectively-once under checkpoint replay)
-``admit``    foreachBatch content-hash corpus admission (streaming twin
-             of incremental_dedup: keep-first within batch, anti-join
-             the standing admitted corpus; replay-idempotent by the
-             admission semantics themselves)
+``admit``    foreachBatch content-hash corpus admission (keep-first
+             within batch, anti-join the standing admitted corpus;
+             replay-idempotent by the admission semantics themselves)
 ``near-admit`` foreachBatch NEAR-dup admission: minhash/LSH bands +
              within-batch connected components, band-index anti-join
              vs the standing corpus (the streaming fuzzy-dedup stack)

@@ -983,6 +983,38 @@ def test_merge_turns_one_file_per_bucket(spark, transcripts_df, tmp_path):
     base.unpersist()
 
 
+def test_merge_turns_bucket_files_share_one_schema(spark, transcripts_df, tmp_path):
+    """Every bucket file of a merged table carries one schema, whatever
+    its history: a bucket first written from extraction output and one
+    rewritten by an upsert (whose kept rows come back from parquet) have
+    equal footers.  The upsert re-applies three rows unchanged, so the
+    table's content sum must not move: no value, null or not, changes."""
+    import glob
+
+    import pyarrow.parquet as pq
+    from text_extractor_for_bioeconomic_products_spark.plans.pipeline import (
+        merge_turns,
+    )
+
+    turns_dir = str(tmp_path / "turns")
+    base = extract_turns(transcripts_df).drop("spans")
+    merge_turns(spark, turns_dir, base, n_buckets=8)
+    before = _content_sum(spark, turns_dir)
+    stats = merge_turns(
+        spark, turns_dir, base.orderBy("conv_id", "turn_idx").limit(3), n_buckets=8
+    )
+    files = glob.glob(os.path.join(turns_dir, "bucket=*", "*.parquet"))
+    assert len(stats["buckets_rewritten"]) < len(files)  # both histories present
+    footers = set()
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        columns = tuple((c.name, c.physical_type, c.max_definition_level)
+                        for c in md.schema)
+        footers.add((columns, md.metadata[b"org.apache.spark.sql.parquet.row.metadata"]))
+    assert len(footers) == 1, footers
+    assert _content_sum(spark, turns_dir) == before
+
+
 def test_streaming_dedup_exactly_once_per_key(spark, transcripts_df, tmp_path):
     """At-least-once input (every turn delivered twice across two files)
     → exactly one output row per (conv_id, turn_idx)."""
@@ -1656,73 +1688,6 @@ def test_streaming_dedup_admission_replay_idempotent(
     assert recomputed.count() == 0
 
 
-def test_bloom_membership_forced_false_positives(spark):
-    """Bloom census semantics under a deliberately tiny cell space
-    (hex_chars=1 ⇒ 16 cells): every count — members, might-contains,
-    false positives, cells set — equals a pure-hashlib recomputation of
-    the identical md5 construction, and a true member can never be a
-    false negative (positions are deterministic)."""
-    import hashlib
-    import re
-
-    from pyspark.sql import functions as F
-    from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
-        bloom_membership_census,
-    )
-
-    corpus_texts = [f"corpus doc number {i} with some words" for i in range(8)]
-    probes = [f"probe text variant {j} entirely different" for j in range(30)]
-    batch_texts = [corpus_texts[0]] + probes  # one true member + probes
-
-    def h(t):
-        return hashlib.md5(
-            re.sub(r"\s+", " ", t).strip().lower().encode()
-        ).hexdigest()
-
-    def cells_of(t, k=3, hexc=1):
-        return [
-            hashlib.md5(f"bloom{i}:{h(t)}".encode()).hexdigest()[:hexc]
-            for i in range(k)
-        ]
-
-    cellset = {c for t in corpus_texts for c in cells_of(t)}
-    corpus_hs = {h(t) for t in corpus_texts}
-    exp_exact = sum(h(t) in corpus_hs for t in batch_texts)
-    exp_might = sum(
-        all(c in cellset for c in cells_of(t)) for t in batch_texts
-    )
-    exp_fp = sum(
-        all(c in cellset for c in cells_of(t)) and h(t) not in corpus_hs
-        for t in batch_texts
-    )
-    assert exp_fp > 0  # the fixture must actually force collisions
-
-    corpus = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(corpus_texts)], "doc_id long, text string"
-    )
-    batch = spark.createDataFrame(
-        [(100 + i, t) for i, t in enumerate(batch_texts)],
-        "doc_id long, text string",
-    )
-    row = bloom_membership_census(corpus, batch, hex_chars=1).collect()[0]
-    assert row["n_batch"] == len(batch_texts)
-    assert row["n_exact_members"] == exp_exact == 1
-    assert row["n_might_contain"] == exp_might
-    assert row["n_false_positives"] == exp_fp
-    assert row["cells_set"] == len(cellset)
-    assert row["fp_rate"] == round(
-        exp_fp / (len(batch_texts) - exp_exact), 4
-    )
-    assert row["load_factor"] == round(len(cellset) / 16, 4)
-    # no false negatives, ever: a member's cells are set by construction
-    assert row["n_might_contain"] >= row["n_exact_members"]
-    # default cell space on an empty-overlap pair: zero members and a
-    # fp_expected consistent with the measured load
-    clean = bloom_membership_census(corpus, batch).collect()[0]
-    assert clean["n_exact_members"] == 1
-    assert clean["load_factor"] < 0.001
-
-
 def test_streaming_near_dup_admission(spark, tmp_path):
     """NEAR-dup admission: within one micro-batch a near cluster (exact
     copy + one-word variant) collapses to its (conv_id, turn_idx)-min;
@@ -2147,206 +2112,3 @@ def test_jpeg_rejects_non_ycbcr():
     with _pytest.raises(NotImplementedError, match="3-component"):
         decode_jpeg(gray)
 
-
-def test_snm_finds_prefix_neighbors_and_bounds_pairs(spark):
-    """Sorted-neighborhood: near-identical docs adjacent in prefix-sort
-    order pair up; total candidates never exceed (W-1)·n; and a doc in
-    a different 4-char block is structurally unreachable (the sorted-
-    blocks tradeoff, asserted so it stays a documented decision)."""
-    from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
-        SNM_WINDOW,
-        snm_candidate_pairs,
-    )
-
-    near_a = "the quick brown fox jumps over the lazy dog once more"
-    near_b = "the quick brown fox jumps over the lazy dog once mere"
-    rows = [
-        (1, near_a),
-        (2, near_b),                                # 1 edit from near_a
-        (3, "zebra " + near_a),                     # same content, other block
-        (4, "an entirely different document about supply chains"),
-        (5, "yet another unrelated text body for padding the corpus"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = {(r["doc_a"], r["doc_b"]): r["lev"]
-             for r in snm_candidate_pairs(docs).collect()}
-    assert (1, 2) in pairs and pairs[(1, 2)] == 1
-    # the 'zebra '-prefixed twin sorts into block 'zebr' — never compared
-    assert not any(3 in p for p in pairs)
-    assert len(pairs) <= (SNM_WINDOW - 1) * len(rows)
-
-
-def test_snm_plan_single_window_no_cartesian(spark, sf001_dir):
-    """The candidate generation is one block-partitioned window — no
-    self-join, no cartesian, no second exchange after the sort."""
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["snm_candidates"](spark, sf001_dir)
-    df.collect()
-    final = (
-        df._jdf.queryExecution().executedPlan().toString()
-        .split("== Initial Plan ==")[0]
-    )
-    assert final.count("Window") >= 1
-    assert "CartesianProduct" not in final, final
-    assert "SortMergeJoin" not in final, final
-
-
-def test_source_overlap_hand_computed(spark):
-    """Two sources sharing exactly one 5-word passage: gram counts and
-    Jaccard equal the enumerated values; a disjoint third source
-    produces no row."""
-    from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
-        source_overlap_matrix,
-    )
-
-    shared = "alpha beta gamma delta epsilon"          # 5 words → 1 gram
-    rows = [
-        (1, "s1", shared + " zeta"),                   # grams: 2
-        (2, "s2", "intro words first " + shared),      # grams: 4
-        (3, "s3", "one two three four five six"),      # grams: 2, disjoint
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    got = {
-        (r["source_a"], r["source_b"]): r
-        for r in source_overlap_matrix(docs).collect()
-    }
-    assert list(got) == [("s1", "s2")]
-    r = got[("s1", "s2")]
-    # s1: {alpha..epsilon, beta..zeta} = 2; s2: 4 grams; shared: the
-    # 'alpha beta gamma delta epsilon' gram and 'beta gamma delta
-    # epsilon zeta'? no — s2 ends at epsilon, so exactly 1 shared gram
-    assert (r["grams_a"], r["grams_b"], r["n_shared"]) == (2, 4, 1)
-    assert r["jaccard"] == round(1 / (2 + 4 - 1), 6)
-
-
-def _winnow_ref(text, k, w):
-    """Pure-Python robust winnowing (Schleimer et al. 2003, Fig. 5
-    semantics): windowed rightmost-minimum over md5-prefix gram hashes
-    of the normalized text — the independent oracle for the in-row
-    lambda-fold implementation."""
-    import hashlib
-    import re as _re
-
-    s = _re.sub(r"[^a-z0-9]", "", text.lower())
-    n = len(s) - k + 1
-    if n < 1:
-        return set()
-    hs = [
-        hashlib.md5(s[i : i + k].encode()).hexdigest()[:8] for i in range(n)
-    ]
-    out = set()
-    for wi in range(max(n - w + 1, 1)):
-        lo, hi = wi, min(wi + w, n)
-        best = lo
-        for j in range(lo + 1, hi):
-            if hs[j] <= hs[best]:          # rightmost on ties (robust)
-                best = j
-        out.add((hs[best], best + 1))       # engine positions are 1-based
-    return out
-
-
-def test_winnowing_matches_pure_python_reference(spark):
-    """Engine fingerprints byte-equal the pure-Python robust-winnowing
-    reference on mixed-case/punctuated text, a doc shorter than one
-    window (still yields ≥1 fingerprint), a doc shorter than k (zero),
-    and a run of identical grams (the robust-variant tie case: one
-    fingerprint for the run, not w)."""
-    from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
-        WINNOW_K,
-        WINNOW_W,
-        winnow_fingerprints,
-    )
-
-    rows = [
-        (1, "The Quick, Brown Fox -- jumps over 2 lazy dogs!"),
-        (2, "abcdefghij"),                  # 3 grams < w windows
-        (3, "abcdefg"),                     # len 7 < k=8 → no grams
-        (4, "a" * 40),                      # all grams identical
-        (5, ""),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (
-            r["n_grams"],
-            {(f["h"], f["p"]) for f in r["fingerprints"]},
-        )
-        for r in winnow_fingerprints(docs).collect()
-    }
-    for doc_id, text in rows:
-        want = _winnow_ref(text, WINNOW_K, WINNOW_W)
-        assert got[doc_id][1] == want, doc_id
-    assert got[3] == (0, set()) and got[5] == (0, set())
-    assert got[2][1] != set()
-    # robust tie-break: the 33 identical grams of doc 4 select exactly
-    # one distinct (hash, pos) per *rightmost* window position change —
-    # far fewer than one per window; the reference set pins exact count
-    assert len(got[4][1]) == len(_winnow_ref("a" * 40, WINNOW_K, WINNOW_W))
-
-
-def test_winnowing_guarantee_and_plan(spark):
-    """The t = k+w-1 guarantee: two documents sharing a normalized
-    substring of ≥ 11 chars share at least one fingerprint HASH —
-    winnowing's whole point vs sampling sketches.  And the plan is one
-    narrow projection: no Exchange, no Generate (selection is in-row)."""
-    from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
-        winnow_fingerprints,
-    )
-
-    core = "photosynthesis"                 # 14 normalized chars ≥ 11
-    rows = [
-        (1, "left filler text " + core + " right filler"),
-        (2, "completely different framing: " + core + "?!"),
-        (3, "no shared content here at all whatsoever"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    fp = winnow_fingerprints(docs)
-    sets = {
-        r["doc_id"]: {f["h"] for f in r["fingerprints"]}
-        for r in fp.collect()
-    }
-    assert sets[1] & sets[2], "guarantee violated: shared 14-char substring"
-    plan = fp._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    assert "Generate" not in plan, plan
-
-
-def test_winnowing_pairs_hand_computed(spark):
-    """Two docs sharing two long verbatim passages pair up with the
-    enumerated shared-fingerprint count and overlap coefficient; a doc
-    sharing nothing produces no pair; and the plan self-joins on the
-    fingerprint bucket (no CartesianProduct)."""
-    from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
-        WINNOW_MIN_SHARED,
-        winnow_fingerprints,
-        winnowing_candidate_pairs,
-    )
-
-    pass1 = "the mitochondria is the powerhouse of the cell"
-    pass2 = "photosynthesis converts light into chemical energy"
-    rows = [
-        (1, pass1 + " and also " + pass2),
-        (2, "intro text. " + pass1 + " outro. " + pass2 + " end."),
-        (3, "entirely unrelated content about orbital mechanics"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        (r["doc_a"], r["doc_b"]): r
-        for r in winnowing_candidate_pairs(docs).collect()
-    }
-    assert list(got) == [(1, 2)]
-    r = got[(1, 2)]
-    assert r["n_shared"] >= WINNOW_MIN_SHARED
-    # recompute the expected values from the fingerprint sets directly
-    sets = {
-        row["doc_id"]: {f["h"] for f in row["fingerprints"]}
-        for row in winnow_fingerprints(docs).collect()
-    }
-    shared = sets[1] & sets[2]
-    assert r["n_shared"] == len(shared)
-    assert r["overlap"] == round(len(shared) / min(len(sets[1]), len(sets[2])), 4)
-    plan = (
-        winnowing_candidate_pairs(docs)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "CartesianProduct" not in plan, plan

@@ -132,8 +132,9 @@ def test_minhash_signatures_are_shuffle_free(spark):
     """Signatures are narrow per-row expressions (array_min∘transform /
     aggregate over the in-row word array) — zero Exchange.  The earlier
     explode+groupBy formulation shuffled every (doc, word) pair; a
-    regression here re-introduces a corpus-sized all-to-all under five
-    dedup queries."""
+    regression here re-introduces a corpus-sized all-to-all under the
+    duplicate clustering, the streaming near-dup admission and the SimHash
+    queries."""
     from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
         minhash_signatures,
         simhash16,
@@ -247,17 +248,6 @@ def test_bucketed_join_no_shuffle(spark):
         assert f"SelectedBucketsCount: 1 out of {N_BUCKETS}" in pp, pp
     finally:
         spark.conf.unset("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-
-
-def test_duplicate_passages_hashes_before_explode(spark):
-    """The passage census must (a) emit 8-byte gram hashes from the
-    generator itself — never passage strings — and (b) give the gram
-    document-frequency shuffle a map-side partial, so boilerplate grams
-    pre-reduce per partition before moving."""
-    p = plan_of(spark, "duplicate_passages")
-    assert "xxhash64" in p and "Generate explode(transform(grams" in p
-    assert "partial_count" in p
-    assert "hashpartitioning(gram_h" in p
 
 
 def test_runtime_bloom_filter_prunes_fact_scan(spark):
@@ -431,26 +421,6 @@ def test_write_target_sized_codec(spark, sf01_dir, tmp_path):
     ub = sum(os.path.getsize(f) for f in glob.glob(os.path.join(u, "*.parquet")))
     assert zb < 0.8 * ub, (zb, ub)
     assert spark.read.parquet(z).count() == spark.read.parquet(u).count() == df.count()
-
-
-def test_bloom_membership_broadcasts_cell_set(spark, sf001_dir):
-    """The bloom census's standing side (the distinct-cells table,
-    <= 16^5 rows forever) must reach the membership probe as a
-    broadcast: a sort-merge or shuffled-hash join there would shuffle
-    the BATCH on the cell key, defeating the O(cells) design.  The only
-    nested-loop join allowed is the final single-row-aggregate
-    crossJoin (the repo's established census idiom)."""
-    from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
-        q_bloom_membership,
-    )
-
-    df = q_bloom_membership(spark, sf001_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "ShuffledHashJoin" not in plan
-    # exactly one BNLJ: the 1-row x 1-row census-assembly crossJoin
-    assert plan.count("BroadcastNestedLoopJoin") <= 1
 
 
 def test_dsir_ratio_broadcasts_and_topk_takes_ordered(spark):

@@ -495,97 +495,6 @@ def test_gopher_rules_corpus_nonvacuous(spark, sf001_dir):
     assert all(r["flag_stop"] == 0 for r in rows)
 
 
-def test_duplicate_passage_planted_fixture(spark):
-    """Two docs sharing a 6-word passage are both flagged for exactly the
-    two 5-grams inside that passage; the disjoint doc stays at zero, and
-    a doc shorter than the gram width survives with n_grams == 0 (the
-    explode-loss regression this operator guards against)."""
-    from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
-        duplicate_passage_stats,
-    )
-
-    shared = "the quick brown fox jumps high"
-    docs = spark.createDataFrame(
-        [
-            (1, f"intro one {shared} tail alpha"),
-            (2, f"other beginning {shared} closing words"),
-            (3, "completely unrelated text with many different words here"),
-            (4, "tiny doc"),
-        ],
-        "doc_id long, text string",
-    )
-    rows = {r["doc_id"]: r for r in duplicate_passage_stats(docs).collect()}
-    # the 6-word shared passage contributes exactly 2 shared 5-grams
-    assert rows[1]["n_dup_grams"] == 2 and rows[2]["n_dup_grams"] == 2
-    assert rows[3]["n_dup_grams"] == 0 and rows[3]["dup_frac"] == 0.0
-    assert rows[4]["n_grams"] == 0 and rows[4]["dup_frac"] == 0.0
-    for r in (rows[1], rows[2]):
-        assert r["dup_frac"] == round(r["n_dup_grams"] / r["n_grams"], 4)
-
-
-def test_gram_novelty_planted_fixture(spark):
-    """First-occurrence attribution, planted: the first doc owns every
-    one of its grams (novelty 1.0); an exact re-ingest of it owns none
-    (novelty 0.0); a doc sharing a 6-word passage with doc 1 loses
-    exactly the 2 grams inside that passage; a gram-less doc is
-    vacuously novel; and total attributed grams across docs equals the
-    number of distinct grams in the corpus (mass conservation)."""
-    from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
-        gram_novelty_stats,
-    )
-
-    shared = "the quick brown fox jumps high"
-    docs = spark.createDataFrame(
-        [
-            (1, f"intro one {shared} tail alpha"),
-            (2, f"intro one {shared} tail alpha"),
-            (3, f"other beginning {shared} closing words"),
-            (4, "tiny doc"),
-        ],
-        "doc_id long, text string",
-    )
-    rows = {r["doc_id"]: r for r in gram_novelty_stats(docs).collect()}
-    assert rows[1]["novelty"] == 1.0 and rows[1]["n_novel"] == rows[1]["n_grams"]
-    assert rows[2]["novelty"] == 0.0 and rows[2]["n_novel"] == 0
-    assert rows[3]["n_grams"] - rows[3]["n_novel"] == 2
-    assert rows[4]["n_grams"] == 0 and rows[4]["novelty"] == 1.0
-    # corpus distinct grams = doc1's ∪ doc3's, overlapping in the 2
-    # shared-passage grams (doc2 adds nothing); every one attributed once
-    assert (
-        sum(r["n_novel"] for r in rows.values())
-        == rows[1]["n_grams"] + rows[3]["n_grams"] - 2
-    )
-
-
-def test_incremental_dedup_planted_fixture(spark):
-    """Batch admission outcomes, planted: a corpus copy is dropped as
-    dup_vs_corpus (even when normalization differs by whitespace), the
-    second of two identical new arrivals drops as dup_within_batch, and
-    the genuinely new doc is kept."""
-    from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
-        incremental_dedup_census,
-    )
-
-    corpus = spark.createDataFrame(
-        [(1, "standing corpus doc one"), (2, "another old doc")],
-        "doc_id long, text string",
-    )
-    batch = spark.createDataFrame(
-        [
-            (10, "Standing   corpus doc ONE"),   # normalizes to corpus #1
-            (11, "brand new arrival"),
-            (12, "brand new arrival"),            # within-batch dup of 11
-            (13, "totally distinct content"),
-        ],
-        "doc_id long, text string",
-    )
-    r = incremental_dedup_census(corpus, batch).collect()[0]
-    assert r["n_batch"] == 4
-    assert r["n_dup_vs_corpus"] == 1
-    assert r["n_dup_within"] == 1
-    assert r["n_kept"] == 2
-
-
 def test_quality_weighted_sample_deterministic_extremes(spark, tmp_path):
     """p = min(1, words/100): a 100+-word doc is ALWAYS kept (u < 1 by
     construction), a word-less doc NEVER is — and the census is
@@ -1016,135 +925,6 @@ def test_doc_bigram_lm_hand_computed(spark):
     assert rows[1]["bigram_ce"] < rows[0]["bigram_ce"]
 
 
-def _ssj_toy_corpus(spark, n=40, vocab=24):
-    """Deterministic overlapping token sets with varied Jaccard."""
-    words = [f"w{i:02d}" for i in range(vocab)]
-    rows = []
-    for i in range(n):
-        start = (i * 3) % vocab
-        size = 8 + (i % 5)
-        toks = [words[(start + j) % vocab] for j in range(size)]
-        if i % 7 == 0 and i > 0:  # near-duplicates of the previous doc
-            prev = rows[-1][1].split(" ")
-            toks = prev[:-1] + [words[(start + size + 1) % vocab]]
-        rows.append((i, " ".join(toks)))
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_set_similarity_prefix_filter_is_exact(spark):
-    """The PPJoin-style prefix filter must produce IDENTICAL pairs (and
-    jaccard values) to the brute-force all-pairs join — zero false
-    negatives — at a tau low enough that prefixes really bind."""
-    import itertools
-
-    from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
-        set_similarity_pairs,
-    )
-
-    docs = _ssj_toy_corpus(spark)
-    tau = 0.6
-    got = {
-        (r["d1"], r["d2"]): round(r["jac"], 6)
-        for r in set_similarity_pairs(docs, tau=tau).collect()
-    }
-    sets = {
-        r["doc_id"]: frozenset(r["text"].split(" "))
-        for r in docs.collect()
-    }
-    want = {}
-    for a, b in itertools.combinations(sorted(sets), 2):
-        inter = len(sets[a] & sets[b])
-        jac = inter / (len(sets[a]) + len(sets[b]) - inter)
-        if jac >= tau:
-            want[(a, b)] = round(jac, 6)
-    assert want, "toy corpus produced no qualifying pairs — fix the fixture"
-    assert got == want
-
-
-def test_set_similarity_tau_boundary_pair_included(spark):
-    """A pair with jaccard EXACTLY tau must be kept (>= semantics):
-    |A∩B| = 6, |A∪B| = 10 → 0.6."""
-    from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
-        set_similarity_pairs,
-    )
-
-    a = " ".join(f"t{i}" for i in range(8))            # t0..t7
-    b = " ".join([f"t{i}" for i in range(6)] + ["u1", "u2"])  # 6 shared
-    docs = spark.createDataFrame(
-        [(0, a), (1, b), (2, "z1 z2 z3")], "doc_id long, text string"
-    )
-    rows = set_similarity_pairs(docs, tau=0.6).collect()
-    pairs = {(r["d1"], r["d2"]): r["jac"] for r in rows}
-    assert pairs == {(0, 1): 0.6}
-
-
-def test_set_similarity_join_plan_no_global_window(spark, sf001_dir):
-    """The global token order comes from in-row struct sorting, NOT a
-    rank window — the plan must contain no Window operator (a global
-    row_number would serialize on one partition at scale) and the df
-    table must broadcast into the token stream."""
-    import __spark_entry__ as entry_mod
-
-    df = entry_mod.queries()["set_similarity_join"](spark, sf001_dir)
-    df.collect()
-    p = df._jdf.queryExecution().executedPlan().toString()
-    final = p.split("== Initial Plan ==")[0]
-    assert "Window" not in final, final
-    assert "BroadcastHashJoin" in final, final
-
-
-def test_containment_catches_quote_jaccard_misses(spark):
-    """The asymmetric case that motivates containment: a short doc fully
-    quoted inside a long one has containment 1.0 but Jaccard well below
-    any dedup threshold — the symmetric join must miss it, the directed
-    join must find it (direction: contained -> container)."""
-    from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
-        containment_pairs,
-        set_similarity_pairs,
-    )
-
-    quote = " ".join(f"q{i}" for i in range(5))
-    host = quote + " " + " ".join(f"h{i}" for i in range(20))
-    docs = spark.createDataFrame(
-        [(0, quote), (1, host), (2, "x1 x2 x3 x4")],
-        "doc_id long, text string",
-    )
-    cont = {
-        (r["d1"], r["d2"]): r["containment"]
-        for r in containment_pairs(docs, theta=0.9).collect()
-    }
-    assert cont == {(0, 1): 1.0}  # directed: quote contained in host only
-    jac = set_similarity_pairs(docs, tau=0.9).collect()
-    assert jac == []  # jaccard 5/25 = 0.2 — symmetric join blind to it
-
-
-def test_containment_prefix_filter_is_exact(spark):
-    """Asymmetric prefix filtering must equal the directed brute force
-    (every ordered pair, exact |A∩B|/|A|) — zero false negatives."""
-    import itertools
-
-    from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
-        containment_pairs,
-    )
-
-    docs = _ssj_toy_corpus(spark)
-    theta = 0.75
-    got = {
-        (r["d1"], r["d2"]): round(r["containment"], 6)
-        for r in containment_pairs(docs, theta=theta).collect()
-    }
-    sets = {
-        r["doc_id"]: frozenset(r["text"].split(" ")) for r in docs.collect()
-    }
-    want = {}
-    for a, b in itertools.permutations(sorted(sets), 2):
-        c = len(sets[a] & sets[b]) / len(sets[a])
-        if c >= theta:
-            want[(a, b)] = round(c, 6)
-    assert want, "toy corpus produced no qualifying directed pairs"
-    assert got == want
-
-
 def test_source_token_divergence_toy_corpus(spark):
     """Two symmetric single-token sources: hand-computable JSD
     (= ½·1·ln(1/m₁) + ½·½·ln(½/m₁) + ½·½·ln(½/m₂) with m₁=¾, m₂=¼),
@@ -1196,66 +976,6 @@ def test_source_token_divergence_zero_for_identical_sources(spark):
         docs.write.mode("overwrite").parquet(f"{td}/documents.parquet")
         rows = q_source_token_divergence(spark, td).collect()
     assert [r["jsd"] for r in rows] == [0.0, 0.0]
-
-
-def test_prefix_filter_exactness_property(spark):
-    """Hypothesis battery: on random corpora (varied vocab, doc sizes,
-    duplicates, singleton-token docs) and random thresholds, BOTH
-    prefix-filtered joins must equal their brute-force duals exactly —
-    the zero-false-negative guarantee is structural, not corpus-luck."""
-    import itertools
-
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
-        containment_pairs,
-        set_similarity_pairs,
-    )
-
-    @settings(max_examples=6, deadline=None)
-    @given(
-        data=st.lists(
-            st.sets(
-                st.integers(min_value=0, max_value=17),
-                min_size=1, max_size=9,
-            ),
-            min_size=3, max_size=14,
-        ),
-        tau=st.sampled_from([0.5, 0.6, 0.75, 0.9, 1.0]),
-    )
-    def check(data, tau):
-        rows = [
-            (i, " ".join(f"w{t}" for t in sorted(s)))
-            for i, s in enumerate(data)
-        ]
-        docs = spark.createDataFrame(rows, "doc_id long, text string")
-        sets = {i: frozenset(f"w{t}" for t in s) for i, s in enumerate(data)}
-
-        got_j = {
-            (r["d1"], r["d2"]): round(r["jac"], 6)
-            for r in set_similarity_pairs(docs, tau=tau).collect()
-        }
-        want_j = {}
-        for a, b in itertools.combinations(sorted(sets), 2):
-            inter = len(sets[a] & sets[b])
-            j = inter / (len(sets[a]) + len(sets[b]) - inter)
-            if j >= tau:
-                want_j[(a, b)] = round(j, 6)
-        assert got_j == want_j
-
-        got_c = {
-            (r["d1"], r["d2"]): round(r["containment"], 6)
-            for r in containment_pairs(docs, theta=tau).collect()
-        }
-        want_c = {}
-        for a, b in itertools.permutations(sorted(sets), 2):
-            c = len(sets[a] & sets[b]) / len(sets[a])
-            if c >= tau:
-                want_c[(a, b)] = round(c, 6)
-        assert got_c == want_c
-
-    check()
 
 
 def test_per_source_cap_deterministic_and_binding(spark, sf001_dir):

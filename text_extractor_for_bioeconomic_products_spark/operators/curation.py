@@ -394,7 +394,7 @@ def q_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the output is the per-(split, lang) census with within-split
     shares a user audits for stratification balance.  Narrow map +
     one ~|splits×langs|-row aggregate; hex→bigint via the same
-    cross-engine md5 idiom as the minhash/simhash oracles."""
+    cross-engine md5 idiom as the minhash oracle."""
     docs = load(spark, sf_dir, "documents")
     split = split_assignment()
     agg = (

@@ -2,8 +2,8 @@
 
 Composes two families the engine already ships: the multimodal binary
 codecs (``operators/multimodal.py`` — real BMP/PNG/JPEG decodes) and the
-banded-Hamming dedup discipline (``operators/dedup.py`` — SimHash
-banding, ``q_dedup_simhash_hamming``).  This is the standard multimodal
+banded dedup discipline of ``operators/dedup.py`` (band join, hot-band
+cap, connected components).  This is the standard multimodal
 curation primitive (LAION-style image dedup): a 64-bit difference hash
 (dHash) per image, then a pigeonhole-complete banded self-join so the
 candidate set is bucket-bounded instead of all-pairs.
@@ -19,7 +19,7 @@ Scale shape (100 TB):
 * candidate generation is a self-join on 16-bit band values (4 bands),
   which for ``max_hamming`` ≤ 3 is pigeonhole-complete (≤3 differing
   bits can dirty at most 3 of the 4 bands, so at least one band matches
-  exactly) — the same guarantee ``q_dedup_simhash_hamming`` relies on;
+  exactly);
 * hot bands (flat/constant images all hash to the same value) are
   capped at ``MAX_BAND_MEDIA`` exactly as ``_jaccard_pairs_from`` caps
   LSH buckets: a band holding B images would emit B² verification

@@ -8,8 +8,7 @@ pass needs the JOIN form of that primitive: find ALL string pairs within
 edit distance k without evaluating the quadratic pair space.  This module
 implements the q-gram prefix-filtered edit-distance join of Gravano et
 al. (VLDB 2001, approximate string joins) / Xiao, Wang & Lin's Ed-Join
-(PVLDB 2008) as a pure DataFrame composition — the edit-distance
-complement of the Jaccard-threshold `dedup.set_similarity_pairs`.
+(PVLDB 2008) as a pure DataFrame composition.
 
 Completeness guarantee (why the prefix filter drops nothing):
 
@@ -38,8 +37,7 @@ Scale shape (the part that must survive 10^12 strings):
 * Gram frequencies are a |Σ|^q-sized partial agg BROADCAST back into
   the gram stream; each string sorts its own occurrences IN-ROW by the
   (freq, gram, pos) struct order — no global rank window, no single
-  partition anywhere (the same discipline as
-  `dedup.set_similarity_pairs`).
+  partition anywhere).
 * Only the q*k+1-gram PREFIX enters the candidate self-join, keyed by
   gram value — the one superlinear exchange, and it shrinks as the
   vocabulary diversifies because prefixes land on the rarest grams.
@@ -70,8 +68,7 @@ EDJOIN_K = 3
 EDJOIN_Q = 2
 EDJOIN_PREFIX_CHARS = 16
 # Deterministic subsample modulus bounding the DuckDB oracle's all-pairs
-# verify (the same one-corpus-for-both-engines idiom as
-# dedup.SSJOIN_MOD).
+# verify (one corpus for both engines).
 EDJOIN_MOD = 2
 
 

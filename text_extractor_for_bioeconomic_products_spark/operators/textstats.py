@@ -538,7 +538,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pmi(x,y) = ln(N·n_xy / (n_x·n_y)) over presence counts — the classic
 # collocation/phrase-mining signal.  Spark-first shape: the pair set is
 # generated IN-ROW from each doc's sorted distinct token array (nested
-# transform over array slices — the duplicate_passages idiom), so there
+# transform over array slices), so there
 # is NO doc-keyed self-join; the only shuffles are the two map-side
 # partial counts (pairs, unigrams) and both are vocabulary²-/vocabulary-
 # sized.  At 100 TB the knob is capping per-doc distinct tokens (top-N

@@ -72,6 +72,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.extract import explode_spans, extract_turns
 
@@ -324,7 +325,16 @@ def merge_turns(
             kept = existing.join(keys, ["conv_id", "turn_idx"], "left_anti")
             merged = kept.unionByName(new_b.select(*kept.columns))
         else:
-            merged = new_b  # first write — plain insert
+            # first write — plain insert, unioned onto an empty frame with
+            # every column nullable, as the parquet read above is, so all
+            # bucket files of the table share one schema.  A zero-partition
+            # RDD, because the optimizer drops an empty local relation and
+            # then writes the columns it proves non-null as REQUIRED.
+            nullable = T.StructType(
+                [T.StructField(f.name, f.dataType, True) for f in new_b.schema]
+            )
+            empty = spark.createDataFrame(spark.sparkContext.emptyRDD(), nullable)
+            merged = empty.unionByName(new_b)
         _write_bucketed(_cluster_by_bucket(merged), turns_dir)
     finally:
         new_b.unpersist()

@@ -203,13 +203,11 @@ def run_streaming_dedup_admission(
     crash_after_batches: int | None = None,
     timeout_sec: int = 300,
 ) -> dict:
-    """Continuous corpus admission — the streaming face of
-    ``operators.dedup.incremental_dedup_census`` (which is the batch
-    census of the same decision): each micro-batch keeps ONE row per
-    normalized-content hash (keep-first within the batch, deterministic
-    (conv_id, turn_idx) order) and anti-joins the standing ADMITTED
-    corpus on that hash before appending — so the admitted table never
-    holds two rows with the same content.
+    """Continuous corpus admission by exact content: each micro-batch
+    keeps ONE row per normalized-content hash (keep-first within the
+    batch, deterministic (conv_id, turn_idx) order) and anti-joins the
+    standing ADMITTED corpus on that hash before appending — so the
+    admitted table never holds two rows with the same content.
 
     Delivery semantics: the file-source checkpoint gives at-least-once
     foreachBatch invocations; here the admission predicate ITSELF is the
@@ -402,7 +400,7 @@ def run_streaming_near_dup_admission(
     timeout_sec: int = 300,
 ) -> dict:
     """NEAR-duplicate corpus admission — the streaming composition of the
-    batch fuzzy-dedup stack (`minhash_signatures` → band keys →
+    batch fuzzy-dedup stack (`minhash_signatures` → `lsh_band_keys` →
     `connected_components` → keep-min, all reused verbatim from
     ``operators.dedup``): a micro-batch row is admitted only if it is the
     (conv_id, turn_idx)-minimal member of its within-batch near-dup
@@ -410,9 +408,8 @@ def run_streaming_near_dup_admission(
     corpus.
 
     Band collision IS the rejection decision (the Gopher/RefinedWeb
-    convention; the batch-side `dup_components` applies the same rule,
-    with its recall/precision characteristics measured in the ANN/dedup
-    ledgers).  Exact duplicates are subsumed: identical text ⇒ identical
+    convention; the batch-side `dup_components` applies the same rule
+    to its band-0 key).  Exact duplicates are subsumed: identical text ⇒ identical
     signatures ⇒ identical bands ⇒ same cluster.
 
     Replay idempotency again comes from the semantics, not a
@@ -444,9 +441,8 @@ def run_streaming_near_dup_admission(
     from pyspark.errors import AnalysisException
 
     from ..operators.dedup import (
-        LSH_BAND_ROWS,
-        N_LSH_BANDS,
         connected_components,
+        lsh_band_keys,
         minhash_signatures,
     )
 
@@ -454,22 +450,6 @@ def run_streaming_near_dup_admission(
     seen = {"batches": 0, "admitted": 0, "rejected_within_batch": 0,
             "rejected_standing": 0, "rejected_null_text": 0,
             "admitted_by_batch": []}
-
-    # identical band-key construction to minhash_band_census, over the
-    # sig_ columns minhash_signatures emits
-    band_array = F.array(*[
-        F.concat(
-            F.lit(f"{b}:"),
-            F.concat_ws(
-                "|",
-                *[
-                    F.substring(f"sig_{LSH_BAND_ROWS * b + j}", 1, 8)
-                    for j in range(LSH_BAND_ROWS)
-                ],
-            ),
-        )
-        for b in range(N_LSH_BANDS)
-    ])
 
     def admit_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()
@@ -482,7 +462,7 @@ def run_streaming_near_dup_admission(
             "row_key", F.xxhash64("conv_id", "turn_idx")
         )
         sigs = minhash_signatures(rows, id_col="row_key").withColumn(
-            "bands", band_array
+            "bands", lsh_band_keys()
         ).select("row_key", "bands")
         rows = rows.join(sigs, "row_key").persist()
         n_rows = rows.count()
