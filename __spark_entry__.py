@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship extraction query on /root/testdata/sf0.001.
-``queries()`` — one callable per registered query: the extraction flow
-plus the training-data-pipeline extensions (exact dedup and duplicate
-clustering, text analysis, curation).  The scalar SURVEY.md §2 rules are checked by
+``queries()`` — one callable per registered query: the extraction flow,
+its per-document text stages (cleaning, token counts, language,
+quality, fingerprint, chunks), exact dedup and duplicate clustering,
+and the curation queries.  The scalar SURVEY.md §2 rules are checked by
 tests/test_rules.py, not through the registry.
 ``oracle_sql()`` — DuckDB-runnable ANSI SQL twins for every
 SQL-expressible query; UDF-pipeline queries are rows-only by design

@@ -1441,6 +1441,27 @@ def test_minhash_second_band_recall(spark):
     assert census == {band1_key: 2}  # caught by band 1, and ONLY band 1
 
 
+def test_fuzzy_dedup_victims_pair_on_second_band(spark, tmp_path):
+    """The curation job's victim set catches the planted pair of
+    test_minhash_second_band_recall (word Jaccard 11/12, over
+    DUP_EDGE_THRESHOLD): batch candidates share ANY band, as the
+    streaming admission's do, so a pair whose first band differs is
+    still verified and its non-canonical member dropped."""
+    import pandas as pd
+
+    from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
+        fuzzy_dedup_victims,
+    )
+
+    base = "cacao beans are harvested by river communities for food and trade"
+    pd.DataFrame({
+        "doc_id": [1, 2, 3],
+        "text": [base, base + " ember", "totally unrelated words only here"],
+    }).to_parquet(str(tmp_path / "documents.parquet"))
+    victims = fuzzy_dedup_victims(spark, str(tmp_path)).collect()
+    assert [r["doc_id"] for r in victims] == [2]
+
+
 def test_xlsx_writer_edge_cases(tmp_path):
     """Built-in OOXML writer unit surface: column letters past Z, sheet
     name sanitization/uniquing, every cell type, XML-hostile strings."""

@@ -156,18 +156,6 @@ def test_lsh_band_census_shuffles_only_on_band(spark):
     assert "Exchange hashpartitioning(doc_id" not in p
 
 
-def test_doc_repetition_is_narrow(spark):
-    """Repetition signals are pure per-row column math — the only
-    Exchange is the presentation ORDER BY.  The words are split once per
-    doc: an inline split under the n-gram lambda re-splits the text per
-    n-gram, quadratic in document length."""
-    p = plan_of(spark, "doc_repetition")
-    assert p.count("Exchange") == 1
-    assert "Exchange rangepartitioning" in p
-    assert "Exchange hashpartitioning" not in p
-    assert p.count("split(") == 1, p
-
-
 def test_ngram_contamination_broadcasts_benchmark_side(spark):
     """8-gram decontamination: the benchmark gram set broadcasts into a
     left-semi join; the corpus side never shuffles its exploded grams on
@@ -181,33 +169,6 @@ def test_ngram_contamination_broadcasts_benchmark_side(spark):
     # the words are split once per doc on each side (benchmark, corpus),
     # staged below the 8-gram lambda rather than re-split per gram
     assert p.count("split(") == 2, p
-
-
-def test_lm_score_vocab_broadcasts_into_token_stream(spark):
-    """doc_lm_score: the capped vocab is a distributed top-k
-    (TakeOrderedAndProject, never a single-partition global sort) that
-    broadcasts into the token stream (LeftOuter BroadcastHashJoin) — the
-    token stream itself never hash-shuffles on the term key; the only
-    term-keyed exchanges carry vocabulary-sized partial-agg output."""
-    p = plan_of(spark, "doc_lm_score")
-    assert "TakeOrderedAndProject(limit=20" in p
-    assert "BroadcastHashJoin" in p and "LeftOuter" in p
-    # two term exchanges (vocab counts + total), both above partial aggs
-    assert p.count("Exchange hashpartitioning(term") == 2
-    assert p.count("partial_count") >= 2
-    # one row-volume shuffle: the final doc rollup
-    assert p.count("Exchange hashpartitioning(doc_id") == 1
-
-
-def test_gopher_rules_are_narrow(spark):
-    """The Gopher battery is pure per-row array-lambda math — the only
-    Exchange is the presentation ORDER BY (same contract as
-    doc_repetition: these quality signals fuse into one map stage at
-    scale)."""
-    p = plan_of(spark, "doc_gopher_rules")
-    assert p.count("Exchange") == 1
-    assert "Exchange rangepartitioning" in p
-    assert "Exchange hashpartitioning" not in p
 
 
 def test_bucketed_join_no_shuffle(spark):
@@ -365,21 +326,6 @@ def test_write_target_sized_files(spark, sf01_dir, tmp_path):
     assert back.count() == df.count()
     cols = sorted(df.columns)
     assert back.select(cols).exceptAll(df.select(cols)).count() == 0
-
-
-def test_token_pmi_no_self_join(spark, sf001_dir):
-    """The pair set must come from in-row generation (Generate over the
-    token array), never a doc-keyed self-join: no shuffle joins in the
-    plan — every join is broadcast-sized (unigram counts, doc count)."""
-    import __spark_entry__ as entry_mod
-
-    plan = (
-        entry_mod.queries()["token_pmi"](spark, sf001_dir)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "SortMergeJoin" not in plan
-    assert "ShuffledHashJoin" not in plan
-    assert "Generate" in plan
 
 
 def test_write_target_sized_empty_input(spark, sf001_dir, tmp_path):

@@ -175,6 +175,20 @@ def q_benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CONTAM_N = 8
 
 
+def word_ngrams(words, n: int):
+    """Array of space-joined word n-grams as a narrow per-row expression
+    (guarded: Spark's sequence(1, k) is DESCENDING for k<1, so short rows
+    explicitly yield an empty array).  Pass ``words`` as a column the
+    caller has already selected, not as an expression: the lambda reads
+    it once per n-gram, so an inline ``split`` would re-split the text
+    each time, quadratic in document length."""
+    cnt = F.size(words) - (n - 1)
+    idx = F.when(cnt >= 1, F.sequence(F.lit(1), cnt)).otherwise(
+        F.array().cast("array<int>")
+    )
+    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i, n)))
+
+
 def q_benchmark_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """8-gram decontamination: a corpus doc is contaminated iff it shares
     ≥1 lowercased word-8-gram (md5) with the benchmark split (doc_id <
@@ -183,8 +197,6 @@ def q_benchmark_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFra
     real, not vacuous.  Benchmark gram set is tiny → broadcast semi-join;
     gram construction is a narrow per-row expression (no corpus-sized
     pre-shuffle)."""
-    from .textstats import word_ngrams
-
     docs = load(spark, sf_dir, "documents").withColumn(
         "text",
         F.when(F.col("doc_id") % 97 == 0, F.concat(F.col("text"), F.lit(_PLANT)))

@@ -171,10 +171,12 @@ def _minhash_sql_duckdb(n_hashes: int = N_MINHASH) -> str:
 
 
 def _minhash_band_union_sql() -> str:
+    """(doc_id, band) rows, one per band of each doc in the ``sigs`` CTE —
+    the DuckDB twin of exploding :func:`lsh_band_keys`."""
     # stride mirrors the Spark side's LSH_BAND_ROWS (NOT a literal 2):
     # both sides iterate the same r rows per band by construction
     selects = [
-        "SELECT '{}:' || {} AS band FROM sigs".format(
+        "SELECT doc_id, '{}:' || {} AS band FROM sigs".format(
             b,
             " || '|' || ".join(
                 f"substr(sig_{LSH_BAND_ROWS * b + j}, 1, 8)"
@@ -283,10 +285,13 @@ MAX_BAND_DOCS = 64
 
 
 def _banded_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, band) rows over every LSH band — the key the streaming
+    near-dup admission rejects on, so batch and stream pair the same
+    docs."""
     docs = load(spark, sf_dir, "documents")
-    sigs = minhash_signatures(docs)
-    band = F.concat(F.substring("sig_0", 1, 8), F.lit("|"), F.substring("sig_1", 1, 8))
-    return sigs.select("doc_id", band.alias("band"))
+    return minhash_signatures(docs).select(
+        "doc_id", F.explode(lsh_band_keys()).alias("band")
+    )
 
 
 def _jaccard_pairs_from(docs: DataFrame, banded: DataFrame) -> DataFrame:
@@ -335,10 +340,9 @@ def q_dedup_jaccard_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 _JACCARD_BODY_SQL = f"""
     WITH sigs AS ({_minhash_sql_duckdb()}),
     banded_all AS (
-        SELECT s.doc_id,
-               substr(s.sig_0, 1, 8) || '|' || substr(s.sig_1, 1, 8) AS band,
+        SELECT b.doc_id, b.band,
                list_sort(list_distinct(string_split(lower(d.text), ' '))) AS words
-        FROM sigs s JOIN documents d USING (doc_id)
+        FROM ({_minhash_band_union_sql()}) b JOIN documents d USING (doc_id)
     ),
     banded AS (
         SELECT * FROM banded_all
@@ -641,11 +645,12 @@ def q_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-pinned equivalence twin, :func:`connected_components`, keeps
     the simpler algorithm as the oracle of record) — UNIONed with the
     over-full LSH bands, each emitted directly as one cluster (their
-    pairwise verification is skipped by design; the candidate band key is
-    single-band, so a doc has exactly one band and the two cluster
-    sources never overlap).  Output: one row per cluster with its
-    canonical (minimum) doc_id and sorted members; checked against a
-    DuckDB recursive-CTE oracle."""
+    pairwise verification is skipped by design).  Candidates share ANY
+    band (:func:`lsh_band_keys`, the streaming admission's key), so a
+    doc in several over-full bands, or in one and in a verified
+    component, is a member of each of those clusters.  Output: one row
+    per cluster with its canonical (minimum) doc_id and sorted members;
+    checked against a DuckDB recursive-CTE oracle."""
     # banding (doc scan + word explode + minhash shuffle — the costly
     # subtree) materializes ONCE and feeds both the capped candidate
     # pairs and the mega-band aggregation
@@ -696,16 +701,12 @@ ORACLE_DUP_COMPONENTS = f"""
         SELECT a AS node, least(a, min(b)) AS component
         FROM reach GROUP BY a
     ),
-    sigs2 AS ({_minhash_sql_duckdb()}),
+    sigs AS ({_minhash_sql_duckdb()}),
     mega AS (
         SELECT min(doc_id) AS component,
                count(*) AS n_docs,
                array_to_string(list_sort(list(doc_id)), ',') AS members
-        FROM (
-            SELECT doc_id,
-                   substr(sig_0, 1, 8) || '|' || substr(sig_1, 1, 8) AS band
-            FROM sigs2
-        )
+        FROM ({_minhash_band_union_sql()})
         GROUP BY band
         HAVING count(*) > {MAX_BAND_DOCS}
     )
@@ -786,23 +787,23 @@ ORACLE_FUZZY_DEDUP_APPLY = f"""
         SELECT a AS node, least(a, min(b)) AS component
         FROM reach GROUP BY a
     ),
-    sigs2 AS ({_minhash_sql_duckdb()}),
-    banded AS (
-        SELECT doc_id,
-               substr(sig_0, 1, 8) || '|' || substr(sig_1, 1, 8) AS band
-        FROM sigs2
-    ),
+    sigs AS ({_minhash_sql_duckdb()}),
+    banded AS ({_minhash_band_union_sql()}),
     mega_nodes AS (
         SELECT doc_id,
                min(doc_id) OVER (PARTITION BY band) AS component,
                count(*) OVER (PARTITION BY band) AS n
         FROM banded
     ),
+    -- a doc can be a victim of several clusters; DISTINCT, because under
+    -- WITH RECURSIVE DuckDB keeps the duplicate rows of a UNION CTE
     victims AS (
-        SELECT node AS doc_id FROM lab WHERE node <> component
-        UNION
-        SELECT doc_id FROM mega_nodes
-        WHERE n > {MAX_BAND_DOCS} AND doc_id <> component
+        SELECT DISTINCT doc_id FROM (
+            SELECT node AS doc_id FROM lab WHERE node <> component
+            UNION ALL
+            SELECT doc_id FROM mega_nodes
+            WHERE n > {MAX_BAND_DOCS} AND doc_id <> component
+        )
     )
     SELECT d.source,
            count(*) AS n_docs,

@@ -408,8 +408,8 @@ def run_streaming_near_dup_admission(
     corpus.
 
     Band collision IS the rejection decision (the Gopher/RefinedWeb
-    convention; the batch-side `dup_components` applies the same rule
-    to its band-0 key).  Exact duplicates are subsumed: identical text ⇒ identical
+    convention; the batch-side `dup_components` pairs docs on the same
+    band keys).  Exact duplicates are subsumed: identical text ⇒ identical
     signatures ⇒ identical bands ⇒ same cluster.
 
     Replay idempotency again comes from the semantics, not a
