@@ -28,7 +28,6 @@ from text_extractor_for_bioeconomic_products_spark.operators import (  # noqa: E
     conversation,
     curation,
     graph,
-    multimodal,
     dedup,
     profiling,
     stringjoin,
@@ -76,7 +75,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q.update(textstats.QUERIES)
     q.update(dedup.QUERIES)
     q.update(stringjoin.QUERIES)
-    q.update(multimodal.QUERIES)
     q.update(conversation.QUERIES)
     q.update(bpe.QUERIES)
     q.update(graph.QUERIES)

@@ -2,7 +2,7 @@
 """spark-submit entry for the MEDIA near-dup dedup pass — the
 multimodal curation job a user ships over an image corpus:
 
-    scan media (or synthesize the deterministic table) → decode + dHash
+    scan media (or synthesize the deterministic image table) → decode + dHash
     in one mapInPandas pass → banded Hamming pairs → connected
     components → keep-first apply → kept media parquet + one JSON
     lineage line (hot-band skips reported, never silent).
@@ -59,7 +59,8 @@ def run_media_dedup(
             .withColumn("media_id", F.col("media_id") + 10_000_000)
         )
         media = media.unionByName(copies)
-    media = media.persist()
+    # no cache of the payloads: the count, the hash pass and the kept write
+    # each re-scan the input; only the small derived tables stay cached
     n_media = media.count()
 
     hashes = image_phashes(media).persist()
@@ -85,7 +86,6 @@ def run_media_dedup(
     assert lineage["n_kept"] + n_victims == n_media, "rows unaccounted"
     victims.unpersist()
     hashes.unpersist()
-    media.unpersist()
     return lineage
 
 

@@ -1,7 +1,7 @@
-"""Perceptual-hash image near-dup + audio features (operators/media_dedup.py,
-multimodal.extract_audio_features): hash invariants, cross-codec stability,
-pigeonhole completeness of the banded join vs the brute-force oracle,
-hot-band capping, and audio feature math on known signals."""
+"""Perceptual-hash image near-dup (operators/media_dedup.py) and the
+``run_media_dedup`` job: hash invariants, cross-codec stability, pigeonhole
+completeness of the banded join vs the brute-force oracle, hot-band
+capping, and the job's row accounting."""
 
 from __future__ import annotations
 
@@ -9,8 +9,6 @@ import hashlib
 
 import numpy as np
 import pytest
-
-from pyspark.sql import functions as F
 
 from text_extractor_for_bioeconomic_products_spark.operators.media_dedup import (
     MAX_BAND_MEDIA,
@@ -25,8 +23,6 @@ from text_extractor_for_bioeconomic_products_spark.operators.multimodal import (
     encode_bmp,
     encode_jpeg,
     encode_png,
-    encode_wav,
-    extract_audio_features,
 )
 
 
@@ -180,80 +176,6 @@ def test_phash_banding_rejects_incomplete_config(spark):
         phash_near_dup_pairs(hashes, max_hamming=4)
 
 
-def _audio_df(spark):
-    rate = 8000
-    t = np.arange(rate) / rate  # 1 second
-    sine = (0.5 * np.sin(2 * np.pi * 440 * t) * 32767).astype("<i2")
-    silence = np.zeros(rate // 2, dtype="<i2")
-    square = (
-        np.where(np.sin(2 * np.pi * 100 * t) >= 0, 32767, -32768)
-    ).astype("<i2")
-    rows = [
-        (0, "audio", encode_wav(rate, sine.tobytes()), ("src", "audio/wav")),
-        (1, "audio", encode_wav(rate, silence.tobytes()), ("src", "audio/wav")),
-        (2, "audio", encode_wav(rate, square.tobytes()), ("src", "audio/wav")),
-        (3, "audio", b"RIFFxxxxWAVEgarbage", ("src", "audio/wav")),
-        (4, "image", encode_bmp(2, 2, bytes(12)), ("src", "image/bmp")),
-    ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def test_audio_features_known_signals(spark):
-    feats = {
-        r["media_id"]: r
-        for r in extract_audio_features(_audio_df(spark)).collect()
-    }
-    sine = feats[0]
-    assert sine["valid"] and sine["sample_rate"] == 8000
-    assert sine["n_samples"] == 8000 and sine["duration_sec"] == 1.0
-    # rms of a 0.5-amplitude sine = 0.5/sqrt(2); zcr = 2f
-    assert abs(sine["rms"] - 0.5 / np.sqrt(2)) < 0.01
-    assert abs(sine["zcr"] - 880) < 44
-    assert 0.49 <= sine["peak"] <= 0.51
-    silence = feats[1]
-    assert silence["rms"] == 0.0 and silence["zcr"] == 0.0
-    assert silence["peak"] == 0.0 and silence["duration_sec"] == 0.5
-    square = feats[2]
-    assert square["peak"] >= 0.999  # full-scale → clipping flag
-    assert abs(square["rms"] - 1.0) < 0.01
-    assert abs(square["zcr"] - 200) < 10
-    assert feats[3]["valid"] is False  # corrupt WAV quarantined
-    assert feats[4]["valid"] is False  # non-audio payload quarantined
-
-
-def test_media_dedup_apply_end_to_end(spark):
-    """Full flow on a planted family: base image 0 + two perturbed
-    re-encodes (a transitive chain across codecs) collapse to the ONE
-    minimum-id keeper; every distinct image survives; the undecodable
-    row is kept (quarantine, never silent drop)."""
-    from text_extractor_for_bioeconomic_products_spark.operators.media_dedup import (
-        media_dedup_apply,
-    )
-
-    base_px = _block_pixels(100)
-    h, w, _ = base_px.shape
-    rows = []
-    # family: 0 (bmp), 200 (png, perturbed seed 1), 201 (jpeg, seed 2)
-    rows.append((0, "image", encode_bmp(w, h, base_px.tobytes()), ("s", "m")))
-    rows.append(
-        (200, "image",
-         encode_png(w, h, _perturb(base_px, seed=1).tobytes()), ("s", "m"))
-    )
-    rows.append(
-        (201, "image",
-         encode_jpeg(w, h, _perturb(base_px, seed=2).tobytes()), ("s", "m"))
-    )
-    for i in range(5):  # distinct singletons
-        px = _block_pixels(300 + i)
-        rows.append((10 + i, "image", encode_bmp(w, h, px.tobytes()), ("s", "m")))
-    rows.append((999, "image", b"\x00junk", ("s", "bad")))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    kept = sorted(
-        r["media_id"] for r in media_dedup_apply(media).select("media_id").collect()
-    )
-    assert kept == [0, 10, 11, 12, 13, 14, 999]
-
-
 def test_media_dedup_victims_keeps_caller_cache(spark):
     """A caller that cached ``hashes`` for its own later reads (the
     ``run_media_dedup`` job runs ``phash_hot_bands`` after the victims)
@@ -311,136 +233,87 @@ def test_dhash_hypothesis_invariants():
     assert dhash64(np.stack([ramp_y] * 3, axis=2)) == 0
 
 
-def _am_signal(seed: int, n: int = 13000) -> np.ndarray:
-    """Amplitude-modulated test signal with DECISIVE envelope gradients:
-    65 windows each at a distinct deterministic gain level (≥0.05 gap),
-    carrier = 440 Hz sine — re-quantization noise cannot flip a window
-    comparison (the blocky-image construction, for audio)."""
-    digest = hashlib.sha256(f"am:{seed}".encode()).digest() * 3
-    levels = np.array(
-        [0.1 + 0.9 * (digest[i] % 16) / 16 + (i % 2) * 0.028
-         for i in range(65)]
-    )
-    t = np.arange(n) / 8000.0
-    carrier = np.sin(2 * np.pi * 440 * t)
-    gain = np.repeat(levels, n // 65 + 1)[:n]
-    return carrier * gain
+def test_synthesize_media_pins_image_rows(spark):
+    """The synthetic table is images only, and its (media_id, payload)
+    pairs hash to the digest of the image rows of the earlier mixed
+    image/audio/video generator: every image kept its id and bytes."""
+    import struct
 
-
-def test_audio_ahash_requantization_invariance():
-    """The same signal encoded 16-bit and 8-bit hashes identically
-    (envelope gradients decisive); distinct AM patterns are far."""
-    from text_extractor_for_bioeconomic_products_spark.operators.media_dedup import (
-        audio_ahash64,
-    )
     from text_extractor_for_bioeconomic_products_spark.operators.multimodal import (
-        decode_wav_samples,
+        synthesize_media,
     )
 
-    sig = _am_signal(1)
-    pcm16 = encode_wav(8000, (sig * 32000).astype("<i2").tobytes())
-    pcm8 = encode_wav(
-        8000, (sig * 120 + 128).astype(np.uint8).tobytes(), sampwidth=1
+    rows = sorted(
+        synthesize_media(spark, n=300, seed=42).collect(),
+        key=lambda r: r["media_id"],
     )
-    h16 = audio_ahash64(decode_wav_samples(pcm16)[1])
-    h8 = audio_ahash64(decode_wav_samples(pcm8)[1])
-    assert h16 == h8
-    # uniform gain invariance
-    quieter = encode_wav(8000, (sig * 16000).astype("<i2").tobytes())
-    assert audio_ahash64(decode_wav_samples(quieter)[1]) == h16
-    other = audio_ahash64(_am_signal(2))
-    assert bin((h16 ^ other) & ((1 << 64) - 1)).count("1") > 10
-    assert audio_ahash64(np.array([])) == 0
-
-
-def test_audio_near_dup_pipeline_reuses_band_join(spark):
-    """audio_hashes emits PHASH_SCHEMA, so phash_near_dup_pairs runs
-    UNCHANGED over audio: planted 16-vs-8-bit re-encodes of the same
-    signals surface as near-dup pairs; distinct signals don't; images
-    and junk quarantine out."""
-    from text_extractor_for_bioeconomic_products_spark.operators.media_dedup import (
-        audio_hashes,
-        phash_brute_force_pairs,
-        phash_near_dup_pairs,
+    assert {r["kind"] for r in rows} == {"image"}
+    digest = hashlib.sha256()
+    for r in rows:
+        payload = bytes(r["payload"])
+        digest.update(struct.pack(">qI", r["media_id"], len(payload)) + payload)
+    assert (len(rows), digest.hexdigest()) == (
+        100, "b071b38fa28393d9ec775c9c258bc7a5c0525abcd749ef953d4cab1c0a1690dd"
     )
 
-    rows = []
-    for i in range(8):  # distinct signals
-        sig = _am_signal(10 + i)
-        rows.append(
-            (i, "audio",
-             encode_wav(8000, (sig * 32000).astype("<i2").tobytes()),
-             ("s", "audio/wav"))
-        )
-    for base in (0, 3):  # 8-bit re-encodes of two of them
-        sig = _am_signal(10 + base)
-        rows.append(
-            (100 + base, "audio",
-             encode_wav(8000, (sig * 120 + 128).astype(np.uint8).tobytes(),
-                        sampwidth=1),
-             ("s", "audio/wav"))
-        )
-    rows.append((999, "image", encode_bmp(2, 2, bytes(12)), ("s", "i")))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    hashes = audio_hashes(media).cache()
-    got = {r["media_id"]: r for r in hashes.collect()}
-    assert got[999]["valid"] is False
-    pairs = phash_near_dup_pairs(hashes)
-    found = {(r["media_a"], r["media_b"]) for r in pairs.collect()}
-    assert {(0, 100), (3, 103)} <= found
-    brute = {
-        (r["media_a"], r["media_b"])
-        for r in phash_brute_force_pairs(hashes).collect()
-    }
-    assert found == brute
-    hashes.unpersist()
+
+def _run_media_dedup():
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
+    from run_media_dedup import run_media_dedup
+
+    return run_media_dedup
 
 
-def test_audio_features_stereo_and_unsupported_depths(spark):
-    """A 1-second STEREO clip reads duration 1.0 (frame-domain, not
-    interleaved-sample-domain) with zcr of the mono mixdown; a 24-bit
-    WAV quarantines (reinterpreting its frames as 8-bit would produce
-    noise marked valid); a NULL payload quarantines instead of killing
-    the batch."""
-    from text_extractor_for_bioeconomic_products_spark.operators.media_dedup import (
-        audio_hashes,
-    )
-    from text_extractor_for_bioeconomic_products_spark.operators.multimodal import (
-        extract_audio_features,
-    )
+def _kept_ids(spark, out: str) -> list:
+    import os
 
-    rate = 8000
-    t = np.arange(rate) / rate
-    mono = (0.5 * np.sin(2 * np.pi * 440 * t) * 32000).astype("<i2")
-    stereo = np.empty(2 * rate, dtype="<i2")
-    stereo[0::2] = mono  # L
-    stereo[1::2] = mono  # R (identical → mixdown == mono)
-    fake24 = encode_wav(rate, bytes(3 * rate), sampwidth=3)
+    kept = spark.read.parquet(os.path.join(out, "media_kept"))
+    return sorted(r["media_id"] for r in kept.select("media_id").collect())
+
+
+def test_run_media_dedup_plant_dups(spark, tmp_path):
+    """The job on the synthetic table with planted exact copies: kept +
+    victims = input, every planted copy is a victim and its original is
+    kept."""
+    out = str(tmp_path / "md")
+    lineage = _run_media_dedup()(spark, out, synthesize_n=90, plant_dups=5)
+    originals = [0, 3, 6, 9, 12]  # the first 5 image ids
+    planted = {m + 10_000_000 for m in originals}
+    assert lineage["n_media"] == 30 + 5
+    assert lineage["n_kept"] + lineage["n_near_dup_victims"] == lineage["n_media"]
+    kept = _kept_ids(spark, out)
+    assert len(kept) == lineage["n_kept"]
+    assert set(kept) <= set(range(0, 90, 3)) | planted
+    assert not planted & set(kept)
+    assert set(originals) <= set(kept)
+
+
+def test_run_media_dedup_input_collapses_chain_keeps_undecodable(spark, tmp_path):
+    """The job over an ``--input`` table: a base image and two perturbed
+    re-encodes (a transitive chain across codecs) collapse to the one
+    minimum-id keeper, distinct images survive, and the undecodable row
+    is kept, never dropped."""
+    base_px = _block_pixels(100)
+    h, w, _ = base_px.shape
     rows = [
-        (0, "audio", encode_wav(rate, stereo.tobytes(), n_channels=2),
-         ("s", "audio/wav")),
-        (1, "audio", encode_wav(rate, mono.tobytes()), ("s", "audio/wav")),
-        (2, "audio", fake24, ("s", "audio/wav")),
-        (3, "audio", None, ("s", "audio/wav")),
+        (0, "image", encode_bmp(w, h, base_px.tobytes()), ("s", "m")),
+        (200, "image",
+         encode_png(w, h, _perturb(base_px, seed=1).tobytes()), ("s", "m")),
+        (201, "image",
+         encode_jpeg(w, h, _perturb(base_px, seed=2).tobytes()), ("s", "m")),
     ]
-    media = spark.createDataFrame(
-        # nullable payload variant: MEDIA_SCHEMA declares payload NOT
-        # NULL, but foreign tables (the run_media_dedup --input path)
-        # may not — the operators must quarantine, not crash
-        rows,
-        "media_id long, kind string, payload binary, "
-        "meta struct<source:string,mime:string>",
-    )
-    feats = {
-        r["media_id"]: r for r in extract_audio_features(media).collect()
-    }
-    st, mo = feats[0], feats[1]
-    assert st["valid"] and st["duration_sec"] == 1.0
-    assert st["n_samples"] == rate  # frames, not interleaved samples
-    assert st["zcr"] == mo["zcr"]   # identical channels → mono signal
-    assert abs(st["rms"] - mo["rms"]) < 1e-6
-    assert feats[2]["valid"] is False  # 24-bit refused, not noise
-    assert feats[3]["valid"] is False  # null payload quarantined
-    hashes = {r["media_id"]: r for r in audio_hashes(media).collect()}
-    assert hashes[0]["valid"] and hashes[0]["phash"] == hashes[1]["phash"]
-    assert hashes[2]["valid"] is False and hashes[3]["valid"] is False
+    for i in range(5):  # distinct singletons
+        px = _block_pixels(300 + i)
+        rows.append((10 + i, "image", encode_bmp(w, h, px.tobytes()), ("s", "m")))
+    rows.append((999, "image", b"\x00junk", ("s", "bad")))
+    in_dir = str(tmp_path / "media")
+    spark.createDataFrame(rows, MEDIA_SCHEMA).write.parquet(in_dir)
+
+    out = str(tmp_path / "md")
+    lineage = _run_media_dedup()(spark, out, input_dir=in_dir)
+    assert _kept_ids(spark, out) == [0, 10, 11, 12, 13, 14, 999]
+    assert lineage["n_near_dup_victims"] == 2
+    assert lineage["n_nonimage_or_undecodable_kept"] == 1

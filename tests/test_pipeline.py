@@ -130,69 +130,32 @@ def test_streaming_matches_batch(spark, transcripts_df, tmp_path):
 def test_multimodal_plumbing(spark):
     from text_extractor_for_bioeconomic_products_spark.operators.multimodal import (
         extract_media_features,
-        frame_sample,
-        resize_media,
         synthesize_media,
     )
     media = synthesize_media(spark, n=60)
     feats = extract_media_features(media).collect()
-    assert len(feats) == 60
+    assert len(feats) == 20
     assert all(f["valid"] for f in feats)
-    by_kind = {}
-    for f in feats:
-        by_kind.setdefault(f["kind"], []).append(f)
     # images are REAL BMPs/PNGs/JPEGs (cycling): real dims, real pixel
     # mean in (0, 255); all three codecs must actually appear
-    assert {f["codec"] for f in by_kind["image"]} == {"bmp", "png", "jpeg"}
+    assert {f["kind"] for f in feats} == {"image"}
+    assert {f["codec"] for f in feats} == {"bmp", "png", "jpeg"}
     assert all(16 <= f["width"] <= 64 and 16 <= f["height"] <= 64
-               for f in by_kind["image"])
-    assert all(0.0 < f["mean_level"] < 255.0 for f in by_kind["image"])
-    # audio is REAL PCM WAV: width=sample rate, height=frames, |amp| mean
-    assert all(f["codec"] == "wav" for f in by_kind["audio"])
-    assert all(f["width"] >= 8000 and f["height"] >= 500
-               for f in by_kind["audio"])
-    assert all(0.0 < f["mean_level"] < 1.0 for f in by_kind["audio"])
-    # video is REAL containers now, cycling raw-AVI / MJPEG-AVI /
-    # MJPEG-MP4: real dims, real pixel means, all three must appear
-    assert {f["codec"] for f in by_kind["video"]} == {
-        "avi", "mjpeg_avi", "mjpeg_mp4"}
-    assert all(8 <= f["width"] <= 32 and 8 <= f["height"] <= 32
-               for f in by_kind["video"])
-    assert all(0.0 < f["mean_level"] < 255.0 for f in by_kind["video"])
+               for f in feats)
+    assert all(0.0 < f["mean_level"] < 255.0 for f in feats)
     # determinism: same synth → same hashes
     feats2 = extract_media_features(synthesize_media(spark, n=60)).collect()
     assert sorted(f["sha256"] for f in feats) == sorted(f["sha256"] for f in feats2)
-    # REAL resize: image dims clamp (re-encoded BMP still decodes, mean
-    # stays a real pixel statistic); audio/video payloads byte-unchanged
-    resized = {f["media_id"]: f for f in
-               extract_media_features(resize_media(media, max_dim=32)).collect()}
-    orig = {f["media_id"]: f for f in feats}
-    for mid, f in resized.items():
-        if f["kind"] == "image":
-            assert max(f["width"], f["height"]) <= 32 and f["valid"]
-            assert 0.0 < f["mean_level"] < 255.0
-        else:
-            assert f["sha256"] == orig[mid]["sha256"]
-    # REAL frame sampling: only video rows, real per-frame pixel means
-    frames = frame_sample(media).collect()
-    video_ids = {f["media_id"] for f in frames}
-    assert video_ids and all(mid % 3 == 2 for mid in video_ids)
-    assert all(
-        f["frame_mean"] is not None and 0.0 < f["frame_mean"] < 255.0
-        for f in frames
-    )
 
 
 def test_bmp_wav_codec_roundtrip():
-    """The stdlib codecs are real: encode → decode returns the exact
-    pixels/frames (including the 4-byte BMP row-padding path)."""
+    """The stdlib BMP codec is real: encode → decode returns the exact
+    pixels (including the 4-byte BMP row-padding path)."""
     import numpy as np
 
     from text_extractor_for_bioeconomic_products_spark.operators.multimodal import (
         decode_bmp,
-        decode_wav,
         encode_bmp,
-        encode_wav,
     )
 
     for w, h in [(3, 2), (4, 4), (17, 5)]:  # odd widths exercise padding
@@ -203,10 +166,6 @@ def test_bmp_wav_codec_roundtrip():
         assert arr.tobytes() == pixels  # exact pixel roundtrip
         expect = round(float(np.frombuffer(pixels, np.uint8).astype(np.float64).mean()), 4)
         assert mean_level == expect
-    frames = np.arange(-500, 500, dtype="<i2").tobytes()
-    rate, n, mean_level = decode_wav(encode_wav(11025, frames))
-    assert rate == 11025 and n == 1000
-    assert mean_level == round(float(np.abs(np.arange(-500, 500)).mean()) / 32768.0, 4)
 
 
 def test_png_codec_roundtrip():
@@ -1409,13 +1368,16 @@ def test_star_contraction_matches_on_real_candidates(spark):
 def test_minhash_second_band_recall(spark):
     """Multi-band LSH recall: a planted near-dup pair whose FIRST band
     diverges (sig_0 prefix flips) but whose second band agrees must
-    surface in the census — the single-band key silently missed exactly
+    share a band key — the single-band key silently missed exactly
     this class.  The extra word 'ember' was searched offline to flip the
     seed-0 min-hash while preserving seeds 2 and 3."""
     import hashlib
 
+    from pyspark.sql import functions as F
+
     from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
-        minhash_band_census,
+        lsh_band_keys,
+        minhash_signatures,
     )
 
     base = "cacao beans are harvested by river communities for food and trade"
@@ -1436,7 +1398,11 @@ def test_minhash_second_band_recall(spark):
         [(1, base), (2, variant), (3, "totally unrelated words only here")],
         "doc_id long, text string",
     )
-    census = {r["band"]: r["n_docs"] for r in minhash_band_census(docs).collect()}
+    bands = minhash_signatures(docs).select(F.explode(lsh_band_keys()).alias("band"))
+    census = {
+        r["band"]: r["count"]
+        for r in bands.groupBy("band").count().filter("count > 1").collect()
+    }
     band1_key = f"1:{prefix(base, 2)}|{prefix(base, 3)}"
     assert census == {band1_key: 2}  # caught by band 1, and ONLY band 1
 
@@ -1460,6 +1426,22 @@ def test_fuzzy_dedup_victims_pair_on_second_band(spark, tmp_path):
     }).to_parquet(str(tmp_path / "documents.parquet"))
     victims = fuzzy_dedup_victims(spark, str(tmp_path)).collect()
     assert [r["doc_id"] for r in victims] == [2]
+
+
+def test_fuzzy_dedup_victims_keep_one_per_linked_group(spark, monkeypatch):
+    """Cluster rows that share a member form one group, and the group
+    keeps only its minimum.  Over-full bands emit overlapping cluster
+    rows (a doc in both the band-0 and the band-1 cluster); keeping each
+    row's minimum would keep both 1 and 3 of the group {1, 3, 5}."""
+    from text_extractor_for_bioeconomic_products_spark.operators import dedup
+
+    clusters = spark.createDataFrame(
+        [(1, 2, "1,5"), (3, 2, "3,5"), (7, 2, "7,8")],
+        "component long, n_docs long, members string",
+    )
+    monkeypatch.setattr(dedup, "q_dup_components", lambda spark, sf_dir: clusters)
+    victims = dedup.fuzzy_dedup_victims(spark, "unused").collect()
+    assert sorted(r["doc_id"] for r in victims) == [3, 5, 8]
 
 
 def test_xlsx_writer_edge_cases(tmp_path):
@@ -1642,6 +1624,38 @@ def test_streaming_merge_upsert_restart_effectively_once(
     assert batch.select(cols).exceptAll(got.select(cols)).count() == 0
 
 
+def test_streaming_merge_upsert_spark_jobs(spark, transcripts_df, tmp_path):
+    """One micro-batch upsert into an existing table runs the merge's
+    jobs and nothing more: its lateness census (max ``ts`` and late
+    rows) comes from ``merge_turns``' one aggregate, and the batch is
+    not cached on its own.  Jobs are counted by the DAG scheduler's job
+    ids, which also covers jobs on the stream's own thread."""
+    from text_extractor_for_bioeconomic_products_spark.plans.pipeline import (
+        merge_turns,
+    )
+    from text_extractor_for_bioeconomic_products_spark.sources.transcripts import (
+        write_transcripts,
+    )
+    from text_extractor_for_bioeconomic_products_spark.streaming.pipeline import (
+        run_streaming_merge_upsert,
+    )
+
+    in_dir = str(tmp_path / "in")
+    turns_dir = str(tmp_path / "turns_merged")
+    write_transcripts(transcripts_df.coalesce(1), in_dir, shuffled=False)
+    merge_turns(spark, turns_dir, extract_turns(transcripts_df).drop("spans"),
+                n_buckets=8)
+    n_rows = transcripts_df.count()
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.nextJobId()
+    stats = run_streaming_merge_upsert(
+        spark, in_dir, turns_dir, str(tmp_path / "ckpt"), n_buckets=8
+    )
+    n_jobs = scheduler.nextJobId() - before
+    assert (stats["batches"], stats["rows"]) == (1, n_rows)
+    assert n_jobs <= 9, n_jobs
+
+
 def test_streaming_dedup_admission_replay_idempotent(
     spark, transcripts_df, tmp_path
 ):
@@ -1802,31 +1816,6 @@ def test_streaming_near_dup_admission(spark, tmp_path):
     assert got.filter(F.size("bands") != 2).count() == 0
 
 
-def test_fuzzy_dedup_apply_drops_non_canonical(spark, tmp_path):
-    """Census → action: in a planted near-dup pair only the higher
-    doc_id drops; the unique doc and the canonical survive."""
-    import pandas as pd
-
-    from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
-        q_fuzzy_dedup_apply,
-    )
-
-    dup = "the quick brown fox jumps over the lazy dog again and again"
-    rows = pd.DataFrame({
-        "doc_id": [1, 2, 3],
-        "text": [dup, dup, "completely different words entirely unrelated content here"],
-        "lang": ["en"] * 3,
-        "source": ["s0", "s0", "s1"],
-        "n_chars": [len(dup), len(dup), 59],
-    })
-    rows.to_parquet(str(tmp_path / "documents.parquet"))
-    got = {
-        r["source"]: (r["n_docs"], r["n_dropped"], r["n_kept"])
-        for r in q_fuzzy_dedup_apply(spark, str(tmp_path)).collect()
-    }
-    assert got == {"s0": (2, 1, 1), "s1": (1, 0, 1)}, got
-
-
 def test_run_curation_end_to_end(spark, sf001_dir, tmp_path):
     """The composed job: every input row is accounted to exactly one
     fate (quality-dropped, dedup-dropped, or written to one split), the
@@ -1864,140 +1853,6 @@ def test_run_curation_end_to_end(spark, sf001_dir, tmp_path):
         for r in spark.read.parquet(os.path.join(out2, "val")).collect()
     }
     assert ids2_val == ids["val"]
-
-
-def test_avi_codec_roundtrip():
-    """The stdlib AVI container is real: encode → decode returns exact
-    frame count, dims, fps, and per-frame means of the real pixels
-    (odd-size frames exercise RIFF even-padding); malformed payloads
-    raise instead of returning garbage."""
-    import numpy as np
-    import pytest as _pytest
-
-    from text_extractor_for_bioeconomic_products_spark.operators.multimodal import (
-        decode_avi,
-        encode_avi,
-    )
-
-    for w, h, n in [(3, 3, 2), (5, 4, 3), (7, 7, 1)]:  # 27/60/147 bytes — odd sizes pad
-        frames = [
-            bytes(((i * 31 + f * 7) % 256) for i in range(w * h * 3))
-            for f in range(n)
-        ]
-        payload = encode_avi(w, h, frames, fps=12)
-        rw, rh, rn, fps, mean_level, frame_means, codec = decode_avi(payload)
-        assert (rw, rh, rn, fps, codec) == (w, h, n, 12, "rawvideo")
-        for f, fm in zip(frames, frame_means):
-            assert fm == round(float(np.frombuffer(f, np.uint8).mean()), 4)
-        assert mean_level == round(float(np.mean(frame_means)), 4)
-    with _pytest.raises(ValueError):
-        decode_avi(b"RIFF\x10\x00\x00\x00AVI " + b"\x00" * 16)
-
-
-def test_avi_mjpeg_roundtrip():
-    """Motion-JPEG in AVI: '00dc' frames are complete baseline JPEGs
-    decoded by the repo's own JPEG codec; dimensions validate against
-    the avih header and per-frame means come from the DECODED pixels
-    (lossy: close to, not equal to, the raw means).  Mixed raw+mjpeg
-    streams are rejected."""
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from text_extractor_for_bioeconomic_products_spark.operators.multimodal import (
-        decode_avi,
-        decode_media,
-        encode_avi,
-    )
-
-    w, h, n = 16, 8, 3
-    frames = [
-        bytes(((i * 31 + f * 7) % 256) for i in range(w * h * 3))
-        for f in range(n)
-    ]
-    payload = encode_avi(w, h, frames, fps=12, codec="mjpeg")
-    rw, rh, rn, fps, mean_level, frame_means, codec = decode_avi(payload)
-    assert (rw, rh, rn, fps, codec) == (w, h, n, 12, "mjpeg")
-    assert len(frame_means) == n
-    for f, fm in zip(frames, frame_means):
-        raw_mean = float(np.frombuffer(f, np.uint8).mean())
-        assert abs(fm - raw_mean) < 16.0  # lossy but in the neighborhood
-    assert decode_media(payload)[0] == "mjpeg_avi"
-
-    # mixed-stream refusal: splice a raw 00db chunk into the mjpeg movi
-    raw_chunk = b"00db" + struct.pack("<I", w * h * 3) + frames[0]
-    movi_at = payload.index(b"movi")
-    # extend the movi LIST and RIFF sizes to cover the spliced chunk
-    list_at = payload.rindex(b"LIST", 0, movi_at)
-    list_size = struct.unpack("<I", payload[list_at + 4:list_at + 8])[0]
-    riff_size = struct.unpack("<I", payload[4:8])[0]
-    mixed = (
-        payload[:4]
-        + struct.pack("<I", riff_size + len(raw_chunk))
-        + payload[8:list_at + 4]
-        + struct.pack("<I", list_size + len(raw_chunk))
-        + payload[list_at + 8:movi_at + 4]
-        + raw_chunk
-        + payload[movi_at + 4:]
-    )
-    # header frame count now disagrees too — either guard may fire first
-    with _pytest.raises(ValueError):
-        decode_avi(mixed)
-
-
-def test_mp4_mjpeg_roundtrip_and_probe():
-    """ISO BMFF: encode_mp4 writes a spec-shaped ftyp+mdat+moov tree
-    whose samples are baseline JPEGs; decode_mp4 walks the real box
-    tree (stsd/stts/stsc/stsz/stco), slices samples out of mdat, and
-    the per-frame means equal decoding the same JPEGs directly.
-    probe_mp4 reads container metadata out of ANY codec (avc1 too);
-    only the non-JPEG entropy decode refuses — the honest boundary."""
-    import pytest as _pytest
-
-    from text_extractor_for_bioeconomic_products_spark.operators.multimodal import (
-        decode_jpeg,
-        decode_media,
-        decode_mp4,
-        encode_jpeg,
-        encode_mp4,
-        probe_mp4,
-    )
-
-    w, h, n = 16, 8, 4
-    frames = [
-        bytes(((i * 31 + f * 7) % 256) for i in range(w * h * 3))
-        for f in range(n)
-    ]
-    payload = encode_mp4(w, h, frames, fps=12)
-    meta = probe_mp4(payload)
-    assert (meta["codec"], meta["width"], meta["height"],
-            meta["n_samples"], meta["fps"]) == ("jpeg", w, h, n, 12)
-    rw, rh, rn, fps, mean_level, frame_means, codec = decode_mp4(payload)
-    assert (rw, rh, rn, fps, codec) == (w, h, n, 12, "mjpeg")
-    # sample slicing is exact: means equal the direct JPEG decode of
-    # the same frames (byte-identical samples, not merely similar)
-    direct = [decode_jpeg(encode_jpeg(w, h, f))[2] for f in frames]
-    assert frame_means == direct
-    assert decode_media(payload) == ("mjpeg_mp4", w, h, mean_level)
-
-    # avc1: container parses (probe), pixel decode refuses — patch the
-    # stsd sample-entry fourcc (last 'jpeg' occurrence, inside moov)
-    at = payload.rindex(b"jpeg")
-    avc = payload[:at] + b"avc1" + payload[at + 4:]
-    m2 = probe_mp4(avc)
-    assert (m2["codec"], m2["width"], m2["n_samples"]) == ("avc1", w, n)
-    with _pytest.raises(NotImplementedError):
-        decode_mp4(avc)
-
-    # real walk: truncation and a sample-count lie both raise
-    with _pytest.raises(ValueError):
-        probe_mp4(payload[: len(payload) // 2])
-    at = payload.rindex(b"stsz")
-    lied = (payload[:at + 12]
-            + (n + 1).to_bytes(4, "big") + payload[at + 16:])
-    with _pytest.raises(ValueError):
-        probe_mp4(lied)
 
 
 def test_png_roundtrip_property():
@@ -2066,52 +1921,6 @@ def test_jpeg_roundtrip_property():
         assert 0.0 <= mean <= 255.0
         if solid:
             assert np.abs(arr.astype(int) - px.astype(int)).max() <= 4
-
-    roundtrip()
-
-
-def test_mp4_roundtrip_property():
-    """Hypothesis battery for the ISO BMFF walk: arbitrary dims, frame
-    counts, fps, and content always probe back the exact container
-    metadata, and the sample slicing is byte-exact — each frame's
-    decoded mean equals decoding the same JPEG standalone (so mdat
-    offsets/sizes from stsc/stco/stsz are provably correct, not merely
-    plausible)."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from text_extractor_for_bioeconomic_products_spark.operators.multimodal import (
-        decode_jpeg,
-        decode_mp4,
-        encode_jpeg,
-        encode_mp4,
-        probe_mp4,
-    )
-
-    @settings(max_examples=20, deadline=None)
-    @given(
-        w=st.integers(min_value=1, max_value=16),
-        h=st.integers(min_value=1, max_value=16),
-        n=st.integers(min_value=1, max_value=6),
-        fps=st.integers(min_value=1, max_value=60),
-        seed=st.integers(min_value=0, max_value=2**31 - 1),
-    )
-    def roundtrip(w, h, n, fps, seed):
-        rng = np.random.default_rng(seed)
-        frames = [
-            rng.integers(0, 256, w * h * 3, dtype=np.uint8).tobytes()
-            for _ in range(n)
-        ]
-        payload = encode_mp4(w, h, frames, fps=fps)
-        assert payload == encode_mp4(w, h, frames, fps=fps)  # deterministic
-        meta = probe_mp4(payload)
-        assert (meta["codec"], meta["width"], meta["height"],
-                meta["n_samples"], meta["fps"]) == ("jpeg", w, h, n, fps)
-        rw, rh, rn, rfps, _mean, means, codec = decode_mp4(payload)
-        assert (rw, rh, rn, rfps, codec) == (w, h, n, fps, "mjpeg")
-        direct = [decode_jpeg(encode_jpeg(w, h, f))[2] for f in frames]
-        assert means == direct
 
     roundtrip()
 

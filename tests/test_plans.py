@@ -129,31 +129,19 @@ def test_aqe_splits_skewed_join(spark):
 
 
 def test_minhash_signatures_are_shuffle_free(spark):
-    """Signatures are narrow per-row expressions (array_min∘transform /
-    aggregate over the in-row word array) — zero Exchange.  The earlier
+    """Signatures are narrow per-row expressions (array_min∘transform
+    over the in-row word array) — zero Exchange.  The earlier
     explode+groupBy formulation shuffled every (doc, word) pair; a
     regression here re-introduces a corpus-sized all-to-all under the
-    duplicate clustering, the streaming near-dup admission and the SimHash
-    queries."""
+    duplicate clustering and the streaming near-dup admission."""
     from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
         minhash_signatures,
-        simhash16,
     )
     from text_extractor_for_bioeconomic_products_spark.sources.tables import load
 
     docs = load(spark, SF, "documents")
-    for fn in (minhash_signatures, simhash16):
-        p = fn(docs)._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in p, f"{fn.__name__} plans a shuffle:\n{p}"
-
-
-def test_lsh_band_census_shuffles_only_on_band(spark):
-    """dedup_minhash_lsh's only hash shuffle is keyed by the band — no
-    Exchange runs below the signature projection."""
-    p = plan_of(spark, "dedup_minhash_lsh")
-    assert p.count("Exchange hashpartitioning") == 1
-    assert "Exchange hashpartitioning(band" in p
-    assert "Exchange hashpartitioning(doc_id" not in p
+    p = minhash_signatures(docs)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in p, f"minhash_signatures plans a shuffle:\n{p}"
 
 
 def test_ngram_contamination_broadcasts_benchmark_side(spark):

@@ -4,12 +4,9 @@ What the jobs run: the exact-hash census (``run_datacard``), MinHash
 signatures with LSH band keys (the streaming near-dup admission), the
 banded word-set Jaccard candidates → connected components → keep-min
 victims (``run_curation``), and the star-contraction components
-(``media_dedup``).  Five registry queries that no job runs stay as thin
-wrappers over that code, each checked against its DuckDB oracle: the
-all-band LSH census, 16-bit SimHash signatures, keep-first per
-(lang, simhash), the Jaccard candidates and the per-source fuzzy-dedup
-census.  All are pure DataFrame/SQL — JVM-side, no Python in the hot
-path.
+(``media_dedup``).  The registry holds the two of these that have a
+DuckDB oracle: ``dedup_exact`` and ``dup_components``.  All are pure
+DataFrame/SQL — JVM-side, no Python in the hot path.
 
 Scale design: every variant reduces to (signature → shuffle on signature
 → within-bucket work).  At 100 TB the signature shuffle is the only
@@ -136,26 +133,6 @@ def lsh_band_keys() -> Column:
     ])
 
 
-def minhash_band_census(docs: DataFrame) -> DataFrame:
-    """LSH bucket census over ALL bands: band key = band_id ':' the band's
-    r=2 signature prefixes; buckets holding >1 doc are near-dup candidate
-    groups.  One narrow explode (b rows per doc) before the single shuffle
-    on the band key — the same scale shape as the one-band version, with b×
-    the shuffle rows."""
-    return (
-        minhash_signatures(docs)
-        .select(F.explode(lsh_band_keys()).alias("band"))
-        .groupBy("band")
-        .agg(F.count("*").alias("n_docs"))
-        .filter(F.col("n_docs") > 1)
-        .orderBy(F.desc("n_docs"), "band")
-    )
-
-
-def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return minhash_band_census(load(spark, sf_dir, "documents"))
-
-
 def _minhash_sql_duckdb(n_hashes: int = N_MINHASH) -> str:
     sig_cols = ", ".join(
         f"min(md5('{i}' || w)) AS sig_{i}" for i in range(n_hashes)
@@ -186,89 +163,6 @@ def _minhash_band_union_sql() -> str:
         for b in range(N_LSH_BANDS)
     ]
     return " UNION ALL ".join(selects)
-
-
-ORACLE_DEDUP_MINHASH_LSH = f"""
-    WITH sigs AS ({_minhash_sql_duckdb()})
-    SELECT band, count(*) AS n_docs
-    FROM ({_minhash_band_union_sql()})
-    GROUP BY band
-    HAVING count(*) > 1
-    ORDER BY n_docs DESC, band
-"""
-
-
-# ---------------------------------------------------------------------------
-# SimHash (16-bit, md5-derived word hashes — dialect-portable)
-# ---------------------------------------------------------------------------
-
-
-def simhash16(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """16-bit SimHash: word hash = first 15 hex of md5 → bigint; bit b of
-    the signature is 1 iff Σ_words (±1 per word-bit) > 0.
-
-    Narrow per-row expression — hash the word array once with
-    ``transform``, then one ``aggregate`` per bit over the in-row array.
-    Zero shuffle (the earlier explode → groupBy moved the whole tokenized
-    corpus through an all-to-all); identical results, same oracle."""
-    words = F.array_distinct(F.split(F.lower(F.col(text_col)), " "))
-    hs = F.transform(
-        words, lambda w: F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long")
-    )
-    # NULL text drops (parity with the oracle's unnest and the old
-    # explode+groupBy shape — see minhash_signatures)
-    hashed = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col), hs.alias("hs")
-    )
-    # factory (not default-arg lambdas): pyspark inspects lambda arity and
-    # would reject a 3-parameter merge function
-    def _bit_merge(bit: int):
-        return lambda acc, x: acc + F.when(
-            F.shiftright(x, bit).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    bit_sums = [
-        F.aggregate(F.col("hs"), F.lit(0), _bit_merge(b)).alias(f"b{b}")
-        for b in range(16)
-    ]
-    with_bits = hashed.select(id_col, *bit_sums)
-    sig = None
-    for b in range(16):
-        term = F.when(F.col(f"b{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        sig = term if sig is None else sig + term
-    return with_bits.select(id_col, sig.alias("simhash"))
-
-
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return simhash16(docs).orderBy("doc_id")
-
-
-def _simhash_sql_duckdb() -> str:
-    bit_sum_cols = ", ".join(
-        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
-        for b in range(16)
-    )
-    sig = " + ".join(f"(CASE WHEN b{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(16))
-    return f"""
-        SELECT doc_id, {sig} AS simhash
-        FROM (
-            SELECT doc_id, {bit_sum_cols}
-            FROM (
-                SELECT doc_id,
-                       CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h
-                FROM (
-                    SELECT doc_id, unnest(list_distinct(string_split(lower(text), ' '))) AS w
-                    FROM documents
-                )
-            )
-            GROUP BY doc_id
-        )
-        ORDER BY doc_id
-    """
-
-
-ORACLE_DEDUP_SIMHASH = _simhash_sql_duckdb()
 
 
 # ---------------------------------------------------------------------------
@@ -332,11 +226,6 @@ def _jaccard_pairs_from(docs: DataFrame, banded: DataFrame) -> DataFrame:
     )
 
 
-def q_dedup_jaccard_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load(spark, sf_dir, "documents")
-    return _jaccard_pairs_from(docs, _banded_docs(spark, sf_dir))
-
-
 _JACCARD_BODY_SQL = f"""
     WITH sigs AS ({_minhash_sql_duckdb()}),
     banded_all AS (
@@ -357,8 +246,6 @@ _JACCARD_BODY_SQL = f"""
                  AS DECIMAL(18,10)), 4) AS DOUBLE) AS jaccard
     FROM banded a JOIN banded b ON a.band = b.band AND a.doc_id < b.doc_id
 """
-
-ORACLE_DEDUP_JACCARD = _JACCARD_BODY_SQL + " ORDER BY doc_a, doc_b"
 
 
 # ---------------------------------------------------------------------------
@@ -722,151 +609,39 @@ ORACLE_DUP_COMPONENTS = f"""
 
 
 def fuzzy_dedup_victims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_ids to DROP under the fuzzy-dedup decision: every
-    `dup_components` cluster member except the canonical (minimum).
-    Extraction runs over the cluster table — the small side by
-    construction — so consumers broadcast-anti-join it against the
-    corpus scan."""
+    """doc_ids to DROP under the fuzzy-dedup decision: every doc of a
+    group of `dup_components` clusters linked through shared members,
+    except the group's minimum.  Over-full bands emit clusters that
+    overlap (a doc can sit in the band-0 and the band-1 cluster), so
+    the (component, member) edges run through connected components once
+    more: a transitively linked group keeps one doc, as the streaming
+    near-dup admission does.  The cluster table is the small side by
+    construction, so consumers broadcast-anti-join the victims against
+    the corpus scan."""
     clusters = q_dup_components(spark, sf_dir)
+    edges = clusters.select(
+        "component", F.explode(F.split("members", ",")).alias("member")
+    ).select(
+        F.col("component").cast("bigint").alias("doc_a"),
+        F.col("member").cast("bigint").alias("doc_b"),
+    )
+    groups = connected_components_star(edges)
     return (
-        clusters.select(
-            "component",
-            F.explode(F.split("members", ",")).alias("member"),
+        groups.select(
+            "component", F.explode(F.split("members", ",")).alias("member")
         )
         .select("component", F.col("member").cast("bigint").alias("doc_id"))
         .filter(F.col("doc_id") != F.col("component"))
         .select("doc_id")
-        .distinct()
     )
-
-
-def q_fuzzy_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Census → ACTION: materialize the fuzzy-dedup decision.  Every doc
-    in a `dup_components` cluster except the canonical (minimum) member
-    is a victim; the kept corpus is an anti-join against that victim
-    set.  Victim extraction runs over the CLUSTER table (corpus-scale
-    independent — clusters are the small side by construction), so at
-    100 TB this adds one broadcast anti-join to the corpus scan on top
-    of the clustering cost.  Output: per-source kept/dropped census —
-    the number a curation run reports before committing the drop."""
-    docs = load(spark, sf_dir, "documents")
-    victims = (
-        fuzzy_dedup_victims(spark, sf_dir)
-        .withColumn("is_victim", F.lit(1))
-    )
-    return (
-        docs.join(F.broadcast(victims), "doc_id", "left")
-        .groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.coalesce(F.col("is_victim"), F.lit(0))).alias("n_dropped"),
-            F.sum(
-                F.when(F.col("is_victim").isNull(), 1).otherwise(0)
-            ).alias("n_kept"),
-        )
-        .orderBy("source")
-    )
-
-
-ORACLE_FUZZY_DEDUP_APPLY = f"""
-    WITH RECURSIVE cand AS (
-        SELECT doc_a, doc_b FROM ({_JACCARD_BODY_SQL})
-        WHERE jaccard >= {DUP_EDGE_THRESHOLD}
-    ),
-    bidir AS (
-        SELECT doc_a AS a, doc_b AS b FROM cand
-        UNION
-        SELECT doc_b AS a, doc_a AS b FROM cand
-    ),
-    reach(a, b) AS (
-        SELECT a, b FROM bidir
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN bidir e ON r.b = e.a
-    ),
-    lab AS (
-        SELECT a AS node, least(a, min(b)) AS component
-        FROM reach GROUP BY a
-    ),
-    sigs AS ({_minhash_sql_duckdb()}),
-    banded AS ({_minhash_band_union_sql()}),
-    mega_nodes AS (
-        SELECT doc_id,
-               min(doc_id) OVER (PARTITION BY band) AS component,
-               count(*) OVER (PARTITION BY band) AS n
-        FROM banded
-    ),
-    -- a doc can be a victim of several clusters; DISTINCT, because under
-    -- WITH RECURSIVE DuckDB keeps the duplicate rows of a UNION CTE
-    victims AS (
-        SELECT DISTINCT doc_id FROM (
-            SELECT node AS doc_id FROM lab WHERE node <> component
-            UNION ALL
-            SELECT doc_id FROM mega_nodes
-            WHERE n > {MAX_BAND_DOCS} AND doc_id <> component
-        )
-    )
-    SELECT d.source,
-           count(*) AS n_docs,
-           CAST(sum(CASE WHEN v.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_dropped,
-           CAST(sum(CASE WHEN v.doc_id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_kept
-    FROM documents d LEFT JOIN victims v ON d.doc_id = v.doc_id
-    GROUP BY d.source
-    ORDER BY d.source
-"""
-
-
-# ---------------------------------------------------------------------------
-# Keep-first canonical selection (the dedup output a pipeline consumes)
-# ---------------------------------------------------------------------------
-
-
-def q_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One canonical row per near-dup group: group key = (lang, simhash);
-    the kept doc is the lowest doc_id (deterministic) — window rank over
-    the group, the standard 'representative per duplicate cluster' shape."""
-    from pyspark.sql import Window
-
-    docs = load(spark, sf_dir, "documents")
-    sh = simhash16(docs)
-    joined = docs.join(sh, "doc_id").select("doc_id", "lang", "simhash")
-    w = Window.partitionBy("lang", "simhash").orderBy("doc_id")
-    return (
-        joined.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("doc_id", "lang", "simhash")
-        .orderBy("doc_id")
-    )
-
-
-ORACLE_DEDUP_KEEP_FIRST = f"""
-    WITH sh AS ({_simhash_sql_duckdb()})
-    SELECT doc_id, lang, simhash FROM (
-        SELECT d.doc_id, d.lang, sh.simhash,
-               row_number() OVER (PARTITION BY d.lang, sh.simhash ORDER BY d.doc_id) AS rk
-        FROM documents d JOIN sh USING (doc_id)
-    ) WHERE rk = 1
-    ORDER BY doc_id
-"""
 
 
 QUERIES = {
     "dedup_exact": q_dedup_exact,
-    "dedup_keep_first": q_dedup_keep_first,
-    "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_jaccard_candidates": q_dedup_jaccard_candidates,
     "dup_components": q_dup_components,
-    "fuzzy_dedup_apply": q_fuzzy_dedup_apply,
 }
 
 ORACLE_SQL = {
     "dedup_exact": ORACLE_DEDUP_EXACT,
-    "dedup_keep_first": ORACLE_DEDUP_KEEP_FIRST,
-    "dedup_minhash_lsh": ORACLE_DEDUP_MINHASH_LSH,
-    "dedup_simhash": ORACLE_DEDUP_SIMHASH,
-    "dedup_jaccard_candidates": ORACLE_DEDUP_JACCARD,
     "dup_components": ORACLE_DUP_COMPONENTS,
-    "fuzzy_dedup_apply": ORACLE_FUZZY_DEDUP_APPLY,
 }

@@ -294,88 +294,3 @@ def media_dedup_victims(
         .select("media_id")
         .distinct()
     )
-
-
-def media_dedup_apply(
-    media: DataFrame, max_hamming: int = PHASH_HAMMING_MAX
-) -> DataFrame:
-    """Kept media rows after perceptual near-dup removal: decode → hash
-    (inside the scan pass) → banded pairs → CC → broadcast anti-join.
-    Rows that fail to decode are KEPT (quarantine semantics — an
-    undecodable payload is never silently dropped; it carries its own
-    valid=false flag downstream).  At 100 TB this is the clustering cost
-    plus ONE broadcast anti-join on the media scan — payload bytes
-    still never shuffle."""
-    victims = media_dedup_victims(image_phashes(media), max_hamming)
-    return media.join(F.broadcast(victims), "media_id", "left_anti")
-
-
-# ---------------------------------------------------------------------------
-# Audio near-dups: energy-envelope hash through the SAME banded join
-# ---------------------------------------------------------------------------
-
-
-def audio_ahash64(samples: np.ndarray) -> int:
-    """64-bit energy-envelope hash of a [-1, 1] PCM sample array — the
-    dHash construction applied to audio: RMS energy over 65 integer-
-    boundary windows, bit i = env[i+1] > env[i] (the temporal energy
-    gradient).  Invariant to uniform gain and to re-quantization
-    (8-bit vs 16-bit PCM of the same signal hash identically when the
-    envelope gradients are decisive), which is exactly the near-dup
-    class an audio curation pass hunts: same recording, different
-    encode.  Returns a signed 64-bit int (Spark ``long``)."""
-    n = len(samples)
-    if n == 0:
-        return 0
-    env = np.empty(65, dtype=np.float64)
-    for i in range(65):
-        a = (i * n) // 65
-        b = max(a + 1, ((i + 1) * n) // 65)
-        w = samples[a:b]
-        env[i] = float(np.sqrt(np.mean(w * w)))
-    bits = env[1:] > env[:-1]
-    return int.from_bytes(np.packbits(bits).tobytes(), "big", signed=True)
-
-
-def audio_hashes(media: DataFrame) -> DataFrame:
-    """Per-WAV envelope hash via ``mapInPandas``, emitted in
-    PHASH_SCHEMA shape (media_id, codec, phash, valid) so the SAME
-    banded-Hamming machinery — :func:`phash_near_dup_pairs`,
-    :func:`phash_hot_bands`, :func:`media_dedup_victims` — runs
-    unchanged over audio: the band join is modality-generic, it only
-    ever sees 64-bit hashes.  Non-WAV and undecodable payloads
-    quarantine as ``valid = false``."""
-    from .multimodal import decode_wav_samples
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    payload = bytes(payload)  # None payload → quarantine
-                    is_wav = (
-                        payload[:4] == b"RIFF" and payload[8:12] == b"WAVE"
-                    )
-                except Exception:
-                    is_wav = False
-                if not is_wav:
-                    rows.append((mid, None, None, False))
-                    continue
-                try:
-                    _rate, s, ch = decode_wav_samples(payload)
-                    # mono mixdown so the envelope is frame-domain
-                    if ch > 1 and len(s) % ch == 0:
-                        s = s.reshape(-1, ch).mean(axis=1)
-                    rows.append((mid, "wav", audio_ahash64(s), True))
-                except Exception:
-                    rows.append((mid, None, None, False))
-            yield pd.DataFrame({
-                "media_id": pd.Series([r[0] for r in rows], dtype="int64"),
-                "codec": pd.Series([r[1] for r in rows], dtype="object"),
-                # nullable Int64 from construction — the float64-coercion
-                # trap image_phashes documents applies identically here
-                "phash": pd.Series([r[2] for r in rows], dtype="Int64"),
-                "valid": pd.Series([r[3] for r in rows], dtype="bool"),
-            })
-
-    return media.mapInPandas(op, schema=PHASH_SCHEMA)

@@ -1,62 +1,36 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Image payloads as ``binary`` columns with typed metadata, decoded
+through ``mapInPandas`` in Arrow batches.
 
-Graft requirement: image/audio/video as ``binary`` columns with typed
-metadata, processed through ``mapInPandas`` in Arrow batches.
+The paper's visual elements are images, tables and charts cut from
+document pages.  The codecs here need nothing beyond numpy and the
+standard library:
 
-Round 3 upgrade — **real decode where the standard library suffices**:
+* **BMP** — uncompressed 24-bit BI_RGB bitmaps, read and written with
+  ``struct`` + numpy.
+* **PNG** — zlib inflate of IDAT and reconstruction of all five scanline
+  filters (None/Sub/Up/Average/Paeth), CRC-checked chunks; 8-bit
+  truecolor, non-interlaced.
+* **JPEG** — baseline sequential: 8×8 DCT as matrix multiplies,
+  Annex-K-shaped quantization, canonical Huffman with the tables read
+  from the file's own DQT/DHT segments; 4:4:4 only (progressive and
+  subsampled files raise).
 
-* **image/BMP** — uncompressed 24-bit BI_RGB bitmaps are decoded and
-  re-encoded with ``struct``+numpy (public format, no codec lib needed):
-  real dimensions, real per-pixel mean level, real nearest-neighbor
-  resize.
-* **audio/WAV** — PCM WAV through the stdlib ``wave`` module: real
-  sample rate / frame count, real mean |amplitude|.
-* **image/PNG** (round 4) — real zlib inflate of IDAT + reconstruction
-  of all five scanline filters (None/Sub/Up/Average/Paeth), CRC-checked
-  chunks; 8-bit truecolor non-interlaced scope.
-* **image/JPEG** (round 4) — real baseline-sequential codec in
-  numpy+stdlib: 8×8 DCT as matrix multiplies, Annex-K-shaped
-  quantization, canonical Huffman with tables read from the file's own
-  DQT/DHT segments; 4:4:4 scope (progressive/subsampled raise).
-* **video/AVI** — real RIFF container walk (round 3), carrying either
-  raw RGB24 frames ('00db') or **Motion-JPEG** ('00dc', round 5): each
-  frame a complete baseline JPEG run through this module's own codec —
-  compressed video as a composition of two codecs the repo already has.
-* **video/MP4** (round 5 final) — real ISO BMFF box walk
-  (moov/trak/stbl: stsd/stts/stsc/stsz/stco, co64 and largesize
-  handled): ``probe_mp4`` reads codec/dims/frame-count/fps out of ANY
-  MP4 including avc1; 'jpeg'-sample-entry (Motion-JPEG) tracks decode
-  to pixels through the module's own JPEG codec.
-
-``decode_media``'s sole remaining ``NotImplementedError`` boundary is
-H.264/HEVC **entropy decode** (CABAC + inter-frame prediction) — the
-single integration point where pyav would slot in (reference analog
-`src/core/text_extractor.py:157-245`); an inter-frame-predicted codec
-genuinely is not implementable from the stdlib, while both container
-families (RIFF and ISO BMFF) now parse for real.
-
-Fake payload format (video stub, produced by synthesize_media):
-    bytes 0-3   magic  b'FAKE'
-    byte  4     kind   (0=image, 1=audio, 2=video)
-    bytes 5-8   width / sample-rate   (uint32 BE)
-    bytes 9-12  height / n-frames     (uint32 BE)
-    bytes 13..  payload (sha256-derived deterministic noise)
+``decode_media`` raises ``NotImplementedError`` for any other format;
+``extract_media_features`` and the image hashes of ``media_dedup``
+quarantine such rows as ``valid = false`` instead of failing the batch.
 """
 
 from __future__ import annotations
 
 import hashlib
-import io
 import struct
-import wave
 import zlib
-from typing import Iterator, Optional, Tuple
+from typing import Iterator, Tuple
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType([
@@ -69,12 +43,9 @@ MEDIA_SCHEMA = T.StructType([
     ]), True),
 ])
 
-KINDS = ["image", "audio", "video"]
-_MAGIC = b"FAKE"
-
 
 # ---------------------------------------------------------------------------
-# Real codecs (stdlib-only): BMP and PCM WAV
+# BMP
 # ---------------------------------------------------------------------------
 
 
@@ -123,65 +94,12 @@ def decode_bmp(payload: bytes) -> Tuple[int, int, float, np.ndarray]:
     return width, height, mean_level, pixels
 
 
-def encode_wav(sample_rate: int, frames: bytes, n_channels: int = 1,
-               sampwidth: int = 2) -> bytes:
-    """PCM WAV via the stdlib wave module."""
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(n_channels)
-        w.setsampwidth(sampwidth)
-        w.setframerate(sample_rate)
-        w.writeframes(frames)
-    return buf.getvalue()
-
-
-def decode_wav(payload: bytes) -> Tuple[int, int, float]:
-    """PCM WAV → (sample_rate, n_frames, mean |amplitude| of the real
-    samples, normalized to [0,1] for 16-bit)."""
-    with wave.open(io.BytesIO(payload), "rb") as w:
-        n_frames = w.getnframes()
-    rate, samples, _ch = decode_wav_samples(payload)
-    mean_level = (
-        round(float(np.abs(samples).mean()), 4) if len(samples) else 0.0
-    )
-    return rate, n_frames, mean_level
-
-
-def decode_wav_samples(payload: bytes) -> Tuple[int, np.ndarray, int]:
-    """PCM WAV → (sample_rate, samples, n_channels) with samples
-    normalized to [-1, 1] float64; multi-channel frames stay
-    INTERLEAVED (len(samples) = n_frames * n_channels — divide by the
-    returned channel count for frame-domain quantities).  Scope: 8-bit
-    unsigned and 16-bit signed PCM; any other sample width raises
-    (24/32-bit frames reinterpreted as 8-bit would silently produce
-    noise marked valid — callers quarantine on the raise instead)."""
-    with wave.open(io.BytesIO(payload), "rb") as w:
-        rate, n, width = w.getframerate(), w.getnframes(), w.getsampwidth()
-        n_channels = w.getnchannels()
-        raw = w.readframes(n)
-    if width == 2:
-        samples = np.frombuffer(raw, dtype="<i2").astype(np.float64) / 32768.0
-    elif width == 1:  # 8-bit PCM is unsigned
-        samples = (
-            np.frombuffer(raw, dtype=np.uint8).astype(np.float64) - 128.0
-        ) / 128.0
-    else:
-        raise NotImplementedError(
-            f"{8 * width}-bit PCM not supported (8/16-bit only)"
-        )
-    return rate, samples, n_channels
-
-
-# --- PNG (stdlib zlib) — closes the compressed-IMAGE half of the codec
-# stub: PNG is IDAT = zlib-deflated scanlines, each prefixed by one of 5
-# filter bytes (None/Sub/Up/Average/Paeth), wrapped in CRC-checked
-# chunks.  Everything needed ships in the stdlib (zlib both deflates and
-# CRCs), so this is a REAL decode of the web's most common lossless
-# format — pixels reconstructed through the actual filter algebra, not a
-# header echo.  Scope: 8-bit truecolor (color type 2) non-interlaced,
-# the shape the encoder below emits; other color types / interlacing
-# raise NotImplementedError, and JPEG/MP4 remain the documented
-# environmental boundary (no PIL/pyav in the container).
+# --- PNG (stdlib zlib): IDAT is zlib-deflated scanlines, each prefixed
+# by one of 5 filter bytes (None/Sub/Up/Average/Paeth), wrapped in
+# CRC-checked chunks; zlib both inflates and CRCs, so the decode below
+# reconstructs pixels through the filter algebra.  Scope: 8-bit
+# truecolor (color type 2) non-interlaced, the shape the encoder below
+# emits; other color types and interlacing raise NotImplementedError.
 # Reference analog: `src/core/text_extractor.py:157-245` (real image
 # extraction from documents).
 
@@ -345,10 +263,10 @@ def decode_png(payload: bytes) -> Tuple[int, int, float, np.ndarray]:
     return width, height, mean_level, px
 
 
-# --- Baseline JPEG (numpy + stdlib) — closes the LOSSY-image half of
-# the codec stub.  Baseline sequential JPEG is: RGB→YCbCr, 8×8 DCT
-# (a pair of matrix multiplies), quantization, zigzag, and canonical
-# Huffman coding — all expressible with numpy and pure Python.  The
+# --- Baseline JPEG (numpy + stdlib).  Baseline sequential JPEG is:
+# RGB→YCbCr, 8×8 DCT (a pair of matrix multiplies), quantization,
+# zigzag, and canonical Huffman coding — all expressible with numpy and
+# pure Python.  The
 # file is SELF-DESCRIBING: the decoder reads its quantization and
 # Huffman tables from the DQT/DHT segments, not from constants, so any
 # valid table set roundtrips.  Scope: 8-bit baseline (SOF0), 4:4:4
@@ -789,394 +707,8 @@ def decode_jpeg(payload: bytes) -> Tuple[int, int, float, np.ndarray]:
     return w, h, mean_level, px
 
 
-# --- Minimal uncompressed AVI (RIFF) — the video twin of the BMP/WAV
-# codecs: a real container written and parsed with nothing but struct
-# (the same RIFF chunk grammar the stdlib wave module reads).  Frames
-# are raw top-down RGB24 in '00db' chunks; chunks pad to even length per
-# the RIFF spec.  This shrinks the video stub boundary the same way
-# round 3 shrank image/audio: real frames, real per-frame statistics,
-# real frame sampling — only compressed codecs (MP4/H.264…) remain at
-# the NotImplementedError integration point.
-
-_AVI_FPS = 10
-
-
-def encode_avi(
-    width: int, height: int, frames: list, fps: int = _AVI_FPS,
-    codec: str = "raw",
-) -> bytes:
-    """RIFF/AVI writer.  ``frames`` are raw top-down RGB24 buffers.
-
-    codec="raw"   → '00db' chunks (uncompressed, round-3 behavior);
-    codec="mjpeg" → each frame is baseline-JPEG-compressed (the repo's
-                    own encoder) into a '00dc' chunk — Motion-JPEG, the
-                    classic compressed-AVI layout, composed from two
-                    codecs this module already ships."""
-    if codec not in ("raw", "mjpeg"):
-        raise ValueError(f"unsupported AVI codec {codec!r}")
-
-    def chunk(cid: bytes, data: bytes) -> bytes:
-        pad = b"\x00" if len(data) % 2 else b""
-        return cid + struct.pack("<I", len(data)) + data + pad
-
-    avih = struct.pack(
-        "<14I",
-        1_000_000 // fps,          # microseconds per frame
-        width * height * 3 * fps,  # max bytes/sec
-        0, 0,
-        len(frames), 0, 1,
-        width * height * 3,
-        width, height,
-        0, 0, 0, 0,
-    )
-    hdrl_body = b"hdrl" + chunk(b"avih", avih)
-    hdrl = b"LIST" + struct.pack("<I", len(hdrl_body)) + hdrl_body
-    if codec == "mjpeg":
-        payloads = [encode_jpeg(width, height, f) for f in frames]
-        frame_chunks = b"".join(chunk(b"00dc", p) for p in payloads)
-    else:
-        frame_chunks = b"".join(chunk(b"00db", f) for f in frames)
-    movi_body = b"movi" + frame_chunks
-    movi = b"LIST" + struct.pack("<I", len(movi_body)) + movi_body
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def decode_avi(payload: bytes):
-    """→ (width, height, n_frames, fps, mean_level, frame_means, codec).
-    Walks the RIFF chunk tree for real; malformed chunk sizes raise.
-    '00db' chunks are raw RGB24 frames (codec "rawvideo"); '00dc'
-    chunks are Motion-JPEG — each frame is a complete baseline JPEG
-    decoded with this module's own ``decode_jpeg`` and validated
-    against the avih dimensions (codec "mjpeg").  Mixed streams are
-    rejected."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        raise ValueError("not an AVI payload")
-    width = height = n_frames_hdr = 0
-    fps = 0
-    frames: list = []  # (chunk_id, bytes)
-    pos = 12
-    end = 8 + struct.unpack("<I", payload[4:8])[0]
-
-    def walk(pos: int, end: int) -> None:
-        nonlocal width, height, n_frames_hdr, fps
-        while pos + 8 <= end:
-            cid = payload[pos:pos + 4]
-            size = struct.unpack("<I", payload[pos + 4:pos + 8])[0]
-            data_start = pos + 8
-            if data_start + size > end:
-                raise ValueError("truncated AVI chunk")
-            if cid == b"LIST":
-                walk(data_start + 4, data_start + size)
-            elif cid == b"avih":
-                vals = struct.unpack("<14I", payload[data_start:data_start + 56])
-                fps = 1_000_000 // max(vals[0], 1)
-                n_frames_hdr = vals[4]
-                width, height = vals[8], vals[9]
-            elif cid in (b"00db", b"00dc"):
-                frames.append((cid, payload[data_start:data_start + size]))
-            pos = data_start + size + (size % 2)
-
-    walk(pos, end)
-    if width == 0 or height == 0:
-        raise ValueError("AVI missing/degenerate avih header")
-    if len(frames) != n_frames_hdr:
-        raise ValueError(
-            f"AVI header declares {n_frames_hdr} frames, found {len(frames)}"
-        )
-    kinds = {cid for cid, _f in frames}
-    if len(kinds) > 1:
-        raise ValueError("AVI mixes raw (00db) and compressed (00dc) frames")
-    codec = "mjpeg" if kinds == {b"00dc"} else "rawvideo"
-    frame_means = []
-    for _cid, f in frames:
-        if codec == "mjpeg":
-            fw, fh, fmean, _px = decode_jpeg(f)
-            if (fw, fh) != (width, height):
-                raise ValueError(
-                    f"MJPEG frame is {fw}x{fh}, avih says {width}x{height}"
-                )
-            frame_means.append(fmean)
-        else:
-            if len(f) != width * height * 3:
-                raise ValueError("frame size != width*height*3")
-            arr = np.frombuffer(f, dtype=np.uint8)
-            frame_means.append(round(float(arr.mean()), 4))
-    mean_level = (
-        round(float(np.mean(frame_means)), 4) if frame_means else 0.0
-    )
-    return width, height, len(frames), fps, mean_level, frame_means, codec
-
-
-# --- Minimal ISO BMFF (MP4) — the QuickTime-family twin of the AVI
-# container (round 5 final): a real box tree written and parsed with
-# nothing but struct.  Samples are complete baseline JPEGs ('jpeg'
-# VisualSampleEntry — the classic Motion-JPEG-in-MP4 layout), so MP4
-# video decodes as a composition of the box walker below and the JPEG
-# codec above, exactly as MJPEG-in-AVI composed the RIFF walker with
-# it.  The stub boundary this leaves is the honest one: H.264/HEVC
-# ENTROPY decode (CABAC + inter-frame prediction), which genuinely is
-# not implementable from the stdlib — but the container is: probe_mp4
-# reads codec/dims/frame-count/fps out of ANY MP4, including avc1.
-# Reference analog: the video branch of `src/core/text_extractor.py:
-# 157-245` (pyav there; stdlib box walk + own JPEG codec here).
-
-_MP4_FPS = 10
-
-
-def _box(btype: bytes, payload: bytes) -> bytes:
-    return struct.pack(">I", len(payload) + 8) + btype + payload
-
-
-def _fullbox(btype: bytes, version: int, flags: int, payload: bytes) -> bytes:
-    return _box(btype, struct.pack(">B", version) + flags.to_bytes(3, "big") + payload)
-
-
-_MP4_UNITY_MATRIX = struct.pack(
-    ">9i", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000
-)
-
-
-def encode_mp4(
-    width: int, height: int, frames: list, fps: int = _MP4_FPS
-) -> bytes:
-    """ISO BMFF writer: ftyp + mdat + moov, one 'vide' track whose
-    samples are baseline JPEGs from this module's own encoder ('jpeg'
-    sample entry).  One chunk holds all samples; stco carries the
-    absolute mdat payload offset, so mdat is laid out before moov and
-    the offset is exact by construction."""
-    if not frames:
-        raise ValueError("MP4 needs at least one frame")
-    samples = [encode_jpeg(width, height, f) for f in frames]
-    n = len(samples)
-    ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 512) + b"isom" + b"mp41")
-    mdat = _box(b"mdat", b"".join(samples))
-    first_sample_off = len(ftyp) + 8  # mdat payload starts after its header
-
-    timescale, duration = fps, n  # one tick per frame
-    mvhd = _fullbox(b"mvhd", 0, 0, struct.pack(
-        ">IIIIiH10s", 0, 0, timescale, duration, 0x00010000, 0x0100, b"\x00" * 10,
-    ) + _MP4_UNITY_MATRIX + struct.pack(">6I", 0, 0, 0, 0, 0, 0)
-        + struct.pack(">I", 2))
-    tkhd = _fullbox(b"tkhd", 0, 7, struct.pack(
-        ">IIIII", 0, 0, 1, 0, duration,
-    ) + struct.pack(">IIhhhh", 0, 0, 0, 0, 0, 0) + _MP4_UNITY_MATRIX
-        + struct.pack(">II", width << 16, height << 16))
-    mdhd = _fullbox(b"mdhd", 0, 0, struct.pack(
-        ">IIIIHH", 0, 0, timescale, duration, 0x55C4, 0,  # lang 'und'
-    ))
-    hdlr = _fullbox(b"hdlr", 0, 0, struct.pack(
-        ">I4s12s", 0, b"vide", b"\x00" * 12,
-    ) + b"VideoHandler\x00")
-    vmhd = _fullbox(b"vmhd", 0, 1, struct.pack(">HHHH", 0, 0, 0, 0))
-    dref = _fullbox(b"dref", 0, 0, struct.pack(">I", 1)
-                    + _fullbox(b"url ", 0, 1, b""))
-    dinf = _box(b"dinf", dref)
-
-    # 'jpeg' VisualSampleEntry (86 bytes): SampleEntry header + the
-    # fixed visual fields; compressorname is a 32-byte pascal string.
-    comp = b"\x0bMotion-JPEG" + b"\x00" * 20
-    entry = _box(b"jpeg", struct.pack(
-        ">6sH", b"\x00" * 6, 1,            # reserved, data_ref_index
-    ) + struct.pack(">HH12s", 0, 0, b"\x00" * 12)  # pre_defined/reserved
-        + struct.pack(">HH", width, height)
-        + struct.pack(">IIIH", 0x00480000, 0x00480000, 0, 1)
-        + comp + struct.pack(">Hh", 24, -1))
-    stsd = _fullbox(b"stsd", 0, 0, struct.pack(">I", 1) + entry)
-    stts = _fullbox(b"stts", 0, 0, struct.pack(">III", 1, n, 1))
-    stsc = _fullbox(b"stsc", 0, 0, struct.pack(">IIII", 1, 1, n, 1))
-    stsz = _fullbox(b"stsz", 0, 0, struct.pack(">II", 0, n)
-                    + b"".join(struct.pack(">I", len(s)) for s in samples))
-    stco = _fullbox(b"stco", 0, 0, struct.pack(">II", 1, first_sample_off))
-    stbl = _box(b"stbl", stsd + stts + stsc + stsz + stco)
-    minf = _box(b"minf", vmhd + dinf + stbl)
-    mdia = _box(b"mdia", mdhd + hdlr + minf)
-    trak = _box(b"trak", tkhd + mdia)
-    moov = _box(b"moov", mvhd + trak)
-    return ftyp + mdat + moov
-
-
-def _mp4_boxes(buf: bytes, pos: int, end: int):
-    """Yield (type, payload_start, box_end) walking one box level.
-    Malformed/truncated sizes raise — the walk is real, not a seek."""
-    while pos + 8 <= end:
-        size, btype = struct.unpack(">I4s", buf[pos:pos + 8])
-        hdr = 8
-        if size == 1:  # 64-bit largesize
-            if pos + 16 > end:
-                raise ValueError("truncated MP4 largesize header")
-            size = struct.unpack(">Q", buf[pos + 8:pos + 16])[0]
-            hdr = 16
-        elif size == 0:  # box extends to end of enclosing scope
-            size = end - pos
-        if size < hdr or pos + size > end:
-            raise ValueError("truncated/malformed MP4 box")
-        yield btype, pos + hdr, pos + size
-        pos += size
-
-
-def _mp4_child(buf: bytes, pos: int, end: int, btype: bytes):
-    for t, s, e in _mp4_boxes(buf, pos, end):
-        if t == btype:
-            return s, e
-    return None
-
-
-def probe_mp4(payload: bytes) -> dict:
-    """Container-level metadata for ANY MP4 — codec fourcc, dims,
-    frame count, fps, and per-sample (offset, size) — via a real walk
-    of moov/trak/mdia/minf/stbl (stsd/stts/stsc/stsz/stco).  Works on
-    avc1/hev1 tracks too: the container is public structure; only the
-    entropy decode of those codecs is out of stdlib reach."""
-    end = len(payload)
-    top = list(_mp4_boxes(payload, 0, end))
-    if not top or top[0][0] != b"ftyp":
-        raise ValueError("not an ISO BMFF payload (no leading ftyp)")
-    moov = next(((s, e) for t, s, e in top if t == b"moov"), None)
-    if moov is None:
-        raise ValueError("MP4 missing moov")
-
-    video = None  # (stbl_span, timescale)
-    for t, s, e in _mp4_boxes(payload, *moov):
-        if t != b"trak":
-            continue
-        mdia = _mp4_child(payload, s, e, b"mdia")
-        if mdia is None:
-            continue
-        hdlr = _mp4_child(payload, *mdia, b"hdlr")
-        mdhd = _mp4_child(payload, *mdia, b"mdhd")
-        minf = _mp4_child(payload, *mdia, b"minf")
-        if hdlr is None or mdhd is None or minf is None:
-            continue
-        if payload[hdlr[0] + 8:hdlr[0] + 12] != b"vide":
-            continue
-        stbl = _mp4_child(payload, *minf, b"stbl")
-        if stbl is None:
-            raise ValueError("MP4 video track missing stbl")
-        mv = payload[mdhd[0]]  # mdhd version
-        ts_off = mdhd[0] + 4 + (16 if mv == 1 else 8)
-        timescale = struct.unpack(">I", payload[ts_off:ts_off + 4])[0]
-        video = (stbl, timescale)
-        break
-    if video is None:
-        raise ValueError("MP4 has no video track")
-    stbl, timescale = video
-
-    def full(btype: bytes, required: bool = True):
-        span = _mp4_child(payload, *stbl, btype)
-        if span is None:
-            if required:
-                raise ValueError(f"MP4 stbl missing {btype.decode()}")
-            return None
-        return span[0] + 4, span[1]  # skip version+flags
-
-    # stsd: first sample entry → fourcc + dims
-    s, e = full(b"stsd")
-    if struct.unpack(">I", payload[s:s + 4])[0] < 1:
-        raise ValueError("empty stsd")
-    entry_size, fourcc = struct.unpack(">I4s", payload[s + 4:s + 12])
-    if s + 4 + entry_size > e:
-        raise ValueError("stsd entry overruns box")
-    width, height = struct.unpack(">HH", payload[s + 36:s + 40])
-
-    # stts → sample count + nominal fps from the first delta
-    s, e = full(b"stts")
-    n_entries = struct.unpack(">I", payload[s:s + 4])[0]
-    if s + 4 + 8 * n_entries > e:
-        raise ValueError("stts overruns box")
-    deltas = struct.unpack(f">{2 * n_entries}I", payload[s + 4:s + 4 + 8 * n_entries])
-    n_samples = sum(deltas[0::2])
-    first_delta = deltas[1] if n_entries else 1
-    fps = round(timescale / max(first_delta, 1))
-
-    # stsz → per-sample sizes
-    s, e = full(b"stsz")
-    fixed, count = struct.unpack(">II", payload[s:s + 8])
-    if count != n_samples:
-        raise ValueError(f"stsz declares {count} samples, stts {n_samples}")
-    if fixed:
-        sizes = [fixed] * count
-    else:
-        if s + 8 + 4 * count > e:
-            raise ValueError("stsz overruns box")
-        sizes = list(struct.unpack(f">{count}I", payload[s + 8:s + 8 + 4 * count]))
-
-    # stsc + stco/co64 → absolute per-sample offsets
-    s, e = full(b"stsc")
-    n_runs = struct.unpack(">I", payload[s:s + 4])[0]
-    if s + 4 + 12 * n_runs > e:
-        raise ValueError("stsc overruns box")
-    runs = [struct.unpack(">III", payload[s + 4 + 12 * i:s + 16 + 12 * i])
-            for i in range(n_runs)]
-    co = full(b"stco", required=False)
-    if co is not None:
-        s, e = co
-        n_chunks = struct.unpack(">I", payload[s:s + 4])[0]
-        if s + 4 + 4 * n_chunks > e:
-            raise ValueError("stco overruns box")
-        chunk_offs = struct.unpack(f">{n_chunks}I", payload[s + 4:s + 4 + 4 * n_chunks])
-    else:
-        s, e = full(b"co64")
-        n_chunks = struct.unpack(">I", payload[s:s + 4])[0]
-        if s + 4 + 8 * n_chunks > e:
-            raise ValueError("co64 overruns box")
-        chunk_offs = struct.unpack(f">{n_chunks}Q", payload[s + 4:s + 4 + 8 * n_chunks])
-
-    offsets, si = [], 0
-    for ri, (first_chunk, per_chunk, _desc) in enumerate(runs):
-        last_chunk = runs[ri + 1][0] - 1 if ri + 1 < len(runs) else n_chunks
-        for ci in range(first_chunk, last_chunk + 1):
-            if ci > n_chunks:
-                raise ValueError("stsc references a chunk past stco")
-            off = chunk_offs[ci - 1]
-            for _ in range(per_chunk):
-                if si >= n_samples:
-                    break
-                offsets.append(off)
-                off += sizes[si]
-                si += 1
-    if si != n_samples:
-        raise ValueError(f"stsc/stco cover {si} samples, stsz declares {n_samples}")
-    for off, sz in zip(offsets, sizes):
-        if off + sz > len(payload):
-            raise ValueError("MP4 sample extends past end of file")
-
-    return {
-        "codec": fourcc.decode("ascii", "replace").strip(),
-        "width": width, "height": height,
-        "n_samples": n_samples, "timescale": timescale, "fps": fps,
-        "samples": list(zip(offsets, sizes)),
-    }
-
-
-def decode_mp4(payload: bytes):
-    """→ (width, height, n_frames, fps, mean_level, frame_means, codec).
-    Full pixel decode for 'jpeg' (Motion-JPEG) tracks via this module's
-    own baseline JPEG codec; avc1/hev1 raise NotImplementedError at the
-    honest boundary (entropy decode), with the container already parsed
-    — probe_mp4 returns their dims/frame-count/fps fine."""
-    meta = probe_mp4(payload)
-    if meta["codec"] != "jpeg":
-        raise NotImplementedError(
-            f"MP4 '{meta['codec']}' entropy decode requires pyav; the "
-            "container itself parsed fine (see probe_mp4)"
-        )
-    frame_means = []
-    for off, sz in meta["samples"]:
-        fw, fh, fmean, _px = decode_jpeg(payload[off:off + sz])
-        if (fw, fh) != (meta["width"], meta["height"]):
-            raise ValueError(
-                f"MJPEG sample is {fw}x{fh}, stsd says "
-                f"{meta['width']}x{meta['height']}"
-            )
-        frame_means.append(fmean)
-    mean_level = round(float(np.mean(frame_means)), 4) if frame_means else 0.0
-    return (meta["width"], meta["height"], meta["n_samples"], meta["fps"],
-            mean_level, frame_means, "mjpeg")
-
-
 # ---------------------------------------------------------------------------
-# Synthetic media table (deterministic; real BMP/WAV/AVI payloads)
+# Synthetic image table (deterministic; real BMP/PNG/JPEG payloads)
 # ---------------------------------------------------------------------------
 
 
@@ -1191,45 +723,27 @@ def _noise(seed: int, i: int, n: int) -> bytes:
 
 
 def synthesize_media(spark: SparkSession, n: int = 300, seed: int = 42) -> DataFrame:
-    """Deterministic media table: REAL BMP/PNG images (alternating),
-    REAL PCM WAV audio, REAL uncompressed AVI video."""
+    """Deterministic image table: one noise image per media id
+    ``0, 3, 6, … < n``, cycling BMP / PNG / baseline JPEG.  An image's
+    size, codec and bytes are functions of ``(seed, media_id)`` alone,
+    and the ids keep the stride of the earlier generator that
+    interleaved audio and video rows, so a given id names the same image
+    in tables either wrote."""
     rows = []
-    for i in range(n):
-        kind_i = i % 3
-        if kind_i == 0:  # image: real BMP / PNG / baseline JPEG, cycling
-            w = 16 + (i * 7) % 48
-            h = 16 + (i * 13) % 48
-            img_kind = (i // 3) % 3
-            if img_kind == 0:
-                payload = encode_bmp(w, h, _noise(seed, i, w * h * 3))
-                mime = "image/bmp"
-            elif img_kind == 1:
-                payload = encode_png(w, h, _noise(seed, i, w * h * 3))
-                mime = "image/png"
-            else:
-                payload = encode_jpeg(w, h, _noise(seed, i, w * h * 3))
-                mime = "image/jpeg"
-        elif kind_i == 1:  # audio: real 16-bit mono WAV
-            rate = 8000 + (i * 37) % 8000
-            n_frames = 500 + (i * 11) % 2000
-            payload = encode_wav(rate, _noise(seed, i, n_frames * 2))
-            mime = "audio/wav"
-        else:  # video: real containers, cycling raw-AVI / MJPEG-AVI / MJPEG-MP4
-            w = 8 + (i * 7) % 24
-            h = 8 + (i * 13) % 24
-            n_frames = 3 + i % 6
-            frames = [
-                _noise(seed, i * 1000 + f, w * h * 3) for f in range(n_frames)
-            ]
-            vid_kind = (i // 3) % 3
-            if vid_kind == 2:
-                payload = encode_mp4(w, h, frames)
-                mime = "video/mp4"
-            else:
-                vid_codec = "mjpeg" if vid_kind else "raw"
-                payload = encode_avi(w, h, frames, codec=vid_codec)
-                mime = "video/avi"
-        rows.append((i, KINDS[kind_i], payload, (f"src{i % 10}", mime)))
+    for i in range(0, n, 3):
+        w = 16 + (i * 7) % 48
+        h = 16 + (i * 13) % 48
+        img_kind = (i // 3) % 3
+        if img_kind == 0:
+            payload = encode_bmp(w, h, _noise(seed, i, w * h * 3))
+            mime = "image/bmp"
+        elif img_kind == 1:
+            payload = encode_png(w, h, _noise(seed, i, w * h * 3))
+            mime = "image/png"
+        else:
+            payload = encode_jpeg(w, h, _noise(seed, i, w * h * 3))
+            mime = "image/jpeg"
+        rows.append((i, "image", payload, (f"src{i % 10}", mime)))
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
@@ -1243,14 +757,11 @@ FEATURES_SCHEMA = (
 )
 
 
-def decode_media(payload: bytes) -> Tuple[str, int, int, Optional[float]]:
-    """Dispatch by magic → (codec, width, height, mean_level).
-
-    BMP, PNG, WAV, and AVI are REAL decodes (pixels/samples are read);
-    FAKE is the deterministic legacy video stub (mean_level None — no
-    frames to read).  Any other magic (JPEG/MP4…) raises
-    NotImplementedError: that is the single integration point where
-    PIL/librosa/pyav would slot in; the container ships none of them."""
+def decode_media(payload: bytes) -> Tuple[str, int, int, float]:
+    """Dispatch by magic → (codec, width, height, mean_level): BMP, PNG
+    and baseline JPEG decode their pixels.  Any other payload raises
+    ``NotImplementedError``; the codecs' own errors (truncated data,
+    unsupported flavors, oversized headers) propagate as raised."""
     if payload[:2] == b"BM":
         w, h, mean_level, _ = decode_bmp(payload)
         return "bmp", w, h, mean_level
@@ -1260,35 +771,7 @@ def decode_media(payload: bytes) -> Tuple[str, int, int, Optional[float]]:
     if payload[:2] == b"\xff\xd8":
         w, h, mean_level, _ = decode_jpeg(payload)
         return "jpeg", w, h, mean_level
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        rate, n_frames, mean_level = decode_wav(payload)
-        return "wav", rate, n_frames, mean_level
-    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        w, h, _n, _fps, mean_level, _means, codec = decode_avi(payload)
-        return ("mjpeg_avi" if codec == "mjpeg" else "avi"), w, h, mean_level
-    if len(payload) >= 12 and payload[4:8] == b"ftyp":
-        # ISO BMFF: full decode for Motion-JPEG tracks; avc1/hev1
-        # propagate NotImplementedError from decode_mp4 (the entropy-
-        # decode boundary) after the container has parsed for real.
-        w, h, _n, _fps, mean_level, _means, _codec = decode_mp4(payload)
-        return "mjpeg_mp4", w, h, mean_level
-    if payload[:4] == _MAGIC:
-        _, w, h = struct.unpack(">BII", payload[4:13])
-        return "fake", w, h, None
-    raise NotImplementedError(
-        "real media decode for this format requires codec libraries "
-        "not present here (H.264/HEVC → pyav)"
-    )
-
-
-def decode_stub(payload: bytes) -> Tuple[int, int, bool]:
-    """Back-compat shim for the FAKE header (video stub path)."""
-    if payload[:4] != _MAGIC:
-        raise NotImplementedError(
-            "real media decode requires codec libraries not present here"
-        )
-    _, w, h = struct.unpack(">BII", payload[4:13])
-    return w, h, True
+    raise NotImplementedError("not a BMP, PNG or JPEG payload")
 
 
 def extract_media_features(media: DataFrame) -> DataFrame:
@@ -1326,192 +809,3 @@ def _safe_decode(payload: bytes):
     except Exception:
         # quarantine semantics — row kept, flagged, job never fails
         return (None, 0, 0, None, False)
-
-
-AUDIO_FEATURES_SCHEMA = (
-    "media_id long, sample_rate int, n_samples int, duration_sec double, "
-    "rms double, zcr double, peak double, valid boolean"
-)
-
-
-def extract_audio_features(media: DataFrame) -> DataFrame:
-    """Audio feature extraction over REAL decoded PCM samples (the
-    audio analog of ``extract_media_features``'s image path): per-row
-    RMS energy, zero-crossing rate, and peak amplitude — the standard
-    silence/clipping curation signals a training-data pipeline filters
-    on before paying for transcription.
-
-    * rms  — sqrt(mean(s²)) of the [-1, 1]-normalized samples
-    * zcr  — zero crossings per SECOND (sign changes × rate / n), the
-      classic voiced/unvoiced + pure-tone discriminator: a sine at f Hz
-      reads ≈ 2f
-    * peak — max |s|; 1.0 flags full-scale (potentially clipped) audio
-
-    Non-WAV payloads and decode failures quarantine as ``valid=false``
-    rows.  Same scale shape as the image path: features are computed in
-    the scan-side ``mapInPandas`` pass, payload bytes never shuffle.
-    """
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    payload = bytes(payload)  # None payload → quarantine
-                    is_wav = (
-                        payload[:4] == b"RIFF" and payload[8:12] == b"WAVE"
-                    )
-                except Exception:
-                    is_wav = False
-                if not is_wav:
-                    rows.append((mid, 0, 0, None, None, None, None, False))
-                    continue
-                try:
-                    rate, s, ch = decode_wav_samples(payload)
-                except Exception:
-                    rows.append((mid, 0, 0, None, None, None, None, False))
-                    continue
-                # frame-domain stats: mix interleaved channels down to
-                # mono so duration and zcr are per FRAME (a 1 s stereo
-                # clip must read 1 s, and zcr over interleaved L/R
-                # samples would count channel alternation, not signal
-                # sign changes)
-                if ch > 1 and len(s) % ch == 0:
-                    s = s.reshape(-1, ch).mean(axis=1)
-                n = len(s)
-                if n == 0 or rate <= 0:
-                    rows.append((mid, rate, 0, 0.0, 0.0, 0.0, 0.0, True))
-                    continue
-                rms = float(np.sqrt(np.mean(s * s)))
-                crossings = int(np.count_nonzero(np.signbit(s[1:]) != np.signbit(s[:-1])))
-                rows.append((
-                    mid, rate, n, round(n / rate, 6),
-                    round(rms, 6),
-                    round(crossings * rate / n, 4),
-                    round(float(np.abs(s).max()), 6),
-                    True,
-                ))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "sample_rate", "n_samples", "duration_sec",
-                "rms", "zcr", "peak", "valid",
-            ])
-
-    return media.mapInPandas(op, schema=AUDIO_FEATURES_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Transforms
-# ---------------------------------------------------------------------------
-
-
-def resize_media(media: DataFrame, max_dim: int = 64) -> DataFrame:
-    """REAL nearest-neighbor resize for BMP, PNG, and JPEG images
-    (decode pixels → index-subsample → re-encode in the same format;
-    NOTE the JPEG path is lossy, so each resize pass accumulates
-    quantization error — resize once, not repeatedly); non-image
-    payloads pass through unchanged (resizing audio/video is a
-    different operation).  Binary-in/binary-out mapInPandas with
-    bounded Arrow batches."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            def shrink(b: bytes) -> bytes:
-                if b[:2] == b"BM":
-                    dec, enc = decode_bmp, encode_bmp
-                elif b[:8] == _PNG_SIG:
-                    dec, enc = decode_png, encode_png
-                elif b[:2] == b"\xff\xd8":
-                    dec, enc = decode_jpeg, encode_jpeg
-                else:
-                    return b
-                try:
-                    w, h, _, pixels = dec(b)
-                except Exception:
-                    return b
-                if max(w, h) <= max_dim:
-                    return b
-                scale = max(w, h) / max_dim
-                nw, nh = max(1, int(w / scale)), max(1, int(h / scale))
-                xs = (np.arange(nw) * (w / nw)).astype(np.int64)
-                ys = (np.arange(nh) * (h / nh)).astype(np.int64)
-                out = pixels[ys][:, xs]
-                return enc(nw, nh, out.tobytes())
-            pdf = pdf.assign(payload=pdf["payload"].map(shrink))
-            yield pdf
-
-    return media.mapInPandas(op, schema=media.schema)
-
-
-def frame_sample(media: DataFrame, every_n: int = 2) -> DataFrame:
-    """REAL frame sampling for video rows (round 3 closed this stub):
-    decode the AVI container, emit one row per every_n-th frame with its
-    actual pixel mean and content hash (UDTF shape: 1 row in → N rows
-    out via mapInPandas).  Legacy FAKE-header payloads fall back to the
-    old index-only stub rows so the boundary stays visible."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
-                if kind != "video":
-                    continue
-                payload = bytes(payload)
-                is_avi = payload[:4] == b"RIFF" and payload[8:12] == b"AVI "
-                is_mp4 = len(payload) >= 12 and payload[4:8] == b"ftyp"
-                if is_avi or is_mp4:
-                    dec = decode_avi if is_avi else decode_mp4
-                    w, h, n_frames, _fps, _m, frame_means, _codec = dec(payload)
-                    for f in range(0, n_frames, every_n):
-                        rows.append(
-                            (mid, f, frame_means[f],
-                             hashlib.sha256(
-                                 payload + struct.pack(">I", f)
-                             ).hexdigest())
-                        )
-                    continue
-                try:
-                    w, h, _ = decode_stub(payload)
-                except Exception:
-                    continue
-                n_frames = max(1, (w * h) // 4096)
-                for f in range(0, n_frames, every_n):
-                    rows.append((mid, f, None, hashlib.sha256(
-                        payload[13:] + struct.pack(">I", f)
-                    ).hexdigest()))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "frame_mean", "frame_hash"],
-            )
-
-    return media.mapInPandas(
-        op,
-        schema="media_id long, frame_idx int, frame_mean double, "
-        "frame_hash string",
-    )
-
-
-def q_multimodal_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-surface window into the multimodal plumbing (rows-only —
-    input is the deterministic synthetic media table, not an sf table):
-    synthesize → mapInPandas feature extraction → per-kind census.
-    BMP/WAV rows carry REAL decoded dimensions and mean levels; byte
-    behavior is pinned by tests/test_pipeline.py."""
-    media = synthesize_media(spark, n=300, seed=42)
-    feats = extract_media_features(media)
-    return (
-        feats.groupBy("kind", "codec")
-        .agg(
-            F.count("*").alias("n_media"),
-            F.sum("n_bytes").alias("total_bytes"),
-            F.round(F.avg("width"), 2).alias("avg_width"),
-            F.round(F.avg("height"), 2).alias("avg_height"),
-            F.round(F.avg("mean_level"), 4).alias("avg_mean_level"),
-            F.sum(F.when(F.col("valid"), 0).otherwise(1)).alias("n_invalid"),
-        )
-        .orderBy("kind")
-    )
-
-
-QUERIES = {
-    "multimodal_census": q_multimodal_census,
-}

@@ -70,7 +70,7 @@ from typing import Callable, List, Optional
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -267,6 +267,7 @@ def merge_turns(
     turns_dir: str,
     new_turns: DataFrame,
     n_buckets: int = N_BUCKETS_DEFAULT,
+    late_before: Optional[Column] = None,
 ) -> dict:
     """Keyed upsert into the bucketed turns dataset — the parquet analog
     of Iceberg ``MERGE INTO turns t USING new n ON t.conv_id = n.conv_id
@@ -281,6 +282,12 @@ def merge_turns(
     at any point leaves either the old buckets or the merged ones, and a
     replay of the same batch gives the same table.  ``new_turns`` is
     extraction output (``extract_turns(...).drop("spans")``).
+
+    Returns the rewritten buckets, the row count ``n_upserted``, the
+    newest ``max_ts`` of ``new_turns`` (None when no row has a ``ts``)
+    and ``n_late``: its rows with ``ts`` before the timestamp expression
+    ``late_before`` (0 when None).  All come from the one aggregate that
+    the contract check runs anyway.
     """
     # the bucket modulus is part of the dataset layout: merging with a
     # different n_buckets would hash matched keys into unscanned buckets
@@ -307,6 +314,10 @@ def merge_turns(
             .agg(
                 F.count("*").alias("rows"),
                 F.countDistinct(F.struct("conv_id", "turn_idx")).alias("keys"),
+                F.max("ts").alias("max_ts"),
+                F.count_if(
+                    F.lit(False) if late_before is None else F.col("ts") < late_before
+                ).alias("late"),
             )
             .collect()
         )
@@ -346,7 +357,13 @@ def merge_turns(
                 fh.write(json.dumps({"n_buckets": n_buckets}) + "\n")
 
         _publish(meta_dir, "n_buckets.json", write_meta)
-    return {"buckets_rewritten": affected, "n_upserted": n_upserted}
+    max_ts = [r["max_ts"] for r in per_bucket if r["max_ts"] is not None]
+    return {
+        "buckets_rewritten": affected,
+        "n_upserted": n_upserted,
+        "max_ts": max(max_ts, default=None),
+        "n_late": sum(r["late"] for r in per_bucket),
+    }
 
 
 def run_extraction(

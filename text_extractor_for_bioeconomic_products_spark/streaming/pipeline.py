@@ -346,25 +346,17 @@ def run_streaming_merge_upsert(
     high_water = {"ts": None}  # event-time max over all prior batches
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        res = merge_turns(spark, turns_dir, batch_df, n_buckets=n_buckets)
+        # the lateness census rides on merge_turns' one aggregate
         hw = high_water["ts"]
-        if hw is None:
-            late, batch_max = 0, batch_df.agg(F.max("ts")).collect()[0][0]
-        else:
-            threshold = F.lit(hw) - F.expr(
-                f"INTERVAL {int(allowed_lateness_sec)} SECONDS"
-            )
-            row = batch_df.agg(
-                F.sum(F.when(F.col("ts") < threshold, 1).otherwise(0)).alias(
-                    "late"
-                ),
-                F.max("ts").alias("mx"),
-            ).collect()[0]
-            late, batch_max = int(row["late"] or 0), row["mx"]
+        late_before = None if hw is None else F.lit(hw) - F.expr(
+            f"INTERVAL {int(allowed_lateness_sec)} SECONDS"
+        )
+        res = merge_turns(
+            spark, turns_dir, batch_df, n_buckets=n_buckets, late_before=late_before
+        )
+        late, batch_max = res["n_late"], res["max_ts"]
         if batch_max is not None and (hw is None or batch_max > hw):
             high_water["ts"] = batch_max
-        batch_df.unpersist()
         seen["batches"] += 1
         seen["rows"] += res["n_upserted"]
         seen["late_rows"] += late
