@@ -25,7 +25,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from text_extractor_for_bioeconomic_products_spark.operators import (  # noqa: E402
     bpe,
-    conversation,
     curation,
     graph,
     dedup,
@@ -75,7 +74,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q.update(textstats.QUERIES)
     q.update(dedup.QUERIES)
     q.update(stringjoin.QUERIES)
-    q.update(conversation.QUERIES)
     q.update(bpe.QUERIES)
     q.update(graph.QUERIES)
     q.update(profiling.QUERIES)
@@ -90,7 +88,6 @@ def oracle_sql() -> dict[str, str]:
     o.update(textstats.ORACLE_SQL)
     o.update(dedup.ORACLE_SQL)
     o.update(stringjoin.ORACLE_SQL)
-    o.update(conversation.ORACLE_SQL)
     o.update(graph.ORACLE_SQL)
     o.update(profiling.ORACLE_SQL)
     o.update(layout.ORACLE_SQL)

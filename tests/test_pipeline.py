@@ -104,29 +104,6 @@ def test_json_sink(spark, transcripts_df, tmp_path):
     assert "_meta" in back.columns
 
 
-def test_streaming_matches_batch(spark, transcripts_df, tmp_path):
-    """availableNow stream over the same input == batch output (row counts
-    and span totals)."""
-    from text_extractor_for_bioeconomic_products_spark.sources.transcripts import (
-        write_transcripts,
-    )
-    from text_extractor_for_bioeconomic_products_spark.streaming.pipeline import (
-        run_streaming_extraction,
-    )
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "stream_out")
-    write_transcripts(transcripts_df, in_dir)
-    run_streaming_extraction(spark, in_dir, out_dir, timeout_sec=180)
-    got = spark.read.parquet(os.path.join(out_dir, "turns_extracted_stream"))
-    batch = extract_turns(transcripts_df).drop("spans")
-    assert got.count() == batch.count()
-    from pyspark.sql import functions as F
-    assert (
-        got.agg(F.sum("n_spans")).collect()[0][0]
-        == batch.agg(F.sum("n_spans")).collect()[0][0]
-    )
-
-
 def test_multimodal_plumbing(spark):
     from text_extractor_for_bioeconomic_products_spark.operators.multimodal import (
         extract_media_features,
@@ -777,42 +754,6 @@ def test_run_extraction_splits_hot_bucket(spark, transcripts_df, out_dir):
     assert lineage.count() == lineage.select("bucket").distinct().count() == len(ref_files)
 
 
-def test_watermarked_streaming_agg(spark, transcripts_df, tmp_path):
-    """streaming_conversation_counts: watermark + event-time window agg over
-    the stream; availableNow totals == batch windowed totals."""
-    from pyspark.sql import functions as F
-
-    from text_extractor_for_bioeconomic_products_spark.sources.transcripts import (
-        write_transcripts,
-    )
-    from text_extractor_for_bioeconomic_products_spark.streaming.pipeline import (
-        streaming_conversation_counts,
-    )
-
-    in_dir, out_dir = str(tmp_path / "in"), str(tmp_path / "out")
-    write_transcripts(transcripts_df, in_dir)
-    streaming_conversation_counts(spark, in_dir, out_dir, timeout_sec=180)
-    got = spark.read.parquet(os.path.join(out_dir, "conv_counts_stream"))
-    batch = (
-        extract_turns(transcripts_df)
-        .groupBy(F.window("ts", "10 minutes"), F.col("conv_id"))
-        .agg(F.count("*").alias("n_turns"), F.sum("n_spans").alias("n_spans"))
-    )
-    # append mode emits only windows closed by the watermark; every emitted
-    # row must match its batch twin exactly
-    got_rows = {
-        (r["window"]["start"], r["conv_id"]): (r["n_turns"], r["n_spans"])
-        for r in got.collect()
-    }
-    batch_rows = {
-        (r["window"]["start"], r["conv_id"]): (r["n_turns"], r["n_spans"])
-        for r in batch.collect()
-    }
-    assert len(got_rows) > 0
-    for k, v in got_rows.items():
-        assert batch_rows[k] == v
-
-
 def test_quality_observations_strings(spark, transcripts_df):
     """A4 observations (response_parser.py:429-437): threshold strings."""
     from text_extractor_for_bioeconomic_products_spark.operators.extract import (
@@ -972,24 +913,6 @@ def test_merge_turns_bucket_files_share_one_schema(spark, transcripts_df, tmp_pa
         footers.add((columns, md.metadata[b"org.apache.spark.sql.parquet.row.metadata"]))
     assert len(footers) == 1, footers
     assert _content_sum(spark, turns_dir) == before
-
-
-def test_streaming_dedup_exactly_once_per_key(spark, transcripts_df, tmp_path):
-    """At-least-once input (every turn delivered twice across two files)
-    → exactly one output row per (conv_id, turn_idx)."""
-    from text_extractor_for_bioeconomic_products_spark.streaming.pipeline import (
-        run_streaming_dedup_extraction,
-    )
-
-    src = transcripts_df.limit(200)
-    in_dir = str(tmp_path / "in")
-    src.write.mode("overwrite").parquet(in_dir)
-    src.write.mode("append").parquet(in_dir)  # duplicate delivery
-    out_dir = str(tmp_path / "out")
-    run_streaming_dedup_extraction(spark, in_dir, out_dir)
-    got = spark.read.parquet(str(tmp_path / "out" / "turns_dedup_stream"))
-    assert got.count() == src.count()
-    assert got.groupBy("conv_id", "turn_idx").count().filter("count > 1").count() == 0
 
 
 def test_merge_turns_rejects_bad_inputs(spark, transcripts_df, tmp_path):
@@ -1565,9 +1488,12 @@ def test_streaming_merge_upsert_restart_effectively_once(
     """Stream → foreachBatch keyed MERGE, crash injected AFTER a merge
     commits but BEFORE its streaming offset commit — the replay window.
     On restart the batch re-applies; the keyed upsert makes that a
-    no-op, so the final table equals the batch pipeline exactly and
-    holds no duplicate keys."""
-    from pyspark.sql import functions as F
+    no-op.  One more input file redelivers rows another file already
+    holds (at-least-once input); its micro-batch converges to one row
+    per key as well, so the final table equals the batch pipeline
+    exactly and holds no duplicate keys."""
+    import shutil
+
     from text_extractor_for_bioeconomic_products_spark.sources.transcripts import (
         write_transcripts,
     )
@@ -1582,6 +1508,16 @@ def test_streaming_merge_upsert_restart_effectively_once(
     # shuffled=False keeps the explicit 4-way repartition (the default
     # global sort lets AQE coalesce back to one file = one batch)
     write_transcripts(transcripts_df.repartition(4), in_dir, shuffled=False)
+    # redelivery: a fifth file repeating rows of the four, one copy per
+    # key inside the file (a key twice in one micro-batch is a MERGE
+    # error), written last so it streams after the originals
+    redelivered = transcripts_df.filter("turn_idx < 3").coalesce(1)
+    scratch = tmp_path / "redelivered"
+    write_transcripts(redelivered, str(scratch), shuffled=False)
+    shutil.move(
+        str(next(scratch.glob("part-*.parquet"))),
+        os.path.join(in_dir, "redelivered.parquet"),
+    )
 
     total = transcripts_df.count()
     with pytest.raises(Exception) as exc_info:
@@ -1656,78 +1592,13 @@ def test_streaming_merge_upsert_spark_jobs(spark, transcripts_df, tmp_path):
     assert n_jobs <= 9, n_jobs
 
 
-def test_streaming_dedup_admission_replay_idempotent(
-    spark, transcripts_df, tmp_path
-):
-    """Content-hash corpus admission over micro-batches: the admitted
-    table holds exactly one row per distinct normalized content hash —
-    across batches AND across a crash-replay (append committed, offset
-    not; the replayed batch's anti-join rejects what the dead attempt
-    already admitted)."""
-    from pyspark.sql import functions as F
-    from text_extractor_for_bioeconomic_products_spark.sources.transcripts import (
-        write_transcripts,
-    )
-    from text_extractor_for_bioeconomic_products_spark.streaming.pipeline import (
-        run_streaming_dedup_admission,
-    )
-
-    in_dir = str(tmp_path / "in")
-    admitted = str(tmp_path / "corpus_admitted")
-    ckpt = str(tmp_path / "ckpt")
-    # 4 files → 4 micro-batches; template-generated turns repeat content
-    # across conversations, so cross-batch duplicates are guaranteed
-    write_transcripts(transcripts_df.repartition(4), in_dir, shuffled=False)
-
-    norm = F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
-    n_total = transcripts_df.count()
-    n_distinct = transcripts_df.select(norm.alias("h")).distinct().count()
-    assert n_distinct < n_total  # the fixture must actually contain dups
-
-    with pytest.raises(Exception) as exc_info:
-        run_streaming_dedup_admission(
-            spark, in_dir, admitted, ckpt, crash_after_batches=2
-        )
-    assert "InjectedCrash" in str(exc_info.value) or "after batch" in str(
-        exc_info.value
-    )
-    partial = spark.read.parquet(admitted).count()
-    assert 0 < partial <= n_distinct
-
-    # restart with the same checkpoint: the crashed batch REPLAYS (its
-    # append committed, its offset did not) then the rest drains
-    stats = run_streaming_dedup_admission(spark, in_dir, admitted, ckpt)
-    assert stats["batches"] >= 1
-
-    got = spark.read.parquet(admitted)
-    # one row per distinct content hash — the replayed batch added none
-    # of its already-admitted rows back
-    assert got.count() == n_distinct
-    assert (
-        got.groupBy("content_hash").count().filter("count > 1").count() == 0
-    )
-    # batch-twin equality: the admitted HASH SET is exactly the corpus's
-    # distinct hash set (which representative won is arrival-order
-    # dependent across batches, so equality is on hashes, not rows)
-    stream_h = got.select("content_hash")
-    batch_h = transcripts_df.select(norm.alias("content_hash")).distinct()
-    assert stream_h.exceptAll(batch_h).count() == 0
-    assert batch_h.exceptAll(stream_h).count() == 0
-    # within any one batch the kept representative IS deterministic:
-    # every admitted row must be the (conv_id, turn_idx)-minimal holder
-    # of its hash within that row's own source... cheapest global check:
-    # no admitted row's text normalizes to a hash it doesn't carry
-    recomputed = got.withColumn("h2", norm).filter(
-        F.col("h2") != F.col("content_hash")
-    )
-    assert recomputed.count() == 0
-
-
 def test_streaming_near_dup_admission(spark, tmp_path):
     """NEAR-dup admission: within one micro-batch a near cluster (exact
     copy + one-word variant) collapses to its (conv_id, turn_idx)-min;
     across batches a later variant is rejected against the standing band
-    index; crash-replay admits nothing twice.  Fixture texts are chosen
+    index, and so is a later text equal to a standing one after
+    ``lower`` (a case-only variant); crash-replay admits nothing twice.
+    Fixture texts are chosen
     so the planted variants share LSH bands deterministically (md5 is
     fixed) and the premise is asserted before the semantics."""
     import datetime
@@ -1743,6 +1614,7 @@ def test_streaming_near_dup_admission(spark, tmp_path):
     A = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     A_near = A + " lambda"     # same-batch near variant of A
     A2 = A + " sigma"          # later-batch near variant of A
+    A_case = A.upper()         # later-batch case-only variant of A
     C = "one two three four five six seven eight nine ten"
     D = "red orange yellow green blue indigo violet pink brown black"
     ts = datetime.datetime(2026, 1, 1)
@@ -1765,6 +1637,7 @@ def test_streaming_near_dup_admission(spark, tmp_path):
 
     assert band_set(A) & band_set(A_near)
     assert band_set(A) & band_set(A2)
+    assert band_set(A_case) == band_set(A)
     assert not (band_set(A) & band_set(C))
     assert not (band_set(C) & band_set(D))
 
@@ -1781,12 +1654,18 @@ def test_streaming_near_dup_admission(spark, tmp_path):
         scratch = tmp_path / f"scratch_{name}"
         tdf(rows).coalesce(1).write.parquet(str(scratch))
         part = next(scratch.glob("part-*.parquet"))
-        shutil.move(str(part), str(in_dir / f"{name}.parquet"))
+        dest = in_dir / f"{name}.parquet"
+        shutil.move(str(part), str(dest))
+        # the file source streams oldest-first: pin the batch order
+        t = 1_700_000_000 + len(list(in_dir.glob("*.parquet")))
+        os.utime(dest, (t, t))
 
     # batch 1 carries the within-batch cluster {A, A_exact, A_near} +
-    # unique C; batch 2 the cross-batch variant A2 + unique D
+    # unique C; batch 2 the cross-batch variant A2 + unique D; batch 3
+    # the case-only variant of the standing A
     add_batch("b1", [("c1", 0, A), ("c1", 1, A), ("c2", 0, A_near), ("c3", 0, C)])
     add_batch("b2", [("c4", 0, A2), ("c5", 0, D)])
+    add_batch("b3", [("c6", 0, A_case)])
 
     with pytest.raises(Exception) as exc_info:
         run_streaming_near_dup_admission(
@@ -1798,12 +1677,14 @@ def test_streaming_near_dup_admission(spark, tmp_path):
     # restart: the crashed batch replays (append committed, offset not)
     stats = run_streaming_near_dup_admission(spark, str(in_dir), admitted, ckpt)
     assert stats["batches"] >= 1
+    # the last batch holds only A_case: rejected against standing bands
+    assert stats["admitted_by_batch"][-1] == 0
 
     got = spark.read.parquet(admitted)
     texts = {r["text"] for r in got.collect()}
-    # exactly one member of the A-family survives, plus the two uniques —
-    # regardless of which file the source scheduled first
-    assert len(texts & {A, A_near, A2}) == 1
+    # exactly one member of the A-family survives, plus the two uniques
+    assert len(texts & {A, A_near, A2, A_case}) == 1
+    assert A_case not in texts
     assert C in texts and D in texts
     assert got.count() == 3
     # within the batch that held the cluster, the survivor is the

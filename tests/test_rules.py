@@ -325,12 +325,6 @@ def test_token_estimate():
     assert rules.token_estimate(None) == 0
 
 
-def test_text_similarity_difflib_semantics():
-    assert rules.text_similarity("hello world", "hello world") == 1.0
-    assert rules.text_similarity("", "x") == 0.0
-    assert 0.0 < rules.text_similarity("hello world", "hello there") < 1.0
-
-
 def test_chunk_text_offsets_exact():
     text = "Sentence one. " * 300  # 4200 chars
     chunks = rules.chunk_text(text, chunk_size=1000, overlap=100)

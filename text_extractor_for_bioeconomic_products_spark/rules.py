@@ -1273,19 +1273,6 @@ def token_estimate(text: Optional[str]) -> int:
 
 
 # ---------------------------------------------------------------------------
-# T6 — difflib similarity (helpers.py:286-306)
-# ---------------------------------------------------------------------------
-
-def text_similarity(a: Optional[str], b: Optional[str]) -> float:
-    import difflib
-    if not a or not b:
-        return 0.0
-    a = clean_text_basic(a.lower())
-    b = clean_text_basic(b.lower())
-    return difflib.SequenceMatcher(None, a, b).ratio()
-
-
-# ---------------------------------------------------------------------------
 # W1 — size-based chunking with sentence respect (helpers.py:103-150)
 # ---------------------------------------------------------------------------
 

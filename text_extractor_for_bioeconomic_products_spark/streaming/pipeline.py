@@ -1,19 +1,24 @@
 """Structured Streaming variant of the extraction pipeline.
 
 The reference is strictly batch (SURVEY §2.11); this module is the
-engine's forward-looking stream path: the same stateless extraction
-operators applied via ``readStream`` → ``writeStream``.  Because
-``extract_turns`` is a narrow map, it is streaming-safe with no state
-store; per-conversation aggregation uses a watermark on ``ts``.  Every
-stream here reads transcripts; ``jobs/run_streaming.py`` runs the modes.
+engine's forward-looking stream path, two foreachBatch sinks over one
+transcripts file stream (``jobs/run_streaming.py`` runs them):
 
-``Trigger.AvailableNow`` gives batch-equivalent semantics for backfill —
-the test suite asserts stream output == batch output on the same input.
+* ``run_streaming_merge_upsert`` applies ``extract_turns`` (a narrow
+  map, streaming-safe with no state store) and keyed-MERGEs each
+  micro-batch into the bucketed turns table.  It needs no watermark:
+  the upsert drops nothing, and its lateness census only reports what a
+  watermark would have dropped.
+* ``run_streaming_near_dup_admission`` admits a text only if none of
+  its LSH bands already stand in the admitted corpus.
+
+Both are replay-idempotent under the checkpoint's at-least-once
+delivery.  ``Trigger.AvailableNow`` gives batch-equivalent semantics for
+backfill — the test suite asserts the merged table == batch
+``extract_turns`` output on the same input.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,7 +28,7 @@ from ..sources.transcripts import TRANSCRIPT_SCHEMA
 
 
 def read_transcript_stream(spark: SparkSession, input_dir: str,
-                            max_files_per_trigger: int = 16) -> DataFrame:
+                            max_files_per_trigger: int) -> DataFrame:
     """File-source stream over a transcripts parquet directory.
 
     maxFilesPerTrigger bounds per-micro-batch work (the streaming analog
@@ -36,260 +41,10 @@ def read_transcript_stream(spark: SparkSession, input_dir: str,
     )
 
 
-def run_streaming_extraction(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    available_now: bool = True,
-    timeout_sec: int = 300,
-) -> None:
-    """Stream transcripts → extract → parquet sink, exactly-once via the
-    streaming checkpoint (offset log + file-sink manifest)."""
-    stream = read_transcript_stream(spark, input_dir)
-    turns = extract_turns(stream).drop("spans")
-    writer = (
-        turns.writeStream.format("parquet")
-        .option("path", os.path.join(out_dir, "turns_extracted_stream"))
-        .option("checkpointLocation", os.path.join(out_dir, "_stream_checkpoint"))
-        .outputMode("append")
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-    else:
-        q = writer.trigger(processingTime="10 seconds").start()
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
-
-
-def run_stateful_conversation_tracker(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    timeout_sec: int = 300,
-) -> None:
-    """Custom stateful streaming operator via applyInPandasWithState:
-    running per-conversation totals (turns seen, spans seen, last
-    turn_idx) maintained across micro-batches in the state store — the
-    arbitrary-stateful-processing surface the graft requires."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    stream = read_transcript_stream(spark, input_dir)
-    turns = extract_turns(stream).select("conv_id", "turn_idx", "n_spans")
-
-    out_schema = (
-        "conv_id string, turns_seen long, spans_seen long, max_turn_idx int"
-    )
-    state_schema = "turns_seen long, spans_seen long, max_turn_idx int"
-
-    def track(key, pdfs, state: GroupState):
-        turns_seen, spans_seen, max_idx = (
-            state.get if state.exists else (0, 0, -1)
-        )
-        for pdf in pdfs:
-            turns_seen += len(pdf)
-            spans_seen += int(pdf["n_spans"].sum())
-            if len(pdf):
-                max_idx = max(max_idx, int(pdf["turn_idx"].max()))
-        state.update((turns_seen, spans_seen, max_idx))
-        yield pd.DataFrame({
-            "conv_id": [key[0]],
-            "turns_seen": [turns_seen],
-            "spans_seen": [spans_seen],
-            "max_turn_idx": [max_idx],
-        })
-
-    tracked = turns.groupBy("conv_id").applyInPandasWithState(
-        track, out_schema, state_schema, "update",
-        GroupStateTimeout.NoTimeout,
-    )
-    # update-mode state op needs an update-mode sink; the parquet file
-    # sink is append-only, so route through foreachBatch (the standard
-    # pattern for update-mode stateful output to files)
-    def write_batch(batch_df, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(
-            os.path.join(out_dir, "conv_tracker_stream")
-        )
-
-    q = (
-        tracked.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", os.path.join(out_dir, "_tracker_checkpoint"))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
-
-
-def streaming_conversation_counts(
-    spark: SparkSession, input_dir: str, out_dir: str, timeout_sec: int = 300
-) -> None:
-    """Watermarked windowed aggregate: spans per conversation per 10-min
-    event-time window, late data beyond 30 min dropped — the stateful-op
-    pattern (watermark + window) on the extraction output."""
-    stream = read_transcript_stream(spark, input_dir)
-    turns = extract_turns(stream)
-    agg = (
-        turns.withWatermark("ts", "30 minutes")
-        .groupBy(F.window("ts", "10 minutes"), F.col("conv_id"))
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.sum("n_spans").alias("n_spans"),
-        )
-    )
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", os.path.join(out_dir, "conv_counts_stream"))
-        .option("checkpointLocation", os.path.join(out_dir, "_agg_checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
-
-
-def run_streaming_dedup_extraction(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    timeout_sec: int = 300,
-) -> None:
-    """Exactly-once per-key output under at-least-once input: stateful
-    streaming dedup on (conv_id, turn_idx), then the extraction map.
-
-    ``dropDuplicatesWithinWatermark`` is the correct primitive here: it
-    evicts per-key state once the key's event time falls behind the
-    watermark WITHOUT requiring the event-time column in the key, and —
-    unlike watermark + plain ``dropDuplicates`` — does not discard a
-    never-seen late row outright (plain dropDuplicates with a watermark
-    but no event-time key would filter late rows pre-dedup and never
-    evict state)."""
-    stream = read_transcript_stream(spark, input_dir)
-    unique = (
-        stream.withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
-    )
-    turns = extract_turns(unique).drop("spans")
-    q = (
-        turns.writeStream.format("parquet")
-        .option("path", os.path.join(out_dir, "turns_dedup_stream"))
-        .option("checkpointLocation", os.path.join(out_dir, "_dedup_checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
-
-
 class InjectedCrash(RuntimeError):
     """Test hook: simulates the driver dying between a completed merge
     and the streaming checkpoint commit — the window where a naive sink
     would double-apply the batch on restart."""
-
-
-def run_streaming_dedup_admission(
-    spark: SparkSession,
-    input_dir: str,
-    admitted_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    crash_after_batches: int | None = None,
-    timeout_sec: int = 300,
-) -> dict:
-    """Continuous corpus admission by exact content: each micro-batch
-    keeps ONE row per normalized-content hash (keep-first within the
-    batch, deterministic (conv_id, turn_idx) order) and anti-joins the
-    standing ADMITTED corpus on that hash before appending — so the
-    admitted table never holds two rows with the same content.
-
-    Delivery semantics: the file-source checkpoint gives at-least-once
-    foreachBatch invocations; here the admission predicate ITSELF is the
-    idempotency mechanism.  If the driver dies after a batch's append
-    but before its offset commit (the ``crash_after_batches`` window),
-    the replayed batch re-derives the same candidate set and the
-    anti-join now rejects every row the dead attempt already admitted —
-    replay converges to the identical corpus instead of duplicating it.
-    The MERGE sink above needs key-conditioned overwrite for this
-    property; admission gets it from its own semantics.
-
-    100 TB shape: the standing side reduces to its ``content_hash``
-    column before the join (32-hex uniform key, column-pruned read of
-    the admitted parquet); at deployment scale that column is the
-    incrementally-maintained hash index a real pipeline keeps alongside
-    the corpus, not a rescan.  Within-batch keep-first and the
-    membership join key on the SAME hash, so the window reuses the
-    join's partitioning — one shuffle of the (small) micro-batch.
-    Reference analog: the reference's batch scan loop
-    (`src/core/pdf_processor.py:90` `process_directory`) paired with
-    its per-file content-hash identity (`src/utils/helpers.py:83`
-    `get_file_hash`), lifted to a continuously-ingested corpus.
-    """
-    from pyspark.sql import Window
-
-    stream = read_transcript_stream(spark, input_dir, max_files_per_trigger)
-    seen = {"batches": 0, "admitted": 0, "rejected_standing": 0,
-            "rejected_within_batch": 0, "admitted_by_batch": []}
-
-    def admit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        norm = F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
-        cand = batch_df.withColumn("content_hash", F.md5(norm)).persist()
-        n_batch = cand.count()
-        first = F.row_number().over(
-            Window.partitionBy("content_hash").orderBy("conv_id", "turn_idx")
-        )
-        uniq = (
-            cand.withColumn("__rn", first)
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        n_uniq = uniq.count()
-        from pyspark.errors import AnalysisException
-
-        try:
-            # schema read lists the dir eagerly, snapshotting the standing
-            # corpus BEFORE this batch's own append lands
-            standing = (
-                spark.read.parquet(admitted_dir)
-                .select("content_hash").distinct()
-            )
-            fresh = uniq.join(standing, "content_hash", "left_anti").persist()
-        except AnalysisException:  # first batch: no admitted output yet
-            fresh = uniq.persist()
-        n_fresh = fresh.count()
-        fresh.write.mode("append").parquet(admitted_dir)
-        fresh.unpersist()
-        cand.unpersist()
-        seen["batches"] += 1
-        seen["admitted"] += n_fresh
-        seen["rejected_standing"] += n_uniq - n_fresh
-        seen["rejected_within_batch"] += n_batch - n_uniq
-        seen["admitted_by_batch"].append(n_fresh)
-        if (
-            crash_after_batches is not None
-            and seen["batches"] >= crash_after_batches
-        ):
-            # append done, checkpoint commit for this batch never happens
-            raise InjectedCrash(f"after batch {batch_id}")
-
-    q = (
-        stream.writeStream.foreachBatch(admit_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    return seen
 
 
 def run_streaming_merge_upsert(
@@ -316,6 +71,16 @@ def run_streaming_merge_upsert(
     rows rewrites the same values — effectively-once table state without
     a transactional sink.  That idempotent-merge-under-replay property
     is exactly what ``crash_after_batches`` lets the tests drive.
+
+    The same holds for at-least-once INPUT: a row redelivered in a later
+    micro-batch (say, a file copied into the input dir twice) converges
+    to one row per ``(conv_id, turn_idx)``.  The upsert keeps the last
+    copy of a key where a first-wins stream dedup keeps the first; for
+    identical redelivered rows the two are the same.  A key repeated
+    INSIDE one micro-batch raises ``ValueError`` (the MERGE contract:
+    one source row per target key), so file-level redelivery needs the
+    copies in separate micro-batches — ``max_files_per_trigger=1``, the
+    default here.
 
     At 100 TB the shape holds: each micro-batch merge touches only the
     hash buckets containing its keys (bounded read-modify-write), and
@@ -402,14 +167,19 @@ def run_streaming_near_dup_admission(
     Band collision IS the rejection decision (the Gopher/RefinedWeb
     convention; the batch-side `dup_components` pairs docs on the same
     band keys).  Exact duplicates are subsumed: identical text ⇒ identical
-    signatures ⇒ identical bands ⇒ same cluster.
+    signatures ⇒ identical bands ⇒ same cluster.  Signatures tokenize
+    ``array_distinct(split(lower(text), " "))``, so texts equal after
+    ``lower`` are rejected too, within a batch and against the standing
+    corpus.  Texts that differ only in whitespace (``"a  b"`` vs
+    ``"a b"``, ``"a\\nb"`` vs ``"a b"``) tokenize differently and are NOT
+    guaranteed to collide: this sink does not normalize whitespace.
 
-    Replay idempotency again comes from the semantics, not a
-    transactional sink: a batch whose append committed but whose offset
-    did not re-derives the same survivors on restart, and every one of
-    them now collides with its own standing bands — the replay admits
-    nothing.  (Same property as the exact-hash sink above, one level up
-    the similarity hierarchy.)
+    Replay idempotency comes from the semantics, not a transactional
+    sink: a batch whose append committed but whose offset did not
+    re-derives the same survivors on restart, and every one of them now
+    collides with its own standing bands — the replay admits nothing.
+    (The MERGE sink above gets the same property from key-conditioned
+    overwrite; admission gets it from its own rejection rule.)
 
     100 TB shape: signatures/bands are narrow per-row expressions (zero
     shuffle before the band key — the plan-pinned property of
