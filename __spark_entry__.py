@@ -4,7 +4,8 @@
 ``queries()`` — one callable per registered query: the extraction flow,
 its per-document text stages (cleaning, token counts, language,
 quality, fingerprint, chunks), exact dedup and duplicate clustering,
-and the curation queries.  The scalar SURVEY.md §2 rules are checked by
+the edit-distance join, and the graph, profiling, layout and Avro
+queries.  The scalar SURVEY.md §2 rules are checked by
 tests/test_rules.py, not through the registry.
 ``oracle_sql()`` — DuckDB-runnable ANSI SQL twins for every
 SQL-expressible query; UDF-pipeline queries are rows-only by design
@@ -24,8 +25,6 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from text_extractor_for_bioeconomic_products_spark.operators import (  # noqa: E402
-    bpe,
-    curation,
     graph,
     dedup,
     profiling,
@@ -70,11 +69,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    q.update(curation.QUERIES)
     q.update(textstats.QUERIES)
     q.update(dedup.QUERIES)
     q.update(stringjoin.QUERIES)
-    q.update(bpe.QUERIES)
     q.update(graph.QUERIES)
     q.update(profiling.QUERIES)
     q.update(layout.QUERIES)
@@ -84,7 +81,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     o: dict[str, str] = {}
-    o.update(curation.ORACLE_SQL)
     o.update(textstats.ORACLE_SQL)
     o.update(dedup.ORACLE_SQL)
     o.update(stringjoin.ORACLE_SQL)

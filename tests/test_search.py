@@ -368,148 +368,41 @@ def test_bench_pair_efficiency():
     assert bench.pair_efficiency(runs([180.0, 136.0]), runs([40.0, 90.0]), 4, 16) == 0.85
 
 
-def test_source_mix_weights_normalized(spark, sf001_dir):
-    """Temperature mix: weights sum to 1, expected counts sum to N, and
-    the temperature tempers dominance (max source's weight share < its
-    raw doc share; min's weight share > raw share)."""
-    from text_extractor_for_bioeconomic_products_spark.operators.curation import (
-        q_source_mix_weights,
-    )
-    rows = q_source_mix_weights(spark, sf001_dir).collect()
-    total_docs = sum(r["n_docs"] for r in rows)
-    assert abs(sum(r["mix_weight"] for r in rows) - 1.0) < 1e-4
-    assert abs(sum(r["expected_docs"] for r in rows) - total_docs) < 1e-2
-    if len(rows) > 1 and len({r["n_docs"] for r in rows}) > 1:
-        hi = max(rows, key=lambda r: r["n_docs"])
-        lo = min(rows, key=lambda r: r["n_docs"])
-        assert hi["mix_weight"] < hi["n_docs"] / total_docs
-        assert lo["mix_weight"] > lo["n_docs"] / total_docs
-
-
 def test_train_val_test_split_stable_and_proportioned(spark, sf001_dir, tmp_path):
-    """The split is a pure function of doc_id: identical under different
-    input partitionings (the no-leakage-over-time property), covers all
-    three splits, and lands near 80/10/10."""
-    import __spark_entry__ as entry_mod
+    """run_curation's split is a pure function of doc_id: every doc lands
+    in the same split after the input is repartitioned on disk (the
+    no-leakage-over-time property), all three splits occur, and the
+    shares land near 80/10/10."""
+    import os
+    import sys
+    from collections import Counter
+
     from text_extractor_for_bioeconomic_products_spark.sources.tables import load
 
-    q = entry_mod.queries()["train_val_test_split"]
-    base = q(spark, sf001_dir).collect()
-    # ACTUALLY reshuffle the source on disk and recompute from the new
-    # layout — byte-identical census.  (An in-memory repartition the
-    # query never reads would make this check vacuous: the query loads
-    # from sf_dir, so the differently-partitioned copy must BE an sf dir.)
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "jobs"))
+    from run_curation import split_assignment
+
+    def assign(sf_dir):
+        docs = load(spark, sf_dir, "documents")
+        return {
+            r["doc_id"]: r["split"]
+            for r in docs.select("doc_id", split_assignment().alias("split")).collect()
+        }
+
+    base = assign(sf001_dir)
+    # ACTUALLY reshuffle the source on disk and assign again from the new
+    # layout (an in-memory repartition of the same scan would make this
+    # check vacuous)
     alt = str(tmp_path / "alt_sf")
     load(spark, sf001_dir, "documents").repartition(7, "lang").write.parquet(
         alt + "/documents.parquet"
     )
-    again = q(spark, alt).collect()
-    assert base == again
-    totals = {}
-    for r in base:
-        totals[r["split"]] = totals.get(r["split"], 0) + r["n_docs"]
+    assert assign(alt) == base
+    totals = Counter(base.values())
     assert set(totals) == {"train", "val", "test"}
     n = sum(totals.values())
     assert 0.7 < totals["train"] / n < 0.9
     assert totals["val"] / n < 0.2 and totals["test"] / n < 0.2
-
-
-def test_quality_weighted_sample_deterministic_extremes(spark, tmp_path):
-    """p = min(1, words/100): a 100+-word doc is ALWAYS kept (u < 1 by
-    construction), a word-less doc NEVER is — and the census is
-    byte-identical under a different input partitioning (no rand() in
-    the coin; a reshuffled rerun must select the same corpus)."""
-    import __spark_entry__ as entry_mod
-    from pyspark.sql import functions as F
-
-    docs = spark.createDataFrame(
-        [
-            (i, "w " * 120 if i % 3 == 0 else ("###" if i % 3 == 1 else "short doc here"), f"s{i % 2}")
-            for i in range(60)
-        ],
-        "doc_id long, text string, source string",
-    ).withColumn("lang", F.lit("en")).withColumn("n_chars", F.length("text"))
-    p1 = str(tmp_path / "p1")
-    docs.repartition(1).write.parquet(str(tmp_path / "p1" / "documents.parquet"))
-    p8 = str(tmp_path / "p8")
-    docs.repartition(8, "source").write.parquet(str(tmp_path / "p8" / "documents.parquet"))
-    q = entry_mod.queries()["quality_weighted_sample"]
-    a = sorted(map(tuple, q(spark, p1).collect()))
-    b = sorted(map(tuple, q(spark, p8).collect()))
-    assert a == b
-
-    from text_extractor_for_bioeconomic_products_spark.operators.curation import (
-        q_quality_weighted_sample,
-    )
-    # extremes via the census: sources hold mixed docs, so check via a
-    # dedicated frame — all-long docs => kept_frac 1.0; all-empty => 0.0
-    long_docs = docs.filter(F.col("doc_id") % 3 == 0)
-    empty_docs = docs.filter(F.col("doc_id") % 3 == 1)
-    pl = str(tmp_path / "long"); pe = str(tmp_path / "empty")
-    long_docs.write.parquet(pl + "/documents.parquet")
-    empty_docs.write.parquet(pe + "/documents.parquet")
-    for r in q_quality_weighted_sample(spark, pl).collect():
-        assert r["kept_frac"] == 1.0 and r["mean_keep_prob"] == 1.0
-    for r in q_quality_weighted_sample(spark, pe).collect():
-        assert r["kept_frac"] == 0.0 and r["n_kept"] == 0
-
-
-def test_dsir_importance_prefers_target_like_docs(spark, tmp_path):
-    """DSIR semantics: a raw-pool document written in the target slice's
-    vocabulary must out-score one written in the raw pool's own
-    vocabulary (that is the whole point of the importance weight), and
-    the selected set must be byte-identical under a different input
-    partitioning (Gumbel coin is a pure function of doc_id)."""
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as entry_mod
-
-    rows = []
-    for i in range(15):  # target slice: 'alpha beta' profile
-        rows.append((i, "alpha beta alpha beta alpha", "en", "tgt"))
-    for i in range(15, 30):  # raw-only slice: 'omega gamma' profile
-        rows.append((i, "omega gamma omega gamma omega", "fr", "raw"))
-    rows.append((100, "alpha beta alpha beta alpha", "fr", "probe"))  # target-like
-    rows.append((101, "omega gamma omega gamma omega", "fr", "probe"))  # raw-like
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string"
-    ).withColumn("n_chars", F.length("text"))
-    p1 = str(tmp_path / "p1")
-    docs.repartition(1).write.parquet(p1 + "/documents.parquet")
-    p8 = str(tmp_path / "p8")
-    docs.repartition(8, "source").write.parquet(p8 + "/documents.parquet")
-
-    q = entry_mod.queries()["dsir_importance"]
-    a = sorted(map(tuple, q(spark, p1).collect()))
-    b = sorted(map(tuple, q(spark, p8).collect()))
-    assert a == b  # partitioning-independent selection
-
-    by_id = {r["doc_id"]: r for r in q(spark, p1).collect()}
-    # 32 docs < top-40 cap, so both probes are present
-    assert by_id[100]["logw"] > by_id[101]["logw"]
-    # and the target-like probe scores like the target slice itself
-    assert by_id[100]["logw"] > 0 > by_id[101]["logw"]
-
-
-def test_weighted_sample_favors_heavy_docs(spark, sf001_dir):
-    """Efraimidis-Spirakis property on the deterministic corpus: the
-    selected docs' mean weight exceeds the corpus mean, and the sample
-    is a pure function of doc_id (identical under repartition)."""
-    from pyspark.sql import functions as F
-
-    import __spark_entry__ as entry_mod
-    from text_extractor_for_bioeconomic_products_spark.sources.tables import load
-
-    got = entry_mod.queries()["weighted_sample_topk"](spark, sf001_dir).collect()
-    sel_mean = sum(r["n_words"] for r in got) / len(got)
-    corpus_mean = (
-        load(spark, sf001_dir, "documents")
-        .select(F.avg(F.size(F.split("text", " "))))
-        .collect()[0][0]
-    )
-    assert sel_mean > corpus_mean, (sel_mean, corpus_mean)
-    again = entry_mod.queries()["weighted_sample_topk"](spark, sf001_dir).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in again]
 
 
 def test_orc_dispatch_and_text_corpus_ingest(spark, transcripts_df, tmp_path):
@@ -581,91 +474,6 @@ def test_orc_dispatch_and_text_corpus_ingest(spark, transcripts_df, tmp_path):
     }
     rel_ids = lambda rs: {(r["file_name"], r["doc_id"]) for r in rs}  # noqa: E731
     assert rel_ids(read_text_corpus(spark, str(moved)).collect()) == ids_orig
-
-
-def test_bpe_matches_reference(spark, sf001_dir):
-    """Distributed BPE == pure-Python reference, byte-exact: the full
-    merge sequence (pairs, order, weighted counts) AND every word's
-    final tokenization."""
-    from text_extractor_for_bioeconomic_products_spark.operators.bpe import (
-        bpe_train,
-        reference_bpe,
-        word_frequencies,
-    )
-    from text_extractor_for_bioeconomic_products_spark.sources.tables import load
-
-    vocab = word_frequencies(load(spark, sf001_dir, "documents"))
-    wf = {r["w"]: r["freq"] for r in vocab.collect()}
-    merges, tokenized = bpe_train(vocab)
-    ref_merges, ref_toks = reference_bpe(wf)
-    assert merges == ref_merges
-    got_toks = {r["w"]: list(r["syms"]) for r in tokenized.collect()}
-    assert got_toks == ref_toks
-    # tokenization is lossless: concatenating symbols restores the word
-    assert all("".join(syms) == w for w, syms in got_toks.items())
-
-
-def test_bpe_greedy_overlap_semantics(spark):
-    """'aaa' under merge (a,a): greedy left-to-right gives [aa, a] — the
-    overlap case where a naive regex replace diverges."""
-    from text_extractor_for_bioeconomic_products_spark.operators.bpe import (
-        bpe_train,
-    )
-
-    vocab = spark.createDataFrame([("aaa", 5), ("aab", 3)], "w string, freq long")
-    merges, tokenized = bpe_train(vocab, n_merges=1)
-    assert merges[0][:2] == ("a", "a")
-    toks = {r["w"]: list(r["syms"]) for r in tokenized.collect()}
-    assert toks["aaa"] == ["aa", "a"]
-    assert toks["aab"] == ["aa", "b"]
-
-
-def test_bpe_encode_matches_reference(spark, sf001_dir):
-    """Encoding the corpus with the learned merges must agree with the
-    pure-Python reference word-by-word: each doc's token count equals
-    the sum of its words' reference tokenizations."""
-    from text_extractor_for_bioeconomic_products_spark.operators.bpe import (
-        bpe_encode,
-        bpe_train,
-        reference_bpe,
-        word_frequencies,
-    )
-    from text_extractor_for_bioeconomic_products_spark.sources.tables import load
-
-    docs = load(spark, sf001_dir, "documents").limit(40).cache()
-    vocab = word_frequencies(docs)
-    wf = {r["w"]: r["freq"] for r in vocab.collect()}
-    merges, _ = bpe_train(vocab)
-    _ref_merges, ref_toks = reference_bpe(wf)
-    got = {r["doc_id"]: r for r in
-           bpe_encode(docs, [(a, b) for a, b, _n in merges]).collect()}
-
-    import re
-
-    for d in docs.select("doc_id", "text").collect():
-        words = [w for w in re.split(r"[^a-z0-9]+", d["text"].lower()) if w]
-        want_tokens = sum(len(ref_toks[w]) for w in words)
-        assert got[d["doc_id"]]["n_words"] == len(words)
-        assert got[d["doc_id"]]["n_tokens"] == want_tokens
-    # merges bind: tokens strictly fewer than characters overall
-    total_chars = sum(
-        len(w) for d in docs.select("text").collect()
-        for w in re.split(r"[^a-z0-9]+", d["text"].lower()) if w
-    )
-    assert sum(r["n_tokens"] for r in got.values()) < total_chars
-
-
-def test_bpe_encode_query_contract(spark, sf001_dir):
-    """Driver-query shape: per-source rows, 1 <= tokens_per_word and
-    tokens never exceed raw characters-per-word bound."""
-    import __spark_entry__ as entry_mod
-
-    rows = entry_mod.queries()["bpe_encode"](spark, sf001_dir).collect()
-    assert rows
-    for r in rows:
-        assert r["n_docs"] > 0 and r["total_words"] > 0
-        assert r["total_tokens"] >= r["total_words"]  # every word ≥1 token
-        assert 1.0 <= r["tokens_per_word"]
 
 
 def test_compression_signal_byte_exact_and_ordered(spark):
@@ -756,63 +564,3 @@ def test_table_profile_single_scan_plan(spark, sf001_dir):
     final = p.split("== Initial Plan ==")[0]
     assert final.count("Scan parquet") == 1, final
     assert "Expand" in final
-
-
-def test_per_source_cap_deterministic_and_binding(spark, sf001_dir):
-    """The domain cap must (a) bind: no source keeps more than
-    CAP_PER_SOURCE docs; (b) select the SAME documents regardless of
-    physical layout — kept_id_sum (the census checksum of selected ids)
-    must be identical when the input arrives with a different partition
-    count, because the coin is a pure function of doc_id."""
-    import __spark_entry__ as entry_mod
-    from text_extractor_for_bioeconomic_products_spark.operators.curation import (
-        CAP_PER_SOURCE,
-    )
-
-    rows = entry_mod.queries()["per_source_cap"](spark, sf001_dir).collect()
-    assert rows
-    for r in rows:
-        assert r["n_kept"] == min(CAP_PER_SOURCE, r["n_docs"])
-
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
-        rows2 = entry_mod.queries()["per_source_cap"](
-            spark, sf001_dir
-        ).collect()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    key = lambda rs: sorted((r["source"], r["kept_id_sum"]) for r in rs)  # noqa: E731
-    assert key(rows) == key(rows2)
-
-
-def test_word_ngrams_exact_and_short_rows(spark, tmp_path):
-    """word_ngrams: exact 2- and 3-grams in order; a row shorter than n
-    yields an empty array (Spark's sequence(1, k) runs DESCENDING for
-    k < 1, so the guard must hold); ``words`` is a column the caller
-    selected, so the plan splits each text once, not once per n-gram."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from text_extractor_for_bioeconomic_products_spark.operators.curation import (
-        word_ngrams,
-    )
-
-    pd.DataFrame({
-        "doc_id": [0, 1, 2],
-        "text": ["a b c d", "a b", "a"],
-    }).to_parquet(str(tmp_path / "docs.parquet"))
-    words = spark.read.parquet(str(tmp_path / "docs.parquet")).select(
-        "doc_id", F.split("text", " ").alias("words")
-    )
-    out = words.select(
-        "doc_id",
-        word_ngrams(F.col("words"), 2).alias("g2"),
-        word_ngrams(F.col("words"), 3).alias("g3"),
-    )
-    rows = {r["doc_id"]: (r["g2"], r["g3"]) for r in out.collect()}
-    assert rows[0] == (["a b", "b c", "c d"], ["a b c", "b c d"])
-    assert rows[1] == (["a b"], [])
-    assert rows[2] == ([], [])
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("split(") == 1, plan

@@ -178,11 +178,10 @@ def _minhash_band_union_sql() -> str:
 MAX_BAND_DOCS = 64
 
 
-def _banded_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _banded_docs(docs: DataFrame) -> DataFrame:
     """(doc_id, band) rows over every LSH band — the key the streaming
     near-dup admission rejects on, so batch and stream pair the same
     docs."""
-    docs = load(spark, sf_dir, "documents")
     return minhash_signatures(docs).select(
         "doc_id", F.explode(lsh_band_keys()).alias("band")
     )
@@ -524,13 +523,19 @@ def connected_components_star(pairs: DataFrame,
 
 
 def q_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate clusters: connected components over jaccard-candidate
-    edges (≥ DUP_EDGE_THRESHOLD) via :func:`connected_components_star` —
-    the default is the large-star/small-star variant because its per-round
-    cost is one groupBy-min plus one node-keyed join, while pointer
-    jumping's hop self-join doubles shuffle volume per round (the
-    pytest-pinned equivalence twin, :func:`connected_components`, keeps
-    the simpler algorithm as the oracle of record) — UNIONed with the
+    """:func:`dup_components` over the ``documents`` table of ``sf_dir``."""
+    return dup_components(load(spark, sf_dir, "documents"))
+
+
+def dup_components(docs: DataFrame) -> DataFrame:
+    """Duplicate clusters of ``docs`` (``doc_id``, ``text``): connected
+    components over jaccard-candidate edges (≥ DUP_EDGE_THRESHOLD) via
+    :func:`connected_components_star` — the default is the
+    large-star/small-star variant because its per-round cost is one
+    groupBy-min plus one node-keyed join, while pointer jumping's hop
+    self-join doubles shuffle volume per round (the pytest-pinned
+    equivalence twin, :func:`connected_components`, keeps the simpler
+    algorithm as the oracle of record) — UNIONed with the
     over-full LSH bands, each emitted directly as one cluster (their
     pairwise verification is skipped by design).  Candidates share ANY
     band (:func:`lsh_band_keys`, the streaming admission's key), so a
@@ -541,8 +546,7 @@ def q_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # banding (doc scan + word explode + minhash shuffle — the costly
     # subtree) materializes ONCE and feeds both the capped candidate
     # pairs and the mega-band aggregation
-    docs = load(spark, sf_dir, "documents")
-    banded = _banded_docs(spark, sf_dir).persist()
+    banded = _banded_docs(docs).persist()
     pairs = _jaccard_pairs_from(docs, banded) \
         .filter(F.col("jaccard") >= DUP_EDGE_THRESHOLD) \
         .select("doc_a", "doc_b")
@@ -608,17 +612,17 @@ ORACLE_DUP_COMPONENTS = f"""
 """
 
 
-def fuzzy_dedup_victims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_ids to DROP under the fuzzy-dedup decision: every doc of a
-    group of `dup_components` clusters linked through shared members,
-    except the group's minimum.  Over-full bands emit clusters that
-    overlap (a doc can sit in the band-0 and the band-1 cluster), so
-    the (component, member) edges run through connected components once
-    more: a transitively linked group keeps one doc, as the streaming
-    near-dup admission does.  The cluster table is the small side by
-    construction, so consumers broadcast-anti-join the victims against
-    the corpus scan."""
-    clusters = q_dup_components(spark, sf_dir)
+def fuzzy_dedup_victims(docs: DataFrame) -> DataFrame:
+    """doc_ids of ``docs`` to DROP under the fuzzy-dedup decision: every
+    doc of a group of :func:`dup_components` clusters linked through
+    shared members, except the group's minimum.  Over-full bands emit
+    clusters that overlap (a doc can sit in the band-0 and the band-1
+    cluster), so the (component, member) edges run through connected
+    components once more: a transitively linked group keeps one doc, as
+    the streaming near-dup admission does.  The cluster table is the
+    small side by construction, so consumers broadcast-anti-join the
+    victims against the corpus scan."""
+    clusters = dup_components(docs)
     edges = clusters.select(
         "component", F.explode(F.split("members", ",")).alias("member")
     ).select(
